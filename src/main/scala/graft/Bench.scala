@@ -90,7 +90,9 @@ object Bench {
     "decontaminate_neardup" -> Some("Join"),
     "decontaminate_report" -> Some("Join"),
     "sample_quota" -> Some("Window"),
-    "sample_dsir" -> Some("Window"), // boundary-bucket rank windows
+    // the literal bucket-id selection filter over the score cut; a
+    // boundary rank window exists only when k falls inside a bucket
+    "sample_dsir" -> Some("bucket_search"),
     // perceptron rounds run eagerly inside the builder (the DSIR
     // checkpoint-cut convention); the lazy plan is the typed scoring
     // pass over the checkpointed feature arrays
@@ -100,9 +102,9 @@ object Bench {
     // (checkpoint-cut rounds); the lazy plan is the tiny sparse frame
     "quality_weights" -> None,
     "seq_pack_ranked" -> Some("MapPartitions"), // ShardPack typed pass
-    "dsir_bigram" -> Some("Window"), // same selection, bigram features
-    "dsir_incr" -> Some("Window"),
-    "dsir_report" -> Some("Window"),
+    "dsir_bigram" -> Some("bucket_search"), // same selection, bigrams
+    "dsir_incr" -> Some("bucket_search"),
+    "dsir_report" -> Some("bucket_search"),
     "mix_budget" -> Some("Window"),
     "mix_budget_w" -> Some("Window"), // same prefix-sum core, external weights
     "sample_cluster" -> Some("Window"),

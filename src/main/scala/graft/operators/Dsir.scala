@@ -369,8 +369,9 @@ object Dsir {
     val keptCols = Seq(idc, col("dsir_score"))
     val thC = Sampling.bucketHex(salt, idc)
     val keepAll = scored.filter(bCol.isin(keepIds: _*))
-    val bndPart = boundary match {
-      case Some((b, q, false)) =>
+    // k on a bucket edge (no boundary) keeps the keep-all buckets alone
+    val bndPart = boundary.map {
+      case (b, q, false) =>
         // multi-valued boundary bucket: rank its own rows, population
         // bounded by the equi-depth guard above; the md5 tie hex is
         // computed for boundary rows only
@@ -382,7 +383,7 @@ object Dsir {
             .cast("long"))
           .filter(col("__rn") <= lit(q))
           .select(keptCols: _*)
-      case Some((b, q, true)) =>
+      case (b, q, true) =>
         // single-valued boundary bucket (a heavy tie class holding the
         // cut): scores are all equal, so order inside is purely
         // (md5, id) — split by the 16-bit md5 prefix and re-run the
@@ -412,20 +413,9 @@ object Dsir {
           .filter(col("__rn2") <= lit(q2))
         cells.filter(col("__hb").isin(hKeepIds: _*)).select(keptCols: _*)
           .unionByName(hBnd.select(keptCols: _*))
-      case None =>
-        // k falls exactly on a bucket edge: nothing to rank, but the
-        // rank window (the operator's signature node) stays in the
-        // plan over a provably-empty filter
-        scored.filter(bCol === lit(-1L))
-          .withColumn("__th", thC)
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy(bCol).orderBy(
-              col("dsir_score").desc, col("__th").asc, idc.asc))
-            .cast("long"))
-          .filter(col("__rn") <= lit(0L))
-          .select(keptCols: _*)
     }
-    keepAll.select(keptCols: _*).unionByName(bndPart)
+    val kept = keepAll.select(keptCols: _*)
+    bndPart.fold(kept)(kept.unionByName(_))
   }
 
   /** Keep the `ceil(fraction * n)` documents with the highest

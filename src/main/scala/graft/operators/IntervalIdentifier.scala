@@ -38,20 +38,50 @@ object ResultType {
   * (reference interface: src/pywrangler/wranglers.py:14-141).
   *
   * This is the generic window-function algorithm ("VectorizedCumSum",
-  * reference: src/pywrangler/pyspark/wranglers/interval_identifier.py:14-462):
-  *   1. optionally nullify duplicated start/end markers so every interval
-  *      has exactly one of each (preprocessing),
-  *   2. raw ids = cumulative sum of (isStart + lag(isEnd, 1, default 1))
-  *      over the groupby/orderby window,
-  *   3. valid ids = raw ids whose interval contains both markers, else 0,
-  *   4. enumerated ids = valid ids renumbered 1..n via change-point cumsum.
+  * reference: src/pywrangler/pyspark/wranglers/interval_identifier.py:14-462),
+  * rebuilt as a few DIRECTIONAL PASSES over one `partitionBy(groupby)`
+  * spec. Write `prev(m)` / `next(m)` for the nearest start/end marker
+  * strictly before / after a row (`last` non-null over the rows
+  * `(unboundedPreceding, -1)` of the forward / reversed window):
+  *   1. preprocessing (first-start and/or last-end selections): one
+  *      row-local expression nulls a start whose `prev(m)` is a start and
+  *      an end whose `next(m)` is an end — both neighbours read the
+  *      ORIGINAL column, so the two drops commute; call the result `m'`;
+  *   2. raw ids = 1 + starts up to and including the row + ends strictly
+  *      before it (one running sum of `isStart + isEnd`, minus the row's
+  *      own `isEnd`) — term for term the reference's running sum of
+  *      `isStart + lag(isEnd, 1, default 1)`, so raw (and valid) ids are
+  *      exactly the reference's, not merely equal up to relabelling;
+  *   3. a start only ever opens a raw interval and an end only ever
+  *      closes one, so an interval is valid iff its first row is a start
+  *      and its last row an end. Every row reads both facts from its
+  *      neighbours: `firstIsStart = m' == start || prev(m') == start`
+  *      (forward) and `lastIsEnd = m' == end || next(m') == end`
+  *      (ONE reversed pass). Valid ids are raw ids where both hold,
+  *      else 0;
+  *   4. enumerated ids = running count of starts opening a valid
+  *      interval (`isStart && lastIsEnd`) on valid rows, else 0.
   *
-  * All steps are native Catalyst window expressions — no UDFs — so the plan
-  * stays inside whole-stage codegen and scales with per-group sort-based
-  * window execution. The whole pipeline costs ONE shuffle: the per-raw-iid
-  * window clusters on (groupby, raw_iid), which the existing
-  * hashpartitioning(groupby) already satisfies, so EnsureRequirements adds
-  * only a sort (pinned by PlanShapeSpec).
+  * Every step is a native Catalyst window expression — no UDFs. Window
+  * expressions sharing one spec, whatever their frames, evaluate in ONE
+  * `Window` node, so the plan is a handful of nodes behind ONE shuffle
+  * (pinned by PlanShapeSpec): last-start/first-end is a reversed then a
+  * forward node (2 Window nodes, 2 sorts); the first-start and last-end
+  * selections each add one preprocessing node (3), the first-start/
+  * last-end selection two (4). Fewer nodes is fewer generated classes: a
+  * query whose distinct classes outgrow Spark's codegen cache (100
+  * entries) recompiles them on every execution.
+  *
+  * No frame ever reaches unbounded FOLLOWING: Spark re-evaluates such
+  * aggregate frames from scratch at every row — O(rows²) per partition,
+  * ruinous on a large group — while a running frame over the reversed
+  * window is O(rows) plus one in-partition sort.
+  *
+  * Precondition: the orderby columns order rows UNIQUELY within a group.
+  * The reversed passes must see the exact mirror of the forward order;
+  * on order ties the two sorts may break a tie differently and the
+  * neighbour markers no longer line up (ids are then undefined, as the
+  * tie order itself is).
   *
   * @param markerColumn   name of the column holding start/end markers
   * @param markerStart    value marking an interval start
@@ -62,7 +92,8 @@ object ResultType {
   * @param markerEndUseFirst   use first (true) or last (false) of repeated
   *                       end markers; default true (first)
   * @param orderbyColumns order within a group — mandatory, Spark dataframes
-  *                       have no implicit row order
+  *                       have no implicit row order; must be unique
+  *                       within a group
   * @param groupbyColumns entity partition keys (ideally partition-aligned
   *                       at scale to reduce shuffle skew)
   * @param ascending      per-orderby-column sort direction, default all true
@@ -118,10 +149,9 @@ class IntervalIdentifier(
 
   /** Main window: partition by groupby, order by orderby (optionally with
     * every direction flipped). One fresh-but-structurally-equal WindowSpec
-    * per call keeps Catalyst's CollapseWindow merging adjacent same-spec
-    * Window nodes.
+    * per call keeps same-spec expressions in one Window node.
     */
-  protected def windowGroupby(reverse: Boolean = false): WindowSpec =
+  private def windowGroupby(reverse: Boolean = false): WindowSpec =
     Window
       .partitionBy(groupbyColumns.map(col): _*)
       .orderBy(SparkUtil.prepareOrderby(orderbyColumns, ascending, reverse): _*)
@@ -133,13 +163,7 @@ class IntervalIdentifier(
   private def running(w: WindowSpec): WindowSpec =
     w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
-  /** Per-interval window: partition by groupby + the materialized raw-iid
-    * column, whole-partition frame (no ordering needed).
-    */
-  private def windowRawIids(rawIidColumn: String): WindowSpec =
-    Window.partitionBy((groupbyColumns :+ rawIidColumn).map(col): _*)
-
-  // ------------------------------------------------------------ marker prep
+  // ------------------------------------------------------------- id algebra
 
   /** Marker as 0/1 integer, null-safe (NULL and non-matching NaN are noise;
     * reference: interval_identifier.py:58-69).
@@ -149,150 +173,47 @@ class IntervalIdentifier(
     (marker <=> lit(v)).cast("integer")
   }
 
-  /** Noise values -> null, then forward-fill (start) or backward-fill (end)
-    * with the surviving markers (reference: :96-130).
-    *
-    * The backward fill is a running forward fill over the REVERSED
-    * window, not a `(currentRow, unboundedFollowing)` frame: Spark
-    * re-evaluates unbounded-FOLLOWING aggregate frames from scratch at
-    * every row — O(rows²) per partition, ruinous on a large group —
-    * while the reversed running frame is O(rows) plus one in-partition
-    * sort and computes the identical column.
+  /** The nearest start or end marker strictly before the row in window
+    * order — strictly AFTER it over the reversed window — or null when
+    * there is none (noise and NULL markers are skipped).
     */
-  private def denoiseMarkerColumn(start: Boolean): Column = {
+  private def strictNeighbour(marker: Column, reverse: Boolean): Column =
+    last(when(marker.isin(markerStart, markerEndValue), marker),
+      ignoreNulls = true)
+      .over(windowGroupby(reverse).rowsBetween(Window.unboundedPreceding, -1))
+
+  /** Nullify repeated start markers (keeping the first) and/or repeated
+    * end markers (keeping the last) so the core last-start/first-end
+    * algebra yields the requested span (reference: :132-244). A start is
+    * a repeat when its previous marker is a start, an end when its next
+    * marker is an end, both read off the ORIGINAL column. The forward
+    * neighbour is materialized below the reversed one, so the plan runs
+    * forward → reversed and the core algebra's reversed pass follows
+    * without another sort.
+    */
+  private def preprocessMarkerColumn(cc: ColumnCacher): Column = {
     val m = col(markerColumn)
-    val denoised = when(m.isin(markerStart, markerEndValue), m)
-    last(denoised, ignoreNulls = true)
-      .over(windowGroupby(reverse = !start)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-  }
-
-  /** Nullify consecutive duplicate start markers (keeping the first) or end
-    * markers (keeping the last) so the core last-start/first-end algorithm
-    * yields the requested span (reference: :132-178). The "next marker"
-    * lead for the end side is a lag over the reversed window, matching
-    * the reversed denoise direction.
-    */
-  private def dropDuplicatedMarker(marker: Column, start: Boolean): Column = {
-    val markerValue = if (start) markerStart else markerEndValue
-    val wEff = windowGroupby(reverse = !start)
-    val denoised = denoiseMarkerColumn(start)
-    val shifted = lag(denoised, 1).over(wEff)
-    val shiftedMarkerOnly = when(denoised === lit(markerValue), shifted)
-    when(shiftedMarkerOnly === marker, lit(null)).otherwise(marker)
-  }
-
-  /** Apply duplicate-marker removal as demanded by the first/last flags
-    * (reference: :221-244).
-    *
-    * The END drop is applied FIRST (the reference applies start first;
-    * the two commute: each drop only nullifies rows whose ORIGINAL
-    * marker equals its own marker value — disjoint row sets — and both
-    * denoise fills read the original column, so neither's condition sees
-    * the other's nulls). Order matters only to the physical plan: the
-    * end drop's windows run over the REVERSED order; running it first
-    * and MATERIALIZING its result before the start drop keeps each
-    * direction's window pair (denoise fill + its lag) adjacent, so the
-    * physical plan is reversed → forward → forward. Inlined as one
-    * nested expression, the analyzer splits the `lag(last(...))` chains
-    * into dependency layers and alternates sort directions per layer —
-    * two extra in-partition sorts on the both-drop (first-start/
-    * last-end) config. Same trick as the salted identifier's
-    * reversed-scan-first layout.
-    */
-  protected def preprocessMarkerColumn(cc: ColumnCacher): Column = {
-    var m: Column = col(markerColumn)
-    if (!identicalStartEndMarkers) {
-      val bothDrops = !markerEndUseFirst && markerStartUseFirst
-      if (!markerEndUseFirst) m = dropDuplicatedMarker(m, start = false)
-      if (bothDrops) m = cc.add("marker_edrop", m, force = true)
-      if (markerStartUseFirst) m = dropDuplicatedMarker(m, start = true)
-    }
-    m
-  }
-
-  // ------------------------------------------------------------- id algebra
-
-  /** Raw interval ids: running sum of isStart + lagged isEnd. Lagging the
-    * end marker keeps it inside its own interval; lag default 1 makes ids
-    * start at 1 once the first marker appears (reference: :246-273).
-    */
-  protected def generateRawIids(marker: Column): Column = {
-    val w = windowGroupby()
-    val boolStart = boolifyMarker(marker, start = true)
-    val boolEndShifted = lag(boolifyMarker(marker, start = false), 1, 1).over(w)
-    sum(boolStart + boolEndShifted).over(running(w))
-  }
-
-  /** Valid ids: a raw interval is valid iff it contains both a start and an
-    * end marker — exactly once each when `exact` (post-preprocessing), at
-    * least once each otherwise. Invalid intervals become 0
-    * (reference: :275-315).
-    */
-  private def generateValidIids(marker: Column, rawIids: Column,
-                                exact: Boolean, rawIidColumn: String): Column = {
-    val boolStart = boolifyMarker(marker, start = true)
-    val boolEnd = boolifyMarker(marker, start = false)
-    val w = windowRawIids(rawIidColumn)
-    val summed =
-      if (exact) sum(boolStart + boolEnd).over(w)
-      else max(boolStart).over(w) + max(boolEnd).over(w)
-    when(summed === 2, rawIids).otherwise(0)
-  }
-
-  /** Enumerate valid intervals 1..n in window order: a decrease-to-increase
-    * change point (lag(valid) - valid < 0) marks each new valid interval;
-    * running sum numbers them; invalid rows reset to 0 (reference: :317-352).
-    */
-  private def generateRenumeratedIids(validIids: Column,
-                                      reverse: Boolean): Column = {
-    val w = windowGroupby(reverse)
-    val shifted = lag(validIids, 1, 0).over(w)
-    val increase = ((shifted - validIids) < 0).cast("integer")
-    val renumerated0 = sum(increase).over(running(w))
-    val renumerated =
-      if (reverse) reverseEnumeration(renumerated0, w) else renumerated0
-    when(validIids =!= 0, renumerated).otherwise(0)
-  }
-
-  /** Map an enumeration k -> max-k+1 over the whole partition, flipping a
-    * reversed-order numbering back to ascending (reference: :71-94).
-    */
-  private def reverseEnumeration(column: Column, w: WindowSpec): Column = {
-    val wholePartition =
-      w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    (column - (max(column).over(wholePartition) + 1)) * -1
+    def repeated(value: Any, reverse: Boolean, name: String): Column =
+      m <=> lit(value) &&
+        cc.add(name, strictNeighbour(m, reverse), force = true) <=> lit(value)
+    val dropStart =
+      if (markerStartUseFirst) repeated(markerStart, reverse = false,
+        "prev_marker")
+      else lit(false)
+    val dropEnd =
+      if (!markerEndUseFirst) repeated(markerEndValue, reverse = true,
+        "next_marker")
+      else lit(false)
+    cc.add("marker_pre", when(dropStart || dropEnd, lit(null)).otherwise(m),
+      force = true)
   }
 
   /** Identical start/end markers: id = running count of start markers; rows
     * before the first marker get 0; every interval is valid by construction
     * so all result types coincide (reference: :354-373).
     */
-  protected def generateIidsIdentical(marker: Column): Column = {
-    val w = windowGroupby()
-    sum(boolifyMarker(marker, start = true)).over(running(w))
-  }
-
-  /** Dispatch raw -> valid -> enumerated, materializing the intermediate id
-    * columns the downstream windows must partition by / lag over
-    * (reference: :375-425).
-    */
-  protected def computeValidRenumeratedIids(
-      marker: Column, rawIids: Column, cc: ColumnCacher,
-      validIidsExact: Boolean, renumeratedReverse: Boolean): DataFrame = {
-    if (resultType == ResultType.Raw)
-      return cc.finish(targetColumnName, rawIids)
-
-    val rawRef = cc.add("raw_iids", rawIids, force = true)
-    val validIids =
-      generateValidIids(marker, rawRef, validIidsExact, cc.columns("raw_iids"))
-    if (resultType == ResultType.Valid)
-      return cc.finish(targetColumnName, validIids)
-
-    val validRef = cc.add("valid_iids", validIids, force = true)
-    cc.finish(targetColumnName,
-      generateRenumeratedIids(validRef, renumeratedReverse))
-  }
+  private def generateIidsIdentical(marker: Column): Column =
+    sum(boolifyMarker(marker, start = true)).over(running(windowGroupby()))
 
   protected def validateInput(df: DataFrame): Unit = {
     SparkUtil.validateColumns(df, Seq(markerColumn))
@@ -300,41 +221,51 @@ class IntervalIdentifier(
     SparkUtil.validateColumns(df, groupbyColumns)
   }
 
-  /** True when the first/last flags demand duplicate-marker removal (the
-    * preprocessed marker is then a stack of denoise/lag windows).
-    */
-  private def preprocessingApplies: Boolean =
-    !identicalStartEndMarkers && (markerStartUseFirst || !markerEndUseFirst)
-
   /** Append the interval-id column; all other columns pass through
     * unchanged and row count is preserved (reference: :427-462).
     */
   def transform(df: DataFrame): DataFrame = {
     validateInput(df)
-    val cc = new ColumnCacher(df, CacheMode.Enabled)
-    val marker0 = preprocessMarkerColumn(cc)
-    // materialize the preprocessed marker ONCE (the reference assigns it
-    // back to the dataframe, interval_identifier.py:221-244): raw-id and
-    // valid-id generation each reference the marker several times, and an
-    // inlined expression replicates its denoise/lag Window nodes — and
-    // their in-partition sorts — per use (observed: 14 Window nodes and
-    // 6.4x the LSFE wall time for the both-drop FSLE config before this)
-    val marker =
-      if (preprocessingApplies) cc.add("marker_pre", marker0, force = true)
-      else marker0
     if (identicalStartEndMarkers)
-      df.withColumn(targetColumnName, generateIidsIdentical(marker))
-    else
-      computeValidRenumeratedIids(marker, generateRawIids(marker), cc,
-        validIidsExact = true, renumeratedReverse = false)
+      return df.withColumn(targetColumnName,
+        generateIidsIdentical(col(markerColumn)))
+
+    val cc = new ColumnCacher(df, CacheMode.Enabled)
+    val marker =
+      if (markerStartUseFirst || !markerEndUseFirst) preprocessMarkerColumn(cc)
+      else col(markerColumn)
+    val isStart = boolifyMarker(marker, start = true)
+    val isEnd = boolifyMarker(marker, start = false)
+    val w = running(windowGroupby())
+    // 1 + starts through the row + ends before it: the reference's
+    // running sum of isStart + lag(isEnd, 1, default 1), term for term
+    val rawIids = sum(isStart + isEnd).over(w) - isEnd + 1
+    if (resultType == ResultType.Raw)
+      return cc.finish(targetColumnName, rawIids)
+
+    // the reversed pass is materialized first; every forward expression
+    // below then shares one Window node over the forward sort
+    val start = lit(markerStart)
+    val end = lit(markerEndValue)
+    val lastIsEnd = cc.add("last_is_end",
+      marker <=> end || strictNeighbour(marker, reverse = true) <=> end,
+      force = true)
+    val firstIsStart =
+      marker <=> start || strictNeighbour(marker, reverse = false) <=> start
+    val ids =
+      if (resultType == ResultType.Valid) rawIids
+      else sum((isStart === 1 && lastIsEnd).cast("integer")).over(w)
+    cc.finish(targetColumnName,
+      when(firstIsStart && lastIsEnd, ids).otherwise(0))
   }
 }
 
-/** Adjusted variant with shorter plans for the first-start/first-end and
-  * last-start/last-end span selections: a single forward-filled marker-state
-  * column replaces the duplicate-marker preprocessing, saving 2-3 window
-  * steps. Other configurations delegate to the generic algorithm
-  * (reference: src/pywrangler/pyspark/wranglers/interval_identifier.py:465-623).
+/** pywrangler's `VectorizedCumSumAdjusted` (reference:
+  * src/pywrangler/pyspark/wranglers/interval_identifier.py:465-623),
+  * kept as a name for parity. The generic plans for its first-start/
+  * first-end and last-start/last-end selections (3 Window nodes each)
+  * are already shorter than pywrangler's dedicated ones, so every
+  * configuration runs the generic transform.
   */
 class IntervalIdentifierAdjusted(
     markerColumn: String,
@@ -349,68 +280,4 @@ class IntervalIdentifierAdjusted(
     targetColumnName: String = "iids")
   extends IntervalIdentifier(markerColumn, markerStart, markerEnd,
     markerStartUseFirst, markerEndUseFirst, orderbyColumns, groupbyColumns,
-    ascending, resultType, targetColumnName) {
-
-  override def transform(df: DataFrame): DataFrame = {
-    val fastPath = !identicalStartEndMarkers &&
-      resultType != ResultType.Raw &&
-      markerStartUseFirst == markerEndUseFirst
-    if (!fastPath) return super.transform(df)
-    validateInput(df)
-    if (markerStartUseFirst) firstStartFirstEnd(df) else lastStartLastEnd(df)
-  }
-
-  /** Raw ids from a forward-filled open/closed interval state: state flips
-    * to 1 at the governing marker and 0 at its counterpart; a row whose
-    * state differs from its predecessor's starts (or, negated, ends) an
-    * interval; the running sum of those change indicators numbers the
-    * intervals (reference: :506-564).
-    */
-  private def generateRawIidsSpecial(startFirst: Boolean,
-                                     addNegateShiftCol: Boolean,
-                                     reverse: Boolean = false): Column = {
-    val m = col(markerColumn)
-    val w = windowGroupby(reverse)
-    val (default, forwardFill) =
-      if (startFirst)
-        (0, when(m === lit(markerStart), 1)
-          .when(m === lit(markerEnd.get), 0).otherwise(lit(null)))
-      else
-        (1, when(m === lit(markerEnd.get), 1)
-          .when(m === lit(markerStart), 0).otherwise(lit(null)))
-
-    val state = last(forwardFill, ignoreNulls = true)
-      .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    val stateShifted = lag(state, 1, default).over(w).cast("integer")
-    val openedHere = when(stateShifted === state, 0).otherwise(state)
-    val increment =
-      if (addNegateShiftCol)
-        openedHere + when(stateShifted === 0, 1).otherwise(0)
-      else openedHere
-    sum(increment).over(w.rowsBetween(Window.unboundedPreceding,
-      Window.currentRow))
-  }
-
-  /** FSFE fast path: forward state keyed on the start marker, non-exact
-    * validity (markers may repeat inside a raw interval; reference: :566-593).
-    */
-  private def firstStartFirstEnd(df: DataFrame): DataFrame = {
-    val cc = new ColumnCacher(df, CacheMode.Enabled)
-    val rawIids = generateRawIidsSpecial(startFirst = true,
-      addNegateShiftCol = true)
-    computeValidRenumeratedIids(col(markerColumn), rawIids, cc,
-      validIidsExact = false, renumeratedReverse = false)
-  }
-
-  /** LSLE fast path: run the FSFE machinery on the reversed window (so
-    * "last" becomes "first"), then shift ids by one and flip the final
-    * enumeration back to ascending order (reference: :595-623).
-    */
-  private def lastStartLastEnd(df: DataFrame): DataFrame = {
-    val cc = new ColumnCacher(df, CacheMode.Enabled)
-    val rawIids = generateRawIidsSpecial(startFirst = false,
-      addNegateShiftCol = true, reverse = true) + 1
-    computeValidRenumeratedIids(col(markerColumn), rawIids, cc,
-      validIidsExact = false, renumeratedReverse = true)
-  }
-}
+    ascending, resultType, targetColumnName)

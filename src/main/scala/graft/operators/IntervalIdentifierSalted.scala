@@ -472,8 +472,18 @@ class IntervalIdentifierSalted(
         val (s0, e0) = bnd.getOrElse((gVals, raw), (false, false))
         bnd((gVals, raw)) = (s0 || s, e0 || e)
       }
-      merge(blo, r.getInt(gN + 2) == 1, r.getInt(gN + 3) == 1)
-      if (bhi != blo) merge(bhi, r.getInt(gN + 4) == 1, r.getInt(gN + 5) == 1)
+      // a chunk's first and last rows carry raw ids blo and bhi by
+      // construction, so both flag pairs exist; a null one means the
+      // carry algebra and the rows disagree — fail loudly instead of
+      // reading it as an unkept marker
+      def kept(i: Int, raw: Long): Boolean = {
+        require(!r.isNullAt(i),
+          s"IntervalIdentifierSalted: no row with raw id $raw in chunk " +
+            s"${r.getInt(gN)} of group ${gVals.mkString("(", ", ", ")")}")
+        r.getInt(i) == 1
+      }
+      merge(blo, kept(gN + 2, blo), kept(gN + 3, blo))
+      if (bhi != blo) merge(bhi, kept(gN + 4, bhi), kept(gN + 5, bhi))
     }
     // per-chunk prefix of valid ORIGIN segments: each segment
     // originates exactly once (at its global start row), so a chunk's

@@ -15,9 +15,10 @@ import graft.util.SparkUtil
   *
   * Physical shape: `repartition(groupby)` + `sortWithinPartitions(
   * groupby ++ orderby)` + `mapPartitions` run-detecting group boundaries —
-  * ONE shuffle against the window formulation's two (groupby-ordered
-  * window + per-raw-iid window). The trade-offs at scale:
-  *   - wins when the second shuffle dominates (many intervals per group);
+  * ONE shuffle, like the window formulation, but one sort and one scan
+  * where that runs 2-3 sorts and 2-4 Window passes. The trade-offs at
+  * scale:
+  *   - wins when the extra in-partition sorts dominate (large groups);
   *   - loses whole-stage codegen fusion with up/downstream expressions;
   *   - buffers one GROUP at a time on the heap (the window operator
   *     spills), so it assumes bounded per-entity event counts — the same

@@ -2,8 +2,10 @@ package graft.tools
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import graft.SparkEntry
 import graft.benchmark.Force
@@ -15,6 +17,13 @@ import graft.benchmark.Force
   * (checkpoint-cut loops) hide their work from the returned plan; this
   * tool counts it, so "one fewer pass / one fewer job" claims are
   * verifiable (r17 VERDICT noted plan dumps alone cannot show them).
+  *
+  * It also reports the generated-code classes Janino compiled during
+  * the forced run (`compiles`, with the warm-up run's count as `cold`)
+  * and their compile time. Spark caches compiled classes in a
+  * fixed-size LRU (100 entries by default), so a query whose distinct
+  * classes outgrow it recompiles on every execution: a non-zero warm
+  * count is that thrash.
   *
   * Usage: runMain graft.tools.JobProfile q1,q2 /root/testdata/sf0.1
   */
@@ -84,25 +93,34 @@ object JobProfile {
       Thread.sleep(300)
     }
 
+    // process-wide codegen counters: compilations and their time (ns)
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
+      val cold0 = compiles()
       Force(fn(spark, sfDir)) // warm-up, uncounted
+      val cold = compiles() - cold0
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       System.gc(); Thread.sleep(500)
       drainListeners()
       reset()
+      val c0 = compiles()
+      val ct0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       Force(fn(spark, sfDir))
       val sec = (System.nanoTime() - t0) / 1e9
+      val warm = compiles() - c0
+      val compileMs = (CodeGenerator.compileTime - ct0) / 1e6
       drainListeners()
       println(f"[jobprofile] $name%-28s jobs=${jobs.get}%3d " +
         f"stages=${stages.get}%4d tasks=${tasks.get}%6d " +
         f"shufR=${shuffleRead.get / 1024}%8d KiB " +
         f"shufW=${shuffleWrite.get / 1024}%8d KiB " +
         f"cpu=${cpuNs.get / 1e9}%7.3f s run=${runMs.get / 1e3}%7.3f s " +
-        f"wall=$sec%7.3f s")
+        f"wall=$sec%7.3f s compiles=$warm%4d (cold $cold%4d) " +
+        f"compile=$compileMs%8.1f ms")
       if (verbose) jobLines.forEach(l => println(l))
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.benchmark.Force
-import graft.operators.IntervalIdentifier
+import graft.operators.{Dsir, IntervalIdentifier}
 
 /** Pins the bench harness's honesty guard: the round-3 postmortem found
   * count()-forced timing let Catalyst prune every row-preserving query to
@@ -84,6 +84,26 @@ class BenchGuardSpec extends AnyFunSuite {
         Force.planString(events.select("user_id")))
     }
     assert(e.getMessage.contains("signature"))
+  }
+
+  test("DSIR selection with k on a bucket edge: no rank window, and " +
+    "the bucket_search signature still holds the plan honest") {
+    val docs = (0L until 60L).map(i =>
+      (i, s"body text w${i % 7}", if (i % 5 == 0) "seed" else "web"))
+      .toDF("doc_id", "text", "source")
+    // fraction 1.0 puts k on the last bucket edge: every bucket is
+    // keep-all, so no boundary bucket exists and nothing is ranked
+    val all = Dsir.ImportanceResample("seed", 1.0, numFeatures = 64)
+      .transform(docs).select("doc_id", "dsir_score")
+    val plan = Force.planString(all)
+    assert(!plan.contains("Window"), plan)
+    Seq("sample_dsir", "dsir_bigram", "dsir_incr", "dsir_report")
+      .foreach(Bench.assertHonestPlan(_, plan)) // does not throw
+    assert(all.count() == 60L)
+    // a cut inside a bucket ranks that bucket beside the same filter
+    val part = Dsir.ImportanceResample("seed", 0.3, numFeatures = 64)
+      .transform(docs).select("doc_id", "dsir_score")
+    Bench.assertHonestPlan("sample_dsir", Force.planString(part))
   }
 
   test("every SparkEntry query has a registered plan signature") {

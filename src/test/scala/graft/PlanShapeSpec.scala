@@ -28,11 +28,17 @@ class PlanShapeSpec extends AnyFunSuite {
     (2L, 1L, "s"), (2L, 2L, "e"))
     .toDF("user_id", "event_id", "marker")
 
+  /** Physical operator nodes named `node` (`Window`, `Sort`) in the
+    * prepared plan.
+    */
+  private def nodes(df: DataFrame, node: String): Int =
+    df.queryExecution.executedPlan.toString.linesIterator
+      .count(_.matches(s"[\\s+:\\-]*$node \\[.*"))
+
   test("interval enumerated: ONE shuffle for the whole window pipeline") {
-    // the per-raw-iid window clusters on (groupby, raw_iid); existing
-    // hashpartitioning(groupby) already satisfies that distribution
-    // (partition keys are a subset of the clustering keys), so
-    // EnsureRequirements inserts only a sort — better than the
+    // every pass partitions by the groupby keys alone, in forward or
+    // reversed order, so hashpartitioning(groupby) serves them all and
+    // EnsureRequirements adds only in-partition sorts — better than the
     // reference's derived 2-shuffle count
     val w = new IntervalIdentifier("marker", "s", Some("e"),
       orderbyColumns = Seq("event_id"), groupbyColumns = Seq("user_id"))
@@ -47,6 +53,31 @@ class PlanShapeSpec extends AnyFunSuite {
     val ident = new IntervalIdentifier("marker", "s", None,
       orderbyColumns = Seq("event_id"), groupbyColumns = Seq("user_id"))
     assert(shuffles(ident.transform(events)) == 1)
+  }
+
+  test("interval window algebra: a reversed and a forward pass plus one " +
+    "neighbour window per duplicate-marker drop — Window / Sort budgets " +
+    "per span selection") {
+    // last-start/first-end is exactly the two passes; each drop adds one
+    // neighbour window (and at most one sort for its direction). Every
+    // Window node costs generated classes, which must fit Spark's
+    // codegen cache across the plans a caller runs
+    val budgets = Seq(
+      (false, true) -> 2, // last start, first end
+      (true, true) -> 3, // first start, first end
+      (false, false) -> 3, // last start, last end
+      (true, false) -> 4) // first start, last end
+    for (((su, eu), budget) <- budgets;
+         rt <- Seq(ResultType.Valid, ResultType.Enumerated)) {
+      val df = new IntervalIdentifier("marker", "s", Some("e"), su, eu,
+        Seq("event_id"), Seq("user_id"), resultType = rt).transform(events)
+      val (wn, sn) = (nodes(df, "Window"), nodes(df, "Sort"))
+      val label = s"su=$su eu=$eu $rt: $wn Window / $sn Sort nodes\n" +
+        df.queryExecution.executedPlan
+      if (budget == 2) assert(wn == 2 && sn == 2, label)
+      else assert(wn <= budget && sn <= budget, label)
+      assert(shuffles(df) == 1, label)
+    }
   }
 
   test("interval single-pass: single shuffle") {
@@ -446,7 +477,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("sample_dsir: selection runs ids-only over the eager checkpoint " +
-    "cut — the bucket exchanges never carry text, and text appears " +
+    "cut — literal bucket filters, no bucket exchange, and text appears " +
     "only in the final kept-rows join") {
     val docs = (0L until 60L).map(i =>
       (i, s"body text w${i % 7}", if (i % 5 == 0) "seed" else "web"))
@@ -457,14 +488,19 @@ class PlanShapeSpec extends AnyFunSuite {
     // the scoring subtree ran eagerly at transform time (the
     // localCheckpoint cut): the query's own plan reads the narrow
     // materialized rows
-    assert(plan.contains("ExistingRDD") || plan.contains("Scan RDD"),
-      plan)
-    // every selection exchange partitions the narrow frame on the
-    // bucket keys — text in one means the full row rode the selection
-    val selExchanges = "(?s)Exchange hashpartitioning\\(__b[^\\n]*".r
-      .findAllIn(plan).toList
-    assert(selExchanges.nonEmpty, plan)
-    assert(!selExchanges.exists(_.contains("text")), plan)
+    val cutScans = plan.linesIterator
+      .filter(l => l.contains("ExistingRDD") || l.contains("Scan RDD"))
+      .toList
+    assert(cutScans.nonEmpty, plan)
+    assert(!cutScans.exists(_.contains("text")), plan)
+    // the keep-all / boundary classification resolved on the driver
+    // census: selection is literal bucket-id filters over the cut, never
+    // a bucket-keyed exchange
+    assert(plan.contains("bucket_search"), plan)
+    assert(!plan.contains("Exchange hashpartitioning(__b"), plan)
+    // text enters once, from the input side of the one kept-rows join
+    val joins = plan.linesIterator.filter(_.matches(".*\\w+Join .*")).toList
+    assert(joins.size == 1, plan)
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
