@@ -36,192 +36,9 @@ import graft.benchmark.{Force, TimeProfile}
   */
 object Bench {
 
-  /** A physical-plan fragment that MUST appear in the timed plan of each
-    * query — the operator's signature node (Window / join / the defining
-    * expression). `None` marks operators that execute eagerly inside the
-    * query builder (checkpoint-cut loops: connected components, the
-    * salted identifier), where the returned plan is a checkpoint scan and
-    * the real work is timed because the builder runs inside the timed
-    * thunk. Every SparkEntry query needs an entry: a new query without
-    * one fails fast.
-    */
-  private[graft] val planSignatures: Map[String, Option[String]] = Map(
-    "interval_lsfe" -> Some("Window"),
-    "interval_fsle" -> Some("Window"),
-    "interval_fsfe_adj" -> Some("Window"),
-    "interval_lsle_adj" -> Some("Window"),
-    "interval_fsfe_generic" -> Some("Window"),
-    "interval_lsle_generic" -> Some("Window"),
-    "interval_raw" -> Some("Window"),
-    "interval_valid" -> Some("Window"),
-    "interval_desc" -> Some("Window"),
-    "interval_identical" -> Some("Window"),
-    "interval_lsfe_1pass" -> Some("MapPartitions"),
-    "interval_lsfe_salted" -> None,
-    "interval_fsle_salted" -> None,
-    "interval_identical_salted" -> None,
-    "sessionize" -> Some("Window"),
-    "session_stats" -> Some("Window"), // same gap window + reused-partitioning agg
-    "pipeline_ingest" -> Some("Join"), // ExactDedup's canonical-map join
-    "pipeline_curate" -> None, // CC loop runs eagerly inside the builder
-    "dedup_exact" -> Some("Join"),
-    "dedup_ngram_jaccard" -> Some("Join"),
-    "dedup_minhash_lsh" -> Some("Join"),
-    "dedup_simhash" -> Some("Join"),
-    "dedup_embedding" -> Some("Join"),
-    "dedup_clusters" -> None,
-    "win_quantiles" -> None, // the streaming query runs eagerly inside the builder
-    "win_stats" -> None, // same eager streaming-to-memory-sink shape
-    "win_gate" -> None, // two eager streaming phases (thresholds, gate)
-    "host_filter" -> Some("Join"), // host stats joined back null-safely
-    "dedup_canonical" -> None, // CC loop runs eagerly inside the builder
-    "dedup_semantic" -> Some("Join"), // within-cluster pair join (Lloyd
-    // rounds run eagerly inside the builder, as in the CC loop)
-    "dedup_incr" -> Some("Join"), // batch x fingerprint-index join
-    "dedup_incr_minhash" -> Some("Join"), // batch bands x band-index probe
-    "dedup_incr_semantic" -> Some("Join"), // batch x cluster-members join
-    "source_stats" -> Some("HashAggregate"), // per-source rollup agg
-    "corpus_report" -> Some("HashAggregate"), // one-row corpus summary
-    "source_filter" -> Some("Join"), // stats table joined back to docs
-    "asof_join" -> Some("Window"),
-    "range_join" -> Some("Join"),
-    "decontaminate" -> Some("Join"),
-    "decontaminate_bloom" -> Some("Join"),
-    "decontaminate_neardup" -> Some("Join"),
-    "decontaminate_report" -> Some("Join"),
-    "sample_quota" -> Some("Window"),
-    // the literal bucket-id selection filter over the score cut; a
-    // boundary rank window exists only when k falls inside a bucket
-    "sample_dsir" -> Some("bucket_search"),
-    // perceptron rounds run eagerly inside the builder (the DSIR
-    // checkpoint-cut convention); the lazy plan is the typed scoring
-    // pass over the checkpointed feature arrays
-    "quality_classifier" -> Some("MapPartitions"),
-    "quality_clf_bigram" -> Some("MapPartitions"), // bigram features
-    // the weights artifact: training runs eagerly in the builder
-    // (checkpoint-cut rounds); the lazy plan is the tiny sparse frame
-    "quality_weights" -> None,
-    "seq_pack_ranked" -> Some("MapPartitions"), // ShardPack typed pass
-    "dsir_bigram" -> Some("bucket_search"), // same selection, bigrams
-    "dsir_incr" -> Some("bucket_search"),
-    "dsir_report" -> Some("bucket_search"),
-    "mix_budget" -> Some("Window"),
-    "mix_budget_w" -> Some("Window"), // same prefix-sum core, external weights
-    "sample_cluster" -> Some("Window"),
-    "text_logprob" -> Some("Join"),
-    "text_bigram_lp" -> Some("Join"), // posting x per-bigram score table
-    "vocab_topk" -> Some("TakeOrderedAndProject"),
-    "stats_quantiles" -> Some("Window"),
-    "shard_pack" -> Some("MapPartitions"),
-    "sample_stratified" -> Some("md5"),
-    "chunk_split" -> Some("Generate"), // posexplode of the start list
-    "chunk_w" -> Some("Generate"), // same, external token array
-    "shuffle_interleave" -> Some("Window"),
-    "curriculum_order" -> Some("Window"),
-    "mix_temperature" -> Some("Window"),
-    "mix_temp_w" -> Some("Window"), // same core in regex-token units
-    "quality_band" -> Some("Window"), // QuantileStats' rank-location pass
-    "quality_winsor" -> Some("Window"), // same rank-location thresholds
-    "quality_robust" -> Some("Window"), // same thresholds, 3 quantiles
-    "pct_rank" -> Some("Window"), // the (group, bucket) cume window
-    "top_docs" -> Some("Window"), // rank over the heap-pruned survivors
-    "overlap_join" -> Some("Join"),
-    "funnel_steps" -> Some("Window"), // the conditional-min chain
-    "funnel_report" -> Some("Window"), // same chain + 1-row pivot agg
-    "sequence_pack" -> Some("MapPartitions"), // ShardPack's typed pass
-    "seq_pack_w" -> Some("MapPartitions"), // same, BPE-ish chunk counts
-    "pipeline_pretrain" -> Some("MapPartitions"), // final ShardPack stage
-    "tfidf_topk" -> Some("Window"),
-    "bm25_search" -> Some("TakeOrderedAndProject"), // heap top-k, no window
-    "ml_quantized_dot" -> Some("long_array_dot"),
-    "ann_bruteforce" -> Some("Window"),
-    "ann_lsh" -> Some("Window"),
-    "ann_lsh_multi" -> Some("Window"),
-    "ann_ivf" -> Some("Window"),
-    "ann_ivf_incr" -> Some("Window"), // probe join + the rank window
-    // the four refine-path ANN queries: the ADC/projected scan runs
-    // eagerly inside the builder since the exactRerank shortlist cut
-    // (timed — the builder runs inside the timed thunk, the DSIR
-    // convention); the lazy plan keeps the broadcast re-rank joins
-    "ann_ivf_pq" -> Some("BroadcastHashJoin"),
-    "ann_ivf_pq_res" -> Some("BroadcastHashJoin"),
-    "ann_ivf_pq_rt" -> Some("BroadcastHashJoin"),
-    "ann_ivf_pq_t" -> Some("BroadcastHashJoin"),
-    "ann_srp" -> Some("BroadcastHashJoin"),
-    "ann_ivf_pq_incr" -> Some("BroadcastHashJoin"),
-    "ann_pq_incr_res" -> Some("BroadcastHashJoin"),
-    "mix_epochs" -> Some("Generate"), // the per-copy sequence explode
-    "epoch_interleave" -> Some("Window"), // copies through the prefix sum
-    "text_boilerplate" -> Some("Join"),
-    "text_dupspans" -> Some("Window"), // the per-doc span-merge windows
-    "text_stripspans" -> Some("Window"), // same span machinery + rebuild
-    "text_striplines" -> Some("Join"), // hot-line anti-join + rebuild
-    "curation_recipe" -> Some("MapPartitions"), // the fused typed pass
-    "curation_recipe_clf" -> Some("MapPartitions"), // + trained gate
-    "curation_recipe_url" -> Some("MapPartitions"), // + canonicalize leg
-    "striplines_incr" -> Some("Join"), // batch lines x the line index
-    "mm_resize" -> Some("SerializeFromObject"),
-    "mm_features" -> Some("SerializeFromObject"),
-    "mm_framesample" -> Some("SerializeFromObject"),
-    "mm_audio" -> Some("SerializeFromObject"), // typed WAV-decode map pass
-    "mm_video" -> Some("SerializeFromObject"), // typed AVI-decode map pass
-    "mm_demux" -> Some("SerializeFromObject"), // typed AVI-demux map pass
-    "text_tokens" -> Some("split("),
-    "text_quality" -> Some("SerializeFromObject"),
-    "gopher_rules" -> Some("SerializeFromObject"), // typed rule-count pass
-    "gopher_rep" -> Some("SerializeFromObject"), // typed dup-line pass
-    "gopher_full" -> Some("SerializeFromObject"), // two chained typed passes
-    "gopher_ngram" -> Some("SerializeFromObject"), // typed n-gram pass
-    "c4_clean" -> Some("SerializeFromObject"), // typed line-retention pass
-    "pipeline_gopher" -> Some("MapPartitions"), // final ShardPack stage
-    "jsonl_ingest" -> Some("Scan json"), // the JSONL reader under test
-    "bm25_incr" -> Some("BroadcastHashJoin"), // df joins back broadcast
-    "text_entropy" -> Some("SerializeFromObject"), // compiled map pass
-    "text_langid" -> Some("SerializeFromObject"),
-    "text_normalize" -> Some("regexp_replace"),
-    "text_fingerprint" -> Some("SerializeFromObject"),
-    "text_repetition" -> Some("SerializeFromObject"),
-    "pii_scrub" -> Some("regexp_replace"),
-    "url_canonical" -> Some("regexp_replace"), // the canonical regex chain
-    "host_stats" -> Some("HashAggregate"), // per-host partial-agg rollup
-    "bpe_encode" -> Some("MapPartitions"), // broadcast-vocab trie encode
-    // r17: the MaxMatch counting pass runs eagerly inside the builder
-    // (one bounded collect — timed, the DSIR convention); the lazy
-    // plan keeps the smoothed-lattice score join over the vocab
-    "unigram_scores" -> Some("Join"),
-    "unigram_encode" -> Some("MapPartitions"), // broadcast-scores Viterbi DP
-    "unigram_em" -> Some("MapPartitions"), // hard-EM round + second DP
-    "unigram_prune" -> None, // prune loop runs eagerly; output is the driver-bounded pruned score table (LocalRelation)
-    "seq_pack_unigram" -> Some("MapPartitions"), // Viterbi encode->chunk->pack
-    "bpe_vocab" -> Some("HashAggregate"), // bounded frequency aggs + ranks
-    "bpe_learn" -> Some("HashAggregate"), // per-round pair-count aggs
-    "bpe_learn_deep" -> Some("HashAggregate"), // batched rounds, same aggs
-    "bpe_byte" -> Some("MapPartitions"), // byte-mapped trie encode
-    "bpe_enc_ranked" -> Some("MapPartitions"), // rank-order merge loop
-    "bpe_ranked_byte" -> Some("MapPartitions"), // same, byte symbols
-    "bpe_roundtrip" -> Some("MapPartitions"), // encode + decode passes
-    "seq_pack_learn" -> Some("MapPartitions"), // learn->encode->chunk->pack
-    "bpe_enc_uni" -> Some("MapPartitions"), // trie encode over non-BMP text
-    "pack_manifest" -> Some("HashAggregate"), // partial-agg pack rollup
-    "len_bucket_pack" -> Some("MapPartitions"), // seeded per-cell rank pass
-    "len_bucket_manifest" -> Some("HashAggregate"), // (class, pack) rollup
-    "pipeline_pretrain_bpe" -> Some("MapPartitions"), // final ShardPack stage
-    "chunk_bpe" -> Some("MapPartitions"), // encode feeds the chunker
-    "seq_pack_bpe" -> Some("MapPartitions"), // encode->chunk->pack chain
-    "mix_bpe" -> Some("MapPartitions"), // encode counts feed the budget
-    "q1_pricing" -> Some("HashAggregate"),
-    "join_revenue_nation" -> Some("Join"),
-    "top_customers" -> Some("Join"),
-  )
-
-  /** Queries whose plan legitimately carries a zero-column scan branch:
-    * a `count(*)`-style aggregate over the corpus reads no columns by
-    * design (tfidf_topk's N). Everything else must read real columns in
-    * EVERY scan — per round-5 ADVICE, "some scan reads columns" is too
-    * weak (a fully-pruned operator branch could hide behind one honest
-    * auxiliary branch).
-    */
-  private[graft] val zeroColumnScanOk: Set[String] = Set("tfidf_topk")
+  /** The registered query's [[QuerySpec.zeroColumnScanOk]] allowance. */
+  private[graft] def zeroColumnScanOk(name: String): Boolean =
+    SparkEntry.lookup(name).head.zeroColumnScanOk
 
   /** BASELINE.md row parser (same regex family as tools/check_gate.py):
     * rows of the NORMATIVE table look like `| query | 0.682 |` or
@@ -266,23 +83,22 @@ object Bench {
   /** Abort-on-failure plan self-check: the operator's signature node must
     * be in the plan, and every scan must read real columns (the
     * count()-pruning fingerprint is a scan collapsing to
-    * `ReadSchema: struct<>`) unless the query is allow-listed above.
+    * `ReadSchema: struct<>`) unless the query is allow-listed
+    * ([[QuerySpec.zeroColumnScanOk]]). An unregistered name fails fast.
     * Public to Bench + the spec pinning it.
     */
   private[graft] def assertHonestPlan(name: String, plan: String): Unit = {
+    val spec = SparkEntry.lookup(name).head
     val scans = "ReadSchema: struct<".r.findAllIn(plan).size
     val emptyScans = "ReadSchema: struct<>".r.findAllIn(plan).size
     val ok =
-      if (zeroColumnScanOk(name)) scans == 0 || emptyScans < scans
+      if (spec.zeroColumnScanOk) scans == 0 || emptyScans < scans
       else emptyScans == 0
     require(ok,
       s"[bench] $name: $emptyScans of $scans scans in the timed plan read " +
         s"ZERO columns — computation was pruned out and the measurement " +
         s"would be (partially) vacuous:\n$plan")
-    planSignatures.getOrElse(name,
-      throw new IllegalStateException(
-        s"[bench] no plan signature registered for query `$name`; add it " +
-          "to Bench.planSignatures")).foreach { sig =>
+    spec.signature.foreach { sig =>
       require(plan.contains(sig),
         s"[bench] $name: timed plan lacks signature node `$sig` — the " +
           s"operator was optimized out of the measurement:\n$plan")
@@ -293,9 +109,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
-    // dev iteration: comma-separated query-name filter (default: all)
+    // dev iteration: comma-separated query-name filter (default: all);
+    // a misspelled name fails here instead of timing nothing
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+      .map(SparkEntry.lookup(_).map(_.name).toSet)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -305,11 +122,6 @@ object Bench {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    // every query must have a signature BEFORE any measurement happens
-    val missing = SparkEntry.queries.keySet -- planSignatures.keySet
-    require(missing.isEmpty,
-      s"[bench] queries without a plan signature: ${missing.mkString(", ")}")
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

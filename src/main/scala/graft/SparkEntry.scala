@@ -5,6 +5,36 @@ import org.apache.spark.sql.functions._
 
 import graft.operators._
 
+/** One named query of the driver contract: the Spark builder, its
+  * DuckDB oracle and the plan signature the bench checks, registered
+  * together in [[SparkEntry.registry]] — a query cannot exist without
+  * its oracle and its signature.
+  *
+  * @param build the query over the parquet tables of an sf directory.
+  * @param oracle DuckDB-runnable SQL recomputing the result
+  *   independently, given the sf directory's base name (only
+  *   jsonl_ingest's oracle reads an sf-suffixed export; the rest ignore
+  *   it).
+  * @param signature a physical-plan fragment that MUST appear in the
+  *   timed plan — the operator's signature node (Window / join / the
+  *   defining expression). `None` marks operators that execute eagerly
+  *   inside the builder (checkpoint-cut loops: connected components, the
+  *   salted identifier), where the returned plan is a checkpoint scan
+  *   and the real work is timed because the builder runs inside the
+  *   timed thunk.
+  * @param zeroColumnScanOk the plan legitimately carries a zero-column
+  *   scan branch: a `count(*)`-style aggregate over the corpus reads no
+  *   columns by design (tfidf_topk's N). Everything else must read real
+  *   columns in EVERY scan — per round-5 ADVICE, "some scan reads
+  *   columns" is too weak (a fully-pruned operator branch could hide
+  *   behind one honest auxiliary branch).
+  */
+final case class QuerySpec(name: String,
+                           build: (SparkSession, String) => DataFrame,
+                           oracle: String => String,
+                           signature: Option[String],
+                           zeroColumnScanOk: Boolean = false)
+
 /** Driver contract: named queries over the driver-provided parquet tables
   * plus DuckDB-equivalent oracle SQL for each (see /root/repo/SURVEY.md §2).
   *
@@ -362,28 +392,101 @@ object SparkEntry {
   private def bpeFixtureVocab(d: DataFrame): DataFrame =
     Tokenize.VocabBuild().transform(d)
 
-  /** Text-analysis / dedup / similarity / multimodal / relational query
-    * surface (the 100 TB training-data-pipeline extensions). Each pairs
-    * with a bit-deterministic DuckDB oracle from [[OracleSql]].
+  /** Every query, with its oracle and plan signature: the interval
+    * identifier family (one entry per span config and implementation
+    * from SURVEY.md §2), then the text-analysis / dedup / similarity /
+    * multimodal / relational surface (the 100 TB training-data-pipeline
+    * extensions), each paired with a bit-deterministic DuckDB oracle,
+    * mostly from [[OracleSql]].
     */
-  private def extendedQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_tokens" -> ((s, dir) =>
+  val registry: Seq[QuerySpec] = Seq(
+    // interval identification: four span configs × generic/adjusted impls
+    QuerySpec("interval_lsfe", intervalQuery(su = false, eu = true,
+      ResultType.Enumerated, adjusted = false),
+      _ => intervalOracle(su = false, eu = true), Some("Window")),
+    QuerySpec("interval_fsle", intervalQuery(su = true, eu = false,
+      ResultType.Enumerated, adjusted = false),
+      _ => intervalOracle(su = true, eu = false), Some("Window")),
+    QuerySpec("interval_fsfe_adj", intervalQuery(su = true, eu = true,
+      ResultType.Enumerated),
+      _ => intervalOracle(su = true, eu = true), Some("Window")),
+    QuerySpec("interval_lsle_adj", intervalQuery(su = false, eu = false,
+      ResultType.Enumerated),
+      _ => intervalOracle(su = false, eu = false), Some("Window")),
+    QuerySpec("interval_fsfe_generic", intervalQuery(su = true, eu = true,
+      ResultType.Enumerated, adjusted = false),
+      _ => intervalOracle(su = true, eu = true), Some("Window")),
+    QuerySpec("interval_lsle_generic", intervalQuery(su = false, eu = false,
+      ResultType.Enumerated, adjusted = false),
+      _ => intervalOracle(su = false, eu = false), Some("Window")),
+    QuerySpec("interval_raw", intervalQuery(su = false, eu = true,
+      ResultType.Raw, adjusted = false),
+      _ => intervalOracle(su = false, eu = true, "raw"), Some("Window")),
+    QuerySpec("interval_valid", intervalQuery(su = false, eu = true,
+      ResultType.Valid, adjusted = false),
+      _ => intervalOracle(su = false, eu = true, "valid"), Some("Window")),
+    QuerySpec("interval_desc", intervalQuery(su = false, eu = true,
+      ResultType.Enumerated, adjusted = false, ascending = false),
+      _ => intervalOracle(su = false, eu = true, ascending = false),
+      Some("Window")),
+    // single-pass (repartition+sort+mapPartitions) formulation: one
+    // shuffle instead of two; must agree with the same oracle
+    QuerySpec("interval_lsfe_1pass", (s, dir) => {
+      val w = new IntervalIdentifierSinglePass("event_type", "signup",
+        Some("purchase"), orderbyColumns = Seq("event_id"),
+        groupbyColumns = Seq("user_id"))
+      w.transform(events(s, dir))
+        .select(col("user_id"), col("event_id"),
+          col("iids").cast("long").as("iids"))
+        .orderBy("user_id", "event_id")
+    }, _ => intervalOracle(su = false, eu = true), Some("MapPartitions")),
+    QuerySpec("interval_identical", (s, dir) => {
+      val w = new IntervalIdentifier("event_type", "click", None,
+        orderbyColumns = Seq("event_id"), groupbyColumns = Seq("user_id"))
+      w.transform(events(s, dir))
+        .select(col("user_id"), col("event_id"),
+          col("iids").cast("long").as("iids"))
+        .orderBy("user_id", "event_id")
+    }, _ => intervalIdenticalOracle("click"), Some("Window")),
+    // skew-immune salted formulation (chunked two-phase window algebra,
+    // no whole-group task anywhere): must agree with the SAME oracles as
+    // the plain paths. The three queries cover no-drop (lsfe), both-drop
+    // (fsle) and identical-marker semantics across chunk boundaries. The
+    // chunk passes run eagerly inside the builder, so the timed plan is
+    // a checkpoint scan (no signature node).
+    QuerySpec("interval_lsfe_salted", intervalQuery(su = false, eu = true,
+      ResultType.Enumerated, salted = true),
+      _ => intervalOracle(su = false, eu = true), None),
+    QuerySpec("interval_fsle_salted", intervalQuery(su = true, eu = false,
+      ResultType.Enumerated, salted = true),
+      _ => intervalOracle(su = true, eu = false), None),
+    QuerySpec("interval_identical_salted", (s, dir) => {
+      val w = new IntervalIdentifierSalted("event_type", "click", None,
+        orderbyColumns = Seq("event_id"), groupbyColumns = Seq("user_id"))
+      w.transform(events(s, dir))
+        .select(col("user_id"), col("event_id"),
+          col("iids").cast("long").as("iids"))
+        .orderBy("user_id", "event_id")
+    }, _ => intervalIdenticalOracle("click"), None),
+    QuerySpec("text_tokens", (s, dir) =>
       TextAnalysis.TokenCount().transform(docs(s, dir))
         .select("doc_id", "n_tokens", "n_distinct_tokens", "n_chars",
           "n_regex_tokens")
-        .orderBy("doc_id")),
-    "text_quality" -> ((s, dir) =>
+        .orderBy("doc_id"),
+      _ => OracleSql.textTokens, Some("split(")),
+    QuerySpec("text_quality", (s, dir) =>
       TextAnalysis.QualityScore().transform(docs(s, dir))
         .select("doc_id", "n_tokens", "avg_token_len", "stopword_ratio",
           "punct_ratio", "quality_score")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.textQuality, Some("SerializeFromObject")),
     // the Gopher/MassiveText HARD rule gate (r16): integer counters +
     // cross-multiplied ratio rules + conjunction admit — auditable
     // per-rule verdicts, no float ever materializes. Stopword list is
     // the fixture corpus's own function words (the/a) so the >= 2
     // distinct rule DISCRIMINATES here (47/136/317 docs at 0/1/2 hits)
     // — the production default stays the Gopher octet
-    "gopher_rules" -> ((s, dir) =>
+    QuerySpec("gopher_rules", (s, dir) =>
       TextAnalysis.GopherRules(stopwords = Seq("the", "a"))
         .transform(docs(s, dir))
         .select("doc_id", "n_words", "word_chars", "n_lines",
@@ -391,7 +494,9 @@ object SparkEntry {
           "stopword_hits", "r_word_count", "r_mean_word_len",
           "r_symbol_ratio", "r_bullet", "r_ellipsis", "r_alpha",
           "r_stopwords", "admit")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.gopherRules(50L, 100000L, Seq("the", "a")),
+      Some("SerializeFromObject")), // typed rule-count pass
     // the structural half of the Gopher filter (r16): within-doc
     // duplicate line/paragraph counters + threshold verdicts. The
     // fixture corpus is single-line, so the query SHAPES it
@@ -399,7 +504,7 @@ object SparkEntry {
     // every doc gains two derived 5-token lines — identical for every
     // 3rd doc (line-dup offenders); every 5th doc gains a duplicated
     // PARAGRAPH — so each rule family splits the corpus
-    "gopher_rep" -> ((s, dir) => {
+    QuerySpec("gopher_rep", (s, dir) => {
       val tk = graft.functions.Portable.tokens(col("text"))
       val l1 = array_join(slice(tk, 1, 5), " ")
       val l2 = array_join(slice(tk, 6, 5), " ")
@@ -424,14 +529,15 @@ object SparkEntry {
           "r_top4_gram", "r_dup5_gram", "r_dup6_gram", "r_dup7_gram",
           "r_dup8_gram", "r_dup9_gram", "r_dup10_gram", "admit")
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.gopherRepetition,
+      Some("SerializeFromObject")), // typed dup-line pass
     // the n-gram half of the repetition gate on its own shaped corpus
     // (r17, Rae et al. Table A1): every doc appends its first-2-token
     // phrase doc_id%9 times and its first-10-token phrase doc_id%4
     // times, sweeping the top-{2,3,4}-gram and dup-{5..10}-gram
     // fractions across every rule's threshold — each of the 9 rules
     // splits the corpus both ways
-    "gopher_ngram" -> ((s, dir) => {
+    QuerySpec("gopher_ngram", (s, dir) => {
       val tk = graft.functions.Portable.tokens(col("text"))
       val shaped = docs(s, dir)
         .withColumn("p2", array_join(slice(tk, 1, 2), " "))
@@ -453,11 +559,12 @@ object SparkEntry {
           "r_dup6_gram", "r_dup7_gram", "r_dup8_gram", "r_dup9_gram",
           "r_dup10_gram", "ngram_admit")
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.gopherNgram,
+      Some("SerializeFromObject")), // typed n-gram pass
     // the COMPLETE Gopher gate (r16): outlier rules AND repetition
     // rules over the same shaped corpus — two chained zero-shuffle
     // typed passes, one admit
-    "gopher_full" -> ((s, dir) => {
+    QuerySpec("gopher_full", (s, dir) => {
       val tk = graft.functions.Portable.tokens(col("text"))
       val l1 = array_join(slice(tk, 1, 5), " ")
       val l2 = array_join(slice(tk, 6, 5), " ")
@@ -479,12 +586,13 @@ object SparkEntry {
           col("admit").as("rep_admit"))
         .withColumn("admit", col("rules_admit") && col("rep_admit"))
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.gopherFull(20L, 100000L, Seq("the", "a")),
+      Some("SerializeFromObject")), // two chained typed passes
     // the rule gate composed as a Pipeline stage (r16): Gopher admit
     // filter -> context chunking -> exact token-budget packing — the
     // cheapest curation chain (no fit artifact anywhere), same
     // chunk+pack tail as pipeline_pretrain over the ADMITTED corpus
-    "pipeline_gopher" -> ((s, dir) => {
+    QuerySpec("pipeline_gopher", (s, dir) => {
       import graft.pipeline.{Pipeline, Stage}
       val p = new Pipeline(Seq(
         Stage(TextAnalysis.GopherRules(minWords = 20L,
@@ -508,7 +616,9 @@ object SparkEntry {
         .select(col("doc_id"), col("chunk_idx"), col("n_chunk_tokens"),
           col("cum_bytes").as("cum_tokens"), col("shard").as("pack_id"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }, _ => OracleSql.pipelineGopher(20L, 100000L,
+        Seq("the", "a"), 32, 8, 256L),
+      Some("MapPartitions")), // final ShardPack stage
     // C4-style line-level cleaning gate (r17, Raffel et al. 2020):
     // line retention (terminal punct incl. closing quote, >= 5 words,
     // no `javascript` word) then the document rules (>= 3 sentence
@@ -517,7 +627,7 @@ object SparkEntry {
     // rare token `dup`, 25/500 docs). The fixture shapes each doc
     // into 6 derived lines sweeping every retention rule, plus
     // javascript/lorem/brace tails on doc_id mod classes
-    "c4_clean" -> ((s, dir) => {
+    QuerySpec("c4_clean", (s, dir) => {
       val tk = graft.functions.Portable.tokens(col("text"))
       val l1 = concat(array_join(slice(tk, 1, 6), " "), lit("."))
       val l2 = concat(array_join(slice(tk, 1, 3), " "), lit("!"))
@@ -541,49 +651,58 @@ object SparkEntry {
           "r_sentences", "r_brace", "r_lorem", "r_block", "admit",
           "clean_text", "clean_chars")
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.c4Clean(5L, 3L, Seq("dup")),
+      Some("SerializeFromObject")), // typed line-retention pass
     // per-doc unigram Shannon entropy: the repetitiveness / lexical-
     // diversity gate signal — one compiled map pass, no shuffle
-    "text_entropy" -> ((s, dir) =>
+    QuerySpec("text_entropy", (s, dir) =>
       TextAnalysis.TokenEntropy().transform(docs(s, dir))
         .select("doc_id", "lang", "entropy")
-        .orderBy("doc_id")),
-    "sessionize" -> ((s, dir) =>
+        .orderBy("doc_id"),
+      _ => OracleSql.textEntropy,
+      Some("SerializeFromObject")), // compiled map pass
+    QuerySpec("sessionize", (s, dir) =>
       Sessionize("ts", 50000000000000L, Seq("user_id"), Seq("event_id"))
         .transform(events(s, dir))
         .select(col("user_id"), col("event_id"),
           col("session_id"))
-        .orderBy("user_id", "event_id")),
+        .orderBy("user_id", "event_id"),
+      _ => OracleSql.sessionize(50000000000000L), Some("Window")),
     // per-session rollup: one row per (user, session) with event count,
     // start/end and duration — sessionize's one keyed shuffle, the agg
     // reuses its partitioning (no second exchange, pinned)
-    "session_stats" -> ((s, dir) =>
+    QuerySpec("session_stats", (s, dir) =>
       SessionStats("ts", 50000000000000L, Seq("user_id"),
           Seq("event_id"))
         .transform(events(s, dir))
         .select(col("user_id"), col("session_id"),
           col("n_events"), col("session_start"), col("session_end"),
           col("duration"))
-        .orderBy("user_id", "session_id")),
-    "text_langid" -> ((s, dir) =>
+        .orderBy("user_id", "session_id"),
+      _ => OracleSql.sessionStats(50000000000000L),
+      Some("Window")), // same gap window + reused-partitioning agg
+    QuerySpec("text_langid", (s, dir) =>
       TextAnalysis.LanguageId().transform(docs(s, dir))
         .select(col("doc_id") +:
           TextAnalysis.LangMarkers.map(m => col(s"score_${m._1}")) :+
           col("pred_lang"): _*)
-        .orderBy("doc_id")),
-    "text_normalize" -> ((s, dir) =>
+        .orderBy("doc_id"),
+      _ => OracleSql.textLangId, Some("SerializeFromObject")),
+    QuerySpec("text_normalize", (s, dir) =>
       TextAnalysis.Normalize().transform(docs(s, dir))
         .select("doc_id", "norm_text", "norm_len", "norm_fp")
-        .orderBy("doc_id")),
-    "text_fingerprint" -> ((s, dir) =>
+        .orderBy("doc_id"),
+      _ => OracleSql.textNormalize, Some("regexp_replace")),
+    QuerySpec("text_fingerprint", (s, dir) =>
       TextAnalysis.Fingerprint().transform(docs(s, dir))
         .select("doc_id", "md5_fp", "roll_fp")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.textFingerprint, Some("SerializeFromObject")),
     // end-to-end ingest chain THROUGH the Pipeline framework (§2.12):
     // normalize -> quality gate -> keep-canonical exact dedup, each a
     // Stage; proves operator composition under the oracle gate and that
     // the map-side stages fuse (no extra shuffles vs the fused query)
-    "pipeline_ingest" -> ((s, dir) => {
+    QuerySpec("pipeline_ingest", (s, dir) => {
       import graft.pipeline.{Pipeline, Stage}
       val p = new Pipeline(Seq(
         Stage(TextAnalysis.Normalize()),
@@ -596,7 +715,8 @@ object SparkEntry {
       p.transform(docs(s, dir))
         .select("doc_id", "n_tokens", "quality_score", "content_fp")
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.pipelineIngest(20L),
+      Some("Join")), // ExactDedup's canonical-map join
     // the full curation chain end to end, every round-5 surface composed
     // through pipeline.Curation (normalize -> quality -> boilerplate ->
     // decontaminate -> gates -> near-dup canonical -> stratified sample
@@ -605,20 +725,24 @@ object SparkEntry {
     // localCheckpoint phase cuts; `checkpointDir` switches both cuts and
     // the CC rounds to reliable checkpoint() for real clusters
     // (CurationSpec pins result equivalence of the two modes).
-    "pipeline_curate" -> ((s, dir) =>
+    QuerySpec("pipeline_curate", (s, dir) =>
       graft.pipeline.Curation.pipeline().transform(docs(s, dir))
         .select("doc_id", "lang", "n_chars", "n_tokens", "quality_score",
           "cum_bytes", "shard")
-        .orderBy("doc_id")),
-    "text_repetition" -> ((s, dir) =>
+        .orderBy("doc_id"),
+      _ => OracleSql.pipelineCurate(10L, 20L, 0.5, 0.2, 10L,
+        Seq("en" -> 0.5, "de" -> 0.25), 0.1, "graft", 20000L),
+      None), // CC loop runs eagerly inside the builder
+    QuerySpec("text_repetition", (s, dir) =>
       TextAnalysis.RepetitionScore().transform(docs(s, dir))
         .select("doc_id", "n_2grams", "dup_2gram_ratio", "n_3grams",
           "dup_3gram_ratio", "repetition_score")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.textRepetition, Some("SerializeFromObject")),
     // the synthetic documents carry no PII, so both engines append the
     // SAME deterministic doc_id-derived email/phone/IP before scrubbing —
     // the redaction behavior (not the corpus) is what the oracle pins
-    "pii_scrub" -> ((s, dir) => {
+    QuerySpec("pii_scrub", (s, dir) => {
       val aug = docs(s, dir).withColumn("text", concat(col("text"),
         lit(" contact user"), col("doc_id").cast("string"),
         lit("@example.com or +1 555-01"),
@@ -629,42 +753,51 @@ object SparkEntry {
         .select("doc_id", "n_emails", "n_ips", "n_phones", "scrub_len",
           "scrub_fp")
         .orderBy("doc_id")
-    }),
-    "dedup_exact" -> ((s, dir) =>
+    }, _ => OracleSql.piiScrub, Some("regexp_replace")),
+    QuerySpec("dedup_exact", (s, dir) =>
       Dedup.ExactDedup().transform(docs(s, dir))
         .select("doc_id", "content_fp", "canonical_id", "is_dup")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.dedupExact, Some("Join")),
     // maxDocFreq = 10: capped-set semantics — the doc-frequency guard the
     // operator exists for (bounded posting lists => no self-join)
-    "dedup_ngram_jaccard" -> ((s, dir) =>
+    QuerySpec("dedup_ngram_jaccard", (s, dir) =>
       Dedup.NGramJaccard(maxDocFreq = 10L).transform(docs(s, dir))
-        .orderBy("id_a", "id_b")),
-    "dedup_minhash_lsh" -> ((s, dir) =>
+        .orderBy("id_a", "id_b"),
+      _ => OracleSql.dedupNGramJaccard(0.2, 10L), Some("Join")),
+    QuerySpec("dedup_minhash_lsh", (s, dir) =>
       Dedup.MinHashLSHDedup().transform(docs(s, dir))
-        .orderBy("id_a", "id_b")),
-    "dedup_simhash" -> ((s, dir) =>
+        .orderBy("id_a", "id_b"),
+      _ => OracleSql.dedupMinHash(32, 8, 0.25), Some("Join")),
+    QuerySpec("dedup_simhash", (s, dir) =>
       Dedup.SimHashDedup().transform(docs(s, dir))
-        .orderBy("id_a", "id_b")),
-    "dedup_clusters" -> ((s, dir) =>
+        .orderBy("id_a", "id_b"),
+      _ => OracleSql.dedupSimHash(32, 4, 3), Some("Join")),
+    QuerySpec("dedup_clusters", (s, dir) =>
       Dedup.connectedComponents(
         Dedup.NGramJaccard(maxDocFreq = 10L).transform(docs(s, dir)))
-        .orderBy("doc_id")),
-    "dedup_embedding" -> ((s, dir) =>
+        .orderBy("doc_id"),
+      _ => OracleSql.dedupClusters(0.2, 10L), None),
+    QuerySpec("dedup_embedding", (s, dir) =>
       Dedup.EmbeddingNearDup().transform(embs(s, dir))
-        .orderBy("id_a", "id_b")),
+        .orderBy("id_a", "id_b"),
+      _ => OracleSql.dedupEmbedding(64, 4, 8, 0.4), Some("Join")),
     // SemDeDup: spherical k-means (2 Lloyd rounds, deterministic init)
     // + within-cluster cosine pruning; the oracle replays the FULL
     // clustering in SQL (integer-exact centers, one IEEE div/sqrt)
-    "dedup_semantic" -> ((s, dir) =>
+    QuerySpec("dedup_semantic", (s, dir) =>
       SemDedup(nClusters = 8, iterations = 2, threshold = 0.35)
         .transform(embs(s, dir))
         .select("vec_id", "cluster", "is_dup", "dup_of")
-        .orderBy("vec_id")),
+        .orderBy("vec_id"),
+      // within-cluster pair join (Lloyd rounds run eagerly inside the
+      // builder, as in the CC loop)
+      _ => OracleSql.dedupSemantic(64, 8, 2, 0.35), Some("Join")),
     // incremental semantic ingest: vec_id % 4 == 0 is the new batch,
     // the rest of the corpus is represented by its (vec_id, cluster,
     // q, nrm) member index only — centers re-derive from the index, the
     // corpus embeddings are never re-clustered or re-scored
-    "dedup_incr_semantic" -> ((s, dir) => {
+    QuerySpec("dedup_incr_semantic", (s, dir) => {
       val e = embs(s, dir)
       val idx = IncrementalSemDedup.memberIndex(
         e.filter(pmod(col("vec_id"), lit(4L)) =!= 0),
@@ -673,11 +806,12 @@ object SparkEntry {
         .transform(e.filter(pmod(col("vec_id"), lit(4L)) === 0))
         .select("vec_id", "cluster", "is_known", "is_dup", "dup_of")
         .orderBy("vec_id")
-    }),
+    }, _ => OracleSql.dedupIncrementalSemantic(64, 8, 2, 0.35, 4L),
+      Some("Join")), // batch x cluster-members join
     // incremental ingest: src0 is the new batch, the rest of the corpus
     // is represented by its fingerprint index only — the corpus text is
     // never re-shuffled to admit the batch
-    "dedup_incr" -> ((s, dir) => {
+    QuerySpec("dedup_incr", (s, dir) => {
       val d = docs(s, dir)
       val idx = Dedup.IncrementalExactDedup.fingerprintIndex(
         d.filter(col("source") =!= "src0"))
@@ -686,11 +820,12 @@ object SparkEntry {
         .select("doc_id", "content_fp", "is_known", "canonical_id",
           "is_dup")
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.dedupIncremental("src0"),
+      Some("Join")), // batch x fingerprint-index join
     // incremental NEAR-dup: the corpus is probed only through its
     // persisted MinHash signature/band indexes — batch text is the only
     // text that shingles
-    "dedup_incr_minhash" -> ((s, dir) => {
+    QuerySpec("dedup_incr_minhash", (s, dir) => {
       val d = docs(s, dir)
       val corpusSigs = Dedup.IncrementalMinHashLSH.signatureIndex(
         d.filter(col("source") =!= "src0"))
@@ -698,30 +833,37 @@ object SparkEntry {
           Dedup.IncrementalMinHashLSH.bandIndex(corpusSigs), corpusSigs)
         .transform(d.filter(col("source") === "src0"))
         .orderBy("known", "id_a", "id_b")
-    }),
+    }, _ => OracleSql.dedupIncrementalMinHash("src0", 32, 8, 0.25),
+      Some("Join")), // batch bands x band-index probe
     // one-row whole-corpus analyst summary (the funnel_report motif at
     // corpus level): one shuffle of pre-aggregated partials
-    "corpus_report" -> ((s, dir) =>
+    QuerySpec("corpus_report", (s, dir) =>
       graft.operators.SourceQuality.CorpusReport()
         .transform(docs(s, dir))
         .select(col("n_docs"), col("n_sources"), col("n_langs"),
           col("total_chars"), round(col("mean_chars"), 6).as("mean_chars"),
           col("n_null_text"), col("distinct_classes"),
-          round(col("dup_ratio"), 6).as("dup_ratio"))),
+          round(col("dup_ratio"), 6).as("dup_ratio")),
+      _ => OracleSql.corpusReport,
+      Some("HashAggregate")), // one-row corpus summary
     // Gopher-style per-domain rollup + gate: filtering decided at the
     // SOURCE level, the stats table joins back (AQE-broadcast)
-    "source_stats" -> ((s, dir) =>
+    QuerySpec("source_stats", (s, dir) =>
       SourceQuality.SourceStats().transform(docs(s, dir))
-        .orderBy("source")),
-    "source_filter" -> ((s, dir) =>
+        .orderBy("source"),
+      _ => OracleSql.sourceStats,
+      Some("HashAggregate")), // per-source rollup agg
+    QuerySpec("source_filter", (s, dir) =>
       SourceQuality.SourceFilter(minMeanChars = 290.0, maxDupRatio = 0.2)
         .transform(docs(s, dir))
         .select("doc_id", "source", "source_mean_chars",
           "source_dup_ratio")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.sourceFilter(290.0, 0.2, 1L),
+      Some("Join")), // stats table joined back to docs
     // full near-dup decision chain: candidate pairs -> clusters ->
     // keep-the-best-quality-doc-per-cluster (singletons always kept)
-    "dedup_canonical" -> ((s, dir) => {
+    QuerySpec("dedup_canonical", (s, dir) => {
       val d = docs(s, dir)
       val clusters = Dedup.connectedComponents(
         Dedup.NGramJaccard(maxDocFreq = 10L).transform(d))
@@ -730,11 +872,12 @@ object SparkEntry {
       Dedup.selectCanonical(scored, clusters)
         .select("doc_id", "component", "quality_score", "keep")
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.dedupCanonical(0.2, 10L),
+      None), // CC loop runs eagerly inside the builder
     // as-of join: each click picks the user's most recent prior purchase
     // (union-window formulation, ONE keyed shuffle); DuckDB re-derives it
     // with its native ASOF JOIN — independent algorithms, same answer
-    "asof_join" -> ((s, dir) =>
+    QuerySpec("asof_join", (s, dir) =>
       AsOfJoin.AsOfJoinOp(
         _.filter(col("event_type") === "click")
           .select("user_id", "event_id"),
@@ -743,11 +886,12 @@ object SparkEntry {
         keyColumns = Seq("user_id"), leftTime = "event_id",
         rightTime = "event_id", payloadColumns = Seq("value"))
         .transform(events(s, dir))
-        .orderBy("user_id", "event_id")),
+        .orderBy("user_id", "event_id"),
+      _ => OracleSql.asOfJoin, Some("Window")),
     // binned range join: clicks inside the 2-day window before each
     // purchase (bin-bucketed equi-join + residual — never a nested-loop
     // plan), rolled up per purchase with LEFT semantics
-    "range_join" -> ((s, dir) => {
+    QuerySpec("range_join", (s, dir) => {
       val ev = events(s, dir)
       val dayNs = 86400000000000L
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -770,29 +914,32 @@ object SparkEntry {
           coalesce(col("n_clicks"), lit(0L)).as("n_clicks"),
           col("first_click_id"))
         .orderBy("user_id", "purchase_id")
-    }),
+    }, _ => OracleSql.rangeJoin(2L * 86400000000000L), Some("Join")),
     // ordered funnel: earliest signup -> first view at-or-after it ->
     // first purchase at-or-after that, per user; ONE keyed shuffle
     // (stacked conditional-min windows + same-key agg)
-    "funnel_steps" -> ((s, dir) =>
+    QuerySpec("funnel_steps", (s, dir) =>
       Funnel(Seq("signup", "view", "purchase"))
         .transform(events(s, dir))
         .select("user_id", "t_signup", "t_view", "t_purchase",
           "steps_completed")
-        .orderBy("user_id")),
+        .orderBy("user_id"),
+      _ => OracleSql.funnelSteps, Some("Window")), // the conditional-min chain
     // aggregate funnel conversion report: per step, users reaching it
     // and conversion from the previous step — Funnel's one keyed
     // shuffle plus a single 1-row aggregate pivoted by a plan-time
     // explode (no second keyed shuffle)
-    "funnel_report" -> ((s, dir) =>
+    QuerySpec("funnel_report", (s, dir) =>
       FunnelReport(Seq("signup", "view", "purchase"))
         .transform(events(s, dir))
-        .orderBy("step_index")),
+        .orderBy("step_index"),
+      _ => OracleSql.funnelReport,
+      Some("Window")), // same chain + 1-row pivot agg
     // binned interval-OVERLAP join (range x range): which view influence
     // windows [ts, ts+1d] intersect each purchase attribution window
     // [ts-2d, ts] per user — equi-join on (user, bin), each pair kept in
     // exactly ONE canonical bin (no distinct pass), exact residual
-    "overlap_join" -> ((s, dir) => {
+    QuerySpec("overlap_join", (s, dir) => {
       val ev = events(s, dir)
       val dayNs = 86400000000000L
       val purchases = ev.filter(col("event_type") === "purchase")
@@ -813,43 +960,53 @@ object SparkEntry {
           coalesce(col("n_views"), lit(0L)).as("n_views"),
           col("first_view_id"))
         .orderBy("user_id", "purchase_id")
-    }),
+    }, _ => OracleSql.overlapJoin(2L * 86400000000000L,
+        86400000000000L), Some("Join")),
     // deterministic md5-threshold stratified sampling (training-mix
     // control): zero-shuffle map-side filter, stable across engines
-    "sample_stratified" -> ((s, dir) =>
+    QuerySpec("sample_stratified", (s, dir) =>
       Sampling.StratifiedSample(Map("en" -> 0.5, "de" -> 0.25),
         defaultRate = 0.1)
         .transform(docs(s, dir))
         .select("doc_id", "lang", "sample_bucket")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.sampleStratified(
+        Seq("en" -> 0.5, "de" -> 0.25), 0.1, "graft"), Some("md5")),
     // fixed-COUNT companion: at most N docs per stratum, hash-order
     // selection; map-side bounded heaps keep the rank window input at
     // partitions*quota rows per stratum
-    "sample_quota" -> ((s, dir) =>
+    QuerySpec("sample_quota", (s, dir) =>
       Sampling.QuotaSample(Map("en" -> 120L, "de" -> 60L),
         defaultQuota = 25L)
         .transform(docs(s, dir))
         .select("doc_id", "lang", "sample_bucket", "quota_rank")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.sampleQuota(
+        Seq("en" -> 120L, "de" -> 60L), 25L, "graft"), Some("Window")),
     // token-budget mixture: keep hash-ordered docs per language while
     // the running token total fits the budget (exact two-phase prefix
     // sum, hash-range buckets — no whole-stratum sort anywhere)
-    "mix_budget" -> ((s, dir) =>
+    QuerySpec("mix_budget", (s, dir) =>
       Corpus.MixBudget(Map("en" -> 20000L, "de" -> 8000L),
         defaultBudget = 3000L)
         .transform(docs(s, dir))
         .select("doc_id", "lang", "n_tokens", "cum_tokens", "sample_bucket")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.mixBudget(
+        Seq("en" -> 20000L, "de" -> 8000L), 3000L, "graft"), Some("Window")),
     // the same mixture budgeted in an EXTERNAL per-document count
     // column (here the table's own n_chars — the tokenCountColumn
     // path a real BPE tokenizer's counts ride): the exact prefix-sum
     // algebra is unchanged, only the weight source moves
-    "mix_budget_w" -> ((s, dir) =>
+    QuerySpec("mix_budget_w", (s, dir) =>
       Corpus.MixBudget(Map("en" -> 100000L, "de" -> 40000L),
         defaultBudget = 15000L, tokenCountColumn = "n_chars")
         .transform(docs(s, dir))
         .select("doc_id", "lang", "n_tokens", "cum_tokens", "sample_bucket")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.mixBudgetChars(
+        Seq("en" -> 100000L, "de" -> 40000L), 15000L, "graft"),
+      Some("Window")), // same prefix-sum core, external weights
     // DSIR importance resampling: docs scored by hashed-unigram
     // target-vs-raw log-likelihood ratio (src0 as the target domain),
     // exact deterministic top-20% kept via the equi-depth boundary-
@@ -859,54 +1016,72 @@ object SparkEntry {
     // the src0 slice is the curated seed (the DSIR labeling contract);
     // the oracle replays every GD round (margins, misclassified
     // gradient, weight update) and the final scoring pass
-    "quality_classifier" -> ((s, dir) =>
+    QuerySpec("quality_classifier", (s, dir) =>
       Classifier.QualityClassifier(positiveValue = "src0", rounds = 8)
         .transform(withSourceTag(docs(s, dir)))
         .select("doc_id", "quality_margin", "quality_keep")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      // perceptron rounds run eagerly inside the builder (the DSIR
+      // checkpoint-cut convention); the lazy plan is the typed scoring
+      // pass over the checkpointed feature arrays
+      _ => OracleSql.qualityClassifier("src0", 1024, 8, tagged = true),
+      Some("MapPartitions")),
     // ...on hashed BIGRAM features (tells shuffled word salad from
     // prose where unigrams cannot — the DSIR ngram=2 feature space);
     // same oracle-replayed GD rounds over the bigram posting
-    "quality_clf_bigram" -> ((s, dir) =>
+    QuerySpec("quality_clf_bigram", (s, dir) =>
       Classifier.QualityClassifier(positiveValue = "src0", rounds = 4,
           ngram = 2)
         .transform(withSourceTag(docs(s, dir)))
         .select("doc_id", "quality_margin", "quality_keep")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.qualityClassifier("src0", 1024, 4, ngram = 2,
+        tagged = true), Some("MapPartitions")), // bigram features
     // the PERSISTED weights artifact (r15): the trained gate's
     // deployable face — nonzero (feature, weight) cells out of the
     // same oracle-replayed GD rounds; Classifier.Score /
     // StreamingQualityGate consume it batch or stream
-    "quality_weights" -> ((s, dir) =>
+    QuerySpec("quality_weights", (s, dir) =>
       Classifier.weightsTable(withSourceTag(docs(s, dir)),
           positiveValue = "src0", rounds = 8)
         .select("feature", "weight")
-        .orderBy("feature")),
-    "sample_dsir" -> ((s, dir) =>
+        .orderBy("feature"),
+      // the weights artifact: training runs eagerly in the builder
+      // (checkpoint-cut rounds); the lazy plan is the tiny sparse frame
+      _ => OracleSql.qualityWeights("src0", 1024, 8, tagged = true), None),
+    QuerySpec("sample_dsir", (s, dir) =>
       Dsir.ImportanceResample(targetValue = "src0", fraction = 0.2)
         .transform(docs(s, dir))
         .select("doc_id", "dsir_score")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      // the literal bucket-id selection filter over the score cut; a
+      // boundary rank window exists only when k falls inside a bucket
+      _ => OracleSql.dsirResample("src0", 0.2, 4096, "graft"),
+      Some("bucket_search")),
     // DSIR on hashed BIGRAM features (Xie et al. use n-gram feature
     // spaces): the codegen'd slice+arrays_zip bigram stream feeds the
     // same hashing, smoothing and exact no-global-sort selection
-    "dsir_bigram" -> ((s, dir) =>
+    QuerySpec("dsir_bigram", (s, dir) =>
       Dsir.ImportanceResample(targetValue = "src0", fraction = 0.2,
           ngram = 2)
         .transform(docs(s, dir))
         .select("doc_id", "dsir_score")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.dsirResample("src0", 0.2, 4096, "graft",
+        ngram = 2), Some("bucket_search")), // same selection, bigrams
     // the selection datasheet: what did the top-20% cut do to the
     // source mix — per-source in/kept/rate and exact kept score mass
-    "dsir_report" -> ((s, dir) =>
+    QuerySpec("dsir_report", (s, dir) =>
       Dsir.SelectionReport(targetValue = "src0", fraction = 0.2)
         .transform(docs(s, dir))
-        .orderBy("source")),
+        .orderBy("source"),
+      _ => OracleSql.dsirReport("src0", 0.2, 4096, "graft"),
+      Some("bucket_search")),
     // DSIR at ingest: the src0 batch scored against feature counts
     // fitted on the REST of the corpus (src1 as the target domain),
     // top 25% of the batch kept — corpus text is never re-read;
     // unseen batch features score the zero-count smoothed ratio
-    "dsir_incr" -> ((s, dir) => {
+    QuerySpec("dsir_incr", (s, dir) => {
       val d = docs(s, dir)
       val counts = Dsir.featureCounts(
         d.filter(col("source") =!= "src0"), "src1")
@@ -914,102 +1089,120 @@ object SparkEntry {
         .transform(d.filter(col("source") === "src0"))
         .select("doc_id", "dsir_score")
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.dsirIncremental("src0", "src1", 0.25, 4096, "graft"),
+      Some("bucket_search")),
     // diversity-preserving subsample: IVF centroid assignment + per-
     // cluster hash-order quota (dense embedding regions capped, sparse
     // regions survive whole)
-    "sample_cluster" -> ((s, dir) =>
+    QuerySpec("sample_cluster", (s, dir) =>
       Similarity.ClusterBalancedSample(nlist = 16, quota = 20L)
         .transform(embs(s, dir))
         .select("vec_id", "cluster_id", "sample_bucket", "cluster_rank")
-        .orderBy("vec_id")),
+        .orderBy("vec_id"),
+      _ => OracleSql.clusterBalancedSample(64, 16, 20L, "graft"),
+      Some("Window")),
     // unigram-LM quality filter: mean corpus log-probability per doc,
     // integer-scaled per-token logprobs (order-independent sums)
-    "text_logprob" -> ((s, dir) =>
+    QuerySpec("text_logprob", (s, dir) =>
       Corpus.UnigramLogProb().transform(docs(s, dir))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.unigramLogProb, Some("Join")),
     // conditional bigram LM score (the next LM-filter rung: unigram
     // scoring cannot tell shuffled word salad from prose) — map-side
     // bigram generation, aggregate-to-aggregate score join, one
     // posting join on the bigram key
-    "text_bigram_lp" -> ((s, dir) =>
+    QuerySpec("text_bigram_lp", (s, dir) =>
       Corpus.BigramLogProb().transform(docs(s, dir))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.bigramLogProb,
+      Some("Join")), // posting x per-bigram score table
     // context-window chunking (RAG / long-doc pretraining prep): pure
     // narrow map-side sequence+posexplode+slice, zero shuffle
-    "chunk_split" -> ((s, dir) =>
+    QuerySpec("chunk_split", (s, dir) =>
       ChunkSplit(chunkTokens = 32, overlapTokens = 8)
         .transform(docs(s, dir))
         .select("doc_id", "chunk_idx", "chunk_start", "n_chunk_tokens",
           "chunk_text")
-        .orderBy("doc_id", "chunk_idx")),
+        .orderBy("doc_id", "chunk_idx"),
+      _ => OracleSql.chunkSplit(32, 8),
+      Some("Generate")), // posexplode of the start list
     // chunking over an EXTERNAL token array (tokenArrayColumn — the
     // path a real tokenizer's output rides): BPE-ish regex tokens
     // computed upstream, same window/stride algebra
-    "chunk_w" -> ((s, dir) =>
+    QuerySpec("chunk_w", (s, dir) =>
       ChunkSplit(chunkTokens = 24, overlapTokens = 6,
           tokenArrayColumn = "btk")
         .transform(docs(s, dir).withColumn("btk", regexp_extract_all(
           lower(col("text")), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0))))
         .select("doc_id", "chunk_idx", "chunk_start", "n_chunk_tokens",
           "chunk_text")
-        .orderBy("doc_id", "chunk_idx")),
+        .orderBy("doc_id", "chunk_idx"),
+      _ => OracleSql.chunkSplitBpe(24, 6),
+      Some("Generate")), // same, external token array
     // deterministic training-order shuffle: exact md5-permutation
     // positions via two-phase prefix sums, round-robin shard interleave
-    "shuffle_interleave" -> ((s, dir) =>
+    QuerySpec("shuffle_interleave", (s, dir) =>
       InterleaveShuffle(numShards = 8)
         .transform(docs(s, dir))
         .select("doc_id", "shuffle_key", "global_pos", "shard",
           "pos_in_shard")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.interleaveShuffle(8, "graft"), Some("Window")),
     // phase-major curriculum: short-to-long length curriculum over
     // 32-token bands, uniformly shuffled WITHIN each band — the same
     // exact prefix-sum permutation as shuffle_interleave with a leading
     // phase key (one narrow keyed shuffle, never a global sort)
-    "curriculum_order" -> ((s, dir) =>
+    QuerySpec("curriculum_order", (s, dir) =>
       CurriculumOrder(phaseColumn = "phase_bucket", numShards = 8)
         .transform(docs(s, dir).withColumn("phase_bucket",
           expr("size(split(trim(lower(text)), '\\\\s+')) div 32")))
         .select("doc_id", "phase", "shuffle_key", "global_pos", "shard",
           "pos_in_shard")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.curriculumOrder(32, 8, "graft"), Some("Window")),
     // temperature-scaled source mixture (alpha = 0.5): flattens the
     // 20-source distribution before the exact per-source token-budget
     // prefix keep — sqrt weights held as scaled longs so the DuckDB
     // oracle reproduces the budgets bit-identically
-    "mix_temperature" -> ((s, dir) =>
+    QuerySpec("mix_temperature", (s, dir) =>
       Corpus.MixTemperature(totalBudget = 10000L)
         .transform(docs(s, dir))
         .select("doc_id", "source", "n_tokens", "cum_tokens",
           "sample_bucket", "mix_budget")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.mixTemperature(10000L, "graft"), Some("Window")),
     // temperature mixture in TOKENIZER-token units: TokenCount's
     // BPE-ish n_regex_tokens feeds tokenCountColumn, so the per-source
     // totals, sqrt weights, budgets and the prefix keep all run in the
     // external unit (the real-pipeline composition: a token-accounting
     // stage upstream of the mixer)
-    "mix_temp_w" -> ((s, dir) =>
+    QuerySpec("mix_temp_w", (s, dir) =>
       Corpus.MixTemperature(totalBudget = 12000L,
           tokenCountColumn = "n_regex_tokens")
         .transform(TextAnalysis.TokenCount().transform(docs(s, dir)))
         .select("doc_id", "source", "n_tokens", "cum_tokens",
           "sample_bucket", "mix_budget")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.mixTemperatureBpe(12000L, "graft"),
+      Some("Window")), // same core in regex-token units
     // epoch-aware upsampling (the multi-epoch data-recipe move): whole
     // epochs (de 3.0), fractional (zh 2.4, default 1.5 for es), source
     // drop (fr 0.0) and keep-once (en 1.0) all in one config; pure
     // map-side explode, realized multiplicity per-row deterministic
-    "mix_epochs" -> ((s, dir) =>
+    QuerySpec("mix_epochs", (s, dir) =>
       Sampling.EpochUpsample(Map("en" -> 1.0, "zh" -> 2.4,
           "fr" -> 0.0, "de" -> 3.0), defaultEpochs = 1.5)
         .transform(docs(s, dir))
         .select("doc_id", "lang", "sample_bucket", "n_epochs", "epoch")
-        .orderBy("doc_id", "epoch")),
+        .orderBy("doc_id", "epoch"),
+      _ => OracleSql.mixEpochs(
+        Seq("en" -> 1.0, "zh" -> 2.4, "fr" -> 0.0, "de" -> 3.0),
+        1.5, "graft-epoch"), Some("Generate")), // the per-copy sequence explode
     // ...composed into the training order: each COPY keys the md5
     // permutation independently (copy_id = doc_id*100 + epoch,
     // collision-free under the maxEpochs cap), so an upsampled doc's
     // repeats spread across the order instead of clustering
-    "epoch_interleave" -> ((s, dir) =>
+    QuerySpec("epoch_interleave", (s, dir) =>
       InterleaveShuffle(numShards = 8, idColumn = "copy_id")
         .transform(Sampling.EpochUpsample(Map("en" -> 1.0,
             "zh" -> 2.4, "fr" -> 0.0, "de" -> 3.0), defaultEpochs = 1.5)
@@ -1017,38 +1210,48 @@ object SparkEntry {
           .withColumn("copy_id", col("doc_id") * 100 + col("epoch")))
         .select("doc_id", "epoch", "copy_id", "shuffle_key",
           "global_pos", "shard", "pos_in_shard")
-        .orderBy("copy_id")),
+        .orderBy("copy_id"),
+      _ => OracleSql.mixEpochsInterleave(
+        Seq("en" -> 1.0, "zh" -> 2.4, "fr" -> 0.0, "de" -> 3.0),
+        1.5, "graft-epoch", 8, "graft"),
+      Some("Window")), // copies through the prefix sum
     // per-group top-k by score: map-side bounded k-heaps prune before
     // the rank window (partitions x groups x k, never the corpus)
-    "top_docs" -> ((s, dir) =>
+    QuerySpec("top_docs", (s, dir) =>
       Sampling.GroupTopK(k = 5L)
         .transform(docs(s, dir))
         .select(col("doc_id"), col("source"),
           col("n_chars").cast("long").as("n_chars"), col("group_rank"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.topDocsPerGroup(5L),
+      Some("Window")), // rank over the heap-pruned survivors
     // exact per-group percentile normalization (cume-dist ties): the
     // chunked rank algebra ranks EVERY row with no whole-group window
-    "pct_rank" -> ((s, dir) =>
+    QuerySpec("pct_rank", (s, dir) =>
       PercentileRank(Seq("lang"), "n_chars")
         .transform(docs(s, dir))
         .select(col("doc_id"), col("lang"),
           col("n_chars").cast("long").as("n_chars"),
           col("value_rank"), col("pct_rank"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.pctRank,
+      Some("Window")), // the (group, bucket) cume window
     // per-language [p10, p90] length band: each language gated against
     // its OWN distribution via broadcast exact-quantile thresholds
-    "quality_band" -> ((s, dir) =>
+    QuerySpec("quality_band", (s, dir) =>
       Corpus.QuantileBandFilter(Seq("lang"), "n_chars")
         .transform(docs(s, dir))
         .select(col("doc_id"), col("lang"),
           col("n_chars").cast("long").as("n_chars"),
           col("band_lo").cast("long").as("band_lo"),
           col("band_hi").cast("long").as("band_hi"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.qualityBand(0.1, 0.9),
+      Some("Window")), // QuantileStats' rank-location pass
     // per-group winsorization: clamp each language's n_chars into its
     // own exact [p10, p90] band — row-preserving robust-stats sibling
     // of quality_band; thresholds broadcast, clamp map-side
-    "quality_winsor" -> ((s, dir) =>
+    QuerySpec("quality_winsor", (s, dir) =>
       Corpus.QuantileClamp(Seq("lang"), "n_chars", 0.1, 0.9)
         .transform(docs(s, dir))
         .select(col("doc_id"), col("lang"),
@@ -1056,11 +1259,13 @@ object SparkEntry {
           col("n_chars_winsor").cast("long").as("n_chars_winsor"),
           col("band_lo").cast("long").as("band_lo"),
           col("band_hi").cast("long").as("band_hi"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.qualityWinsor(0.1, 0.9),
+      Some("Window")), // same rank-location thresholds
     // per-group median/IQR robust scaling: normalize quality features
     // ACROSS languages before any global gate — same threshold-table +
     // broadcast-join shape as the winsorization above
-    "quality_robust" -> ((s, dir) =>
+    QuerySpec("quality_robust", (s, dir) =>
       Corpus.RobustScale(Seq("lang"), "n_chars")
         .transform(docs(s, dir))
         .select(col("doc_id"), col("lang"),
@@ -1069,12 +1274,14 @@ object SparkEntry {
           col("scale_lo").cast("long").as("scale_lo"),
           col("scale_med").cast("long").as("scale_med"),
           col("scale_hi").cast("long").as("scale_hi"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.qualityRobust(0.25, 0.75),
+      Some("Window")), // same thresholds, 3 quantiles
     // the composed pretraining prep path: chunk the corpus, then pack
     // chunks into contiguous fixed-token-budget training sequences via
     // ShardPack's exact two-phase prefix sum (token weights, chunk-key
     // order) — chunk_split feeding shard_pack, nothing bespoke
-    "sequence_pack" -> ((s, dir) =>
+    QuerySpec("sequence_pack", (s, dir) =>
       Corpus.ShardPack(orderColumn = "chunk_key",
           sizeColumn = "n_chunk_tokens", targetBytes = 256L)
         .transform(ChunkSplit(chunkTokens = 32, overlapTokens = 8)
@@ -1083,12 +1290,14 @@ object SparkEntry {
             col("doc_id") * 100000L + col("chunk_idx")))
         .select(col("doc_id"), col("chunk_idx"), col("n_chunk_tokens"),
           col("cum_bytes").as("cum_tokens"), col("shard").as("pack_id"))
-        .orderBy("doc_id", "chunk_idx")),
+        .orderBy("doc_id", "chunk_idx"),
+      _ => OracleSql.sequencePack(32, 8, 256L),
+      Some("MapPartitions")), // ShardPack's typed pass
     // the same chunk->pack composition measured end-to-end in
     // TOKENIZER-token units: external BPE-ish token arrays drive the
     // chunker, and ShardPack's exact prefix sum packs on the resulting
     // per-chunk counts — proving the weighted path through BOTH stages
-    "seq_pack_w" -> ((s, dir) =>
+    QuerySpec("seq_pack_w", (s, dir) =>
       Corpus.ShardPack(orderColumn = "chunk_key",
           sizeColumn = "n_chunk_tokens", targetBytes = 256L)
         .transform(ChunkSplit(chunkTokens = 32, overlapTokens = 8,
@@ -1100,14 +1309,16 @@ object SparkEntry {
             col("doc_id") * 100000L + col("chunk_idx")))
         .select(col("doc_id"), col("chunk_idx"), col("n_chunk_tokens"),
           col("cum_bytes").as("cum_tokens"), col("shard").as("pack_id"))
-        .orderBy("doc_id", "chunk_idx")),
+        .orderBy("doc_id", "chunk_idx"),
+      _ => OracleSql.sequencePackBpe(32, 8, 256L),
+      Some("MapPartitions")), // same, BPE-ish chunk counts
     // the COMPOSED pretraining-prep path through the Pipeline framework:
     // per-language [p10, p90] length gate -> temperature-scaled source
     // mixture (budgets recomputed over the GATED corpus) -> context
     // chunking -> exact token-budget sequence packing. Every stage is
     // individually oracle-gated; this pins the composition (column
     // hand-offs, budget recomputation, row-preservation contracts)
-    "pipeline_pretrain" -> ((s, dir) => {
+    QuerySpec("pipeline_pretrain", (s, dir) => {
       import graft.pipeline.{Pipeline, Stage}
       val p = new Pipeline(Seq(
         Stage(Corpus.QuantileBandFilter(Seq("lang"), "n_chars")),
@@ -1128,7 +1339,8 @@ object SparkEntry {
         .select(col("doc_id"), col("chunk_idx"), col("n_chunk_tokens"),
           col("cum_bytes").as("cum_tokens"), col("shard").as("pack_id"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }, _ => OracleSql.pipelinePretrain(0.1, 0.9, 8000L,
+        "graft", 32, 8, 256L), Some("MapPartitions")), // final ShardPack stage
     // the flagship pretraining-prep composition in the engine's OWN
     // token units (r14): band gate → BpeEncode against the corpus
     // vocab → temperature mixture budgeted in n_bpe_tokens → BPE-piece
@@ -1136,7 +1348,7 @@ object SparkEntry {
     // before ShardPack's two passes (the pipeline_pretrain discipline).
     // The oracle replays the vocab, the encode, the gate, the mixture
     // and the pack inside one query
-    "pipeline_pretrain_bpe" -> ((s, dir) => {
+    QuerySpec("pipeline_pretrain_bpe", (s, dir) => {
       import graft.pipeline.{Pipeline, Stage}
       val d = docs(s, dir)
       // the vocab is learned ONCE on the full corpus (an input
@@ -1169,29 +1381,37 @@ object SparkEntry {
         .select(col("doc_id"), col("chunk_idx"), col("n_chunk_tokens"),
           col("cum_bytes").as("cum_tokens"), col("shard").as("pack_id"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }, _ => OracleSql.pipelinePretrainBpe(0.1, 0.9,
+        8000L, "graft", 24, 6, 256L),
+      Some("MapPartitions")), // final ShardPack stage
     // BM25 ranked retrieval (r16): lexical search over the corpus for a
     // query term set — per-term components on the 1e-6 integer lattice,
     // exact integer per-doc sums, TakeOrdered top-k
-    "bm25_search" -> ((s, dir) =>
+    QuerySpec("bm25_search", (s, dir) =>
       Bm25Search(queryTerms = Seq("spark", "window", "scan"), k = 25)
-        .transform(docs(s, dir))),
+        .transform(docs(s, dir)),
+      _ => OracleSql.bm25Search(
+        Seq("spark", "window", "scan"), 25, 1.2, 0.75),
+      Some("TakeOrderedAndProject")), // heap top-k, no window
     // the PERSISTED index face (r17): fit the posting artifact on the
     // even-doc half, fold the odd-doc half in (disjoint docs — the
     // fail-loud guard), probe without re-reading text; the oracle is
     // the whole-corpus BM25 derivation, so fold == refit == search is
     // what the hash certifies
-    "bm25_incr" -> ((s, dir) => {
+    QuerySpec("bm25_incr", (s, dir) => {
       val d = docs(s, dir)
       val idx = Bm25Index.fit(d.filter(pmod(col("doc_id"), lit(2L)) === 0L))
       val folded = Bm25Index.foldBatch(idx,
         d.filter(pmod(col("doc_id"), lit(2L)) === 1L))
       Bm25Index.probe(folded,
         queryTerms = Seq("quality", "filter", "data"), k = 20)
-    }),
-    "tfidf_topk" -> ((s, dir) =>
+    }, _ => OracleSql.bm25Search(
+        Seq("quality", "filter", "data"), 20, 1.2, 0.75),
+      Some("BroadcastHashJoin")), // df joins back broadcast
+    QuerySpec("tfidf_topk", (s, dir) =>
       TfIdf(k = 3).transform(docs(s, dir))
-        .orderBy("doc_id", "rank")),
+        .orderBy("doc_id", "rank"),
+      _ => OracleSql.tfIdfTopK(3), Some("Window"), zeroColumnScanOk = true),
     // the JSONL reader oracle-gated END TO END (r17): a deterministic
     // corpus slice exports through ShardPack + ShardedSink.writeJsonl
     // (gzip, shard=N layout), reads back through JsonlCorpus with the
@@ -1201,7 +1421,7 @@ object SparkEntry {
     // hash certifies, not a spec fixture. The export path is
     // sf-suffixed so the sf0.1 bench run never clobbers the sf0.01
     // artifact the oracle reads.
-    "jsonl_ingest" -> ((s, dir) => {
+    QuerySpec("jsonl_ingest", (s, dir) => {
       val base = new java.io.File(dir).getName
       val path = s"/root/repo/target/jsonl_export_$base"
       val slice = docs(s, dir)
@@ -1228,52 +1448,65 @@ object SparkEntry {
         .select("doc_id", "lang", "source", "json_chars", "n_words",
           "stopword_hits", "admit")
         .orderBy("doc_id")
-    }),
+    }, sfBase => OracleSql.jsonlIngest(20L, 100000L,
+        Seq("the", "a"), s"/root/repo/target/jsonl_export_$sfBase"),
+      Some("Scan json")), // the JSONL reader under test
     // benchmark decontamination: every 50th doc plays the held-out eval
     // set; training docs are flagged by distinct-shingle overlap with it
-    "decontaminate" -> ((s, dir) =>
+    QuerySpec("decontaminate", (s, dir) =>
       Corpus.Decontaminate(_.filter(col("doc_id") % 50 === 0))
         .transform(docs(s, dir))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.decontaminate("doc_id % 50 = 0", 1L), Some("Join")),
     // same semantics via the large-eval-set scale path: broadcast Bloom
     // prefilter on the posting stream, exact join resolves false
     // positives — bit-identical to `decontaminate` by construction
-    "decontaminate_bloom" -> ((s, dir) =>
+    QuerySpec("decontaminate_bloom", (s, dir) =>
       Corpus.Decontaminate(_.filter(col("doc_id") % 50 === 0),
         bloomPrefilter = true)
         .transform(docs(s, dir))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.decontaminate("doc_id % 50 = 0", 1L), Some("Join")),
     // paraphrase-robust decontamination: MinHash near-dup flags against
     // the same held-out split (banded train-vs-eval join, never a
     // corpus self-join)
-    "decontaminate_neardup" -> ((s, dir) =>
+    QuerySpec("decontaminate_neardup", (s, dir) =>
       Corpus.NearDupDecontaminate(_.filter(col("doc_id") % 50 === 0),
         threshold = 0.2)
         .transform(docs(s, dir))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.nearDupDecontaminate(
+        "doc_id % 50 = 0", 32, 8, 0.2), Some("Join")),
     // the transposed audit: per EVAL doc, how much of it leaks into the
     // training corpus and from how many distinct training docs
     // (df-capped pair join — corpus-hot shingles never expand)
-    "decontaminate_report" -> ((s, dir) =>
+    QuerySpec("decontaminate_report", (s, dir) =>
       Corpus.ContaminationReport(_.filter(col("doc_id") % 50 === 0),
         maxDocFreq = 100L)
         .transform(docs(s, dir))
-        .orderBy("doc_id")),
-    "vocab_topk" -> ((s, dir) =>
+        .orderBy("doc_id"),
+      _ => OracleSql.contaminationReport(
+        "doc_id % 50 = 0", 100L), Some("Join")),
+    QuerySpec("vocab_topk", (s, dir) =>
       Corpus.VocabTopK(k = 100).transform(docs(s, dir))
-        .orderBy(col("term_freq").desc, col("token").asc)),
+        .orderBy(col("term_freq").desc, col("token").asc),
+      _ => OracleSql.vocabTopK(100), Some("TakeOrderedAndProject")),
     // span-level cross-document duplication (Lee et al. exact-substring
     // signal): duplicated 3-gram positions chain into maximal spans via
     // two per-doc windows; posting/df machinery never shuffles text
-    "text_dupspans" -> ((s, dir) =>
+    QuerySpec("text_dupspans", (s, dir) =>
       Corpus.DupSpans().transform(docs(s, dir))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.textDupSpans(3, 2L),
+      Some("Window")), // the per-doc span-merge windows
     // ...and APPLIED: rebuild the canonical token stream with those
     // spans removed (the Lee-et-al trim step; anti-join + per-doc
     // bounded collect_list rebuild)
-    "text_stripspans" -> ((s, dir) =>
+    QuerySpec("text_stripspans", (s, dir) =>
       Corpus.StripDupSpans().transform(docs(s, dir))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.textStripSpans(3, 2L),
+      Some("Window")), // same span machinery + rebuild
     // line-level corpus dedup APPLIED (CCNet's per-line move): the
     // synthetic multi-line docs carry a corpus-wide cookie banner and a
     // per-lang footer — at maxDocFreq=150 the banner and the en footer
@@ -1283,7 +1516,7 @@ object SparkEntry {
     // stateless typed pass over the three persisted fit artifacts —
     // the batch face of StreamingCuration; the oracle re-derives
     // counts, hot set, vocab AND the encode in one SQL query
-    "curation_recipe" -> ((s, dir) => {
+    QuerySpec("curation_recipe", (s, dir) => {
       val ml = docs(s, dir).select(col("doc_id"), col("source"),
         concat(col("text"),
           lit("\nCookie notice: accept all cookies\n"),
@@ -1299,12 +1532,13 @@ object SparkEntry {
           array_join(col("bpe_ids").cast("array<string>"), " ")
             .as("ids_str"))
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.curationRecipe("src0", 0L, 4096, 150L),
+      Some("MapPartitions")), // the fused typed pass
     // ...with the TRAINED gate composed in (r15): admission requires
     // the DSIR threshold AND the classifier margin > 0 (the CCNet
     // shape); the oracle replays counts, hot set, vocab, the
     // classifier GD rounds AND the encode in ONE query
-    "curation_recipe_clf" -> ((s, dir) => {
+    QuerySpec("curation_recipe_clf", (s, dir) => {
       val ml = docs(s, dir).select(col("doc_id"), col("source"),
         concat(col("text"),
           repeat(concat(lit(" tag_"), col("source")), 8),
@@ -1324,13 +1558,14 @@ object SparkEntry {
           array_join(col("bpe_ids").cast("array<string>"), " ")
             .as("ids_str"))
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.curationRecipe("src0", 0L, 4096, 150L, clfRounds = 4),
+      Some("MapPartitions")), // + trained gate
     // ...with the urlColumn leg wired (r16): UrlCanonicalize runs
     // FIRST (the codegen'd column chain), then the fused gate → strip
     // → encode typed pass; url_canonical threads to every admitted row
     // (NULL for malformed urls, the Web contract). Same artifacts as
     // curation_recipe — only the canonicalize leg differs
-    "curation_recipe_url" -> ((s, dir) => {
+    QuerySpec("curation_recipe_url", (s, dir) => {
       val ml = withMessyUrl(docs(s, dir).select(col("doc_id"),
         col("source"),
         concat(col("text"),
@@ -1349,20 +1584,22 @@ object SparkEntry {
           array_join(col("bpe_ids").cast("array<string>"), " ")
             .as("ids_str"))
         .orderBy("doc_id")
-    }),
-    "text_striplines" -> ((s, dir) => {
+    }, _ => OracleSql.curationRecipe("src0", 0L, 4096, 150L, withUrl = true),
+      Some("MapPartitions")), // + canonicalize leg
+    QuerySpec("text_striplines", (s, dir) => {
       val d = docs(s, dir).select(col("doc_id"),
         concat(col("text"),
           lit("\nCookie notice: accept all cookies\n"),
           col("lang"), lit(" footer")).as("text"))
       Corpus.HotLineStrip(maxDocFreq = 150L).transform(d)
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.textStripLines(150L),
+      Some("Join")), // hot-line anti-join + rebuild
     // ...and its ingest-loop face: the corpus (even doc_ids) persists
     // only as the additive (line, doc_freq) index; the batch (odd ids)
     // strips against corpus ∪ batch frequencies without corpus text —
     // the oracle replays the df over the UNION and keeps batch rows
-    "striplines_incr" -> ((s, dir) => {
+    QuerySpec("striplines_incr", (s, dir) => {
       val d = docs(s, dir).select(col("doc_id"),
         concat(col("text"),
           lit("\nCookie notice: accept all cookies\n"),
@@ -1373,26 +1610,30 @@ object SparkEntry {
           maxDocFreq = 150L)
         .transform(d.filter(col("doc_id") % 2 === 1))
         .orderBy("doc_id")
-    }),
-    "stats_quantiles" -> ((s, dir) =>
+    }, _ => OracleSql.textStripLines(150L,
+        "m.doc_id % 2 = 1"), Some("Join")), // batch lines x the line index
+    QuerySpec("stats_quantiles", (s, dir) =>
       Corpus.QuantileStats(Seq("lang"), "n_chars").transform(docs(s, dir))
-        .orderBy("lang")),
+        .orderBy("lang"),
+      _ => OracleSql.statsQuantiles(
+        Seq("p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99)), Some("Window")),
     // exact distributed prefix sum (two-phase, range-partitioned); 20 kB
     // target yields a handful of shards at sf0.01. The operator is
     // row-preserving (every doc column passes through); the oracle
     // compares the packing columns, so project those
-    "shard_pack" -> ((s, dir) =>
+    QuerySpec("shard_pack", (s, dir) =>
       Corpus.ShardPack(targetBytes = 20000L).transform(docs(s, dir))
         .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"),
           col("cum_bytes"), col("shard"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.shardPack(20000L), Some("MapPartitions")),
     // the per-pack manifest a trainer reads (r14, offsets r16): one
     // keyed rollup over the pack output — n_seqs, token total, pad to
     // budget, first/last key, plus the ordered intra-pack offset list
     // a loader seeks by (serialized seq_id:start_token for the oracle
     // hash, the bpe_ids array_to_string convention); straddling packs
     // exceed budget and pad 0
-    "pack_manifest" -> ((s, dir) =>
+    QuerySpec("pack_manifest", (s, dir) =>
       Corpus.PackManifest(budgetBytes = 20000L).transform(
         Corpus.ShardPack(targetBytes = 20000L).transform(docs(s, dir)))
         .withColumn("seq_offsets_str",
@@ -1400,12 +1641,14 @@ object SparkEntry {
             o => concat(o("seq_id").cast("string"), lit(":"),
               o("start_token").cast("string"))), " "))
         .drop("seq_offsets")
-        .orderBy("pack_id")),
+        .orderBy("pack_id"),
+      _ => OracleSql.packManifest(20000L),
+      Some("HashAggregate")), // partial-agg pack rollup
     // bucketed-batching layout (r16): length-CLASS packing — sequences
     // pad only to their class band, not the corpus max, and packs cut
     // at a fixed sequence count per class. Skew-safe per-class rank via
     // the ShardPack two-phase counting (never a per-class window)
-    "len_bucket_pack" -> ((s, dir) =>
+    QuerySpec("len_bucket_pack", (s, dir) =>
       Corpus.LengthBucketPack(
           bands = Seq(16L, 24L, 32L, 48L, 64L, 96L, 128L), seqsPerPack = 8)
         .transform(TextAnalysis.TokenCount().transform(docs(s, dir))
@@ -1413,12 +1656,15 @@ object SparkEntry {
         .withColumn("len_class", col("len_class").cast("long"))
         .select("doc_id", "n_tokens", "len_class", "class_tokens",
           "class_seq", "pack_id", "pad_tokens")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.lengthBucketPack(
+        Seq(16L, 24L, 32L, 48L, 64L, 96L, 128L), 8),
+      Some("MapPartitions")), // seeded per-cell rank pass
     // the bucketed-batching manifest (r16): one row per (class, pack)
     // with counts, raw/pad token totals, key range and the ordered
     // seq_ids a loader indexes by — offsets are CLOSED-FORM here
     // (sequence i starts at i * class_tokens), unlike pack_manifest
-    "len_bucket_manifest" -> ((s, dir) =>
+    QuerySpec("len_bucket_manifest", (s, dir) =>
       Corpus.LengthBucketManifest()
         .transform(Corpus.LengthBucketPack(
             bands = Seq(16L, 24L, 32L, 48L, 64L, 96L, 128L),
@@ -1428,7 +1674,10 @@ object SparkEntry {
         .withColumn("seq_ids_str", array_join(
           transform(col("seq_ids"), i => i.cast("string")), " "))
         .drop("seq_ids")
-        .orderBy("len_class", "pack_id")),
+        .orderBy("len_class", "pack_id"),
+      _ => OracleSql.lengthBucketManifest(
+        Seq(16L, 24L, 32L, 48L, 64L, 96L, 128L), 8),
+      Some("HashAggregate")), // (class, pack) rollup
     // the two newest extension surfaces composed end to end and
     // oracle-gated: the session-registered `long_array_dot` Catalyst
     // expression (SQL surface, codegen'd primitive loop) running INSIDE a
@@ -1436,7 +1685,7 @@ object SparkEntry {
     // Quantization uses the interpreted `transform` HOF — acceptable here
     // because it feeds a demo projection; the hot pair-scoring loops
     // elsewhere quantize via the same path once and reuse the arrays.
-    "ml_quantized_dot" -> ((s, dir) => {
+    QuerySpec("ml_quantized_dot", (s, dir) => {
       GraftExtensions.register(s)
       import org.apache.spark.ml.Pipeline
       import graft.pipeline.FunctionTransformer
@@ -1452,47 +1701,58 @@ object SparkEntry {
       new Pipeline().setStages(Array(quantize, selfDot))
         .fit(embs(s, dir)).transform(embs(s, dir))
         .orderBy("vec_id")
-    }),
-    "ann_bruteforce" -> ((s, dir) =>
+    }, _ => OracleSql.mlQuantizedDot, Some("long_array_dot")),
+    QuerySpec("ann_bruteforce", (s, dir) =>
       Similarity.CosineTopK(df => df.filter(col("vec_id") < 8))
         .transform(embs(s, dir))
-        .orderBy("query_id", "rank")),
-    "ann_lsh" -> ((s, dir) =>
+        .orderBy("query_id", "rank"),
+      _ => OracleSql.annBruteForce(64, 5, 8), Some("Window")),
+    QuerySpec("ann_lsh", (s, dir) =>
       Similarity.LshCosineTopK(df => df.filter(col("vec_id") < 8))
         .transform(embs(s, dir))
-        .orderBy("query_id", "rank")),
+        .orderBy("query_id", "rank"),
+      _ => OracleSql.annLsh(64, 8, 5, 8), Some("Window")),
     // multi-table LSH: 4 independent 6-bit tables union their bucket
     // collisions before the exact re-rank — the recall knob over the
     // single-table variant above
-    "ann_lsh_multi" -> ((s, dir) =>
+    QuerySpec("ann_lsh_multi", (s, dir) =>
       Similarity.LshCosineTopK(df => df.filter(col("vec_id") < 8),
         planes = 6, tables = 4)
         .transform(embs(s, dir))
-        .orderBy("query_id", "rank")),
-    "ann_ivf" -> ((s, dir) =>
+        .orderBy("query_id", "rank"),
+      _ => OracleSql.annLshMulti(64, 6, 4, 5, 8), Some("Window")),
+    QuerySpec("ann_ivf", (s, dir) =>
       Similarity.IvfTopK(df => df.filter(col("vec_id") < 8))
         .transform(embs(s, dir))
-        .orderBy("query_id", "rank")),
+        .orderBy("query_id", "rank"),
+      _ => OracleSql.annIvf(64, 16, 4, 5, 8), Some("Window")),
     // the ingest-loop ANN: the corpus (vec_id >= 8) is fitted ONCE into
     // the persisted member index, and the query batch (vec_id < 8,
     // disjoint) probes it without re-clustering — the oracle replays
     // fit + probe end-to-end
-    "ann_ivf_incr" -> ((s, dir) => {
+    QuerySpec("ann_ivf_incr", (s, dir) => {
       val e = embs(s, dir)
       Similarity.IncrementalIvfTopK(
           Similarity.IncrementalIvf.memberIndex(
             e.filter(col("vec_id") >= 8)))
         .transform(e.filter(col("vec_id") < 8))
         .orderBy("query_id", "rank")
-    }),
+    }, _ => OracleSql.annIvfIncr(64, 16, 4, 5, 8),
+      Some("Window")), // probe join + the rank window
     // IVF-PQ with exact refine: the billion-vector-scale index shape —
     // members carry m=8 codes + norm instead of the 64-dim vector; the
     // oracle replays codebook pick, code assignment, ADC scan, shortlist
     // and exact re-rank end-to-end
-    "ann_ivf_pq" -> ((s, dir) =>
+    QuerySpec("ann_ivf_pq", (s, dir) =>
       SimilarityPq.IvfPqTopK(df => df.filter(col("vec_id") < 8))
         .transform(embs(s, dir))
-        .orderBy("query_id", "rank")),
+        .orderBy("query_id", "rank"),
+      // refine path (the four ann_ivf_pq* queries): the ADC/projected scan
+      // runs eagerly inside the builder since the exactRerank shortlist
+      // cut (timed — the builder runs inside the timed thunk, the DSIR
+      // convention); the lazy plan keeps the broadcast re-rank joins
+      _ => OracleSql.annIvfPq(64, 16, 4, 8, 16, 5, 4, 8),
+      Some("BroadcastHashJoin")),
     // ...with PROJECTION-RESIDUAL encoding (r15): the IVFADC
     // decomposition under cosine assignment — codes quantize
     // x − round(α̂c/S) (α̂ the scaled projection coefficient, one extra
@@ -1500,26 +1760,30 @@ object SparkEntry {
     // centroid term back; measured recall@5 at refine=4: 0.400 vs the
     // raw-vector 0.325 (AnnRecall, COVERAGE.md). The oracle replays
     // α̂, residuals, the OFFSET codebook pick and the decomposed ADC.
-    "ann_ivf_pq_res" -> ((s, dir) =>
+    QuerySpec("ann_ivf_pq_res", (s, dir) =>
       SimilarityPq.IvfPqTopK(df => df.filter(col("vec_id") < 8),
           residual = true)
         .transform(embs(s, dir))
-        .orderBy("query_id", "rank")),
+        .orderBy("query_id", "rank"),
+      _ => OracleSql.annIvfPqRes(64, 16, 4, 8, 16, 5, 4, 8),
+      Some("BroadcastHashJoin")), // refine path, as ann_ivf_pq
     // ...with TRAINED codebooks: two Lloyd rounds of per-subspace
     // integer k-means (the quality step FAISS calls training the PQ);
     // the oracle replays the TRAINING round by round, then the same
     // ADC + shortlist + exact refine against the final codebooks
-    "ann_ivf_pq_t" -> ((s, dir) =>
+    QuerySpec("ann_ivf_pq_t", (s, dir) =>
       SimilarityPq.IvfPqTopK(df => df.filter(col("vec_id") < 8),
           train = 2, cacheCorpus = true)
         .transform(embs(s, dir))
-        .orderBy("query_id", "rank")),
+        .orderBy("query_id", "rank"),
+      _ => OracleSql.annIvfPqTrained(64, 16, 4, 8, 16, 5, 4,
+        8, 2), Some("BroadcastHashJoin")), // refine path, as ann_ivf_pq
     // persisted-index IVF-PQ: the corpus (vec_id >= 8) fits ONCE into
     // the compressed index (codes + norm; full vectors only on the
     // pick rows it re-derives its quantizers from), the batch probes
     // it, and the exact re-rank joins the shortlist back to the
     // full-vector corpus — fit + probe + refine replayed end-to-end
-    "ann_ivf_pq_incr" -> ((s, dir) => {
+    QuerySpec("ann_ivf_pq_incr", (s, dir) => {
       val e = embs(s, dir)
       val corpus = e.filter(col("vec_id") >= 8)
       SimilarityPq.IncrementalIvfPqTopK(
@@ -1527,7 +1791,8 @@ object SparkEntry {
           refineWith = Some(corpus))
         .transform(e.filter(col("vec_id") < 8))
         .orderBy("query_id", "rank")
-    }),
+    }, _ => OracleSql.annIvfPqIncr(64, 16, 4, 8, 16, 5, 4, 8),
+      Some("BroadcastHashJoin")),
     // SRP prefilter + exact refine: the reduce-then-search architecture
     // — the scan runs over rdim=16 deterministic ±1 projections, only
     // the k*refine shortlist touches full vectors; oracle replays the
@@ -1536,16 +1801,18 @@ object SparkEntry {
     // measured (0.450 at refine=4 — AnnRecall) — Lloyd rounds run in
     // RESIDUAL space; the oracle replays residual derivation, the
     // residual-space training rounds, the decomposed ADC and refine
-    "ann_ivf_pq_rt" -> ((s, dir) =>
+    QuerySpec("ann_ivf_pq_rt", (s, dir) =>
       SimilarityPq.IvfPqTopK(df => df.filter(col("vec_id") < 8),
           residual = true, train = 2, cacheCorpus = true)
         .transform(embs(s, dir))
-        .orderBy("query_id", "rank")),
+        .orderBy("query_id", "rank"),
+      _ => OracleSql.annIvfPqResTrained(64, 16, 4, 8, 16, 5, 4, 8, 2),
+      Some("BroadcastHashJoin")), // refine path, as ann_ivf_pq
     // the residual encode on the PERSISTED index (r15): fit the
     // compressed index with per-member α̂ + residual codes (the pick
     // widens to nlist + ksub — residual codebooks need rows beyond
     // the centroids), probe with the decomposed ADC + exact refine
-    "ann_pq_incr_res" -> ((s, dir) => {
+    QuerySpec("ann_pq_incr_res", (s, dir) => {
       val e = embs(s, dir)
       val corpus = e.filter(col("vec_id") >= 8)
       SimilarityPq.IncrementalIvfPqTopK(
@@ -1554,59 +1821,71 @@ object SparkEntry {
           refineWith = Some(corpus), residual = true)
         .transform(e.filter(col("vec_id") < 8))
         .orderBy("query_id", "rank")
-    }),
-    "ann_srp" -> ((s, dir) =>
+    }, _ => OracleSql.annIvfPqIncrRes(64, 16, 4, 8, 16, 5, 4, 8),
+      Some("BroadcastHashJoin")),
+    QuerySpec("ann_srp", (s, dir) =>
       Projection.SrpTopK(df => df.filter(col("vec_id") < 8))
         .transform(embs(s, dir))
-        .orderBy("query_id", "rank")),
-    "text_boilerplate" -> ((s, dir) =>
+        .orderBy("query_id", "rank"),
+      _ => OracleSql.annSrp(64, 16, 5, 4, 8), Some("BroadcastHashJoin")),
+    QuerySpec("text_boilerplate", (s, dir) =>
       // maxDocFreq 10 on the 500-doc synthetic corpus: the template
       // n-grams of the generator actually trip the hot threshold
       Corpus.BoilerplateScore(maxDocFreq = 10L).transform(docs(s, dir))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.textBoilerplate(10L), Some("Join")),
     // mm_*: REAL javax.imageio decode over generated PNG/GIF payloads.
     // Oracle-compared columns are the ones with closed forms in doc_id
     // (byte_len / resized_fp / resized_payload are encoder-dependent —
     // pinned in MultimodalSpec instead, where Scala can decode).
-    "mm_resize" -> ((s, dir) =>
+    QuerySpec("mm_resize", (s, dir) =>
       // 40x30 box: generated dims run 16..112 x 16..68, so the integer
       // scale denominator actually varies (1..3) instead of sitting at 1
       Multimodal.Resize(maxW = 40L, maxH = 30L).transform(media(s, dir))
         .select("doc_id", "fmt", "width", "height", "scale_den",
           "out_w", "out_h", "corner_px")
-        .orderBy("doc_id")),
-    "mm_features" -> ((s, dir) =>
+        .orderBy("doc_id"),
+      _ => OracleSql.mmResize(40L, 30L), Some("SerializeFromObject")),
+    QuerySpec("mm_features", (s, dir) =>
       Multimodal.MediaFeatures().transform(media(s, dir))
         .drop("byte_len")
-        .orderBy("doc_id")),
-    "mm_framesample" -> ((s, dir) =>
+        .orderBy("doc_id"),
+      _ => OracleSql.mmFeatures, Some("SerializeFromObject")),
+    QuerySpec("mm_framesample", (s, dir) =>
       Multimodal.FrameSample().transform(
         Multimodal.MediaFeatures().transform(media(s, dir)))
-        .orderBy("doc_id", "frame_idx")),
+        .orderBy("doc_id", "frame_idx"),
+      _ => OracleSql.mmFrameSample, Some("SerializeFromObject")),
     // REAL javax.sound.sampled WAV decode: header fields + sample-level
     // probes (first sample, sum over EVERY decoded PCM sample) against
     // the generator's closed forms — byte_len stays out of the oracle
     // (container-header detail), pinned in MultimodalSpec instead
-    "mm_audio" -> ((s, dir) =>
+    QuerySpec("mm_audio", (s, dir) =>
       Multimodal.AudioFeatures().transform(audio(s, dir))
         .select("doc_id", "fmt", "sample_rate", "channels", "n_frames",
           "duration_ms", "first_sample", "sample_sum")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.mmAudio,
+      Some("SerializeFromObject")), // typed WAV-decode map pass
     // REAL MJPEG-in-AVI decode (r13, the stub retired): RIFF container
     // walk + per-frame javax.imageio JPEG decode; corner_px/corner_sum
     // are pixel probes over frame 0 / EVERY frame — byte_len stays out
     // of the oracle (encoder-dependent), pinned in VideoSpec instead
-    "mm_video" -> ((s, dir) =>
+    QuerySpec("mm_video", (s, dir) =>
       Multimodal.VideoFeatures().transform(video(s, dir))
         .select("doc_id", "fmt", "width", "height", "n_frames", "fps_num",
           "fps_den", "duration_ms", "corner_px", "corner_sum")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.mmVideo,
+      Some("SerializeFromObject")), // typed AVI-decode map pass
     // the demux leg: the auds stream's interleaved PCM chunks extracted
     // and folded byte-by-byte into oracle-checked probes; silent
     // containers are the explicit empty class
-    "mm_demux" -> ((s, dir) =>
+    QuerySpec("mm_demux", (s, dir) =>
       Multimodal.VideoAudioDemux().transform(video(s, dir))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.mmDemux,
+      Some("SerializeFromObject")), // typed AVI-demux map pass
     // URL canonicalization: scheme/host case, www., default ports,
     // slash runs, tracking params, param order and fragments all
     // collapse; malformed urls yield the null class — pure codegen'd
@@ -1620,7 +1899,7 @@ object SparkEntry {
     // sketch accuracy, so the DuckDB oracle can replay it as discrete
     // quantiles. The streaming work runs eagerly inside the builder
     // (the CC-loop convention; plan signature None)
-    "win_quantiles" -> ((s, dir) => {
+    QuerySpec("win_quantiles", (s, dir) => {
       val out = new graft.streaming.StreamingQuantileStats(
         Seq("event_type"), "value", Seq(0.5, 0.9),
         windowDuration = "1 day").transform(eventStream(s, dir))
@@ -1629,11 +1908,14 @@ object SparkEntry {
             .as("w_start"),
           col("event_type"), col("n"), col("p50"), col("p90"))
         .orderBy("w_start", "event_type")
-    }),
-    "url_canonical" -> ((s, dir) =>
+    }, _ => OracleSql.winQuantiles,
+      None), // the streaming query runs eagerly inside the builder
+    QuerySpec("url_canonical", (s, dir) =>
       Web.UrlCanonicalize().transform(webUrls(s, dir))
         .select("doc_id", "url", "url_canonical", "host")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.urlCanonical,
+      Some("regexp_replace")), // the canonical regex chain
     // stream-static quantile GATING — the composition the
     // StreamingQuantileStats scaladoc promises (r12 verdict stretch
     // #8): phase 1 emits per-(window, event_type) p90 thresholds
@@ -1643,7 +1925,7 @@ object SparkEntry {
     // or under their group's PREVIOUS-window p90. First-window events
     // have no threshold yet and are not admitted (the conservative
     // gate convention; the oracle replays the same rule)
-    "win_gate" -> ((s, dir) => {
+    QuerySpec("win_gate", (s, dir) => {
       val th = runToMemorySink(new graft.streaming.StreamingQuantileStats(
           Seq("event_type"), "value", Seq(0.9), windowDuration = "1 day")
         .transform(eventStream(s, dir)))
@@ -1660,12 +1942,13 @@ object SparkEntry {
           (unix_micros(col("w_start")) * lit(1000L)).as("w_start"),
           col("event_type"), col("value"), col("p90"))
       runToMemorySink(gated, "append").orderBy("event_id")
-    }),
+    }, _ => OracleSql.winGate,
+      None), // two eager streaming phases (thresholds, gate)
     // the second streaming oracle row: SLIDING windows (2-day windows
     // every 1 day — each event attributes to exactly two windows)
     // through StreamingWindowedStats over integer-cents values, so
     // sums are exact and the DuckDB replay is bit-identical
-    "win_stats" -> ((s, dir) => {
+    QuerySpec("win_stats", (s, dir) => {
       val evs = eventStream(s, dir)
         .withColumn("vc", round(col("value") * 100).cast("long"))
       val out = new graft.streaming.StreamingWindowedStats("2 days",
@@ -1677,24 +1960,29 @@ object SparkEntry {
           col("event_type"), col("n_events"), col("sum_value"),
           col("max_value"))
         .orderBy("w_start", "event_type")
-    }),
+    }, _ => OracleSql.winStats,
+      None), // same eager streaming-to-memory-sink shape
     // per-host rollup over the canonicalized urls (docs, distinct
     // canonical urls with the null-malformed class, dup ratio) — the
     // host-level gate input (SourceFilter with sourceColumn = host)
-    "host_stats" -> ((s, dir) =>
+    QuerySpec("host_stats", (s, dir) =>
       Web.HostStats().transform(webUrls(s, dir))
-        .orderBy("host")),
+        .orderBy("host"),
+      _ => OracleSql.hostStats,
+      Some("HashAggregate")), // per-host partial-agg rollup
     // host-level gating as pure composition: canonicalize, then the
     // EXISTING SourceFilter gates documents by their HOST's text-
     // quality rollup (sourceColumn = host; the null/malformed host is
     // a real class through the null-safe join)
-    "host_filter" -> ((s, dir) =>
+    QuerySpec("host_filter", (s, dir) =>
       graft.operators.SourceQuality.SourceFilter(minMeanChars = 299.0,
           sourceColumn = "host")
         .transform(Web.UrlCanonicalize().transform(
           withMessyUrl(docs(s, dir))))
         .select("doc_id", "host", "source_mean_chars", "source_dup_ratio")
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      _ => OracleSql.hostFilter(299.0),
+      Some("Join")), // host stats joined back null-safely
     // native greedy longest-match subword encode (WordPiece MaxMatch)
     // against a corpus-derived vocab the query builds as "the caller":
     // top-10 whole words, every single character in first AND
@@ -1702,37 +1990,43 @@ object SparkEntry {
     // continuation pieces. Ids = rank of the piece string, so both
     // engines number identically. The oracle replays the ENCODE itself
     // with a step table + recursive CTE — not a fixture of expected ids
-    "bpe_encode" -> ((s, dir) => {
+    QuerySpec("bpe_encode", (s, dir) => {
       val d = docs(s, dir)
       Tokenize.BpeEncode(bpeFixtureVocab(d)).transform(d)
         .select(col("doc_id"), col("n_bpe_tokens"),
           array_join(col("bpe_ids").cast("array<string>"), " ").as("ids_str"))
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.bpeEncode,
+      Some("MapPartitions")), // broadcast-vocab trie encode
     // the Unigram-LM score artifact (r16 — sentencepiece's OTHER
     // inference model): one MaxMatch counting pass over the corpus,
     // add-one smoothing, the exact-integer 1e6 ln lattice
-    "unigram_scores" -> ((s, dir) => {
+    QuerySpec("unigram_scores", (s, dir) => {
       val d = docs(s, dir)
       Tokenize.UnigramScores(bpeFixtureVocab(d)).transform(d)
         .orderBy("id")
-    }),
+    },
+      // r17: the MaxMatch counting pass runs eagerly inside the builder
+      // (one bounded collect — timed, the DSIR convention); the lazy plan
+      // keeps the smoothed-lattice score join over the vocab
+      _ => OracleSql.unigramScores, Some("Join")),
     // ...and max-likelihood Viterbi inference over it: per word the
     // piece sequence maximizing total integer score (tie: fewer
     // tokens, then longer final piece) — the oracle replays the DP
     // cell-for-cell as a recursive state-row CTE
-    "unigram_encode" -> ((s, dir) => {
+    QuerySpec("unigram_encode", (s, dir) => {
       val d = docs(s, dir)
       val sc = Tokenize.UnigramScores(bpeFixtureVocab(d)).transform(d)
       Tokenize.UnigramEncode(sc).transform(d)
         .select(col("doc_id"), col("n_bpe_tokens"),
           array_join(col("bpe_ids").cast("array<string>"), " ").as("ids_str"))
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.unigramEncode,
+      Some("MapPartitions")), // broadcast-scores Viterbi DP
     // ...and ONE HARD-EM refinement round (Viterbi-EM): re-segment the
     // corpus under the round-0 scores, recount by id, rescore, encode
     // under the refined table — the oracle chains BOTH full DP replays
-    "unigram_em" -> ((s, dir) => {
+    QuerySpec("unigram_em", (s, dir) => {
       val d = docs(s, dir)
       val sc = Tokenize.UnigramScores(bpeFixtureVocab(d), emRounds = 1)
         .transform(d)
@@ -1740,13 +2034,14 @@ object SparkEntry {
         .select(col("doc_id"), col("n_bpe_tokens"),
           array_join(col("bpe_ids").cast("array<string>"), " ").as("ids_str"))
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.unigramEm,
+      Some("MapPartitions")), // hard-EM round + second DP
     // ...and Kudo §3.2 vocabulary PRUNING (r17): one Viterbi E-step,
     // the lowest-count removable fifth of the vocab dropped (single-
     // codepoint pieces protected), survivors rescored with T'/V' —
     // the target is derived so ONE round reaches it, and the oracle
     // replays the DP, the recount, the drop pick and the rescore
-    "unigram_prune" -> ((s, dir) => {
+    QuerySpec("unigram_prune", (s, dir) => {
       val d = docs(s, dir)
       val vocab = bpeFixtureVocab(d)
       val pieces = vocab.select(col("piece").cast("string"))
@@ -1758,18 +2053,23 @@ object SparkEntry {
       val target = pieces.length - math.max(1, removable / 5)
       Tokenize.UnigramScores(vocab, pruneTo = Some(target)).transform(d)
         .orderBy("id")
-    }),
+    },
+      // prune loop runs eagerly; output is the driver-bounded pruned score
+      // table (LocalRelation)
+      _ => OracleSql.unigramPrune, None),
     // the LEARN leg: the vocab construction itself is an operator and
     // its derivation (frequency ranks, char coverage, suffix pieces,
     // piece-rank ids) is oracle-replayed row for row
-    "bpe_vocab" -> ((s, dir) =>
+    QuerySpec("bpe_vocab", (s, dir) =>
       Tokenize.VocabBuild().transform(docs(s, dir))
         .select("piece", "id")
-        .orderBy("id")),
+        .orderBy("id"),
+      _ => OracleSql.bpeVocab,
+      Some("HashAggregate")), // bounded frequency aggs + ranks
     // the end-to-end composition the tokenizer exists for: the engine's
     // OWN encode (emitPieces) drives the chunker's external-token path —
     // no regex stand-in, no externally-supplied column
-    "chunk_bpe" -> ((s, dir) => {
+    QuerySpec("chunk_bpe", (s, dir) => {
       val d = docs(s, dir)
       val enc = Tokenize.BpeEncode(bpeFixtureVocab(d), emitPieces = true)
         .transform(d)
@@ -1779,11 +2079,12 @@ object SparkEntry {
         .select("doc_id", "chunk_idx", "chunk_start", "n_chunk_tokens",
           "chunk_text")
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }, _ => OracleSql.chunkBpe(24, 6),
+      Some("MapPartitions")), // encode feeds the chunker
     // the FULL pretraining-prep chain in engine units: learn (vocab) →
     // encode (pieces) → chunk (windows) → pack (exact prefix sum) —
     // every stage the engine's own, nothing externally supplied
-    "seq_pack_bpe" -> ((s, dir) => {
+    QuerySpec("seq_pack_bpe", (s, dir) => {
       val d = docs(s, dir)
       val enc = Tokenize.BpeEncode(bpeFixtureVocab(d), emitPieces = true)
         .transform(d)
@@ -1799,46 +2100,52 @@ object SparkEntry {
         .select(col("doc_id"), col("chunk_idx"), col("n_chunk_tokens"),
           col("cum_bytes").as("cum_tokens"), col("shard").as("pack_id"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }, _ => OracleSql.seqPackBpeNative(24, 6, 256L),
+      Some("MapPartitions")), // encode->chunk->pack chain
     // the encode over NON-BMP text (r14): surrogate-pair emoji/musical
     // symbols, CJK, combining marks — topWords=2 so words genuinely
     // split into char pieces (surrogate chars in BOTH forms) and
     // suffix continuation pieces; the oracle counts codepoints, the
     // engine walks UTF-16 units, and the hash match pins the seam
-    "bpe_enc_uni" -> ((s, dir) => {
+    QuerySpec("bpe_enc_uni", (s, dir) => {
       val u = withUniText(docs(s, dir))
       Tokenize.BpeEncode(Tokenize.VocabBuild(topWords = 2).transform(u))
         .transform(u)
         .select(col("doc_id"), col("n_bpe_tokens"),
           array_join(col("bpe_ids").cast("array<string>"), " ").as("ids_str"))
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.bpeEncUni,
+      Some("MapPartitions")), // trie encode over non-BMP text
     // REAL BPE merge learning (r14): iterative pair-merge selection —
     // the oracle replays every merge ROUND (pair counts, deterministic
     // argmax, greedy left-to-right apply) as recursive-CTE list
     // algebra, then re-derives the same (piece, id, merge_rank) table
-    "bpe_learn" -> ((s, dir) =>
+    QuerySpec("bpe_learn", (s, dir) =>
       Tokenize.BpeLearn(nMerges = 20).transform(docs(s, dir))
         .select("piece", "id", "merge_rank")
-        .orderBy("id")),
+        .orderBy("id"),
+      _ => OracleSql.bpeLearn(20),
+      Some("HashAggregate")), // per-round pair-count aggs
     // DEEP-VOCAB batched learning (r15): up to 8 non-interacting
     // merges per round from the bounded top-64 candidate window —
     // rounds (the serial driver barrier) cut by ~the batch factor,
     // the distributed-BPE trade documented on the operator; the
     // oracle replays the batched rounds (sort, distinct-dedup,
     // window, greedy non-interacting selection, one multi-pair fold)
-    "bpe_learn_deep" -> ((s, dir) =>
+    QuerySpec("bpe_learn_deep", (s, dir) =>
       Tokenize.BpeLearn(nMerges = 48, batchMerges = 8)
         .transform(docs(s, dir))
         .select("piece", "id", "merge_rank")
-        .orderBy("id")),
+        .orderBy("id"),
+      _ => OracleSql.bpeLearnDeep(48, 8),
+      Some("HashAggregate")), // batched rounds, same aggs
     // merge-RANK-ORDER inference (r15): real BPE encoding — the
     // lowest-rank adjacent merge applies first (re-picked globally
     // each step), driven by the merge_rank column the learn emits;
     // segments differently from greedy MaxMatch on real vocabs
     // (TokenizeRankedSpec exhibits the divergence). The oracle replays
     // the learn AND the rank-order application itself.
-    "bpe_enc_ranked" -> ((s, dir) => {
+    QuerySpec("bpe_enc_ranked", (s, dir) => {
       val d = docs(s, dir)
       Tokenize.BpeEncodeRanked(
           Tokenize.BpeLearn(nMerges = 20).transform(d))
@@ -1846,12 +2153,13 @@ object SparkEntry {
         .select(col("doc_id"), col("n_bpe_tokens"),
           array_join(col("bpe_ids").cast("array<string>"), " ").as("ids_str"))
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.bpeEncRanked(20),
+      Some("MapPartitions")), // rank-order merge loop
     // rank-order inference over BYTE-LEVEL learning (r15): the
     // GPT-2-shaped total encode — byte alphabet at rank 0, learned
     // merges applied lowest-rank-first; byte mapping, merge rounds and
     // application all re-derived by the oracle
-    "bpe_ranked_byte" -> ((s, dir) => {
+    QuerySpec("bpe_ranked_byte", (s, dir) => {
       val d = docs(s, dir)
       Tokenize.BpeEncodeRanked(
           Tokenize.BpeLearn(nMerges = 12, byteLevel = true,
@@ -1861,13 +2169,14 @@ object SparkEntry {
         .select(col("doc_id"), col("n_bpe_tokens"),
           array_join(col("bpe_ids").cast("array<string>"), " ").as("ids_str"))
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.bpeRankedByte(12),
+      Some("MapPartitions")), // same, byte symbols
     // BYTE-LEVEL BPE (GPT-2-style byte alphabet): words become UTF-8
     // byte-symbol strings, merges are learned over byte symbols, and
     // the full 256-symbol alphabet at rank 0 makes the encode TOTAL
     // (no UNK on any input). The oracle re-derives the byte mapping,
     // the merge rounds AND the encode in SQL.
-    "bpe_byte" -> ((s, dir) => {
+    QuerySpec("bpe_byte", (s, dir) => {
       val d = docs(s, dir)
       Tokenize.BpeEncode(
           Tokenize.BpeLearn(nMerges = 12, byteLevel = true,
@@ -1877,13 +2186,14 @@ object SparkEntry {
         .select(col("doc_id"), col("n_bpe_tokens"),
           array_join(col("bpe_ids").cast("array<string>"), " ").as("ids_str"))
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.bpeByte(12),
+      Some("MapPartitions")), // byte-mapped trie encode
     // the decode identity: learn → encode → DECODE must reproduce the
     // canonical whitespace-normalized case-folded text; the oracle
     // computes that closed form directly from the raw text (no encode
     // replay), so the whole chain is gated by a one-line independent
     // derivation
-    "bpe_roundtrip" -> ((s, dir) => {
+    QuerySpec("bpe_roundtrip", (s, dir) => {
       val d = docs(s, dir)
       val vocab = Tokenize.BpeLearn(nMerges = 8, byteLevel = true,
         baseAlphabet = Tokenize.byteAlphabet).transform(d)
@@ -1891,11 +2201,12 @@ object SparkEntry {
         .transform(Tokenize.BpeEncode(vocab, byteLevel = true)
           .transform(d))
         .orderBy("doc_id")
-    }),
+    }, _ => OracleSql.bpeRoundtrip,
+      Some("MapPartitions")), // encode + decode passes
     // the full chain on the LEARNED vocab: merge learning → greedy
     // MaxMatch encode → chunk → exact prefix-sum pack — the oracle
     // replays the learning AND the encode inside one query
-    "seq_pack_learn" -> ((s, dir) => {
+    QuerySpec("seq_pack_learn", (s, dir) => {
       val d = docs(s, dir)
       val enc = Tokenize.BpeEncode(
           Tokenize.BpeLearn(nMerges = 20).transform(d).drop("merge_rank"),
@@ -1913,12 +2224,13 @@ object SparkEntry {
         .select(col("doc_id"), col("chunk_idx"), col("n_chunk_tokens"),
           col("cum_bytes").as("cum_tokens"), col("shard").as("pack_id"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }, _ => OracleSql.seqPackBpeLearned(20, 24, 6, 256L),
+      Some("MapPartitions")), // learn->encode->chunk->pack
     // the full chain with REAL BPE inference (r15): merge learning →
     // RANK-ORDER encode (the trainer's own algorithm, emitPieces) →
     // chunk → exact prefix-sum pack; the oracle replays learning, the
     // rank-order application AND the pack in one query
-    "seq_pack_ranked" -> ((s, dir) => {
+    QuerySpec("seq_pack_ranked", (s, dir) => {
       val d = docs(s, dir)
       val enc = Tokenize.BpeEncodeRanked(
           Tokenize.BpeLearn(nMerges = 20).transform(d),
@@ -1939,12 +2251,13 @@ object SparkEntry {
         .select(col("doc_id"), col("chunk_idx"), col("n_chunk_tokens"),
           col("cum_bytes").as("cum_tokens"), col("shard").as("pack_id"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }, _ => OracleSql.seqPackRanked(20, 24, 6, 256L),
+      Some("MapPartitions")), // ShardPack typed pass
     // the full pretraining-prep chain in UNIGRAM (max-likelihood)
     // units: vocab -> scores -> Viterbi encode (emitPieces feeds the
     // chunker) -> chunk -> exact prefix-sum pack; the oracle replays
     // the DP and the chunk/pack algebra in one query
-    "seq_pack_unigram" -> ((s, dir) => {
+    QuerySpec("seq_pack_unigram", (s, dir) => {
       val d = docs(s, dir)
       val enc = Tokenize.UnigramEncode(
           Tokenize.UnigramScores(bpeFixtureVocab(d)).transform(d),
@@ -1962,10 +2275,11 @@ object SparkEntry {
         .select(col("doc_id"), col("chunk_idx"), col("n_chunk_tokens"),
           col("cum_bytes").as("cum_tokens"), col("shard").as("pack_id"))
         .orderBy("doc_id", "chunk_idx")
-    }),
+    }, _ => OracleSql.seqPackUnigram(24, 6, 256L),
+      Some("MapPartitions")), // Viterbi encode->chunk->pack
     // token-budget mixture in the engine's OWN tokenizer units: the
     // encode's n_bpe_tokens drives MixBudget's tokenCountColumn path
-    "mix_bpe" -> ((s, dir) => {
+    QuerySpec("mix_bpe", (s, dir) => {
       val d = docs(s, dir)
       // NOTE (r17): a localCheckpoint cut here (the seq_pack move —
       // the count frame is read by the offsets agg, the prefix window
@@ -1981,8 +2295,10 @@ object SparkEntry {
         .select("doc_id", "lang", "n_tokens", "cum_tokens",
           "sample_bucket")
         .orderBy("doc_id")
-    }),
-    "q1_pricing" -> ((s, dir) => {
+    }, _ => OracleSql.mixBudgetBpe(
+        Seq("en" -> 50000L, "de" -> 20000L), 8000L, "graft"),
+      Some("MapPartitions")), // encode counts feed the budget
+    QuerySpec("q1_pricing", (s, dir) => {
       val l = s.read.parquet(s"$dir/lineitem.parquet")
       val cents = (c: Column) => round(c * 100).cast("long")
       l.groupBy("l_returnflag", "l_linestatus")
@@ -1993,8 +2309,8 @@ object SparkEntry {
             * 100).cast("long")).as("sum_disc_c"),
           count(lit(1)).as("cnt"))
         .orderBy("l_returnflag", "l_linestatus")
-    }),
-    "join_revenue_nation" -> ((s, dir) => {
+    }, _ => OracleSql.q1Pricing, Some("HashAggregate")),
+    QuerySpec("join_revenue_nation", (s, dir) => {
       val l = s.read.parquet(s"$dir/lineitem.parquet")
       val o = s.read.parquet(s"$dir/orders.parquet")
       val c = s.read.parquet(s"$dir/customer.parquet")
@@ -2007,8 +2323,8 @@ object SparkEntry {
           * 100).cast("long")).as("revenue_c"),
           count(lit(1)).as("n_items"))
         .orderBy("n_name")
-    }),
-    "top_customers" -> ((s, dir) => {
+    }, _ => OracleSql.revenueByNation, Some("Join")),
+    QuerySpec("top_customers", (s, dir) => {
       val o = s.read.parquet(s"$dir/orders.parquet")
       val c = s.read.parquet(s"$dir/customer.parquet")
       o.join(c, col("o_custkey") === col("c_custkey"))
@@ -2017,247 +2333,35 @@ object SparkEntry {
           count(lit(1)).as("n_orders"))
         .orderBy(col("total_c").desc, col("c_custkey").asc)
         .limit(10)
-    }),
+    }, _ => OracleSql.topCustomers(10), Some("Join")),
   )
 
-  private def extendedOracles(sfBase: String): Map[String, String] = Map(
-    "text_tokens" -> OracleSql.textTokens,
-    "text_quality" -> OracleSql.textQuality,
-    "gopher_rules" -> OracleSql.gopherRules(50L, 100000L, Seq("the", "a")),
-    "gopher_rep" -> OracleSql.gopherRepetition,
-    "gopher_ngram" -> OracleSql.gopherNgram,
-    "c4_clean" -> OracleSql.c4Clean(5L, 3L, Seq("dup")),
-    "jsonl_ingest" -> OracleSql.jsonlIngest(20L, 100000L,
-      Seq("the", "a"), s"/root/repo/target/jsonl_export_$sfBase"),
-    "gopher_full" -> OracleSql.gopherFull(20L, 100000L, Seq("the", "a")),
-    "pipeline_gopher" -> OracleSql.pipelineGopher(20L, 100000L,
-      Seq("the", "a"), 32, 8, 256L),
-    "text_entropy" -> OracleSql.textEntropy,
-    "text_repetition" -> OracleSql.textRepetition,
-    "pii_scrub" -> OracleSql.piiScrub,
-    "pipeline_ingest" -> OracleSql.pipelineIngest(20L),
-    "pipeline_curate" -> OracleSql.pipelineCurate(10L, 20L, 0.5, 0.2, 10L,
-      Seq("en" -> 0.5, "de" -> 0.25), 0.1, "graft", 20000L),
-    "sessionize" -> OracleSql.sessionize(50000000000000L),
-    "session_stats" -> OracleSql.sessionStats(50000000000000L),
-    "text_langid" -> OracleSql.textLangId,
-    "text_normalize" -> OracleSql.textNormalize,
-    "text_fingerprint" -> OracleSql.textFingerprint,
-    "dedup_exact" -> OracleSql.dedupExact,
-    "dedup_ngram_jaccard" -> OracleSql.dedupNGramJaccard(0.2, 10L),
-    "dedup_minhash_lsh" -> OracleSql.dedupMinHash(32, 8, 0.25),
-    "dedup_simhash" -> OracleSql.dedupSimHash(32, 4, 3),
-    "dedup_clusters" -> OracleSql.dedupClusters(0.2, 10L),
-    "dedup_canonical" -> OracleSql.dedupCanonical(0.2, 10L),
-    "dedup_embedding" -> OracleSql.dedupEmbedding(64, 4, 8, 0.4),
-    "dedup_semantic" -> OracleSql.dedupSemantic(64, 8, 2, 0.35),
-    "dedup_incr_semantic" ->
-      OracleSql.dedupIncrementalSemantic(64, 8, 2, 0.35, 4L),
-    "dedup_incr" -> OracleSql.dedupIncremental("src0"),
-    "dedup_incr_minhash" ->
-      OracleSql.dedupIncrementalMinHash("src0", 32, 8, 0.25),
-    "source_stats" -> OracleSql.sourceStats,
-    "corpus_report" -> OracleSql.corpusReport,
-    "source_filter" -> OracleSql.sourceFilter(290.0, 0.2, 1L),
-    "asof_join" -> OracleSql.asOfJoin,
-    "range_join" -> OracleSql.rangeJoin(2L * 86400000000000L),
-    "overlap_join" -> OracleSql.overlapJoin(2L * 86400000000000L,
-      86400000000000L),
-    "funnel_steps" -> OracleSql.funnelSteps,
-    "funnel_report" -> OracleSql.funnelReport,
-    "quality_winsor" -> OracleSql.qualityWinsor(0.1, 0.9),
-    "quality_robust" -> OracleSql.qualityRobust(0.25, 0.75),
-    "sample_stratified" -> OracleSql.sampleStratified(
-      Seq("en" -> 0.5, "de" -> 0.25), 0.1, "graft"),
-    "quality_classifier" ->
-      OracleSql.qualityClassifier("src0", 1024, 8, tagged = true),
-    "quality_clf_bigram" ->
-      OracleSql.qualityClassifier("src0", 1024, 4, ngram = 2,
-        tagged = true),
-    "quality_weights" ->
-      OracleSql.qualityWeights("src0", 1024, 8, tagged = true),
-    "sample_dsir" -> OracleSql.dsirResample("src0", 0.2, 4096, "graft"),
-    "dsir_bigram" -> OracleSql.dsirResample("src0", 0.2, 4096, "graft",
-      ngram = 2),
-    "dsir_incr" ->
-      OracleSql.dsirIncremental("src0", "src1", 0.25, 4096, "graft"),
-    "dsir_report" -> OracleSql.dsirReport("src0", 0.2, 4096, "graft"),
-    "sample_quota" -> OracleSql.sampleQuota(
-      Seq("en" -> 120L, "de" -> 60L), 25L, "graft"),
-    "mix_budget" -> OracleSql.mixBudget(
-      Seq("en" -> 20000L, "de" -> 8000L), 3000L, "graft"),
-    "mix_budget_w" -> OracleSql.mixBudgetChars(
-      Seq("en" -> 100000L, "de" -> 40000L), 15000L, "graft"),
-    "mix_temp_w" -> OracleSql.mixTemperatureBpe(12000L, "graft"),
-    "chunk_w" -> OracleSql.chunkSplitBpe(24, 6),
-    "seq_pack_w" -> OracleSql.sequencePackBpe(32, 8, 256L),
-    "sample_cluster" -> OracleSql.clusterBalancedSample(64, 16, 20L, "graft"),
-    "text_logprob" -> OracleSql.unigramLogProb,
-    "text_bigram_lp" -> OracleSql.bigramLogProb,
-    "chunk_split" -> OracleSql.chunkSplit(32, 8),
-    "shuffle_interleave" -> OracleSql.interleaveShuffle(8, "graft"),
-    "curriculum_order" -> OracleSql.curriculumOrder(32, 8, "graft"),
-    "mix_temperature" -> OracleSql.mixTemperature(10000L, "graft"),
-    "mix_epochs" -> OracleSql.mixEpochs(
-      Seq("en" -> 1.0, "zh" -> 2.4, "fr" -> 0.0, "de" -> 3.0),
-      1.5, "graft-epoch"),
-    "epoch_interleave" -> OracleSql.mixEpochsInterleave(
-      Seq("en" -> 1.0, "zh" -> 2.4, "fr" -> 0.0, "de" -> 3.0),
-      1.5, "graft-epoch", 8, "graft"),
-    "quality_band" -> OracleSql.qualityBand(0.1, 0.9),
-    "pct_rank" -> OracleSql.pctRank,
-    "top_docs" -> OracleSql.topDocsPerGroup(5L),
-    "sequence_pack" -> OracleSql.sequencePack(32, 8, 256L),
-    "pipeline_pretrain" -> OracleSql.pipelinePretrain(0.1, 0.9, 8000L,
-      "graft", 32, 8, 256L),
-    "pipeline_pretrain_bpe" -> OracleSql.pipelinePretrainBpe(0.1, 0.9,
-      8000L, "graft", 24, 6, 256L),
-    "pack_manifest" -> OracleSql.packManifest(20000L),
-    "len_bucket_pack" -> OracleSql.lengthBucketPack(
-      Seq(16L, 24L, 32L, 48L, 64L, 96L, 128L), 8),
-    "len_bucket_manifest" -> OracleSql.lengthBucketManifest(
-      Seq(16L, 24L, 32L, 48L, 64L, 96L, 128L), 8),
-    "tfidf_topk" -> OracleSql.tfIdfTopK(3),
-    "bm25_search" -> OracleSql.bm25Search(
-      Seq("spark", "window", "scan"), 25, 1.2, 0.75),
-    "bm25_incr" -> OracleSql.bm25Search(
-      Seq("quality", "filter", "data"), 20, 1.2, 0.75),
-    "decontaminate" -> OracleSql.decontaminate("doc_id % 50 = 0", 1L),
-    "decontaminate_bloom" -> OracleSql.decontaminate("doc_id % 50 = 0", 1L),
-    "decontaminate_neardup" -> OracleSql.nearDupDecontaminate(
-      "doc_id % 50 = 0", 32, 8, 0.2),
-    "decontaminate_report" -> OracleSql.contaminationReport(
-      "doc_id % 50 = 0", 100L),
-    "vocab_topk" -> OracleSql.vocabTopK(100),
-    "text_dupspans" -> OracleSql.textDupSpans(3, 2L),
-    "text_stripspans" -> OracleSql.textStripSpans(3, 2L),
-    "curation_recipe" -> OracleSql.curationRecipe("src0", 0L, 4096, 150L),
-    "curation_recipe_clf" ->
-      OracleSql.curationRecipe("src0", 0L, 4096, 150L, clfRounds = 4),
-    "curation_recipe_url" ->
-      OracleSql.curationRecipe("src0", 0L, 4096, 150L, withUrl = true),
-    "text_striplines" -> OracleSql.textStripLines(150L),
-    "striplines_incr" -> OracleSql.textStripLines(150L,
-      "m.doc_id % 2 = 1"),
-    "stats_quantiles" -> OracleSql.statsQuantiles(
-      Seq("p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99)),
-    "shard_pack" -> OracleSql.shardPack(20000L),
-    "ml_quantized_dot" -> OracleSql.mlQuantizedDot,
-    "ann_bruteforce" -> OracleSql.annBruteForce(64, 5, 8),
-    "ann_lsh" -> OracleSql.annLsh(64, 8, 5, 8),
-    "ann_lsh_multi" -> OracleSql.annLshMulti(64, 6, 4, 5, 8),
-    "ann_ivf" -> OracleSql.annIvf(64, 16, 4, 5, 8),
-    "ann_ivf_incr" -> OracleSql.annIvfIncr(64, 16, 4, 5, 8),
-    "ann_ivf_pq" -> OracleSql.annIvfPq(64, 16, 4, 8, 16, 5, 4, 8),
-    "ann_ivf_pq_res" -> OracleSql.annIvfPqRes(64, 16, 4, 8, 16, 5, 4, 8),
-    "ann_ivf_pq_rt" ->
-      OracleSql.annIvfPqResTrained(64, 16, 4, 8, 16, 5, 4, 8, 2),
-    "ann_ivf_pq_t" -> OracleSql.annIvfPqTrained(64, 16, 4, 8, 16, 5, 4,
-      8, 2),
-    "ann_srp" -> OracleSql.annSrp(64, 16, 5, 4, 8),
-    "ann_ivf_pq_incr" -> OracleSql.annIvfPqIncr(64, 16, 4, 8, 16, 5, 4, 8),
-    "ann_pq_incr_res" ->
-      OracleSql.annIvfPqIncrRes(64, 16, 4, 8, 16, 5, 4, 8),
-    "text_boilerplate" -> OracleSql.textBoilerplate(10L),
-    "mm_resize" -> OracleSql.mmResize(40L, 30L),
-    "mm_features" -> OracleSql.mmFeatures,
-    "mm_framesample" -> OracleSql.mmFrameSample,
-    "mm_audio" -> OracleSql.mmAudio,
-    "mm_video" -> OracleSql.mmVideo,
-    "mm_demux" -> OracleSql.mmDemux,
-    "url_canonical" -> OracleSql.urlCanonical,
-    "bpe_encode" -> OracleSql.bpeEncode,
-    "unigram_scores" -> OracleSql.unigramScores,
-    "unigram_encode" -> OracleSql.unigramEncode,
-    "unigram_em" -> OracleSql.unigramEm,
-    "unigram_prune" -> OracleSql.unigramPrune,
-    "bpe_vocab" -> OracleSql.bpeVocab,
-    "bpe_learn" -> OracleSql.bpeLearn(20),
-    "bpe_learn_deep" -> OracleSql.bpeLearnDeep(48, 8),
-    "bpe_enc_ranked" -> OracleSql.bpeEncRanked(20),
-    "bpe_ranked_byte" -> OracleSql.bpeRankedByte(12),
-    "bpe_byte" -> OracleSql.bpeByte(12),
-    "bpe_roundtrip" -> OracleSql.bpeRoundtrip,
-    "seq_pack_learn" -> OracleSql.seqPackBpeLearned(20, 24, 6, 256L),
-    "seq_pack_ranked" -> OracleSql.seqPackRanked(20, 24, 6, 256L),
-    "seq_pack_unigram" -> OracleSql.seqPackUnigram(24, 6, 256L),
-    "bpe_enc_uni" -> OracleSql.bpeEncUni,
-    "chunk_bpe" -> OracleSql.chunkBpe(24, 6),
-    "seq_pack_bpe" -> OracleSql.seqPackBpeNative(24, 6, 256L),
-    "mix_bpe" -> OracleSql.mixBudgetBpe(
-      Seq("en" -> 50000L, "de" -> 20000L), 8000L, "graft"),
-    "win_quantiles" -> OracleSql.winQuantiles,
-    "win_gate" -> OracleSql.winGate,
-    "win_stats" -> OracleSql.winStats,
-    "host_filter" -> OracleSql.hostFilter(299.0),
-    "host_stats" -> OracleSql.hostStats,
-    "q1_pricing" -> OracleSql.q1Pricing,
-    "join_revenue_nation" -> OracleSql.revenueByNation,
-    "top_customers" -> OracleSql.topCustomers(10),
-  )
+  private val byName: Map[String, QuerySpec] =
+    registry.map(q => q.name -> q).toMap
+
+  /** The registered queries named in a comma-separated list (the
+    * `*_ONLY` filters of Bench and Verify, the dev tools' arguments), in
+    * list order. Every name must be registered: a misspelled name fails
+    * here, loudly, instead of selecting nothing.
+    */
+  def lookup(names: String): Seq[QuerySpec] = {
+    val wanted = names.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val unknown = wanted.filterNot(byName.contains)
+    if (wanted.isEmpty || unknown.nonEmpty)
+      throw new IllegalStateException(s"query list `$names` names " + (
+        if (wanted.isEmpty) "no query"
+        else s"unregistered queries: ${unknown.mkString(", ")}"))
+    wanted.map(byName)
+  }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     intervalQuery(su = false, eu = true, ResultType.Enumerated)(
       spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // interval identification: four span configs × generic/adjusted impls
-    "interval_lsfe" -> (intervalQuery(su = false, eu = true,
-      ResultType.Enumerated, adjusted = false) _),
-    "interval_fsle" -> (intervalQuery(su = true, eu = false,
-      ResultType.Enumerated, adjusted = false) _),
-    "interval_fsfe_adj" -> (intervalQuery(su = true, eu = true,
-      ResultType.Enumerated) _),
-    "interval_lsle_adj" -> (intervalQuery(su = false, eu = false,
-      ResultType.Enumerated) _),
-    "interval_fsfe_generic" -> (intervalQuery(su = true, eu = true,
-      ResultType.Enumerated, adjusted = false) _),
-    "interval_lsle_generic" -> (intervalQuery(su = false, eu = false,
-      ResultType.Enumerated, adjusted = false) _),
-    "interval_raw" -> (intervalQuery(su = false, eu = true,
-      ResultType.Raw, adjusted = false) _),
-    "interval_valid" -> (intervalQuery(su = false, eu = true,
-      ResultType.Valid, adjusted = false) _),
-    "interval_desc" -> (intervalQuery(su = false, eu = true,
-      ResultType.Enumerated, adjusted = false, ascending = false) _),
-    // single-pass (repartition+sort+mapPartitions) formulation: one
-    // shuffle instead of two; must agree with the same oracle
-    "interval_lsfe_1pass" -> ((s: SparkSession, dir: String) => {
-      val w = new IntervalIdentifierSinglePass("event_type", "signup",
-        Some("purchase"), orderbyColumns = Seq("event_id"),
-        groupbyColumns = Seq("user_id"))
-      w.transform(events(s, dir))
-        .select(col("user_id"), col("event_id"),
-          col("iids").cast("long").as("iids"))
-        .orderBy("user_id", "event_id")
-    }),
-    "interval_identical" -> ((s: SparkSession, dir: String) => {
-      val w = new IntervalIdentifier("event_type", "click", None,
-        orderbyColumns = Seq("event_id"), groupbyColumns = Seq("user_id"))
-      w.transform(events(s, dir))
-        .select(col("user_id"), col("event_id"),
-          col("iids").cast("long").as("iids"))
-        .orderBy("user_id", "event_id")
-    }),
-    // skew-immune salted formulation (chunked two-phase window algebra,
-    // no whole-group task anywhere): must agree with the SAME oracles as
-    // the plain paths. The three queries cover no-drop (lsfe), both-drop
-    // (fsle) and identical-marker semantics across chunk boundaries.
-    "interval_lsfe_salted" -> (intervalQuery(su = false, eu = true,
-      ResultType.Enumerated, salted = true) _),
-    "interval_fsle_salted" -> (intervalQuery(su = true, eu = false,
-      ResultType.Enumerated, salted = true) _),
-    "interval_identical_salted" -> ((s: SparkSession, dir: String) => {
-      val w = new IntervalIdentifierSalted("event_type", "click", None,
-        orderbyColumns = Seq("event_id"), groupbyColumns = Seq("user_id"))
-      w.transform(events(s, dir))
-        .select(col("user_id"), col("event_id"),
-          col("iids").cast("long").as("iids"))
-        .orderBy("user_id", "event_id")
-    }),
-  ) ++ extendedQueries
+  /** The query builders by name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
   /** DuckDB-runnable oracle SQL per query ({dir} replaced by the driver
     * with the parquet directory — if the driver does not substitute, the
@@ -2272,21 +2376,6 @@ object SparkEntry {
     * the sf0.001 gate disagreed on 3 `admit` rows). Verify passes the
     * directory it dumps.
     */
-  def oracleSqlFor(sfBase: String): Map[String, String] = Map(
-    "interval_lsfe" -> intervalOracle(su = false, eu = true),
-    "interval_fsle" -> intervalOracle(su = true, eu = false),
-    "interval_fsfe_adj" -> intervalOracle(su = true, eu = true),
-    "interval_lsle_adj" -> intervalOracle(su = false, eu = false),
-    "interval_fsfe_generic" -> intervalOracle(su = true, eu = true),
-    "interval_lsle_generic" -> intervalOracle(su = false, eu = false),
-    "interval_raw" -> intervalOracle(su = false, eu = true, "raw"),
-    "interval_valid" -> intervalOracle(su = false, eu = true, "valid"),
-    "interval_desc" -> intervalOracle(su = false, eu = true,
-      ascending = false),
-    "interval_lsfe_1pass" -> intervalOracle(su = false, eu = true),
-    "interval_identical" -> intervalIdenticalOracle("click"),
-    "interval_lsfe_salted" -> intervalOracle(su = false, eu = true),
-    "interval_fsle_salted" -> intervalOracle(su = true, eu = false),
-    "interval_identical_salted" -> intervalIdenticalOracle("click"),
-  ) ++ extendedOracles(sfBase)
+  def oracleSqlFor(sfBase: String): Map[String, String] =
+    registry.map(q => q.name -> q.oracle(sfBase)).toMap
 }

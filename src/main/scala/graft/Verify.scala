@@ -6,6 +6,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // SPARK_GRAFT_VERIFY_ONLY=q1,q2 restricts the dump (and the oracle
+    // json) for local iteration; the driver never sets it. The lookup
+    // rejects a typo'd name, which would otherwise write an EMPTY dump
+    // under exit code 0 — vacuous success over a prior complete artifact
+    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
+      .map(SparkEntry.lookup(_).map(_.name).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -17,19 +23,6 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_VERIFY_ONLY=q1,q2 restricts the dump (and the oracle
-    // json) for local iteration; the driver never sets it
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // a typo'd filter name would otherwise write an EMPTY dump (and
-    // clobber oracle_sql.json with {}) under exit code 0 — vacuous
-    // success over a prior complete artifact
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_VERIFY_ONLY names unknown queries: " +
-          s"${unknown.toSeq.sorted.mkString(", ")}")
-    }
     def wanted(name: String): Boolean = only.forall(_.contains(name))
     SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -315,14 +315,18 @@ object Dsir {
     * eager driver actions; the kept SET is invariant to what the
     * sketch returns (boundaries steer layout only — a shifted boundary
     * moves rows between the keep-all and boundary classes, not in or
-    * out of the final top-k). Callers localCheckpoint `scored` (unless
-    * opted out) so the eager actions and every branch below read
-    * 16-byte materialized rows, never a scoring re-run.
+    * out of the final top-k). The narrow `(id, dsir_score)` frame is
+    * cut ONCE with `localCheckpoint` here, so the eager actions and
+    * every branch below read the same 16-byte materialized rows: never
+    * a scoring re-run, and a nondeterministic upstream is evaluated
+    * exactly once — the census and the filters it drives cannot
+    * disagree, so exact-k holds.
     */
-  private def selectTopFraction(scored: DataFrame, idColumn: String,
+  private def selectTopFraction(scoredLazy: DataFrame, idColumn: String,
                                 fraction: Double, valueBuckets: Int,
                                 accuracy: Int, salt: String,
                                 opName: String): DataFrame = {
+    val scored = scoredLazy.localCheckpoint()
     val idc = col(idColumn)
     val sd = col("dsir_score").cast("double")
     val bs = ValueBucketing.boundaries(scored, "dsir_score",
@@ -438,10 +442,10 @@ object Dsir {
     * partial-aggregated sum. The ENTIRE selection then runs ids-only
     * (the library's rank-machinery convention, cf.
     * [[Interleave.InterleaveShuffle]]): the `(id, dsir_score)` frame —
-    * 16 bytes a row — is cut ONCE with `localCheckpoint` when
-    * `cacheScores` is set (the [[Similarity.CosineTopK]] trade), so
-    * the eager boundary sampling and every selection branch read the
-    * materialized narrow rows instead of re-running the scoring joins,
+    * 16 bytes a row — is cut ONCE with `localCheckpoint` (the
+    * [[Similarity.CosineTopK]] trade), so the eager boundary sampling
+    * and every selection branch read the materialized narrow rows
+    * instead of re-running the scoring joins,
     * and document text is tokenized exactly ONCE end to end (the fit
     * aggregation and the scoring join share one materialized posting —
     * `cachePosting`); the only other touch is the final id-keyed join
@@ -456,7 +460,6 @@ object Dsir {
                                       valueBuckets: Int = 256,
                                       accuracy: Int = 10000,
                                       salt: String = "graft",
-                                      cacheScores: Boolean = true,
                                       ngram: Int = 1,
                                       cachePosting: Boolean = true)
       extends Wrangler {
@@ -496,11 +499,9 @@ object Dsir {
             sum(when(col("__tgt"), 0L).otherwise(1L)).as("n_raw")),
         "feature",
         Map("numFeatures" -> numFeatures.toLong, "ngram" -> ngram.toLong))
-      val scoredLazy = scoreAgainst(df, counts, idColumn, textColumn,
+      val scored = scoreAgainst(df, counts, idColumn, textColumn,
         numFeatures, emptyModelError = None, ngram,
         posting0 = Some(posting.select(idc, col("__feat").as("__f"))))
-      val scored =
-        if (cacheScores) scoredLazy.localCheckpoint() else scoredLazy
       val kept = selectTopFraction(scored, idColumn, fraction,
         valueBuckets, accuracy, salt, "ImportanceResample")
       // re-attach the input columns to KEPT rows only — the one time
@@ -540,8 +541,7 @@ object Dsir {
                                    numFeatures: Int = 4096,
                                    valueBuckets: Int = 256,
                                    accuracy: Int = 10000,
-                                   salt: String = "graft",
-                                   cacheScores: Boolean = true)
+                                   salt: String = "graft")
       extends Wrangler {
     def transform(df: DataFrame): DataFrame = {
       Seq("n_in", "n_kept", "keep_rate", "score_sum", "__ks").foreach {
@@ -552,7 +552,7 @@ object Dsir {
       }
       val kept = ImportanceResample(targetValue, fraction, idColumn,
         textColumn, targetColumn, numFeatures, valueBuckets, accuracy,
-        salt, cacheScores).transform(df)
+        salt).transform(df)
       val inAgg = df.groupBy(col(targetColumn))
         .agg(count(lit(1)).as("n_in"))
       val keptAgg = kept.groupBy(col(targetColumn).as("__ks"))
@@ -593,7 +593,6 @@ object Dsir {
                                        valueBuckets: Int = 256,
                                        accuracy: Int = 10000,
                                        salt: String = "graft",
-                                       cacheScores: Boolean = true,
                                        ngram: Int = 1)
       extends Wrangler {
     require(fraction > 0.0 && fraction <= 1.0,
@@ -615,7 +614,7 @@ object Dsir {
       "fraction" -> fraction, "idColumn" -> idColumn,
       "textColumn" -> textColumn, "numFeatures" -> numFeatures,
       "valueBuckets" -> valueBuckets, "accuracy" -> accuracy,
-      "salt" -> salt, "cacheScores" -> cacheScores, "ngram" -> ngram)
+      "salt" -> salt, "ngram" -> ngram)
 
     def transform(df: DataFrame): DataFrame = {
       SparkUtil.validateColumns(df, Seq(idColumn, textColumn))
@@ -626,12 +625,10 @@ object Dsir {
       SparkUtil.requireFitParam(counts, "feature", "ngram", ngram.toLong,
         "IncrementalResample")
       requireNoReserved(df)
-      val scoredLazy = scoreAgainst(df, counts, idColumn, textColumn,
+      val scored = scoreAgainst(df, counts, idColumn, textColumn,
         numFeatures, emptyModelError = Some(
           "IncrementalResample: empty feature-count table — fit " +
             "featureCounts on a non-empty corpus first"), ngram)
-      val scored =
-        if (cacheScores) scoredLazy.localCheckpoint() else scoredLazy
       val kept = selectTopFraction(scored, idColumn, fraction,
         valueBuckets, accuracy, salt, "IncrementalResample")
       val outCols = df.columns.map(col).toSeq :+ col("dsir_score")

@@ -525,11 +525,11 @@ object TextAnalysis {
       * building a space-joined string per position per n (r17
       * optimization: the 9-order n-gram loop measured 2.46-2.48x
       * faster than the string-keyed r16 formulation at both 30- and
-      * 600-token documents — [[graft.tools.GramBench]], which also
-      * asserts result equality per document; the 2M-doc closed-form
-      * stress row stays green). EXACT equivalence with the string keys:
-      * tokens contain no spaces (whitespace-split), so for fixed n the
-      * space-join is injective — id-window equality iff string
+      * 600-token documents, with result equality asserted per
+      * document — OPTIMIZATION_r17.md change #7; the 2M-doc
+      * closed-form stress row stays green). EXACT equivalence with the
+      * string keys: tokens contain no spaces (whitespace-split), so for
+      * fixed n the space-join is injective — id-window equality iff string
       * equality — and the joined gram's codepoint count is
       * Σ token codepoints + (n − 1), read off the prefix-sum table.
       */

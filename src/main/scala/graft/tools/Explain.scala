@@ -13,7 +13,7 @@ import graft.SparkEntry
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
+    val specs = SparkEntry.lookup(args(0))
     val sfDir = args(1)
     val outDir = if (args.length > 2) Some(args(2)) else None
     val suffix = if (args.length > 3) args(3) else "plan"
@@ -24,8 +24,9 @@ object Explain {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    specs.foreach { q =>
+      val name = q.name
+      val df = q.build(spark, sfDir)
       outDir match {
         case Some(dir) =>
           val plan = df.queryExecution.explainString(

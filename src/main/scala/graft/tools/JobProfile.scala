@@ -29,7 +29,7 @@ import graft.benchmark.Force
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
+    val specs = SparkEntry.lookup(args(0))
     val sfDir = args(1)
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -95,8 +95,8 @@ object JobProfile {
 
     // process-wide codegen counters: compilations and their time (ns)
     def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
+    specs.foreach { q =>
+      val (name, fn) = (q.name, q.build)
       val cold0 = compiles()
       Force(fn(spark, sfDir)) // warm-up, uncounted
       val cold = compiles() - cold0

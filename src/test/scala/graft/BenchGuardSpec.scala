@@ -106,9 +106,24 @@ class BenchGuardSpec extends AnyFunSuite {
     Bench.assertHonestPlan("sample_dsir", Force.planString(part))
   }
 
-  test("every SparkEntry query has a registered plan signature") {
-    val missing = SparkEntry.queries.keySet -- Bench.planSignatures.keySet
-    assert(missing.isEmpty, s"queries without a signature: $missing")
+  test("registry query names are unique (the derived maps would " +
+    "silently keep only the last entry of a duplicated name)") {
+    val names = SparkEntry.registry.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"duplicate query names: $dups")
+    assert(SparkEntry.queries.size == names.size)
+  }
+
+  test("the SPARK_GRAFT_BENCH_ONLY / VERIFY_ONLY lookup returns the " +
+    "named queries and rejects a misspelled or empty filter") {
+    assert(SparkEntry.lookup(" sample_dsir,interval_lsfe ").map(_.name) ==
+      Seq("sample_dsir", "interval_lsfe"))
+    val e = intercept[IllegalStateException] {
+      SparkEntry.lookup("interval_lsfe,interval_lsfee,smaple_dsir")
+    }
+    assert(e.getMessage.contains("interval_lsfee, smaple_dsir"),
+      e.getMessage)
+    intercept[IllegalStateException](SparkEntry.lookup(" , "))
   }
 
   test("unknown query name fails fast instead of silently passing") {

@@ -220,17 +220,44 @@ class DsirPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("cacheScores=false returns the identical kept set (the lineage " +
-    "cut is layout only, like the boundary sketch)") {
-    val rnd = new Random(20260817L)
-    val docs = drawDocs(rnd, 100, 4, 0.5)
-    val df = docs.toDF("doc_id", "text", "source")
-    def run(cache: Boolean): Seq[(Long, Long)] =
-      Dsir.ImportanceResample("seed", 0.33, numFeatures = 32,
-          valueBuckets = 4, cacheScores = cache)
-        .transform(df)
-        .select("doc_id", "dsir_score")
-        .as[(Long, Long)].collect().sortBy(_._1).toSeq
-    assert(run(cache = true) == run(cache = false))
+  test("a nondeterministic input still keeps exactly ceil(fraction * n) " +
+    "rows: the score cut is materialized once, so the driver census and " +
+    "the filters it drives read the same evaluation") {
+    import org.apache.spark.sql.functions.{col, concat_ws, udf, when}
+    // a nondeterministic UDF, not rand(): rand()'s seed is fixed per
+    // plan, so re-running the plan replays the same draws; this one
+    // draws anew on every evaluation
+    val word = udf { () =>
+      s"w${java.util.concurrent.ThreadLocalRandom.current().nextInt(12)}"
+    }.asNondeterministic()
+    val n = 200
+    val batch = spark.range(n.toLong).select(col("id").as("doc_id"),
+      concat_ws(" ", word(), word(), word()).as("text"),
+      when(col("id") % 4 === 0, "seed").otherwise("web").as("source"))
+    assert(batch.collect().toSeq != batch.collect().toSeq,
+      "the input must differ between evaluations for this test to bite")
+    val counts = Dsir.featureCounts(
+      drawDocs(new Random(20260817L), 80, 12, 0.3)
+        .toDF("doc_id", "text", "source"), "seed", numFeatures = 32)
+    Seq(0.3, 0.55, 0.9).foreach { fraction =>
+      val k = new JBigDecimal(fraction.toString)
+        .multiply(JBigDecimal.valueOf(n.toLong))
+        .setScale(0, RoundingMode.CEILING).longValue()
+      // the one-shot form with the posting left lazy (the only other
+      // cut), and the ingest form, which has no posting cut at all
+      val selections = Seq(
+        "ImportanceResample" -> Dsir.ImportanceResample("seed", fraction,
+          numFeatures = 32, valueBuckets = 4, cachePosting = false)
+          .transform(batch),
+        "IncrementalResample" -> Dsir.IncrementalResample(counts, fraction,
+          numFeatures = 32, valueBuckets = 4)
+          .transform(batch.drop("source")))
+      selections.foreach { case (op, kept) =>
+        val ids = kept.select("doc_id").as[Long].collect()
+        assert(ids.length == k && ids.distinct.length == k,
+          s"$op fraction=$fraction kept ${ids.length} " +
+            s"(${ids.distinct.length} distinct), want $k")
+      }
+    }
   }
 }
