@@ -1140,14 +1140,16 @@ object SparkEntry {
       _ => OracleSql.chunkSplitBpe(24, 6),
       Some("Generate")), // same, external token array
     // deterministic training-order shuffle: exact md5-permutation
-    // positions via two-phase prefix sums, round-robin shard interleave
+    // positions via the BucketPrefix census + seeded per-cell count,
+    // round-robin shard interleave
     QuerySpec("shuffle_interleave", (s, dir) =>
       InterleaveShuffle(numShards = 8)
         .transform(docs(s, dir))
         .select("doc_id", "shuffle_key", "global_pos", "shard",
           "pos_in_shard")
         .orderBy("doc_id"),
-      _ => OracleSql.interleaveShuffle(8, "graft"), Some("Window")),
+      _ => OracleSql.interleaveShuffle(8, "graft"),
+      Some("MapPartitions")), // the seeded per-cell count pass
     // phase-major curriculum: short-to-long length curriculum over
     // 32-token bands, uniformly shuffled WITHIN each band — the same
     // exact prefix-sum permutation as shuffle_interleave with a leading
@@ -1159,7 +1161,8 @@ object SparkEntry {
         .select("doc_id", "phase", "shuffle_key", "global_pos", "shard",
           "pos_in_shard")
         .orderBy("doc_id"),
-      _ => OracleSql.curriculumOrder(32, 8, "graft"), Some("Window")),
+      _ => OracleSql.curriculumOrder(32, 8, "graft"),
+      Some("MapPartitions")), // the seeded per-cell count pass
     // temperature-scaled source mixture (alpha = 0.5): flattens the
     // 20-source distribution before the exact per-source token-budget
     // prefix keep — sqrt weights held as scaled longs so the DuckDB
@@ -1214,7 +1217,7 @@ object SparkEntry {
       _ => OracleSql.mixEpochsInterleave(
         Seq("en" -> 1.0, "zh" -> 2.4, "fr" -> 0.0, "de" -> 3.0),
         1.5, "graft-epoch", 8, "graft"),
-      Some("Window")), // copies through the prefix sum
+      Some("MapPartitions")), // copies through the prefix count
     // per-group top-k by score: map-side bounded k-heaps prune before
     // the rank window (partitions x groups x k, never the corpus)
     QuerySpec("top_docs", (s, dir) =>
@@ -1617,8 +1620,8 @@ object SparkEntry {
         .orderBy("lang"),
       _ => OracleSql.statsQuantiles(
         Seq("p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99)), Some("Window")),
-    // exact distributed prefix sum (two-phase, range-partitioned); 20 kB
-    // target yields a handful of shards at sf0.01. The operator is
+    // exact distributed prefix sum (BucketPrefix over key-range buckets);
+    // a 20 kB target yields a handful of shards at sf0.01. The operator is
     // row-preserving (every doc column passes through); the oracle
     // compares the packing columns, so project those
     QuerySpec("shard_pack", (s, dir) =>
@@ -1647,7 +1650,7 @@ object SparkEntry {
     // bucketed-batching layout (r16): length-CLASS packing — sequences
     // pad only to their class band, not the corpus max, and packs cut
     // at a fixed sequence count per class. Skew-safe per-class rank via
-    // the ShardPack two-phase counting (never a per-class window)
+    // the BucketPrefix count ShardPack also uses (never a per-class window)
     QuerySpec("len_bucket_pack", (s, dir) =>
       Corpus.LengthBucketPack(
           bands = Seq(16L, 24L, 32L, 48L, 64L, 96L, 128L), seqsPerPack = 8)

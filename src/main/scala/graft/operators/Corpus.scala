@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.core.Wrangler
 import graft.functions.Portable._
@@ -912,41 +911,22 @@ object Corpus {
     * step before writing fixed-size training shards.
     *
     * A naive formulation is a running sum over an UNPARTITIONED window —
-    * one task holding the corpus. This one is the exact two-phase
-    * distributed prefix sum instead:
-    *   1. bucket every row by a PURE FUNCTION of the order key
-    *      (`(k - min) / width`, key-range buckets) and aggregate
-    *      per-bucket byte totals (a driver collect bounded by the bucket
-    *      count, never the row count);
-    *   2. broadcast the exclusive per-bucket offsets, shuffle rows by
-    *      bucket, sort each partition by key, and stream it once —
-    *      resetting the running sum to the bucket's offset at each
-    *      bucket boundary (buckets are monotone in the key, so a sort
-    *      by key keeps them contiguous even when several buckets hash
-    *      into one partition).
-    *
-    * The bucket MUST be a pure key function, not `repartitionByRange`:
-    * phase 1 and phase 2 are separate executions, and RangePartitioner
-    * RESAMPLES imbalanced partitions with an RDD-id-derived seed, so two
-    * runs of the same plan can place boundary rows differently —
-    * per-partition offsets then double-count (caught by
-    * `tools.StressCorpus` at 50M rows: 0.05% cumulative drift; invisible
-    * at spec scale, where partitions stay under the sample size).
+    * one task holding the corpus. This one is [[BucketPrefix]]'s exact
+    * distributed prefix sum over key-range buckets
+    * ([[BucketPrefix.rangeBucket]], `partitions` of them), weighted by
+    * size: two small driver jobs (bounds, then the bucket census) and ONE
+    * bucket shuffle for the pass itself.
     *
     * The order key must be unique (ties make the running sum
     * order-dependent, same contract as the interval identifier).
     * Key-range buckets balance rows for roughly uniform key spaces (the
     * usual case for ids); a pathologically clustered key space
     * concentrates work in few buckets — pre-map the key (e.g. by rank)
-    * if that matters at the call site.
+    * if that matters at the call site. Null keys or sizes, and an
+    * order-key span that overflows a signed 64-bit Long, fail loudly.
     *
     * Row-preserving: EVERY input column passes through unchanged, with
-    * `cum_bytes` and `shard` appended (round-5 judge nit: the previous
-    * version kept only the key/size pair and forced callers to join
-    * back). The order-key span must fit in a signed 64-bit Long
-    * (`max(k) - min(k)`): hash-derived ids spanning the full
-    * negative..positive range would overflow the bucket arithmetic, so
-    * that case fails loudly instead of mis-bucketing (round-5 ADVICE).
+    * `cum_bytes` and `shard` appended.
     */
   final case class ShardPack(orderColumn: String = "doc_id",
                              sizeColumn: String = "n_chars",
@@ -957,86 +937,24 @@ object Corpus {
 
     def transform(df: DataFrame): DataFrame = {
       SparkUtil.validateColumns(df, Seq(orderColumn, sizeColumn))
-      val reserved = Set("__k", "__sz", "__b", "cum_bytes", "shard")
+      val reserved = Set("__k", "__sz", "__b", "__before", "cum_bytes",
+        "shard")
       // case-insensitive: Spark resolves columns case-insensitively by
       // default, so a "__K" input column would make withColumn REPLACE
-      // instead of append and shift the positional helper indices below
+      // instead of append
       require(!df.columns.exists(c => reserved(c.toLowerCase)),
         s"input must not already carry ${reserved.mkString("/")} columns " +
           "(any case)")
-      val spark = df.sparkSession
-      val p =
-        if (partitions > 0) partitions
-        else spark.sessionState.conf.numShufflePartitions
-      // helper columns APPEND (no input column is named __*, checked
-      // above), so their positional indices are stable: nCols..nCols+2
-      val nCols = df.schema.size
-      val base = df
-        .withColumn("__k", col(orderColumn).cast("long"))
-        .withColumn("__sz", col(sizeColumn).cast("long"))
-      val outSchema = StructType(df.schema.fields :+
-        StructField("cum_bytes", LongType, nullable = false) :+
-        StructField("shard", LongType, nullable = false))
-      val bounds = base.agg(min("__k"), max("__k"), count(lit(1))).head()
-      if (bounds.getLong(2) == 0L)
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], outSchema)
-      val minK = bounds.getLong(0)
-      val span =
-        try math.subtractExact(bounds.getLong(1), minK)
-        catch {
-          case _: ArithmeticException => throw new IllegalArgumentException(
-            s"ShardPack: order-key span max(${bounds.getLong(1)}) - " +
-              s"min($minK) overflows Long; remap the key (e.g. by rank) " +
-              "before packing")
-        }
-      // width sized so bucket ids span 0 until p
-      val width = math.max(1L, span / p + 1)
-      // `div`, not `/`: Column./ is DOUBLE division (a 2^53+ key would
-      // round) — div is exact 64-bit integer division
-      val bucketed = base
-        .withColumn("__b", expr(s"(__k - ${minK}L) div ${width}L"))
-      val totals = bucketed.groupBy("__b").agg(sum("__sz").as("t"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // exclusive prefix sum over bucket totals — a single running sum
-      val offsets = new Array[Long](p)
-      var acc = 0L
-      var i = 0
-      while (i < p) {
-        offsets(i) = acc
-        acc += totals.getOrElse(i.toLong, 0L)
-        i += 1
-      }
-      // Lifetime note: this broadcast (p longs) cannot be destroy()ed
-      // here — the returned frame's tasks read it on every execution. It
-      // is reclaimed by Spark's ContextCleaner once the frame's plan is
-      // unreachable and the driver GCs, like any captured broadcast.
-      val bc = spark.sparkContext.broadcast(offsets)
-      val target = targetBytes
-      bucketed
-        .repartition(p, col("__b"))
-        .sortWithinPartitions("__k")
-        .mapPartitions { it =>
-          var curBucket = -1L
-          var cum = 0L
-          it.map { r =>
-            val sz = r.getLong(nCols + 1)
-            val b = r.getLong(nCols + 2)
-            if (b != curBucket) {
-              // a bucket outside [0, p) means the arithmetic above broke
-              // (it cannot, post subtractExact) — fail loudly, never
-              // truncate-index into a valid-but-wrong offset
-              require(b >= 0 && b < bc.value.length,
-                s"ShardPack: bucket id $b outside [0, ${bc.value.length})")
-              curBucket = b
-              cum = bc.value(b.toInt)
-            }
-            val before = cum
-            cum += sz
-            Row.fromSeq(r.toSeq.take(nCols) :+ (cum: java.lang.Long) :+
-              ((before / target): java.lang.Long))
-          }
-        }(Encoders.row(outSchema))
+      val p = BucketPrefix.partitionsOf(df, partitions)
+      val bucketed = BucketPrefix.rangeBucket(df, "ShardPack", orderColumn,
+        sizeColumn, p)
+      BucketPrefix.exclusive(bucketed, "ShardPack", classes = Nil,
+          buckets = Seq("__b"), order = Seq(col("__k")),
+          weight = Some("__sz"), out = "__before", maxCells = p,
+          partitions = p)
+        .withColumn("cum_bytes", col("__before") + col("__sz"))
+        .withColumn("shard", expr(s"__before div ${targetBytes}L"))
+        .drop("__k", "__sz", "__b", "__before")
     }
   }
 
@@ -1122,12 +1040,11 @@ object Corpus {
     * unique (ties make the rank order-dependent, the [[ShardPack]]
     * contract).
     *
-    * 100 TB shape: the per-class rank is the same two-phase
-    * distributed counting as [[ShardPack]]'s prefix sum — key-range
-    * buckets, one bounded driver collect of `nBands x p` cell counts
-    * (bands are O(10), p is the shuffle-partition count), then ONE
-    * keyed exchange on (class, bucket) with a seeded running counter
-    * per cell. Never a global window over a class (a dominant length
+    * 100 TB shape: the per-class rank is [[BucketPrefix]]'s exact
+    * prefix count with the length class as the reset class over
+    * [[ShardPack]]'s key-range buckets — one bounded driver collect of
+    * at most `nBands x p` cell counts, then ONE keyed exchange on (class,
+    * bucket). Never a global window over a class (a dominant length
     * class — most corpora's mid band — would serialize through one
     * task); class skew lands as at most `p` balanced cells per class.
     */
@@ -1146,123 +1063,37 @@ object Corpus {
 
     def transform(df: DataFrame): DataFrame = {
       SparkUtil.validateColumns(df, Seq(orderColumn, sizeColumn))
-      val reserved = Set("__k", "__sz", "__cls", "__b", "len_class",
-        "class_tokens", "class_seq", "pack_id", "pad_tokens")
+      val reserved = Set("__k", "__sz", "__cls", "__b", "__seq",
+        "len_class", "class_tokens", "class_seq", "pack_id", "pad_tokens")
       require(!df.columns.exists(c => reserved(c.toLowerCase)),
         s"input must not already carry ${reserved.mkString("/")} columns " +
           "(any case)")
-      val spark = df.sparkSession
-      val p =
-        if (partitions > 0) partitions
-        else spark.sessionState.conf.numShufflePartitions
-      val nCols = df.schema.size
-      // class = index of the first band >= size, as a codegen'd CASE
-      // chain (bands are O(10) literals); out-of-band sizes take class
-      // -1 and fail loudly in the map pass below
-      val clsExpr = bands.zipWithIndex.reverse
-        .foldLeft(lit(-1)) { case (acc, (bound, i)) =>
-          when(col("__sz") <= bound && col("__sz") >= 1L, lit(i))
-            .otherwise(acc)
+      val p = BucketPrefix.partitionsOf(df, partitions)
+      // class = index of the first band >= size, and its pad-to width, as
+      // codegen'd CASE chains (bands are O(10) literals); out-of-band
+      // sizes fail in rangeBucket's bounds aggregate, before any per-row
+      // work
+      def byBand(value: Int => Column): Column = bands.zipWithIndex.reverse
+        .foldLeft(lit(null)) { case (acc, (bound, i)) =>
+          when(col("__sz") <= bound, value(i)).otherwise(acc)
         }
-      val base = df
-        .withColumn("__k", col(orderColumn).cast("long"))
-        .withColumn("__sz", col(sizeColumn).cast("long"))
-        .withColumn("__cls", clsExpr)
-      val outSchema = StructType(df.schema.fields :+
-        StructField("len_class", IntegerType, nullable = false) :+
-        StructField("class_tokens", LongType, nullable = false) :+
-        StructField("class_seq", LongType, nullable = false) :+
-        StructField("pack_id", LongType, nullable = false) :+
-        StructField("pad_tokens", LongType, nullable = false))
-      // null order/size keys ride the SAME one-row aggregate as the
-      // bounds (no extra job) and fail loud here — a null __k would
-      // otherwise produce a null bucket and an opaque driver-side NPE
-      // in the cell collect (all-null keys would NPE on getLong(0))
-      val boundsRow = base.agg(min("__k"), max("__k"), count(lit(1)),
-        count(col("__k")), count(col("__sz"))).head()
-      if (boundsRow.getLong(2) == 0L)
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], outSchema)
-      val nRows = boundsRow.getLong(2)
-      require(boundsRow.getLong(3) == nRows,
-        s"LengthBucketPack: ${nRows - boundsRow.getLong(3)} rows have " +
-          s"a null (or non-castable) `$orderColumn` — the order key " +
-          "must be total; filter or remap before packing")
-      require(boundsRow.getLong(4) == nRows,
-        s"LengthBucketPack: ${nRows - boundsRow.getLong(4)} rows have " +
-          s"a null (or non-castable) `$sizeColumn` — every sequence " +
-          "needs a size; filter or recount before packing")
-      val minK = boundsRow.getLong(0)
-      val span =
-        try math.subtractExact(boundsRow.getLong(1), minK)
-        catch {
-          case _: ArithmeticException => throw new IllegalArgumentException(
-            s"LengthBucketPack: order-key span max(${boundsRow.getLong(1)}) " +
-              s"- min($minK) overflows Long; remap the key before packing")
-        }
-      val width = math.max(1L, span / p + 1)
-      val bucketed = base
-        .withColumn("__b", expr(s"(__k - ${minK}L) div ${width}L"))
-      // cell counts: nBands x p rows, driver-bounded by construction.
-      // An out-of-band size surfaces HERE (cls = -1 in the counts) so
-      // the job fails before any per-row work is wasted.
-      val cells = bucketed.groupBy("__cls", "__b")
-        .agg(count(lit(1)).as("n"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2))
-      val bad = cells.collect { case ((cls, _), n) if cls < 0 => n }.sum
-      require(bad == 0L,
-        s"LengthBucketPack: $bad rows have `$sizeColumn` outside " +
-          s"[1, ${bands.last}] — chunk or filter before packing " +
-          "(silent top-band adoption would corrupt batch shapes)")
-      val cellMap = cells.toMap
-      // exclusive per-class prefix counts across buckets, flattened to
-      // a (nBands x p) offset table indexed [cls * p + bucket]
-      val offsets = new Array[Long](bands.size * p)
-      var cls = 0
-      while (cls < bands.size) {
-        var acc = 0L
-        var b = 0
-        while (b < p) {
-          offsets(cls * p + b) = acc
-          acc += cellMap.getOrElse((cls, b.toLong), 0L)
-          b += 1
-        }
-        cls += 1
-      }
-      val bc = spark.sparkContext.broadcast(offsets)
-      val bandArr = bands.toArray
-      val spp = seqsPerPack.toLong
-      val pFinal = p
-      bucketed
-        .repartition(p, col("__cls"), col("__b"))
-        .sortWithinPartitions("__cls", "__k")
-        .mapPartitions { it =>
-          // cells are contiguous after the sort: rows group by class,
-          // and within a class the bucket id is monotone in __k
-          var curCls = -2
-          var curB = -1L
-          var rank = 0L
-          it.map { r =>
-            val sz = r.getLong(nCols + 1)
-            val c = r.getInt(nCols + 2)
-            val b = r.getLong(nCols + 3)
-            if (c != curCls || b != curB) {
-              require(c >= 0 && c < bandArr.length && b >= 0 && b < pFinal,
-                s"LengthBucketPack: cell ($c, $b) outside " +
-                  s"[0, ${bandArr.length}) x [0, $pFinal)")
-              curCls = c
-              curB = b
-              rank = bc.value(c * pFinal + b.toInt)
-            }
-            val seq = rank
-            rank += 1L
-            Row.fromSeq(r.toSeq.take(nCols) :+ c :+
-              (bandArr(c): java.lang.Long) :+ (seq: java.lang.Long) :+
-              ((seq / spp): java.lang.Long) :+
-              ((bandArr(c) - sz): java.lang.Long))
-          }
-        }(Encoders.row(outSchema))
+      val bucketed = BucketPrefix.rangeBucket(df, "LengthBucketPack",
+          orderColumn, sizeColumn, p,
+          checks = Seq(!col("__sz").between(1L, bands.last) ->
+            (s"`$sizeColumn` outside [1, ${bands.last}] — chunk or filter " +
+              "before packing (silent top-band adoption would corrupt " +
+              "batch shapes)")))
+        .withColumn("__cls", byBand(lit(_)))
+      BucketPrefix.exclusive(bucketed, "LengthBucketPack",
+          classes = Seq("__cls"), buckets = Seq("__b"),
+          order = Seq(col("__k")), weight = None, out = "__seq",
+          maxCells = bands.size.toLong * p, partitions = p)
+        .withColumn("len_class", col("__cls"))
+        .withColumn("class_tokens", byBand(i => lit(bands(i))))
+        .withColumn("class_seq", col("__seq"))
+        .withColumn("pack_id", expr(s"__seq div ${seqsPerPack}L"))
+        .withColumn("pad_tokens", col("class_tokens") - col("__sz"))
+        .drop("__k", "__sz", "__cls", "__b", "__seq")
     }
   }
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Wrangler
@@ -15,17 +14,14 @@ import graft.util.SparkUtil
   * task, then round-robin interleaves the permutation across
   * `numShards` output shards.
   *
-  * Scale shape — exact distributed prefix sum, never a global sort in
-  * one task: only (id, phase, shuffle_key) triples enter the machinery;
-  * rows range-bucket by the shuffle key's leading 16 bits (uniform by
-  * construction — md5 makes hot input keys impossible), per-(phase,
-  * bucket) counts aggregate map-side, exclusive offsets come from a
-  * window over at most `phases x hashBuckets` rows, and in-bucket ranks
-  * come from one rank window per (phase, bucket) ordered by
-  * (shuffle_key, id). The full row joins back by id at the end
-  * (AQE-splittable equi-join): document text never rides the rank
-  * shuffle. Beyond-reference surface; framework contract per
-  * src/pywrangler/base.py:12-131.
+  * Scale shape: `global_pos` is [[BucketPrefix]]'s exact prefix count
+  * over (phase, bucket) cells, where the bucket is the shuffle key's
+  * leading 16 bits scaled into `[0, hashBuckets)` (uniform by
+  * construction — md5 makes hot input keys impossible). Only (id,
+  * phase, shuffle_key) triples enter the prefix; the full row joins
+  * back by id at the end (AQE-splittable equi-join), so document text
+  * never rides the cell shuffle. Beyond-reference surface; framework
+  * contract per src/pywrangler/base.py:12-131.
   */
 private[operators] object Interleave {
   private[operators] val outCols = Seq("shuffle_key", "global_pos",
@@ -33,12 +29,10 @@ private[operators] object Interleave {
 
   /** The shared permutation core. `phase` is the major sort key (a
     * non-null long expression over the input row; `lit(0L)` for the
-    * pure shuffle). The offsets window runs over at most
-    * `maxPhases x hashBuckets` rows; `maxPhases` is enforced in-plan by
-    * a one-row broadcast aggregate (same discipline as
-    * `Dedup.selectCanonical`'s size guard) because a high-cardinality
-    * phase would silently turn that window's single task into a
-    * corpus-sized sort.
+    * pure shuffle). The census holds at most `maxPhases x hashBuckets`
+    * cells, and more than `maxPhases` distinct phases fail on the
+    * driver before any offset is computed: a high-cardinality phase
+    * would otherwise grow the census with the corpus.
     */
   private[operators] def permute(df: DataFrame, idColumn: String,
       phase: Column, phased: Boolean, numShards: Int, hashBuckets: Int,
@@ -49,7 +43,7 @@ private[operators] object Interleave {
       s"`$idColumn` collides with an output column")
     // fail-loudly: a null / non-long-castable id would silently drop the
     // row at the join-back (null keys never match); a null phase would
-    // sort FIRST in the offset window and silently shift every position
+    // sort FIRST and silently shift every position
     val keyed = df.select(
         when(col(idColumn).isNull || col(idColumn).cast("long").isNull,
           raise_error(lit(s"$opName: `$idColumn` must be " +
@@ -67,38 +61,17 @@ private[operators] object Interleave {
       .withColumn("__rb",
         (conv(substring(col("shuffle_key"), 1, 4), 16, 10).cast("long") *
           hashBuckets / 65536L).cast("long"))
-    // phase 1: per-(phase, bucket) counts (map-side partial) ->
-    // exclusive offsets via a window over at most phases x hashBuckets
-    // rows (single tiny task, guarded below)
-    val counts = keyed.groupBy("__ph", "__rb")
-      .agg(count(lit(1)).as("__c"))
-    val guarded =
-      if (!phased) counts
-      else {
-        val nPhases = counts.select("__ph").distinct()
-          .agg(count(lit(1)).as("__np"))
-        counts.crossJoin(broadcast(nPhases))
-          .withColumn("__ph",
-            when(col("__np") > maxPhases,
-              raise_error(concat(
-                lit(s"$opName: "), col("__np"),
-                lit(s" distinct phases (> maxPhases=$maxPhases) — the " +
-                  "offset window would sort phases x hashBuckets rows " +
-                  "in one task; bucket the phase expression coarser or " +
-                  "raise maxPhases explicitly"))).cast("long"))
-              .otherwise(col("__ph")))
-          .select("__ph", "__rb", "__c")
-      }
-    val offsets = guarded
-      .withColumn("__off", coalesce(
-        sum("__c").over(Window.orderBy("__ph", "__rb")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("__ph", "__rb", "__off")
-    // phase 2: in-bucket rank + bucket offset = exact global position
-    val pos = keyed.join(broadcast(offsets), Seq("__ph", "__rb"))
-      .withColumn("global_pos", col("__off") +
-        row_number().over(Window.partitionBy("__ph", "__rb")
-          .orderBy(col("shuffle_key"), col("__k"))).cast("long") - 1L)
+    val pos = BucketPrefix.exclusive(keyed, opName, classes = Nil,
+        buckets = Seq("__ph", "__rb"),
+        order = Seq(col("shuffle_key"), col("__k")), weight = None,
+        out = "global_pos",
+        maxCells = math.min(maxPhases, Int.MaxValue.toLong) * hashBuckets,
+        check = cells => {
+          val nPhases = cells.iterator.map(_.head).distinct.size
+          require(nPhases <= maxPhases, s"$opName: $nPhases distinct " +
+            s"phases (> maxPhases=$maxPhases) — bucket the phase " +
+            "expression coarser or raise maxPhases explicitly")
+        })
       .withColumn("shard", pmod(col("global_pos"), lit(numShards.toLong)))
       // integral `div`, not `/`: float division would lose exactness
       // past 2^53 positions
@@ -128,8 +101,8 @@ private[operators] object Interleave {
   * corpus in permutation order, so data-parallel readers get both
   * determinism and mixing without any coordination.
   *
-  * Scale shape: see [[Interleave]] (this is the single-phase
-  * specialization of the shared exact-prefix-sum permutation core).
+  * Scale shape: see [[Interleave]] (the single-phase specialization of
+  * the shared permutation core over [[BucketPrefix]]).
   */
 final case class InterleaveShuffle(numShards: Int = 8,
                                    idColumn: String = "doc_id",
@@ -156,17 +129,17 @@ final case class InterleaveShuffle(numShards: Int = 8,
   *
   * `phaseColumn` must be a non-null long-castable column (fail-loud);
   * its cardinality is capped by `maxPhases` (a curriculum has a handful
-  * of bands — a high-cardinality phase would degrade the offset window;
-  * the cap is enforced in-plan by a one-row broadcast aggregate, no
-  * driver action). Row-preserving: every input column passes through
-  * plus `phase`, `shuffle_key`, `global_pos`, `shard`, `pos_in_shard`;
-  * same-named input columns are overwritten (round-8 convention).
+  * of bands; the cap bounds [[BucketPrefix]]'s driver census at
+  * `maxPhases x hashBuckets` cells and fails loudly beyond it).
+  * Row-preserving: every input column passes through plus `phase`,
+  * `shuffle_key`, `global_pos`, `shard`, `pos_in_shard`; same-named
+  * input columns are overwritten (round-8 convention).
   *
-  * Scale shape: see [[Interleave]] — identical exact-prefix-sum algebra
-  * with `(phase, shuffle_key, id)` as the global order, so the
-  * permutation needs ONE narrow keyed shuffle regardless of corpus
-  * size, and a phase's rows are never concentrated into one task (each
-  * phase still spreads over `hashBuckets` rank windows).
+  * Scale shape: see [[Interleave]] — the same prefix count with
+  * `(phase, shuffle_key, id)` as the global order, so the permutation
+  * needs ONE narrow keyed shuffle regardless of corpus size, and a
+  * phase's rows are never concentrated into one task (each phase still
+  * spreads over `hashBuckets` cells).
   */
 final case class CurriculumOrder(phaseColumn: String,
                                  numShards: Int = 8,

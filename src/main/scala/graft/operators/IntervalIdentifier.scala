@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.core.Wrangler
-import graft.util.{CacheMode, ColumnCacher, SparkUtil}
+import graft.util.{ColumnCacher, SparkUtil}
 
 /** Result shape of the interval identifier
   * (reference: src/pywrangler/wranglers.py:75-83).
@@ -195,7 +195,7 @@ class IntervalIdentifier(
     val m = col(markerColumn)
     def repeated(value: Any, reverse: Boolean, name: String): Column =
       m <=> lit(value) &&
-        cc.add(name, strictNeighbour(m, reverse), force = true) <=> lit(value)
+        cc.add(name, strictNeighbour(m, reverse)) <=> lit(value)
     val dropStart =
       if (markerStartUseFirst) repeated(markerStart, reverse = false,
         "prev_marker")
@@ -204,8 +204,7 @@ class IntervalIdentifier(
       if (!markerEndUseFirst) repeated(markerEndValue, reverse = true,
         "next_marker")
       else lit(false)
-    cc.add("marker_pre", when(dropStart || dropEnd, lit(null)).otherwise(m),
-      force = true)
+    cc.add("marker_pre", when(dropStart || dropEnd, lit(null)).otherwise(m))
   }
 
   /** Identical start/end markers: id = running count of start markers; rows
@@ -230,7 +229,7 @@ class IntervalIdentifier(
       return df.withColumn(targetColumnName,
         generateIidsIdentical(col(markerColumn)))
 
-    val cc = new ColumnCacher(df, CacheMode.Enabled)
+    val cc = new ColumnCacher(df)
     val marker =
       if (markerStartUseFirst || !markerEndUseFirst) preprocessMarkerColumn(cc)
       else col(markerColumn)
@@ -248,8 +247,7 @@ class IntervalIdentifier(
     val start = lit(markerStart)
     val end = lit(markerEndValue)
     val lastIsEnd = cc.add("last_is_end",
-      marker <=> end || strictNeighbour(marker, reverse = true) <=> end,
-      force = true)
+      marker <=> end || strictNeighbour(marker, reverse = true) <=> end)
     val firstIsStart =
       marker <=> start || strictNeighbour(marker, reverse = false) <=> start
     val ids =

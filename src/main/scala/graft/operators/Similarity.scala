@@ -535,16 +535,9 @@ object Similarity {
     * directly (no distinct needed — a pair can only collide once). With
     * several, the band join and the candidate `distinct` carry IDS ONLY
     * (the dim-long quantized vectors re-attach per side afterwards), so
-    * the pair shuffle stays narrow no matter how hot a bucket gets.
-    *
-    * `cacheInputs`: the ids-only multi-table shape consumes each side's
-    * quantized rows TWICE (band branch + re-attach join) on different
-    * shuffle keys, so nothing is reused and the corpus is scanned and
-    * re-quantized twice by default — fine at toy scale, where a second
-    * scan beats materializing anything. Where the scan dominates, the
-    * flag cuts both sides once (`localCheckpoint`, same trade as
-    * [[IvfTopK]]'s `cacheCorpus`). Results are bit-identical either
-    * way; no effect with one table (each side is consumed once there).
+    * the pair shuffle stays narrow no matter how hot a bucket gets. That
+    * shape consumes each side's quantized rows twice (band branch +
+    * re-attach join), so the corpus is scanned and re-quantized twice.
     */
   final case class LshCosineTopK(queries: DataFrame => DataFrame,
                                  idColumn: String = "vec_id",
@@ -552,20 +545,17 @@ object Similarity {
                                  dim: Int = 64,
                                  planes: Int = 8,
                                  tables: Int = 1,
-                                 k: Int = 5,
-                                 cacheInputs: Boolean = false)
+                                 k: Int = 5)
       extends Wrangler {
     require(tables >= 1, s"`tables` must be >= 1, got $tables")
 
     def transform(df: DataFrame): DataFrame = {
       SparkUtil.validateColumns(df, Seq(idColumn, vecColumn))
       val mat = hyperplaneMatrix(0, tables * planes, dim)
-      def cut(d: DataFrame): DataFrame =
-        if (cacheInputs && tables > 1) d.localCheckpoint() else d
-      val corpus = cut(quantizedRows(df.select(col(idColumn).as("id"),
-        col(vecColumn)), "id", vecColumn, mat, planes))
-      val qs = cut(quantizedRows(queries(df).select(col(idColumn).as("id"),
-        col(vecColumn)), "id", vecColumn, mat, planes))
+      val corpus = quantizedRows(df.select(col(idColumn).as("id"),
+        col(vecColumn)), "id", vecColumn, mat, planes)
+      val qs = quantizedRows(queries(df).select(col(idColumn).as("id"),
+        col(vecColumn)), "id", vecColumn, mat, planes)
       val scored =
         if (tables == 1) {
           val c = corpus.select(col("id"), col("q"), col("nrm"),

@@ -87,7 +87,7 @@ object Curation {
             Dedup.connectedComponents(pairs, checkpointDir = checkpointDir))
           .filter(col("keep")).drop("keep", "component")
         // second cut: ShardPack's two phase-1 driver jobs (bounds +
-        // bucket totals) and the final pass each execute their input;
+        // bucket census) and the final pass each execute their input;
         // without this they would re-run the rank window + joins 3x
         cut(canon, checkpointDir)
       }),

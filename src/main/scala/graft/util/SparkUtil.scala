@@ -141,17 +141,6 @@ object SparkUtil {
   }
 }
 
-/** Caching mode for [[ColumnCacher]]. */
-sealed trait CacheMode
-object CacheMode {
-  /** Materialize intermediates as real columns, drop them at finish. */
-  case object Enabled extends CacheMode
-  /** Keep pure column expressions (no intermediate columns). */
-  case object Disabled extends CacheMode
-  /** Materialize intermediates and KEEP them in the result (debugging). */
-  case object Debug extends CacheMode
-}
-
 /** Materializes intermediate Column expressions as real dataframe columns.
   *
   * Two reasons to do this: (a) window specs that partition by a computed
@@ -159,17 +148,15 @@ object CacheMode {
   * expression trees stress the analyzer (see SPARK-30552). Reference:
   * src/pywrangler/pyspark/util.py:105-204.
   */
-final class ColumnCacher(initial: DataFrame, val mode: CacheMode) {
+final class ColumnCacher(initial: DataFrame) {
   var df: DataFrame = initial
   /** logical name -> generated unique physical column name */
   val columns = scala.collection.mutable.LinkedHashMap.empty[String, String]
 
   /** Add `column` under a fresh unique name derived from `name`; returns a
-    * reference to the materialized column. With mode Disabled and
-    * `force = false` the expression is returned untouched.
+    * reference to the materialized column.
     */
-  def add(name: String, column: Column, force: Boolean = false): Column = {
-    if (mode == CacheMode.Disabled && !force) return column
+  def add(name: String, column: Column): Column = {
     var colName = s"${name}_${columns.size}"
     while (df.columns.contains(colName)) colName += "_"
     columns(name) = colName
@@ -177,10 +164,7 @@ final class ColumnCacher(initial: DataFrame, val mode: CacheMode) {
     col(colName)
   }
 
-  /** Attach the final result column and drop intermediates (unless Debug). */
-  def finish(name: String, column: Column): DataFrame = {
-    df = df.withColumn(name, column)
-    if (mode != CacheMode.Debug) df = df.drop(columns.values.toSeq: _*)
-    df
-  }
+  /** Attach the final result column and drop the intermediates. */
+  def finish(name: String, column: Column): DataFrame =
+    df.withColumn(name, column).drop(columns.values.toSeq: _*)
 }

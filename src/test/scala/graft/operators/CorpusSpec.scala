@@ -297,6 +297,22 @@ class CorpusSpec extends AnyFunSuite {
     assert(e.getMessage.contains("overflows"))
   }
 
+  test("shard_pack: a null key or size fails by operator and column " +
+    "name, never with a bare NPE") {
+    val nullKey = Seq[(java.lang.Long, java.lang.Long)]((1L, 5L), (null, 5L))
+      .toDF("doc_id", "n_chars")
+    val e1 = intercept[IllegalArgumentException](
+      Corpus.ShardPack(targetBytes = 10L).transform(nullKey))
+    assert(e1.getMessage.contains("ShardPack") &&
+      e1.getMessage.contains("`doc_id`"), e1.getMessage)
+    val nullSize = Seq[(java.lang.Long, java.lang.Long)]((1L, 5L), (2L, null))
+      .toDF("doc_id", "n_chars")
+    val e2 = intercept[IllegalArgumentException](
+      Corpus.ShardPack(targetBytes = 10L).transform(nullSize))
+    assert(e2.getMessage.contains("ShardPack") &&
+      e2.getMessage.contains("`n_chars`"), e2.getMessage)
+  }
+
   test("shard_pack: zero-size rows and random sizes match a local reference") {
     val rnd = new scala.util.Random(42)
     val sizes = Vector.tabulate(500)(i =>

@@ -307,7 +307,11 @@ class StreamingCurationSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.{broadcast, col, greatest, least, row_number}
     final case class Seen(g: String, v: Double, w: Double)
+    // one source per query, fed in order (see `feed`), as in the
+    // robust-scaling case below
     val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[graft.streaming.QEvent]
+    val clampInput = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[graft.streaming.QEvent]
     val thresholds = new graft.streaming.StreamingQuantileStats(Seq("g"),
       "v", quantiles = Seq(0.1, 0.9), windowDuration = "10 seconds")
@@ -315,7 +319,7 @@ class StreamingCurationSpec extends AnyFunSuite {
     val thQuery = thresholds.writeStream.format("memory")
       .queryName("sq_winsor_th").outputMode("append").start()
     val clamped = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double)]
-    val clampQuery = input.toDF().writeStream
+    val clampQuery = clampInput.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         val th = spark.table("sq_winsor_th")
         if (!th.isEmpty) {
@@ -339,17 +343,16 @@ class StreamingCurationSpec extends AnyFunSuite {
     try {
       def ev(g: String, sec: Long, v: Double) =
         graft.streaming.QEvent(g, new java.sql.Timestamp(sec * 1000L), v)
+      def feed(events: graft.streaming.QEvent*): Unit = {
+        input.addData(events: _*); thQuery.processAllAvailable()
+        clampInput.addData(events: _*); clampQuery.processAllAvailable()
+      }
       // window [0,10): g1 values 1..10 -> p10 = 1, p90 = 9
-      input.addData((1 to 10).map(i =>
-        ev("g1", i.toLong % 10, i.toDouble)): _*)
-      thQuery.processAllAvailable(); clampQuery.processAllAvailable()
-      input.addData(ev("g1", 30, 100.0)) // closes [0,10)
-      thQuery.processAllAvailable(); clampQuery.processAllAvailable()
+      feed((1 to 10).map(i => ev("g1", i.toLong % 10, i.toDouble)): _*)
+      feed(ev("g1", 30, 100.0)) // closes [0,10)
       // next docs winsorize into [1, 9]: 0.5 -> 1, 9.5 -> 9, 5 -> 5 —
       // ROW-PRESERVING (the gate would have dropped 0.5 and 9.5)
-      input.addData(ev("g1", 31, 0.5), ev("g1", 32, 5.0),
-        ev("g1", 33, 9.5))
-      thQuery.processAllAvailable(); clampQuery.processAllAvailable()
+      feed(ev("g1", 31, 0.5), ev("g1", 32, 5.0), ev("g1", 33, 9.5))
       val got = clamped.synchronized(clamped.toSet)
       assert(got.contains(("g1", 0.5, 1.0)), got)
       assert(got.contains(("g1", 5.0, 5.0)), got)
@@ -422,7 +425,11 @@ class StreamingCurationSpec extends AnyFunSuite {
     // single value, exactly the batch operator's contract
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions.{broadcast, col, lit, round, row_number, when}
+    // one source per query: the scaling side receives each event batch
+    // only after the threshold query has processed it (see `feed`)
     val input = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[graft.streaming.QEvent]
+    val scaleInput = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[graft.streaming.QEvent]
     val thresholds = new graft.streaming.StreamingQuantileStats(Seq("g"),
       "v", quantiles = Seq(0.25, 0.5, 0.75), windowDuration = "10 seconds")
@@ -431,7 +438,7 @@ class StreamingCurationSpec extends AnyFunSuite {
       .queryName("sq_robust_th").outputMode("append").start()
     val scaled = scala.collection.mutable.ArrayBuffer
       .empty[(String, Double, Option[Double])]
-    val scaleQuery = input.toDF().writeStream
+    val scaleQuery = scaleInput.toDF().writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         val th = spark.table("sq_robust_th")
         if (!th.isEmpty) {
@@ -460,20 +467,23 @@ class StreamingCurationSpec extends AnyFunSuite {
     try {
       def ev(g: String, sec: Long, v: Double) =
         graft.streaming.QEvent(g, new java.sql.Timestamp(sec * 1000L), v)
+      // explicit ordering: the threshold query processes a batch (and
+      // emits every window it closes) before the scaling query sees it,
+      // so a scaling batch never reads the sink mid-update
+      def feed(events: graft.streaming.QEvent*): Unit = {
+        input.addData(events: _*); thQuery.processAllAvailable()
+        scaleInput.addData(events: _*); scaleQuery.processAllAvailable()
+      }
       // window [0,10): g1 values 0,10,..,70 -> p25 = 10, p50 = 30,
-      // p75 = 50 (discrete rank ceil(q*8)); IQR = 40
-      input.addData((0 until 8).map(i =>
-        ev("g1", i.toLong, i * 10.0)): _*)
-      // and a constant group: p25 == p75 -> NULL scale for its rows
-      input.addData((0 until 4).map(i => ev("gc", i.toLong, 7.0)): _*)
-      thQuery.processAllAvailable(); scaleQuery.processAllAvailable()
-      input.addData(ev("g1", 30, 0.0), ev("gc", 30, 0.0)) // close [0,10)
-      thQuery.processAllAvailable(); scaleQuery.processAllAvailable()
+      // p75 = 50 (discrete rank ceil(q*8)); IQR = 40; and a constant
+      // group: p25 == p75 -> NULL scale for its rows
+      feed((0 until 8).map(i => ev("g1", i.toLong, i * 10.0)) ++
+        (0 until 4).map(i => ev("gc", i.toLong, 7.0)): _*)
+      feed(ev("g1", 30, 0.0), ev("gc", 30, 0.0)) // close [0,10)
       // next docs scale with the closed window's thresholds:
       // 30 -> 0.0 (the median), 50 -> 0.5, 0 -> -0.75
-      input.addData(ev("g1", 31, 30.0), ev("g1", 32, 50.0),
+      feed(ev("g1", 31, 30.0), ev("g1", 32, 50.0),
         ev("g1", 33, 0.0), ev("gc", 34, 9.0))
-      thQuery.processAllAvailable(); scaleQuery.processAllAvailable()
       val got = scaled.synchronized(scaled.toSet)
       assert(got.contains(("g1", 30.0, Some(0.0))), got)
       assert(got.contains(("g1", 50.0, Some(0.5))), got)

@@ -35,7 +35,7 @@ class SparkUtilSpec extends AnyFunSuite {
   }
 
   test("ColumnCacher Enabled: materializes, finish drops intermediates") {
-    val cc = new ColumnCacher(df, CacheMode.Enabled)
+    val cc = new ColumnCacher(df)
     val ref = cc.add("tmp", col("n") * 2)
     val out = cc.finish("result", ref + 1)
     assert(out.columns.toSeq == Seq("n", "s", "result"))
@@ -43,26 +43,11 @@ class SparkUtilSpec extends AnyFunSuite {
       Seq(3, 5))
   }
 
-  test("ColumnCacher Disabled: passes expressions through unless forced") {
-    val cc = new ColumnCacher(df, CacheMode.Disabled)
-    cc.add("tmp", col("n") * 2)
-    assert(cc.df.columns.toSeq == Seq("n", "s")) // nothing materialized
-    cc.add("forced", col("n") + 1, force = true)
-    assert(cc.df.columns.length == 3)
-  }
-
-  test("ColumnCacher Debug: keeps intermediates in the result") {
-    val cc = new ColumnCacher(df, CacheMode.Debug)
-    val ref = cc.add("tmp", col("n") * 2)
-    val out = cc.finish("result", ref)
-    assert(out.columns.count(_.startsWith("tmp")) == 1)
-    assert(out.columns.contains("result"))
-  }
-
   test("ColumnCacher: unique name generation avoids collisions") {
     val base = df.withColumn("tmp_0", lit(0))
-    val cc = new ColumnCacher(base, CacheMode.Debug)
+    val cc = new ColumnCacher(base)
     cc.add("tmp", lit(1))
     assert(cc.columns("tmp") != "tmp_0") // collided name got suffixed
+    assert(cc.df.columns.contains(cc.columns("tmp")))
   }
 }
