@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 
+import org.apache.spark.sql.graftshim.CutPartitioning
+
 import graft.core.Wrangler
 import graft.functions.Portable._
 import graft.util.SparkUtil
@@ -638,14 +640,33 @@ object Dedup {
     * minimum doc id as its cluster label — the step that turns pair-wise
     * near-duplicate findings into dedup GROUPS (keep one per cluster).
     *
-    * Algorithm: min-label propagation with pointer jumping. Each round
-    * (a) lowers every node's label to the minimum over itself and its
-    * neighbors' labels, then (b) shortcuts `label(v) := label(label(v))`,
-    * so label chains halve per round — convergence is O(log diameter)
-    * rounds, not the O(diameter) of plain propagation (a 2^20-diameter
-    * chain converges in ~20 rounds, not 2^20). No driver-side graph;
-    * edges never leave the cluster; ONE scalar driver action per round
-    * (the exact changed-label count over the old/new label join).
+    * Algorithm: min-label propagation with pointer jumping (the min-label
+    * loop of Kiveris et al., SoCC 2014). Each round (a) lowers every
+    * node's label to the minimum over itself and its neighbors' labels,
+    * then (b) shortcuts `label(v) := label(label(v))`, so label chains
+    * halve per round — convergence is O(log diameter) rounds, not the
+    * O(diameter) of plain propagation (a 2^20-diameter chain converges in
+    * ~20 rounds, not 2^20). No driver-side graph; edges never leave the
+    * cluster.
+    *
+    * Job budget: two shuffles and three Spark jobs per round (round 1:
+    * no shuffle and one job), with AQE on and local cuts;
+    * `TextDedupSpec` pins at most 4. The edge list is cut ONCE,
+    * hash-partitioned on `src` into `spark.sql.shuffle.partitions`
+    * partitions (an explicit count, which AQE never coalesces), and each
+    * round cuts its propagated labels
+    * hash-partitioned on `id` into the same count. Both cuts keep that
+    * layout, so every join of a cut reads it in place: no exchange, and
+    * no broadcast of the never-changing edge list. A round is the
+    * label-of-label lookup (edges joined to the cut in place, then
+    * shuffled once by that label into the cut's layout for the second
+    * lookup), the messages shuffled by node, the min aggregate, the cut.
+    * The pointer jump of round r is thus applied when round r+1 reads
+    * round r's cut. Convergence (the exact count of labels that changed)
+    * and emptiness are observed metrics of the cut itself
+    * (`Dataset.observe`), read from its own execution: no separate count
+    * or isEmpty job. The messages cross the node shuffle without a
+    * map-side min, one row per directed edge and self-loop.
     *
     * If the fixpoint is not reached within `maxIterations` the labels are
     * partially merged and WRONG for any not-yet-converged component, so
@@ -658,7 +679,7 @@ object Dedup {
     * (executor-local blocks — fast, but a lost executor kills the
     * lineage). On a real cluster pass a reliable directory (HDFS/S3) and
     * each round's labels are cut with fault-tolerant `checkpoint()`
-    * instead.
+    * instead (which writes the cut with one more job per round).
     */
   def connectedComponents(pairs: DataFrame,
                           maxIterations: Int = 20,
@@ -672,6 +693,9 @@ object Dedup {
       if (spark.sparkContext.getCheckpointDir.isEmpty)
         spark.sparkContext.setCheckpointDir(dir)
     }
+    // one partition count for the edge cut and every label cut, read
+    // once: co-partitioned cuts are what lets a round join them in place
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // Each localCheckpoint cut persists executor-local blocks that stay
     // alive for the life of the cut frame's lineage. Only the FINAL
     // labels back the returned frame — every superseded round's labels
@@ -679,8 +703,8 @@ object Dedup {
     // iterations that is 20x label-table storage held until GC (round-5
     // judge finding #2). Track the RDDs each cut persists so a
     // superseded cut can be freed as soon as the round that replaces it
-    // has been materialized and compared. Tracking walks the CUT FRAME'S
-    // OWN dependency graph for persisted ancestors — never a global
+    // has been materialized. Tracking walks the CUT FRAME'S OWN
+    // dependency graph for persisted ancestors — never a global
     // before/after getPersistentRDDs snapshot, which would mis-attribute
     // (and later unpersist) a frame another thread of the shared session
     // happened to cache concurrently (round-6 ADVICE). (Reliable
@@ -699,79 +723,113 @@ object Dedup {
       walk(rdd)
       acc.result()
     }
-    def cut(df: DataFrame): (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val out =
-        if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
+    // Cuts `df` projected to `columns` and returns the cut, the blocks it
+    // persists and `metric` (a count) observed on the rows the cut
+    // wrote. The metric and the row count (the cut's size estimate) are
+    // read synchronously from the cut's own execution — no extra job and
+    // no wait on the listener bus. A reliable `checkpoint()` evaluates
+    // its input twice and a retried task may be counted again, so callers
+    // test the count only for zero, which neither can change.
+    def cut(df: DataFrame, metric: Column, columns: String*)
+        : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]], Long) = {
+      val name = s"connectedComponents_${java.util.UUID.randomUUID()}"
+      val observed = df.observe(name, metric.as("n"), count(lit(1)).as("rows"))
+        .select(columns.map(col): _*)
+      val raw =
+        if (checkpointDir.isDefined) observed.checkpoint()
+        else observed.localCheckpoint()
+      val m = observed.queryExecution.observedMetrics.getOrElse(name,
+        throw new IllegalStateException(
+          s"connectedComponents: no observed metrics for cut $name"))
+      // the cut keeps the layout it was written with (see the shim)
+      val out = CutPartitioning.restore(raw, observed, m.getLong(1))
       // the checkpointed block-backed RDD is an ancestor of the cut
       // frame's execution RDD (localCheckpoint persists exactly it)
-      (out, persistedAncestors(out.queryExecution.toRdd))
+      (out, persistedAncestors(out.queryExecution.toRdd), m.getLong(0))
     }
     def free(rdds: Seq[org.apache.spark.rdd.RDD[_]]): Unit =
       rdds.foreach(_.unpersist(blocking = false))
-    val edges = pairs.select(col("id_a").cast("long").as("src"),
-        col("id_b").cast("long").as("dst"))
+    val (a, b) = (col("id_a").cast("long"), col("id_b").cast("long"))
     // materialize the edge list once — the propagation loop joins it
     // every round, and candidate-pair generation upstream (shingle
     // explode + join) is far too expensive to recompute per round.
     // Self-loops are added so one message join per round covers "min of
     // own label AND neighbors' labels" without a union inside the loop.
-    val (undirected, undirectedBlocks) = cut(edges
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .union(edges.select(col("src"), col("src").as("dst")))
-      .union(edges.select(col("dst").as("src"), col("dst")))
-      .distinct())
-    // materialized once: round 1 reads it twice (propagation join +
-    // changed-count join), later rounds replace it with the round cut
-    var (labels, labelBlocks) = cut(undirected.select(col("src").as("id"))
-      .distinct()
-      .withColumn("component", col("id")))
-    if (labels.isEmpty) {
-      free(undirectedBlocks) // labels is a cut: it no longer reads edges
-      return labels.select(col("id").as("doc_id"), col("component"))
+    // The repartition by src is the cut's only shuffle: the distinct
+    // runs within its partitions.
+    val (undirected, undirectedBlocks, edgeRows) = cut(pairs
+      .select(explode(array(
+        struct(a.as("src"), b.as("dst")), struct(b.as("src"), a.as("dst")),
+        struct(a.as("src"), a.as("dst")), struct(b.as("src"), b.as("dst"))))
+        .as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      .repartition(parts, col("src"))
+      .distinct(), count(lit(1)), "src", "dst")
+    if (edgeRows == 0L) {
+      val schema = undirected
+        .select(col("src").as("doc_id"), col("src").as("component")).schema
+      free(undirectedBlocks)
+      return spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
     }
+    // Each round cuts the propagated labels P(v) = min over N[v] of the
+    // previous round's labels; the pointer jump L(v) = P(P(v)) is applied
+    // when the next round reads the cut.
+    var props: Option[DataFrame] = None
+    var propBlocks = Seq.empty[org.apache.spark.rdd.RDD[_]]
+    // `df`'s rows carry `hop` = P(v) of their node v; this adds `label` =
+    // L(v) = P(hop), the label of the label, looked up in the cut `p`
+    // after one shuffle of `df` by `hop` into the cut's layout
+    def jump(df: DataFrame, p: DataFrame): DataFrame = df
+      .join(p.select(col("id").as("__j"), col("component").as("__jc"))
+        .hint("shuffle_hash"), col("hop") === col("__j"), "left")
+      .withColumn("label", coalesce(col("__jc"), col("hop")))
+      .drop("__j", "__jc", "hop")
     var converged = false
     var iter = 0
     while (!converged && iter < maxIterations) {
-      // one shuffle: every node receives its neighbors' labels (and its
-      // own, via the self-loops) and keeps the minimum. The node's OWN
-      // previous label rides the same aggregation through the self-loop
-      // row (src === dst matches exactly it) — so convergence can be
-      // read off the round's own output below, with no old-vs-new label
-      // join (r17 optimization: that join was one extra shuffle pair
-      // per round, guide §2.4).
-      val propagated = undirected.join(labels, col("src") === col("id"))
-        .groupBy(col("dst").as("nid"))
-        .agg(min("component").as("component"),
-          min(when(col("src") === col("dst"), col("component")))
-            .as("__prev"))
-        .select(col("nid").as("id"), col("component"), col("__prev"))
-      // pointer jumping: component ids are node ids, so a self-join reads
-      // the label OF the label and shortcuts chains — label chains halve
-      // per round. Both sides are the IDENTICAL `propagated` plan (alias
-      // only), so ReuseExchange serves the propagation shuffle once.
-      val next = propagated.as("x").join(propagated.as("y"),
-          col("x.component") === col("y.id"), "left")
-        .select(col("x.id").as("id"),
-          coalesce(col("y.component"), col("x.component")).as("component"),
-          col("x.__prev").as("__prev"))
-      // ONE materialization per round: only the round's final labels are
-      // checkpointed (truncating the lineage, which otherwise grows
-      // exponentially — each round's plan embeds the previous round's
-      // several times). The intermediate `propagated` stays lazy.
-      val (materialized, freshBlocks) = cut(next)
+      val propagated = props match {
+        // round 1: every label is still the node's own id, and the edge
+        // list is symmetric with self-loops, so P(v) is the least `dst` of
+        // v's own rows — an aggregate over the edge cut in place
+        case None => undirected.groupBy(col("src").as("id"))
+          .agg(min("dst").as("component"))
+          .withColumn("__prev", col("id"))
+        // every node receives its neighbors' labels (and its own, via the
+        // self-loop row, flagged so the node's previous label rides
+        // along). The shuffle-hash hints keep both lookups in place: the
+        // edge list and the cut are co-partitioned (src / id), and the hop
+        // side is shuffled once into the cut's layout — without them AQE
+        // would turn the small cut into a broadcast, a job per lookup.
+        // The round's second shuffle lays the messages out by node in the
+        // cut's partition count, so the min aggregate and the cut keep it
+        case Some(p) => jump(undirected
+            .join(p.hint("shuffle_hash"), col("src") === col("id"))
+            .select(col("dst"), col("component").as("hop"),
+              (col("src") === col("dst")).as("self")), p)
+          .repartition(parts, col("dst"))
+          .groupBy(col("dst").as("id"))
+          .agg(min("label").as("component"),
+            min(when(col("self"), col("label"))).as("__prev"))
+      }
+      // ONE materialization per round: only the round's propagated labels
+      // are checkpointed (truncating the lineage, which otherwise grows
+      // exponentially — each round's plan embeds the previous round's).
+      // Convergence is the old rule — zero labels changed by a round,
+      // L_r == L_{r-1} — read as P_r == L_{r-1}: labels only fall, and
+      // L_r <= P_r <= L_{r-1}, so one holds exactly when the other does
+      // (and then L_r = P_r). It is an exact count of rows whose new label
+      // differs from the carried previous one (never a sum compare, which
+      // can false-converge on silent 64-bit wrap when ids are
+      // hash-derived), observed on the cut's own rows.
+      val (materialized, freshBlocks, changed) = cut(propagated,
+        count(when(col("component") =!= col("__prev"), lit(1))),
+        "id", "component")
       // the cut was this round's LAST read of the previous labels: free
       // their blocks now, keeping storage flat per round
-      free(labelBlocks)
-      // convergence = zero labels changed this round. An exact count of
-      // changed rows (never a sum compare, which can false-converge on
-      // silent 64-bit wrap when ids are hash-derived) — a scan of the
-      // round's own materialized blocks (new label vs the carried
-      // previous label), no join, no shuffle, one scalar driver action.
-      val changed = materialized
-        .filter(col("component") =!= col("__prev"))
-        .count()
-      labels = materialized
-      labelBlocks = freshBlocks
+      free(propBlocks)
+      props = Some(materialized)
+      propBlocks = freshBlocks
       converged = changed == 0L
       iter += 1
     }
@@ -784,15 +842,26 @@ object Dedup {
         // persisted (edge list + final labels), or the blocks outlive
         // the failure for the life of the session
         free(undirectedBlocks)
-        free(labelBlocks)
+        free(propBlocks)
         throw new IllegalStateException(msg)
       }
       else org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
     }
-    // the final labels are a cut — the returned frame never re-reads the
-    // edge list, so its blocks are dead weight from here on
-    free(undirectedBlocks)
-    labels.select(col("id").as("doc_id"), col("component"))
+    props match {
+      case Some(p) =>
+        // the final labels read only the last cut — the returned frame
+        // never re-reads the edge list, so its blocks are dead weight
+        free(undirectedBlocks)
+        // converged: P_R = L_R already; otherwise the partial labels are
+        // the last round's L_R = P_R(P_R(v)), jumped lazily
+        if (converged) p.select(col("id").as("doc_id"), col("component"))
+        else jump(p.select(col("id").as("doc_id"), col("component").as("hop")),
+          p).withColumnRenamed("label", "component")
+      // no round ran (maxIterations <= 0): every node is its own label
+      case None =>
+        undirected.select(col("src").as("doc_id")).distinct()
+          .withColumn("component", col("doc_id"))
+    }
   }
 
   /** Embedding-cosine near-duplicate pairs via random-hyperplane LSH:

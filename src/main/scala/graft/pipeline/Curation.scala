@@ -12,22 +12,26 @@ import graft.operators.{Corpus, Dedup, Sampling, TextAnalysis}
   * stratified sample -> byte-balanced shard pack.
   *
   * Shuffle budget at scale: boilerplate + decontaminate + the pair join
-  * are narrow shingle equi-joins and per-doc aggs; CC is one keyed
-  * shuffle per round on (id, label) pairs; the sample is map-side; the
-  * pack is ONE bucket shuffle. The document text itself shuffles only
-  * for the doc_id joins of the per-doc flags — never inside the
-  * shingle/pair machinery.
+  * are narrow shingle equi-joins and per-doc aggs; CC cuts its edge
+  * list once, then runs two keyed shuffles and three jobs per round
+  * (the edge label lookup by label, the messages by node; the first
+  * round is one job, no shuffle), joining co-partitioned cuts in place
+  * with no broadcast; the sample is map-side; the pack is ONE bucket
+  * shuffle. The document text itself shuffles only for the doc_id
+  * joins of the per-doc flags — never inside the shingle/pair
+  * machinery.
   *
-  * `checkpointDir`: the chain cuts its lineage at two phase boundaries
-  * (the gated frame feeding both the pair join and canonical selection,
-  * and the deduped frame feeding ShardPack's two driver jobs plus the
-  * final pass) so upstream stages run once, not per consumer. With
-  * `None` the cuts are `localCheckpoint` — executor-local blocks, fast,
-  * the single-machine/bench default, but a lost executor kills the
-  * 8-stage lineage. On a real cluster pass a reliable directory
-  * (HDFS/S3) and both cuts — and the CC rounds inside — use
-  * fault-tolerant `checkpoint()` instead (same convention as
-  * [[graft.operators.Dedup.connectedComponents]]).
+  * `checkpointDir`: the chain cuts its lineage at three phase
+  * boundaries (the scored frame feeding the boilerplate and
+  * decontaminate self-joins, the gated frame feeding both the pair join
+  * and canonical selection, and the deduped frame feeding ShardPack's
+  * two driver jobs plus the final pass) so upstream stages run once,
+  * not per consumer. With `None` the cuts are `localCheckpoint` —
+  * executor-local blocks, fast, the single-machine/bench default, but a
+  * lost executor kills the 8-stage lineage. On a real cluster pass a
+  * reliable directory (HDFS/S3) and the cuts — and the CC rounds
+  * inside — use fault-tolerant `checkpoint()` instead (same convention
+  * as [[graft.operators.Dedup.connectedComponents]]).
   */
 object Curation {
 
@@ -59,9 +63,16 @@ object Curation {
       Stage.of("renorm")(df => df.select(col("doc_id"), col("lang"),
         col("norm_text").as("text"), col("norm_len").as("n_chars"))),
       Stage(TextAnalysis.QualityScore()),
-      Stage.of("boilerplate")(df => df.join(
-        Corpus.BoilerplateScore(maxDocFreq = shingleDocFreqCap).transform(df)
-          .select("doc_id", "boiler_ratio"), Seq("doc_id"))),
+      Stage.of("boilerplate")(scored => {
+        // phase boundary: the scored frame is read by every branch of the
+        // boilerplate and decontaminate joins (each side of each join,
+        // the eval split twice) — without the cut the gated frame's plan
+        // read and normalized the corpus once per branch (14 JSON scans
+        // in the perfbench chain)
+        val df = cut(scored, checkpointDir)
+        df.join(Corpus.BoilerplateScore(maxDocFreq = shingleDocFreqCap)
+            .transform(df).select("doc_id", "boiler_ratio"), Seq("doc_id"))
+      }),
       // `bloomDecontaminate` switches to the large-eval-set scale path
       // (broadcast Bloom posting prefilter) — results are bit-identical
       // by construction, CurationSpec pins the equivalence end to end
@@ -75,8 +86,8 @@ object Curation {
       Stage.of("near_dup_canonical")(df => {
         // phase boundary: the gated frame feeds BOTH the pair join and
         // the canonical-selection join, and the CC loop is iterative —
-        // cut once so the normalize/quality/boilerplate/decontaminate
-        // chain is computed exactly once, not re-derived by every
+        // cut once so the boilerplate/decontaminate joins over the scored
+        // cut are computed exactly once, not re-derived by every
         // consumer (at 100 TB you persist between curation phases for
         // the same reason)
         val gated = cut(df, checkpointDir)

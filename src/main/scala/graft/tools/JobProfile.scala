@@ -25,9 +25,87 @@ import graft.benchmark.Force
   * classes outgrow it recompiles on every execution: a non-zero warm
   * count is that thrash.
   *
-  * Usage: runMain graft.tools.JobProfile q1,q2 /root/testdata/sf0.1
+  * With `-v` it also lists every job of the forced run and the query's
+  * generated classes: one line per distinct source, with its codegen
+  * stage id (`-` for expression-level classes), its class kind, a hash
+  * of the source as Spark generated it (comments included) and how many
+  * times the warm-up and the forced run compiled it. A count of 2 per
+  * run is the driver and the executor class loader each compiling the
+  * same source; a forced-run count is cache thrash. The header also
+  * counts the distinct sources once stage ids are normalized: sources
+  * that differ only by their stage id are the same class under a new
+  * name.
+  *
+  * Usage: runMain graft.tools.JobProfile q1,q2 /root/testdata/sf0.1 [-v]
   */
 object JobProfile {
+
+  /** One compiled source: codegen stage id, class kind, source hash and
+    * the hash with stage ids normalized.
+    */
+  final case class GenClass(stage: Option[Int], kind: String, hash: String,
+                            normalized: String)
+
+  /** Collects the sources Janino compiles while attached. Spark's
+    * `CodeGenerator` logs each source it compiles at the codegen log
+    * level (`spark.sql.codegen.logLevel`, DEBUG by default); the
+    * collector routes that logger, at that level, to itself alone.
+    */
+  final class ClassCollector(level: String) {
+    private val loggerName =
+      "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+    private val sources =
+      new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    private val appender = new org.apache.logging.log4j.core.appender
+        .AbstractAppender("graft-class-collector", null, null, true,
+          org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      // the logger also reports compile times; only sources are kept
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("generate(Object[] references)")) sources.add(m)
+      }
+    }
+
+    def attach(): Unit = {
+      import org.apache.logging.log4j.{Level, LogManager}
+      import org.apache.logging.log4j.core.LoggerContext
+      import org.apache.logging.log4j.core.config.LoggerConfig
+      val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      val cfg = ctx.getConfiguration
+      appender.start()
+      cfg.addAppender(appender)
+      val lc = new LoggerConfig(loggerName, Level.toLevel(level), false)
+      lc.addAppender(appender, Level.toLevel(level), null)
+      cfg.addLogger(loggerName, lc)
+      ctx.updateLoggers()
+    }
+
+    /** The sources compiled since the last drain. */
+    def drain(): Seq[GenClass] = {
+      val out = Seq.newBuilder[GenClass]
+      var src = sources.poll()
+      while (src != null) { out += parse(src); src = sources.poll() }
+      out.result()
+    }
+
+    private val WholeStage = "GeneratedIteratorForCodegenStage(\\d+)".r
+    private val ClassName = "class (\\w+)".r
+    private val StageIds = "(CodegenStage|codegenStageId=)\\d+".r
+
+    private def sha(s: String): String = java.security.MessageDigest
+      .getInstance("SHA-1").digest(s.getBytes("UTF-8"))
+      .take(5).map(b => f"${b & 0xff}%02x").mkString
+
+    private def parse(src: String): GenClass = {
+      val (stage, kind) = WholeStage.findFirstMatchIn(src) match {
+        case Some(m) => (Some(m.group(1).toInt), "WholeStageCodegen")
+        case None => (None, ClassName.findFirstMatchIn(src)
+          .map(_.group(1)).getOrElse("?"))
+      }
+      GenClass(stage, kind, sha(src), sha(StageIds.replaceAllIn(src, "$1#")))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val specs = SparkEntry.lookup(args(0))
     val sfDir = args(1)
@@ -40,6 +118,11 @@ object JobProfile {
     spark.sparkContext.setLogLevel("ERROR")
 
     val verbose = args.length > 2 && args(2) == "-v"
+    val classes = if (verbose) {
+      val c = new ClassCollector(spark.conf.get("spark.sql.codegen.logLevel"))
+      c.attach()
+      Some(c)
+    } else None
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
@@ -98,8 +181,10 @@ object JobProfile {
     specs.foreach { q =>
       val (name, fn) = (q.name, q.build)
       val cold0 = compiles()
+      classes.foreach(_.drain())
       Force(fn(spark, sfDir)) // warm-up, uncounted
       val cold = compiles() - cold0
+      val coldClasses = classes.map(_.drain()).getOrElse(Nil)
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
@@ -113,6 +198,7 @@ object JobProfile {
       val sec = (System.nanoTime() - t0) / 1e9
       val warm = compiles() - c0
       val compileMs = (CodeGenerator.compileTime - ct0) / 1e6
+      val warmClasses = classes.map(_.drain()).getOrElse(Nil)
       drainListeners()
       println(f"[jobprofile] $name%-28s jobs=${jobs.get}%3d " +
         f"stages=${stages.get}%4d tasks=${tasks.get}%6d " +
@@ -121,7 +207,22 @@ object JobProfile {
         f"cpu=${cpuNs.get / 1e9}%7.3f s run=${runMs.get / 1e3}%7.3f s " +
         f"wall=$sec%7.3f s compiles=$warm%4d (cold $cold%4d) " +
         f"compile=$compileMs%8.1f ms")
-      if (verbose) jobLines.forEach(l => println(l))
+      if (verbose) {
+        jobLines.forEach(l => println(l))
+        val all = coldClasses ++ warmClasses
+        val coldN = coldClasses.groupBy(identity).view.mapValues(_.size)
+        val warmN = warmClasses.groupBy(identity).view.mapValues(_.size)
+        println(s"    classes: ${all.distinct.size} distinct sources, " +
+          s"${all.map(_.normalized).distinct.size} with stage ids " +
+          s"normalized (compiles: warm-up ${coldClasses.size}, " +
+          s"forced run ${warmClasses.size})")
+        all.distinct.sortBy(g => (g.stage.getOrElse(-1), g.kind, g.hash))
+          .foreach { g =>
+            println(f"      stage ${g.stage.fold("-")(_.toString)}%4s " +
+              f"${g.kind}%-34s ${g.hash} cold ${coldN.getOrElse(g, 0)}%2d " +
+              f"warm ${warmN.getOrElse(g, 0)}%2d")
+          }
+      }
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))

@@ -786,6 +786,138 @@ class TextDedupSpec extends AnyFunSuite {
     }
   }
 
+  /** The min-label loop with pointer jumping, run on the driver: every
+    * round lowers each node's label to the minimum over itself and its
+    * neighbours, then jumps `label(v) := label(label(v))`; it stops after
+    * the first round that changes no label, or after `maxRounds`.
+    * Returns the labels and the number of rounds run.
+    */
+  private def ccReference(pairs: Seq[(Long, Long)],
+                          maxRounds: Int = Int.MaxValue)
+      : (Map[Long, Long], Int) = {
+    val nbrs = (pairs ++ pairs.map(_.swap)).groupBy(_._1)
+      .map { case (v, es) => v -> (es.map(_._2).toSet + v) }
+    var labels = nbrs.keys.map(v => v -> v).toMap
+    var (rounds, changed) = (0, true)
+    while (changed && rounds < maxRounds) {
+      val p = nbrs.map { case (v, ns) => v -> ns.map(labels).min }
+      val next = p.map { case (v, c) => v -> p.getOrElse(c, c) }
+      changed = next != labels
+      labels = next
+      rounds += 1
+    }
+    (labels, rounds)
+  }
+
+  private def ccLabels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.as[(Long, Long)].collect().toMap
+
+  /** Spark jobs `body` launches from this thread (tagged by job group, so
+    * jobs of other threads never count); the listener bus is async, so
+    * the count settles until stable for 400 ms, bounded at 4 s.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val counter = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(s.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          counter.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "job count")
+      try body finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 4000000000L
+      var last = -1
+      while (last != counter.get && System.nanoTime() < deadline) {
+        last = counter.get
+        Thread.sleep(400)
+      }
+    } finally sc.removeSparkListener(listener)
+    counter.get
+  }
+
+  test("connectedComponents: at most 4 Spark jobs per round on the " +
+      "40-chain") {
+    // the edge list is cut once (its repartition + the cut: 2 jobs);
+    // a round is at most 4 more: no broadcast of the co-partitioned cuts,
+    // no separate convergence count or emptiness probe
+    val chain = (1L until 41L).map(i => (i + 1, i))
+    val pairs = chain.toDF("id_a", "id_b").localCheckpoint()
+    val (want, rounds) = ccReference(chain)
+    var got: Map[Long, Long] = null
+    val jobs = jobsOf {
+      got = ccLabels(Dedup.connectedComponents(pairs).localCheckpoint())
+    }
+    assert(got == want)
+    // the result's own localCheckpoint runs one job
+    assert(jobs - 1 <= 2 + 4 * rounds,
+      s"$jobs jobs for $rounds rounds: more than 4 per round")
+  }
+
+  test("connectedComponents: the reference labels and round count under " +
+      "shuffle partitions 1/7/64 and with AQE off") {
+    // several components (a chain, a star, a cycle, pairs) with scattered
+    // ids, so every partition count splits them differently
+    val rnd = new scala.util.Random(17)
+    val ids = rnd.shuffle((1L to 120L).toVector).map(_ * 7919L % 100003L)
+    val chain = ids.take(24).sliding(2).map(p => (p(0), p(1))).toSeq
+    val star = ids.slice(24, 40).tail.map(v => (ids(24), v))
+    val ring = ids.slice(40, 60)
+    val cycle = ring.zip(ring.tail :+ ring.head)
+    val pairs = chain ++ star ++ cycle ++
+      ids.slice(60, 120).grouped(2).map(p => (p(0), p(1)))
+    val (want, rounds) = ccReference(pairs)
+    assert(rounds > 3, s"$rounds rounds: too few to tell round counts apart")
+    val df = pairs.toDF("id_a", "id_b")
+    val conf = spark.conf
+    val saved = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.enabled").map(k => k -> conf.get(k))
+    try {
+      for ((parts, aqe) <- Seq(("1", "true"), ("7", "true"), ("64", "true"),
+          ("7", "false"))) {
+        conf.set("spark.sql.shuffle.partitions", parts)
+        conf.set("spark.sql.adaptive.enabled", aqe)
+        assert(ccLabels(Dedup.connectedComponents(df,
+          maxIterations = rounds)) == want, s"partitions=$parts aqe=$aqe")
+      }
+    } finally saved.foreach { case (k, v) => conf.set(k, v) }
+    // the convergence rule: the reference's round count is exactly the
+    // budget that converges, and the partial labels of a smaller budget
+    // are the reference's after as many rounds
+    intercept[IllegalStateException](
+      Dedup.connectedComponents(df, maxIterations = rounds - 1))
+    assert(ccLabels(Dedup.connectedComponents(df, maxIterations = 2,
+      failOnNonConvergence = false)) == ccReference(pairs, 2)._1)
+  }
+
+  test("connectedComponents: a failing input raises promptly and leaves " +
+      "no wait behind") {
+    // the convergence and emptiness counts are read from the cut's own
+    // execution, so a failed cut raises its task error at once — there
+    // is no observation left to wait on
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val bad = (1L until 20L).map(i => (i + 1, i)).toDF("id_a", "id_b")
+      .withColumn("id_a", when(col("id_a") === 13L,
+        raise_error(lit("cc input 13 is broken"))).otherwise(col("id_a")))
+    val run = Future(scala.util.Try(Dedup.connectedComponents(bad)))
+    val outcome = Await.result(run, 120.seconds)
+    val e = intercept[RuntimeException](outcome.get)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("cc input 13 is broken")), e)
+    // the session is still usable for the next call
+    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("id_a", "id_b")
+    assert(ccLabels(Dedup.connectedComponents(pairs)) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
+  }
+
   test("NGramJaccard capped plan carries no forced broadcast hint") {
     val df = docsDF(1L -> "a b c d e", 2L -> "a b c d x")
     val plan = Dedup.NGramJaccard(threshold = 0.1, maxDocFreq = 10)
