@@ -1,8 +1,5 @@
 package graft.benchmark
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 
 import graft.util.Format
@@ -90,48 +87,14 @@ final case class MemoryProfile(runs: Vector[Long],
       s"baselineChange ${baselineChange.toLong} B/run, n=${runs.size})"
 }
 
-/** Profiles the cluster-side memory of one DataFrame transformation by
-  * listening to stage-completion metrics on the session's listener bus:
+/** Profiles the cluster-side memory of one DataFrame transformation:
   * per repetition, forces the full plan through the noop sink
-  * ([[Force]] — all rows, all columns, nothing pruned) and aggregates
-  * `peakExecutionMemory` / `inputMetrics.bytesRead` /
-  * `memoryBytesSpilled` over the stages the repetition ran.
-  *
-  * The listener is registered per `profile` call and removed afterwards;
-  * stage events arrive asynchronously, so after each repetition the
-  * profiler waits for the bus to go quiescent (no new stage completions
-  * for `quiesceMs`, capped at `drainCapMs`) before reading counters —
-  * a profiler can afford the wait, and the alternative (private
-  * listener-bus internals) is not public API.
-  *
-  * Concurrency caveat: stage metrics carry no job attribution here, so
-  * a CONCURRENT job on the same session would pollute the counters —
-  * profile on a quiet session (same constraint as the reference's
-  * single-process memory_profiler protocol).
+  * ([[Force]] — all rows, all columns, nothing pruned) under
+  * [[RunMetrics.measure]], which counts only that repetition's jobs, and
+  * reads its peak execution memory, input bytes and spilled bytes.
   */
-final class SparkMemoryProfiler(reps: Int = 5,
-                                quiesceMs: Long = 200L,
-                                drainCapMs: Long = 10000L) {
+final class SparkMemoryProfiler(reps: Int = 5) {
   require(reps > 0)
-
-  private final class StageMetricsListener extends SparkListener {
-    val peakExec = new AtomicLong(0L)
-    val bytesRead = new AtomicLong(0L)
-    val spilled = new AtomicLong(0L)
-    val stages = new AtomicLong(0L)
-    override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-      val tm = ev.stageInfo.taskMetrics
-      if (tm != null) {
-        peakExec.addAndGet(tm.peakExecutionMemory)
-        bytesRead.addAndGet(tm.inputMetrics.bytesRead)
-        spilled.addAndGet(tm.memoryBytesSpilled)
-      }
-      stages.incrementAndGet()
-    }
-    def reset(): Unit = {
-      peakExec.set(0L); bytesRead.set(0L); spilled.set(0L); stages.set(0L)
-    }
-  }
 
   private def usedHeap(): Long = {
     val rt = Runtime.getRuntime
@@ -139,36 +102,11 @@ final class SparkMemoryProfiler(reps: Int = 5,
   }
 
   def profile(input: DataFrame)(op: DataFrame => DataFrame): MemoryProfile = {
-    val spark = input.sparkSession
-    val listener = new StageMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      def quiesce(): Unit = {
-        val deadline = System.nanoTime() + drainCapMs * 1000000L
-        var last = -1L
-        var stableSince = System.nanoTime()
-        while (System.nanoTime() < deadline &&
-          (System.nanoTime() - stableSince) < quiesceMs * 1000000L) {
-          val s = listener.stages.get()
-          if (s != last) { last = s; stableSince = System.nanoTime() }
-          Thread.sleep(10)
-        }
-      }
-      val runs = Vector.newBuilder[Long]
-      val baselines = Vector.newBuilder[Long]
-      var inBytes = 0L
-      var spill = 0L
-      (1 to reps).foreach { _ =>
-        System.gc()
-        baselines += usedHeap()
-        listener.reset()
-        Force(op(input))
-        quiesce()
-        runs += listener.peakExec.get()
-        inBytes = math.max(inBytes, listener.bytesRead.get())
-        spill = math.max(spill, listener.spilled.get())
-      }
-      MemoryProfile(runs.result(), baselines.result(), inBytes, spill)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (baselines, totals) = Vector.fill(reps) {
+      System.gc()
+      (usedHeap(), RunMetrics.measure(input.sparkSession)(Force(op(input)))._2)
+    }.unzip
+    MemoryProfile(totals.map(_.peakExecutionMemory), baselines,
+      totals.map(_.inputBytes).max, totals.map(_.spilledBytes).max)
   }
 }

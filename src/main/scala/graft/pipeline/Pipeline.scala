@@ -2,7 +2,8 @@ package graft.pipeline
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.core.Wrangler
 
@@ -124,17 +125,18 @@ final class Pipeline(val stages: Seq[Stage]) {
     * forces with `count()` (pipeline.py:884-891), under which Catalyst
     * prunes map-side stages to zero-column scans and the per-stage
     * seconds are fiction; the API shape is kept but the timed action is
-    * a full-plan noop write ([[graft.benchmark.Force]]) and the row
-    * count is taken by a separate untimed (prunable, cheap) count.
+    * a full-plan noop write ([[graft.benchmark.Force]]), and the row
+    * count is observed on that same execution.
     */
   def profile(df: DataFrame): Seq[StageProfile] = {
     transform(df)
     results.zipWithIndex.map { case (r, i) =>
+      val rows = Observation()
       val t0 = System.nanoTime()
-      graft.benchmark.Force(r)
+      graft.benchmark.Force(r.observe(rows, count(lit(1)).as("rows")))
       val secs = (System.nanoTime() - t0) / 1e9
-      StageProfile(i, stages(i).label, secs, r.count(), r.columns.length,
-        cacheEnabled(i), Pipeline.codegenStageCount(r))
+      StageProfile(i, stages(i).label, secs, rows.get("rows").asInstanceOf[Long],
+        r.columns.length, cacheEnabled(i), Pipeline.codegenStageCount(r))
     }
   }
 

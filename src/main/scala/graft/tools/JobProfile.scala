@@ -1,14 +1,11 @@
 package graft.tools
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 import graft.SparkEntry
-import graft.benchmark.Force
+import graft.benchmark.{Force, RunMetrics}
 
 /** Dev tool: executed-plan evidence beyond the lazy `Explain` dump —
   * run named queries at the bench's shape and report, per query, the
@@ -17,6 +14,9 @@ import graft.benchmark.Force
   * (checkpoint-cut loops) hide their work from the returned plan; this
   * tool counts it, so "one fewer pass / one fewer job" claims are
   * verifiable (r17 VERDICT noted plan dumps alone cannot show them).
+  * The counts, shuffle bytes and executor times are
+  * [[graft.benchmark.RunMetrics]] totals of the forced run's own jobs,
+  * complete when the run returns.
   *
   * It also reports the generated-code classes Janino compiled during
   * the forced run (`compiles`, with the warm-up run's count as `cold`)
@@ -123,59 +123,6 @@ object JobProfile {
       c.attach()
       Some(c)
     } else None
-    val jobs = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val tasks = new AtomicInteger(0)
-    val shuffleRead = new AtomicLong(0L)
-    val shuffleWrite = new AtomicLong(0L)
-    val cpuNs = new AtomicLong(0L)
-    val runMs = new AtomicLong(0L)
-    val jobStart =
-      new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val jobLines =
-      java.util.Collections.synchronizedList(
-        new java.util.ArrayList[String]())
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        jobStart.put(j.jobId, (System.nanoTime(),
-          Option(j.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse("") + " stages=" + j.stageInfos.size))
-      }
-      override def onJobEnd(
-          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val st = jobStart.remove(e.jobId)
-        if (st != null && verbose)
-          jobLines.add(f"    job ${e.jobId}%3d ${
-            (System.nanoTime() - st._1) / 1e6}%7.1f ms  ${st._2}")
-      }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet()
-        tasks.addAndGet(s.stageInfo.numTasks)
-        val m = s.stageInfo.taskMetrics
-        if (m != null) {
-          shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          cpuNs.addAndGet(m.executorCpuTime)
-          runMs.addAndGet(m.executorRunTime)
-        }
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = ()
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-    def reset(): Unit = {
-      jobs.set(0); stages.set(0); tasks.set(0)
-      shuffleRead.set(0L); shuffleWrite.set(0L)
-      cpuNs.set(0L); runMs.set(0L)
-      jobLines.clear()
-    }
-    def drainListeners(): Unit = {
-      // listener bus is async; let events settle before reading counters
-      Thread.sleep(300)
-    }
-
     // process-wide codegen counters: compilations and their time (ns)
     def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     specs.foreach { q =>
@@ -189,26 +136,27 @@ object JobProfile {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       System.gc(); Thread.sleep(500)
-      drainListeners()
-      reset()
       val c0 = compiles()
       val ct0 = CodeGenerator.compileTime
-      val t0 = System.nanoTime()
-      Force(fn(spark, sfDir))
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (sec, m) = RunMetrics.measure(spark) {
+        val t0 = System.nanoTime()
+        Force(fn(spark, sfDir))
+        (System.nanoTime() - t0) / 1e9
+      }
       val warm = compiles() - c0
       val compileMs = (CodeGenerator.compileTime - ct0) / 1e6
       val warmClasses = classes.map(_.drain()).getOrElse(Nil)
-      drainListeners()
-      println(f"[jobprofile] $name%-28s jobs=${jobs.get}%3d " +
-        f"stages=${stages.get}%4d tasks=${tasks.get}%6d " +
-        f"shufR=${shuffleRead.get / 1024}%8d KiB " +
-        f"shufW=${shuffleWrite.get / 1024}%8d KiB " +
-        f"cpu=${cpuNs.get / 1e9}%7.3f s run=${runMs.get / 1e3}%7.3f s " +
+      println(f"[jobprofile] $name%-28s jobs=${m.jobs.size}%3d " +
+        f"stages=${m.stages}%4d tasks=${m.tasks}%6d " +
+        f"shufR=${m.shuffleReadBytes / 1024}%8d KiB " +
+        f"shufW=${m.shuffleWriteBytes / 1024}%8d KiB " +
+        f"cpu=${m.executorCpuNs / 1e9}%7.3f s " +
+        f"run=${m.executorRunMs / 1e3}%7.3f s " +
         f"wall=$sec%7.3f s compiles=$warm%4d (cold $cold%4d) " +
         f"compile=$compileMs%8.1f ms")
       if (verbose) {
-        jobLines.forEach(l => println(l))
+        m.jobs.foreach(j => println(f"    job ${j.id}%3d " +
+          f"${j.wallMs.fold("?")(_.toString)}%7s ms  ${j.description}"))
         val all = coldClasses ++ warmClasses
         val coldN = coldClasses.groupBy(identity).view.mapValues(_.size)
         val warmN = warmClasses.groupBy(identity).view.mapValues(_.size)

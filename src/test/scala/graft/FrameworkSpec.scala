@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.benchmark.{SparkTimeProfiler, TimeProfiler}
+import graft.benchmark.{RunMetrics, SparkTimeProfiler, TimeProfiler}
 import graft.operators.IntervalIdentifier
 import graft.pipeline.{Pipeline, Stage}
 import graft.testing._
@@ -59,6 +59,17 @@ class FrameworkSpec extends AnyFunSuite {
     assert(prof.head.cols == 3 && prof.last.cols == 1)
     p.uncache("wide")
     assert(p.cachedStages.isEmpty)
+  }
+
+  test("Pipeline: profile runs one job per narrow stage and observes the " +
+    "row count on it") {
+    val p = Pipeline(
+      Stage.of("double")(_.withColumn("x", col("id") * 2)),
+      Stage.of("third")(_.filter(col("id") % 3 === 0)))
+    val (prof, m) =
+      RunMetrics.measure(spark)(p.profile(spark.range(0, 300, 1, 4).toDF()))
+    assert(prof.map(_.rows) == Seq(300L, 100L))
+    assert(m.jobs.size == 2, m.jobs)
   }
 
   test("Pipeline: wranglers coerce to stages") {

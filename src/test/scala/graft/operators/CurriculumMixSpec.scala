@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.benchmark.RunMetrics
 import graft.functions.Portable
 
 /** Properties of the round-9 curation operators: [[CurriculumOrder]]
@@ -202,42 +203,17 @@ class CurriculumMixSpec extends AnyFunSuite {
 
     // count Spark jobs launched while PLANNING (the quantile family's
     // eager boundary sampling + rank location run at transform() time)
-    def jobsDuring(body: => Unit): Int = {
-      val counter = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          counter.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        // the listener bus is async (and private); settle until the
-        // count is stable for 400 ms, bounded at 4 s
-        val deadline = System.nanoTime() + 4000000000L
-        var last = -1
-        while (last != counter.get && System.nanoTime() < deadline) {
-          last = counter.get
-          Thread.sleep(400)
-        }
-      } finally spark.sparkContext.removeSparkListener(listener)
-      counter.get
-    }
-
-    var shared: org.apache.spark.sql.DataFrame = null
-    val oneDerivation = jobsDuring {
-      shared = Corpus.bandThresholds(vals, Seq("g"), "v", 0.25, 0.75)
-    }
+    val (shared, derivation) = RunMetrics.measure(spark)(
+      Corpus.bandThresholds(vals, Seq("g"), "v", 0.25, 0.75))
+    val oneDerivation = derivation.jobs.size
     assert(oneDerivation > 0, "derivation should run eager sampling jobs")
 
-    var fShared: org.apache.spark.sql.DataFrame = null
-    var cShared: org.apache.spark.sql.DataFrame = null
-    val reuse = jobsDuring {
-      fShared = Corpus.QuantileBandFilter(Seq("g"), "v", 0.25, 0.75)
-        .transformWith(vals, shared)
-      cShared = Corpus.QuantileClamp(Seq("g"), "v", 0.25, 0.75)
-        .transformWith(vals, shared)
-    }
+    val ((fShared, cShared), reused) = RunMetrics.measure(spark)((
+      Corpus.QuantileBandFilter(Seq("g"), "v", 0.25, 0.75)
+        .transformWith(vals, shared),
+      Corpus.QuantileClamp(Seq("g"), "v", 0.25, 0.75)
+        .transformWith(vals, shared)))
+    val reuse = reused.jobs.size
     assert(reuse == 0,
       s"transformWith must not re-derive thresholds (ran $reuse jobs)")
 

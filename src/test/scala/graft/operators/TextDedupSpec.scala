@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.benchmark.RunMetrics
 import graft.functions.Portable
 
 /** Unit specs for the text-analysis / dedup / similarity / multimodal
@@ -812,35 +813,6 @@ class TextDedupSpec extends AnyFunSuite {
   private def ccLabels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     df.as[(Long, Long)].collect().toMap
 
-  /** Spark jobs `body` launches from this thread (tagged by job group, so
-    * jobs of other threads never count); the listener bus is async, so
-    * the count settles until stable for 400 ms, bounded at 4 s.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val counter = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(s.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group))
-          counter.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "job count")
-      try body finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 4000000000L
-      var last = -1
-      while (last != counter.get && System.nanoTime() < deadline) {
-        last = counter.get
-        Thread.sleep(400)
-      }
-    } finally sc.removeSparkListener(listener)
-    counter.get
-  }
-
   test("connectedComponents: at most 4 Spark jobs per round on the " +
       "40-chain") {
     // the edge list is cut once (its repartition + the cut: 2 jobs);
@@ -849,10 +821,9 @@ class TextDedupSpec extends AnyFunSuite {
     val chain = (1L until 41L).map(i => (i + 1, i))
     val pairs = chain.toDF("id_a", "id_b").localCheckpoint()
     val (want, rounds) = ccReference(chain)
-    var got: Map[Long, Long] = null
-    val jobs = jobsOf {
-      got = ccLabels(Dedup.connectedComponents(pairs).localCheckpoint())
-    }
+    val (got, m) = RunMetrics.measure(spark)(
+      ccLabels(Dedup.connectedComponents(pairs).localCheckpoint()))
+    val jobs = m.jobs.size
     assert(got == want)
     // the result's own localCheckpoint runs one job
     assert(jobs - 1 <= 2 + 4 * rounds,
