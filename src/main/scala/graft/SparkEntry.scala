@@ -448,12 +448,13 @@ object SparkEntry {
           col("iids").cast("long").as("iids"))
         .orderBy("user_id", "event_id")
     }, _ => intervalIdenticalOracle("click"), Some("Window")),
-    // skew-immune salted formulation (chunked two-phase window algebra,
-    // no whole-group task anywhere): must agree with the SAME oracles as
-    // the plain paths. The three queries cover no-drop (lsfe), both-drop
-    // (fsle) and identical-marker semantics across chunk boundaries. The
-    // chunk passes run eagerly inside the builder, so the timed plan is
-    // a checkpoint scan (no signature node).
+    // skew-immune salted formulation (the plain directional passes
+    // inside (group, chunk) windows plus one carry join, no whole-group
+    // task anywhere): must agree with the SAME oracles as the plain
+    // paths. The three queries cover no-drop (lsfe), both-drop (fsle)
+    // and identical-marker semantics across chunk boundaries. The bounds
+    // and chunk-summary collects run eagerly inside the builder, so no
+    // signature node is pinned.
     QuerySpec("interval_lsfe_salted", intervalQuery(su = false, eu = true,
       ResultType.Enumerated, salted = true),
       _ => intervalOracle(su = false, eu = true), None),

@@ -125,7 +125,7 @@ class IntervalIdentifier(
   val identicalStartEndMarkers: Boolean =
     markerEnd.isEmpty || markerEnd.contains(markerStart)
 
-  private def markerEndValue: Any = markerEnd.getOrElse(markerStart)
+  protected def markerEndValue: Any = markerEnd.getOrElse(markerStart)
 
   override def preservesSampleSize: Boolean = true
 
@@ -147,20 +147,26 @@ class IntervalIdentifier(
 
   // ---------------------------------------------------------------- windows
 
-  /** Main window: partition by groupby, order by orderby (optionally with
-    * every direction flipped). One fresh-but-structurally-equal WindowSpec
-    * per call keeps same-spec expressions in one Window node.
+  /** The keys every pass partitions by: the groupby columns here, the
+    * (groupby, chunk) keys in [[IntervalIdentifierSalted]].
     */
-  private def windowGroupby(reverse: Boolean = false): WindowSpec =
+  protected def windowPartition: Seq[Column] = groupbyColumns.map(col)
+
+  /** Main window: partition by [[windowPartition]], order by orderby
+    * (optionally with every direction flipped). One fresh-but-
+    * structurally-equal WindowSpec per call keeps same-spec expressions in
+    * one Window node.
+    */
+  protected def windowGroupby(reverse: Boolean = false): WindowSpec =
     Window
-      .partitionBy(groupbyColumns.map(col): _*)
+      .partitionBy(windowPartition: _*)
       .orderBy(SparkUtil.prepareOrderby(orderbyColumns, ascending, reverse): _*)
 
   /** Running-total frame. The reference relies on the default RANGE frame of
     * an ordered window; we pin ROWS explicitly so duplicate order keys can
     * never silently switch semantics (SURVEY §7.4.2).
     */
-  private def running(w: WindowSpec): WindowSpec =
+  protected def running(w: WindowSpec): WindowSpec =
     w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
   // ------------------------------------------------------------- id algebra
@@ -168,7 +174,7 @@ class IntervalIdentifier(
   /** Marker as 0/1 integer, null-safe (NULL and non-matching NaN are noise;
     * reference: interval_identifier.py:58-69).
     */
-  private def boolifyMarker(marker: Column, start: Boolean): Column = {
+  protected def boolifyMarker(marker: Column, start: Boolean): Column = {
     val v = if (start) markerStart else markerEndValue
     (marker <=> lit(v)).cast("integer")
   }
@@ -177,7 +183,7 @@ class IntervalIdentifier(
     * order — strictly AFTER it over the reversed window — or null when
     * there is none (noise and NULL markers are skipped).
     */
-  private def strictNeighbour(marker: Column, reverse: Boolean): Column =
+  protected def strictNeighbour(marker: Column, reverse: Boolean): Column =
     last(when(marker.isin(markerStart, markerEndValue), marker),
       ignoreNulls = true)
       .over(windowGroupby(reverse).rowsBetween(Window.unboundedPreceding, -1))
@@ -191,7 +197,7 @@ class IntervalIdentifier(
     * forward → reversed and the core algebra's reversed pass follows
     * without another sort.
     */
-  private def preprocessMarkerColumn(cc: ColumnCacher): Column = {
+  protected def preprocessMarkerColumn(cc: ColumnCacher): Column = {
     val m = col(markerColumn)
     def repeated(value: Any, reverse: Boolean, name: String): Column =
       m <=> lit(value) &&
@@ -211,7 +217,7 @@ class IntervalIdentifier(
     * before the first marker get 0; every interval is valid by construction
     * so all result types coincide (reference: :354-373).
     */
-  private def generateIidsIdentical(marker: Column): Column =
+  protected def generateIidsIdentical(marker: Column): Column =
     sum(boolifyMarker(marker, start = true)).over(running(windowGroupby()))
 
   protected def validateInput(df: DataFrame): Unit = {

@@ -1,55 +1,62 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, NumericType, StructField, StructType}
 
-import graft.util.SparkUtil
+import graft.util.ColumnCacher
 
 /** Skew-immune interval identification: bit-identical semantics to
-  * [[IntervalIdentifier]], executed as a salted two-phase window algebra
-  * so that no single task ever processes a whole group.
+  * [[IntervalIdentifier]], with every window partitioned by (groupby,
+  * chunk) so that no single task ever processes a whole group.
   *
-  * The generic window formulation partitions by the groupby keys, so one
-  * giant entity (the documented 100x-scale risk, SURVEY §7.4/9) lands in
-  * ONE task: a sequential sort + scan of potentially billions of rows.
-  * This variant splits every group into `saltBuckets` contiguous chunks
-  * by value range of the (numeric) first orderby column and decomposes
-  * each sequential pass into:
+  * The plain operator partitions by the groupby keys, so one giant
+  * entity (the documented 100x-scale risk, SURVEY §7.4/9) lands in ONE
+  * task: a sequential sort + scan of potentially billions of rows. This
+  * variant splits every group into at most `saltBuckets` contiguous
+  * chunks by value range of the (numeric) first orderby column and runs
+  * the plain operator's directional passes inside each chunk (the
+  * inherited helpers partition by [[windowPartition]]):
   *
-  *   1. chunk-local windows over (groupby, bucket) — bounded work per
-  *      task regardless of group size;
-  *   2. a per-chunk summary table (a few rows per group) where the
-  *      cross-chunk carries resolve with windows over bucket order:
-  *      duplicate-marker state in (`L_in` = last marker kind before the
-  *      chunk, `R_in` = first marker kind after it — each can flip at
-  *      most ONE boundary marker per chunk, because in-chunk markers see
-  *      in-chunk state), the lagged end-marker bit feeding the first row,
-  *      and the raw-id prefix offsets;
-  *   3. validity as in-chunk per-segment window aggregates (segments
-  *      are contiguous inside a chunk, so the segment window reuses the
-  *      (groupby, bucket) clustering — zero new exchanges) plus a
-  *      chunk-count-sized boundary-segment table broadcast back: only
-  *      the <= 2 segments touching each chunk edge resolve cross-chunk;
-  *   4. enumeration as a per-chunk prefix of valid ORIGIN segments
-  *      (each segment originates exactly once, at its global start row)
-  *      over the carry table's chunk list + an in-chunk running count
-  *      on the same sort the segment window established.
+  *   1. local duplicate drops: the forward and reversed strict-neighbour
+  *      windows over the ORIGINAL markers, exactly as in the plain
+  *      preprocessing. Only a chunk's first marker (a start whose
+  *      previous marker lies in an earlier chunk) and its last marker (an
+  *      end whose next marker lies in a later chunk) can decide
+  *      differently across chunks: the boundary drops `dropF` / `dropL`;
+  *   2. per row, the running count of kept markers `k`, the kinds of the
+  *      previous and next kept markers, and (Enumerated) the running
+  *      count of kept starts whose next kept marker is an end;
+  *   3. ONE summary row per chunk (first and last kept kind, kept
+  *      total, opening-start total), collected once. A per-group scan on
+  *      the driver turns it into per-chunk carries: the boundary drops,
+  *      the kind of the last kept marker before the chunk and of the
+  *      first one after it, and the raw-id and enumeration offsets;
+  *   4. ONE broadcast join brings the carries back, and every output is
+  *      a row-local expression. With the chunk-local raw id `l = k -
+  *      isEnd`, raw = offset + l + 1, less one past a dropped first
+  *      start (`l > 0`) and one past a dropped last end (`l = k total`);
+  *      valid = raw where the interval's first row is a start and its
+  *      last row an end, read off the neighbour kinds (the carried kinds
+  *      where a chunk has no kept neighbour); enumerated = the
+  *      enumeration offset + the opening starts through the row, on
+  *      valid rows.
   *
-  * Cost: ONE balanced full-data shuffle per evaluation (the bucket
-  * window; the summary pass and the row pass each evaluate it) plus
-  * tiny summary/boundary shuffles, versus ONE shuffle for the plain
-  * path — so keep the plain operator for well-distributed entities and
+  * The boundary drops need no second pass because a drop never changes
+  * the KIND a neighbour sees from the far side: a dropped leading start
+  * is preceded by a start, a dropped trailing end is followed by an end.
+  * Only the rows between a dropped marker and its chunk edge see it from
+  * the near side, and there the carry supplies the kind directly.
+  *
+  * Cost: a bounds collect (min/max/count of the order column), one
+  * summary collect and one broadcast join of the chunk-count-sized carry
+  * table; the chunk windows are evaluated twice (summary and rows) over
+  * ONE balanced shuffle each, and nothing is checkpointed. The plain
+  * path costs one shuffle, so keep it for well-distributed entities and
   * reach for this one when a group can exceed a single executor's sort
-  * budget. (Until r18 validity shuffled the full data a third time by
-  * (groupby, raw id) and enumeration checkpointed + sort-merge-joined a
-  * per-valid-segment table; both now ride the chunk algebra.)
-  * Chunk boundaries are value-range based, so bucket balance follows the
-  * order-column distribution (ids/timestamps are near-uniform in
-  * practice).
+  * budget. Chunk boundaries are value-range based, so bucket balance
+  * follows the order-column distribution (ids / timestamps are
+  * near-uniform in practice).
   *
   * Semantics are pinned by the golden corpus + oracle queries running
   * with the salt on (reference semantics:
@@ -57,15 +64,14 @@ import graft.util.SparkUtil
   *
   * Contract deviations from the plain operator, both inherent to the
   * multi-pass formulation:
-  *   - `transform` is EAGER (the tiny carry tables, and for Enumerated
-  *     the clustered row frame, are localCheckpointed at call time) —
-  *     compose it last, not inside plan-only pipelines;
+  *   - `transform` is EAGER (the bounds and the chunk summary are
+  *     collected at call time) — compose it last, not inside plan-only
+  *     pipelines;
   *   - the (groupby, orderby) key must uniquely order rows WITHIN each
-  *     group. The plain path is also undefined on order ties (the
-  *     window tie-break is arbitrary) but at least self-consistent; here
-  *     the carry tables and the row side are evaluated independently,
-  *     so a tie broken differently across evaluations could misplace a
-  *     boundary-drop correction. Unique event ids / timestamps satisfy
+  *     group. The plain path is also undefined on order ties, but at
+  *     least self-consistent; here the summary and the row pass are
+  *     evaluated independently, so a tie broken differently across the
+  *     two could misplace a carry. Unique event ids / timestamps satisfy
   *     this.
   */
 class IntervalIdentifierSalted(
@@ -92,6 +98,10 @@ class IntervalIdentifierSalted(
     Seq("saltBuckets" -> saltBuckets, "maxChunkRows" -> maxChunkRows)
 
   private val P = "__iis_"
+
+  /** Every pass runs inside one (group, chunk). */
+  override protected def windowPartition: Seq[Column] =
+    super.windowPartition :+ col(P + "b")
 
   override def transform(df0: DataFrame): DataFrame = {
     validateInput(df0)
@@ -140,403 +150,156 @@ class IntervalIdentifierSalted(
       .withColumn(P + "bs",
         if (asc1) col(P + "b") else -col(P + "b"))
 
-    val ord = SparkUtil.prepareOrderby(orderbyColumns, ascending)
-    val wC = Window.partitionBy(g :+ col(P + "b"): _*).orderBy(ord: _*)
-    val wCAll =
-      wC.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val wCRun = wC.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    def finish(withId: DataFrame, id: Column): DataFrame =
-      withId.select(originalCols.map(col) :+ id.as(targetColumnName): _*)
-
-    // The cross-chunk carry algebra runs ON THE DRIVER over the
-    // collected per-chunk summary (r18): the carry table is the same
-    // groups-x-buckets-row table the join-back broadcasts — so it is
-    // driver-resident either way — and each per-group carry is a
-    // sequential prefix scan, which as driver code costs zero Spark
-    // jobs instead of a window-stage + checkpoint + per-consumer
-    // re-evaluation cascade (measured: the lazy/checkpointed chunk
-    // layer was 40+% of these queries' wall time at bench scale).
     val spark = df0.sparkSession
     val gN = groupbyColumns.size
     val gSchema = df0.select(g: _*).schema.fields.toSeq
-    // join-ready local tables: group columns pre-renamed to the join
+    // ONE summary row per (group, chunk) — group columns, chunk, chunk
+    // order, then `aggs` — collected once; `carries` maps one group's
+    // chunks, in chunk order, to their carry values. The result is a
+    // join-ready local table: group columns pre-renamed to the join
     // aliases and the chunk key to `jk`, so the broadcast hash join
     // consumes the LocalRelation DIRECTLY — any projection on top of a
     // chunk-count-sized LocalRelation gets constant-folded by the
     // optimizer through an interpreted row projection on the driver,
     // real per-query milliseconds at bench scale
-    def localTable(rows: Seq[Row], extra: Seq[StructField]): DataFrame =
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*),
+    def carryTable(rows: DataFrame, aggs: Seq[Column], fields: Seq[StructField])
+                  (carries: IndexedSeq[Row] => Seq[Seq[Any]]): DataFrame = {
+      val summary = rows.groupBy(g :+ col(P + "b"): _*)
+        .agg(max(col(P + "bs")), aggs: _*).collect()
+      val carryRows = summary.groupBy(r => (0 until gN).map(r.get): Seq[Any])
+        .valuesIterator.flatMap { rs =>
+          val chunks = rs.sortBy(_.getInt(gN + 1)).toIndexedSeq
+          chunks.zip(carries(chunks)).map { case (r, c) =>
+            Row.fromSeq((0 to gN).map(r.get) ++ c)
+          }
+        }.toSeq
+      spark.createDataFrame(java.util.Arrays.asList(carryRows: _*),
         StructType(gSchema.zipWithIndex.map { case (f, i) =>
           StructField(P + s"jg$i", f.dataType, f.nullable)
-        } ++ (StructField(P + "jk", IntegerType) +: extra)))
+        } ++ (StructField(P + "jk", IntegerType) +: fields)))
+    }
     // null-safe broadcast equi-join on (groupby..., chunk): the local
     // table's value columns land under their own names
-    def joinLocal(left: DataFrame, table: DataFrame): DataFrame = {
+    def finish(rows: DataFrame, table: DataFrame)(id: Column): DataFrame = {
       val cond = groupbyColumns.zipWithIndex
         .map { case (n, i) => col(n) <=> col(P + s"jg$i") }
         .foldLeft(col(P + "b") === col(P + "jk"))(_ && _)
-      left.join(broadcast(table), cond, "inner")
-        .drop(groupbyColumns.indices.map(i => P + s"jg$i") :+ P + "jk": _*)
+      rows.join(broadcast(table), cond, "inner")
+        .select(originalCols.map(col) :+ id.as(targetColumnName): _*)
     }
-    def groupedBySbs(rows: Array[Row], sbsIdx: Int): Iterator[Array[Row]] =
-      rows.groupBy(r => (0 until gN).map(r.get(_)): Seq[Any]).valuesIterator
-        .map(_.sortBy(_.getInt(sbsIdx)))
 
     if (identicalStartEndMarkers) {
       // running count of starts; the only carry is the additive prefix,
-      // accumulated on the driver from one bounded summary collect.
-      val isS0 = (col(markerColumn) <=> lit(markerStart)).cast("int")
-      val rows1 = rows0.withColumn(P + "rawl", sum(isS0).over(wCRun))
-      val summRows = rows1.groupBy(g :+ col(P + "b"): _*).agg(
-        max(col(P + "bs")).as(P + "sbs"),
-        max(col(P + "rawl")).as(P + "sdelta")).collect()
-      val offRows = groupedBySbs(summRows, gN + 1).flatMap { chunks =>
-        var acc = 0L
-        chunks.map { r =>
-          val roff = acc
-          acc += r.getLong(gN + 2)
-          Row.fromSeq((0 until gN).map(r.get) ++
-            Seq[Any](r.getInt(gN), roff))
-        }
-      }.toSeq
-      val offs = localTable(offRows,
-        Seq(StructField(P + "roff", LongType)))
-      val joined = joinLocal(rows1, offs)
-      return finish(joined, col(P + "rawl") + col(P + "roff"))
+      // accumulated on the driver from the one summary collect.
+      val rows1 = rows0.withColumn(P + "rawl",
+        generateIidsIdentical(col(markerColumn)))
+      val offs = carryTable(rows1, Seq(max(col(P + "rawl"))),
+        Seq(StructField(P + "roff", LongType))) { chunks =>
+        chunks.map(_.getLong(gN + 2)).scanLeft(0L)(_ + _).init.map(Seq(_))
+      }
+      return finish(rows1, offs)(col(P + "rawl") + col(P + "roff"))
     }
 
-    val endV = markerEnd.get
-    val isS0 = col(markerColumn) <=> lit(markerStart)
-    val isE0 = col(markerColumn) <=> lit(endV)
-    // pre-drop marker kind; the duplicate-drop STATE always evolves on
-    // pre-drop markers (matching the window formulation, which computes
-    // ffill/bfill denoise on the ORIGINAL marker column), so in-chunk
-    // drop decisions are final except for one boundary marker per side
-    val kind = when(isS0, lit(1)).when(isE0, lit(2))
-      .otherwise(lit(null).cast("int"))
+    // steps 1-2: the plain operator's passes, inside each chunk — the
+    // reversed pass first, so the plan needs exactly one reverse sort
+    // followed by one forward sort per partition
+    val cc = new ColumnCacher(rows0)
+    val marker =
+      if (markerStartUseFirst || !markerEndUseFirst) preprocessMarkerColumn(cc)
+      else col(markerColumn)
+    val isS = boolifyMarker(marker, start = true)
+    val isE = boolifyMarker(marker, start = false)
+    val start = lit(markerStart)
+    val end = lit(markerEndValue)
+    val raw = resultType == ResultType.Raw
+    val enumerated = resultType == ResultType.Enumerated
+    val next = if (raw) None
+      else Some(cc.add("next", strictNeighbour(marker, reverse = true)))
+    val w = running(windowGroupby())
+    val neighbours = next.toSeq.flatMap(n => Seq(n.as(P + "next"),
+      strictNeighbour(marker, reverse = false).as(P + "prev")))
+    val opening = if (enumerated) next.toSeq.map(n =>
+      sum((isS === 1 && n <=> end).cast("long")).over(w).as(P + "open"))
+      else Nil
+    val rows1 = cc.df.select(originalCols.map(col) ++
+      Seq(col(P + "b"), col(P + "bs"), isS.as(P + "s"), isE.as(P + "e"),
+        sum(isS + isE).over(w).as(P + "k")) ++ neighbours ++ opening: _*)
 
-    // "next marker kind" must NOT use a (1, unboundedFollowing) frame:
-    // Spark re-evaluates unbounded-FOLLOWING aggregate frames per row —
-    // O(rows²) per partition (measured 226 s on a 2M-row group). The
-    // running frame over the REVERSED window order computes the same
-    // value in O(rows) with one extra in-partition sort, no shuffle.
-    val wCRev = Window.partitionBy(g :+ col(P + "b"): _*)
-      .orderBy(SparkUtil.prepareOrderby(orderbyColumns, ascending,
-        reverse = true): _*)
-    // the duplicate-drop machinery (prev/next marker scans, first/last
-    // marker positions, boundary-drop carries) exists per SIDE only when
-    // that side's config drops markers; the default last-start/first-end
-    // config statically compiles to the plain increment algebra
-    val needDropS = markerStartUseFirst
-    val needDropE = !markerEndUseFirst
-    // the reversed-order scan comes FIRST so the plan needs exactly one
-    // reverse sort followed by one forward sort per partition — placed
-    // between forward windows it would force a third in-partition sort
-    val rows1 = rows0
-      .withColumn(P + "kind", kind)
-      .withColumn(P + "isEl",
-        if (needDropE)
-          isE0 && !coalesce(
-            last(col(P + "kind"), ignoreNulls = true)
-              .over(wCRev.rowsBetween(Window.unboundedPreceding, -1)) === 2,
-            lit(false))
-        else isE0)
-      .withColumn(P + "pos", row_number().over(wC))
-      .withColumn(P + "isSl",
-        if (needDropS)
-          isS0 && !coalesce(
-            last(col(P + "kind"), ignoreNulls = true)
-              .over(wC.rowsBetween(Window.unboundedPreceding, -1)) === 1,
-            lit(false))
-        else isS0)
-      // local raw prefix, assuming no carry-in lagged end (fixed later)
-      .withColumn(P + "incl", col(P + "isSl").cast("int") +
-        lag(col(P + "isEl").cast("int"), 1, 0).over(wC))
-      .withColumn(P + "rawl", sum(col(P + "incl")).over(wCRun))
-      // chunk-constant fields for the summary; the marker-position /
-      // marker-kind fields only exist when a boundary drop can happen
-      .withColumn(P + "fk",
-        if (needDropS || needDropE)
-          first(col(P + "kind"), ignoreNulls = true).over(wCAll)
-        else lit(null).cast("int"))
-      .withColumn(P + "lk",
-        if (needDropS || needDropE)
-          last(col(P + "kind"), ignoreNulls = true).over(wCAll)
-        else lit(null).cast("int"))
-      .withColumn(P + "fmp",
-        if (needDropS)
-          min(when(col(P + "kind").isNotNull, col(P + "pos"))).over(wCAll)
-        else lit(null).cast("int"))
-      .withColumn(P + "lmp",
-        if (needDropE)
-          max(when(col(P + "kind").isNotNull, col(P + "pos"))).over(wCAll)
-        else lit(null).cast("int"))
-      .withColumn(P + "lastE",
-        last(col(P + "isEl").cast("int")).over(wCAll))
-      // local raw id of the chunk's FIRST row (0 or 1): with the lag-in
-      // bit it decides whether the chunk's first segment CONTINUES the
-      // previous chunk's last segment (r18 validity/enumeration algebra)
-      .withColumn(P + "fr", first(col(P + "rawl")).over(wCAll))
-    // NOT materialized: each consumer (the summary aggregation, the
-    // row-side join) re-evaluates this pipeline with column pruning, so
-    // only the expressions it needs run. Only the TINY carry tables and
-    // (for Enumerated) the final clustered frame are checkpointed —
-    // materializing this wide frame measured slower at every probed
-    // scale than one extra pruned window pass.
-
-    // one summary row per (group, chunk); all fields chunk-constant
-    val summRows = rows1.groupBy(g :+ col(P + "b"): _*).agg(
-      max(col(P + "bs")).as(P + "sbs"),
-      max(col(P + "fk")).as(P + "sfk"),
-      max(col(P + "lk")).as(P + "slk"),
-      max(col(P + "fmp")).as(P + "sfmp"),
-      max(col(P + "lmp")).as(P + "slmp"),
-      max(col(P + "pos")).as(P + "slast"),
-      max(col(P + "rawl")).as(P + "sdeltab"),
-      max(col(P + "lastE")).as(P + "slastE"),
-      max(col(P + "fr")).as(P + "sfr")).collect()
-
-    // cross-chunk carries, resolved as a per-group prefix scan on the
-    // driver (one bounded collect — the same rows the join-back below
-    // broadcasts anyway):
-    //   L_in  = kind of the last marker in any earlier chunk
-    //   R_in  = kind of the first marker in any later chunk
-    //   dropF = this chunk's FIRST marker is a start preceded (cross-
-    //           chunk) by a start -> drop it (markerStartUseFirst)
-    //   dropL = this chunk's LAST marker is an end followed (cross-chunk)
-    //           by an end -> drop it (!markerEndUseFirst)
-    //   lagEout = final end-bit of the chunk's last row (feeds the next
-    //           chunk's first increment); group-first chunks default to 1
-    //   sdelta  = the chunk's total raw increment after corrections
-    //   blo/bhi = analytic chunk bounds: the global raw ids of the
-    //           chunk's first row (drop-corrected local first raw +
-    //           lag-in bit + offset) and last row (offset + delta)
-    //   contin  = the chunk's first row extends the previous chunk's
-    //           last segment (its global raw equals the previous
-    //           chunk's last, = roff)
-    // `chunkMeta` keeps (sbs, contin, blo, bhi) per (group, chunk) for
-    // the validity/enumeration layer below.
-    val iB = gN; val iSbs = gN + 1; val iSfk = gN + 2; val iSlk = gN + 3
-    val iSfmp = gN + 4; val iSlmp = gN + 5; val iSlast = gN + 6
-    val iSdeltab = gN + 7; val iSlastE = gN + 8; val iSfr = gN + 9
-    def optInt(r: Row, i: Int): Option[Int] =
-      if (r.isNullAt(i)) None else Some(r.getInt(i))
-    val chunkMeta =
-      mutable.HashMap.empty[(Seq[Any], Int), (Int, Boolean, Long, Long)]
-    val carrRows = groupedBySbs(summRows, iSbs).flatMap { chunks =>
-      val n = chunks.length
-      val rin = new Array[Option[Int]](n)
-      var cur: Option[Int] = None
-      var i = n - 1
-      while (i >= 0) {
-        rin(i) = cur
-        cur = optInt(chunks(i), iSfk).orElse(cur)
-        i -= 1
+    // step 3: per chunk, the first and last kept kind (1 start, 2 end;
+    // the first and last ORIGINAL marker kinds too, as local drops never
+    // remove a chunk's first or last kind), kept total, opening starts.
+    // Carries per chunk: the raw-id and enumeration offsets, the local
+    // kept total, the boundary drops, whether the last kept marker before
+    // the chunk is a start (linS) and the first one after it an end
+    // (rinE), the same two facts for the rows past a dropped last end
+    // (hiS) and before a dropped first start (loE), and the two
+    // opening-start corrections (eLo, eHi)
+    val kind = when(col(P + "s") === 1, lit(1)).when(col(P + "e") === 1, lit(2))
+    val at = when(kind.isNotNull, col(P + "k"))
+    val carries = carryTable(rows1, Seq(min_by(kind, at), max_by(kind, at),
+      max(col(P + "k")), if (enumerated) max(col(P + "open")) else lit(0L)),
+      Seq("roff", "eoff", "ktot").map(n => StructField(P + n, LongType)) ++
+        Seq("dropF", "dropL", "linS", "rinE", "hiS", "loE", "eLo", "eHi")
+          .map(n => StructField(P + n, BooleanType))) { chunks =>
+      def kinds(i: Int) = chunks.map(r =>
+        if (r.isNullAt(i)) Option.empty[Int] else Some(r.getInt(i)))
+      // the nearest defined kind strictly before / after each chunk
+      def before(k: Seq[Option[Int]]) =
+        k.scanLeft(Option.empty[Int])((a, x) => x.orElse(a)).init
+      def after(k: Seq[Option[Int]]) =
+        k.scanRight(Option.empty[Int])((x, a) => x.orElse(a)).tail
+      val (fk, lk) = (kinds(gN + 2), kinds(gN + 3))
+      val ktot = chunks.map(_.getLong(gN + 4))
+      val open = chunks.map(_.getLong(gN + 5))
+      val (lOrig, rOrig) = (before(lk), after(fk))
+      val js = chunks.indices
+      val dropF = js.map(j =>
+        markerStartUseFirst && fk(j).contains(1) && lOrig(j).contains(1))
+      val dropL = js.map(j =>
+        !markerEndUseFirst && lk(j).contains(2) && rOrig(j).contains(2))
+      val kept = js.map(j =>
+        ktot(j) - (if (dropF(j)) 1 else 0) - (if (dropL(j)) 1 else 0))
+      // kept kinds: past a dropped first start the next kept marker is
+      // an end, before a dropped last end the previous one is a start
+      val lin = before(js.map(j =>
+        if (kept(j) == 0) None else if (dropL(j)) Some(1) else lk(j)))
+      val rin = after(js.map(j =>
+        if (kept(j) == 0) None else if (dropF(j)) Some(2) else fk(j)))
+      // opening starts: a dropped first start counted locally when a kept
+      // end follows it; the last kept start when its next kept marker
+      // lies in a later chunk and is an end
+      val eLo = js.map(j => dropF(j) && ktot(j) >= 2)
+      val eHi = js.map(j =>
+        lk(j).contains(1) && kept(j) > 0 && rin(j).contains(2))
+      val opens = js.map(j => open(j) - (if (eLo(j)) 1 else 0) +
+        (if (eHi(j)) 1 else 0))
+      val roff = kept.scanLeft(0L)(_ + _)
+      val eoff = opens.scanLeft(0L)(_ + _)
+      js.map { j =>
+        val (linS, rinE) = (lin(j).contains(1), rin(j).contains(2))
+        Seq(roff(j), eoff(j), ktot(j), dropF(j), dropL(j), linS, rinE,
+          ktot(j) >= 2 || linS, ktot(j) >= 2 || rinE, eLo(j), eHi(j))
       }
-      var lin: Option[Int] = None
-      var prevLagEout = true // group-first chunk: lag default 1
-      var acc = 0L
-      chunks.zipWithIndex.map { case (r, j) =>
-        val gVals = (0 until gN).map(r.get)
-        val slmp = optInt(r, iSlmp)
-        val slast = r.getInt(iSlast)
-        val dropF = needDropS && optInt(r, iSfk).contains(1) &&
-          lin.contains(1)
-        val dropL = needDropE && optInt(r, iSlk).contains(2) &&
-          rin(j).contains(2)
-        val lagEout = r.getInt(iSlastE) == 1 &&
-          !(dropL && slmp.contains(slast))
-        val lagEin = if (prevLagEout) 1 else 0
-        val sdelta = r.getLong(iSdeltab) + lagEin -
-          (if (dropF) 1 else 0) -
-          (if (dropL && slmp.exists(_ < slast)) 1 else 0)
-        val roff = acc
-        acc += sdelta
-        val blo = r.getLong(iSfr) -
-          (if (dropF && optInt(r, iSfmp).contains(1)) 1 else 0) +
-          lagEin + roff
-        val bhi = roff + sdelta
-        lin = optInt(r, iSlk).orElse(lin)
-        prevLagEout = lagEout
-        chunkMeta((gVals, r.getInt(iB))) =
-          (r.getInt(iSbs), blo == roff, blo, bhi)
-        Row.fromSeq(gVals ++ Seq[Any](r.getInt(iB), dropF, dropL, lagEin, roff,
-          blo == roff, blo, bhi))
-      }
-    }.toSeq
-    val carr = localTable(carrRows, Seq(
-      StructField(P + "dropF", BooleanType),
-      StructField(P + "dropL", BooleanType),
-      StructField(P + "lagEin", IntegerType),
-      StructField(P + "roff", LongType),
-      StructField(P + "contin", BooleanType),
-      StructField(P + "blo", LongType), StructField(P + "bhi", LongType)))
-
-    // resolve final flags and raw ids per row: a dropped boundary marker
-    // shifts the raw ids of every row at/after its increment position
-    val rows2 = joinLocal(rows1, carr)
-      .withColumn(P + "isS", col(P + "isSl") &&
-        !(col(P + "dropF") && col(P + "pos") === col(P + "fmp")))
-      .withColumn(P + "isE", col(P + "isEl") &&
-        !(col(P + "dropL") && col(P + "pos") === col(P + "lmp")))
-      .withColumn(P + "raw",
-        col(P + "rawl") + col(P + "lagEin") + col(P + "roff")
-          - (col(P + "dropF") && col(P + "pos") >= col(P + "fmp"))
-            .cast("int")
-          - (col(P + "dropL") && col(P + "pos") > col(P + "lmp"))
-            .cast("int"))
-
-    if (resultType == ResultType.Raw) return finish(rows2, col(P + "raw"))
-
-    // validity WITHOUT a full-data (group, raw) shuffle (r18): an
-    // interval is valid iff it contains exactly one kept start + one
-    // kept end, and a final segment holds AT MOST one of each (a kept
-    // start increments its own row, a kept end increments the next, so
-    // each begins / closes its segment) — validity ≡ max(isS) AND
-    // max(isE) over the segment. Segments are contiguous in (group,
-    // chunk) order, so the per-segment max aggregates INSIDE the
-    // existing (group, bucket) clustering: the segment window below
-    // needs one in-partition sort and zero exchanges. Only segments
-    // touching a chunk boundary (the chunk's first or last raw id —
-    // <= 2 per chunk, and a whole-chunk-spanning segment is both)
-    // resolve cross-chunk — on the CHUNK layer, never per row: one
-    // bounded per-chunk aggregation feeds boundary validity, origin
-    // counts and the per-chunk enumeration bases, and ONE chunk-keyed
-    // broadcast join carries everything back to the rows. The previous
-    // formulation shuffled the full data a third time by (group, raw),
-    // checkpointed the clustered frame AND a per-valid-segment table,
-    // and sort-merge-joined the enumeration back; all three are gone.
-    val wSeg = Window.partitionBy(g ++ Seq(col(P + "b"), col(P + "raw")): _*)
-      .orderBy(ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val wRun = Window.partitionBy(g :+ col(P + "b"): _*)
-      .orderBy(col(P + "raw").asc +: ord: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val prevRaw = lag(col(P + "raw"), 1).over(wC)
-    val rows2f = rows2
-      // global segment start: first row of the segment within the chunk
-      // AND not the continuation of the previous chunk's last segment
-      .withColumn(P + "sgs",
-        when(prevRaw.isNull, !col(P + "contin"))
-          .otherwise(prevRaw =!= col(P + "raw")))
-      // first/last segment of the chunk, from the carry table's
-      // analytic bounds
-      .withColumn(P + "lo", col(P + "raw") === col(P + "blo"))
-      .withColumn(P + "hi", col(P + "raw") === col(P + "bhi"))
-      // in-chunk per-segment kept-marker flags; the ordered whole-frame
-      // spec sorts by (group, bucket, raw, orderby) — the running count
-      // below reuses exactly this sort
-      .withColumn(P + "vS", max(col(P + "isS").cast("int")).over(wSeg))
-      .withColumn(P + "vE", max(col(P + "isE").cast("int")).over(wSeg))
-      // running count of valid NON-boundary origin segments up to this
-      // row: fully chunk-decidable, so it runs BEFORE the cut and the
-      // post-cut side needs no window at all (the cut's scan loses the
-      // hash clustering under AQE — UnknownPartitioning — so any
-      // post-cut window or keyed aggregation would re-shuffle the data)
-      .withColumn(P + "run",
-        sum(when(col(P + "sgs") && !col(P + "lo") && !col(P + "hi") &&
-          col(P + "vS") === 1 && col(P + "vE") === 1, 1L).otherwise(0L))
-          .over(wRun))
-      .select((originalCols ++ Seq(P + "b", P + "raw", P + "isS",
-        P + "isE", P + "lo", P + "hi", P + "vS", P + "vE", P + "run"))
-        .map(col): _*)
-      // ONE materialization for the whole validity/enumeration layer:
-      // the chunk aggregation and the final row side read these rows
-      .localCheckpoint()
-
-    // the whole cross-chunk layer from ONE bounded aggregation (one row
-    // per chunk) resolved on the driver: the non-boundary valid-origin
-    // total and the LOCAL kept-flag maxima of the chunk's first/last
-    // segments. Boundary segments' global validity ORs those per
-    // (group, raw) — a segment spanning chunks appears as one lo/hi
-    // entry per chunk it touches — then per-chunk enumeration bases are
-    // a prefix scan over the chunk list (chunks with zero origins
-    // included), and ONE chunk-keyed broadcast join carries everything
-    // back to the rows.
-    val chunkRows = rows2f.groupBy(g :+ col(P + "b"): _*)
-      .agg(max(col(P + "run")).as(P + "cnt"),
-        max(when(col(P + "lo"), col(P + "isS").cast("int"))).as(P + "flS"),
-        max(when(col(P + "lo"), col(P + "isE").cast("int"))).as(P + "flE"),
-        max(when(col(P + "hi"), col(P + "isS").cast("int"))).as(P + "hlS"),
-        max(when(col(P + "hi"), col(P + "isE").cast("int"))).as(P + "hlE"))
-      .collect()
-    // global per-boundary-segment (kept-start, kept-end) flags
-    val bnd = mutable.HashMap.empty[(Seq[Any], Long), (Boolean, Boolean)]
-    chunkRows.foreach { r =>
-      val gVals = (0 until gN).map(r.get)
-      val (_, _, blo, bhi) = chunkMeta((gVals, r.getInt(gN)))
-      def merge(raw: Long, s: Boolean, e: Boolean): Unit = {
-        val (s0, e0) = bnd.getOrElse((gVals, raw), (false, false))
-        bnd((gVals, raw)) = (s0 || s, e0 || e)
-      }
-      // a chunk's first and last rows carry raw ids blo and bhi by
-      // construction, so both flag pairs exist; a null one means the
-      // carry algebra and the rows disagree — fail loudly instead of
-      // reading it as an unkept marker
-      def kept(i: Int, raw: Long): Boolean = {
-        require(!r.isNullAt(i),
-          s"IntervalIdentifierSalted: no row with raw id $raw in chunk " +
-            s"${r.getInt(gN)} of group ${gVals.mkString("(", ", ", ")")}")
-        r.getInt(i) == 1
-      }
-      merge(blo, kept(gN + 2, blo), kept(gN + 3, blo))
-      if (bhi != blo) merge(bhi, kept(gN + 4, bhi), kept(gN + 5, bhi))
     }
-    // per-chunk prefix of valid ORIGIN segments: each segment
-    // originates exactly once (at its global start row), so a chunk's
-    // valid-origin total = its non-boundary running-count maximum + the
-    // first segment when it starts here (not a continuation) and is
-    // valid + the last segment when distinct from the first and valid
-    val baseRows = chunkRows
-      .groupBy(r => (0 until gN).map(r.get(_)): Seq[Any]).valuesIterator
-      .flatMap { chunks =>
-        var acc = 0L
-        chunks
-          .map(r => (r, chunkMeta(((0 until gN).map(r.get), r.getInt(gN)))))
-          .sortBy(_._2._1)
-          .map { case (r, (_, contin, blo, bhi)) =>
-            val gVals = (0 until gN).map(r.get)
-            def ok(raw: Long): Boolean = {
-              val (s, e) = bnd((gVals, raw)); s && e
-            }
-            val fval = ok(blo)
-            val lval = ok(bhi)
-            val fvo = !contin && fval
-            val lvo = bhi != blo && lval
-            val base = acc
-            acc += r.getLong(gN + 1) + (if (fvo) 1L else 0L) +
-              (if (lvo) 1L else 0L)
-            Row.fromSeq(gVals ++ Seq[Any](r.getInt(gN), base, fvo, lvo, fval,
-              lval))
-          }
-      }.toSeq
-    val baseTbl = localTable(baseRows, Seq(
-      StructField(P + "base", LongType),
-      StructField(P + "fvo", BooleanType), StructField(P + "lvo", BooleanType),
-      StructField(P + "fval", BooleanType),
-      StructField(P + "lval", BooleanType)))
-    val rows3 = joinLocal(rows2f, baseTbl)
-    // a row's validity reads its segment's resolution off the chunk
-    // row: first/last segments from the cross-chunk flags, interior
-    // segments from their in-chunk window maxima
-    val viCol: Column =
-      when(col(P + "lo"), col(P + "fval"))
-        .when(col(P + "hi"), col(P + "lval"))
-        .otherwise(col(P + "vS") === 1 && col(P + "vE") === 1)
 
-    if (resultType == ResultType.Valid)
-      return finish(rows3, when(viCol, col(P + "raw")).otherwise(lit(0L)))
+    // step 4: row-local outputs over the carries
+    def c(n: String): Column = col(P + n)
+    val l = c("k") - c("e")
+    val rawId = c("roff") + l + 1 - (c("dropF") && l > 0).cast("long") -
+      (c("dropL") && l === c("ktot")).cast("long")
+    if (raw) return finish(rows1, carries)(rawId)
 
-    // rank = chunk base + in-chunk running count + the boundary
-    // contributions at/under this row's position
-    val enumC =
-      when(viCol,
-        col(P + "base") + col(P + "run") + col(P + "fvo").cast("long") +
-          when(col(P + "hi") && col(P + "lvo"), 1L).otherwise(0L))
-        .otherwise(lit(0L))
-    finish(rows3, enumC)
+    val firstIsStart = c("s") === 1 ||
+      when(c("dropL") && l === c("ktot"), c("hiS"))
+        .otherwise(coalesce(c("prev") === start, c("linS")))
+    val lastIsEnd = c("e") === 1 ||
+      when(c("dropF") && l === 0, c("loE"))
+        .otherwise(coalesce(c("next") === end, c("rinE")))
+    val ids =
+      if (enumerated) c("eoff") + c("open") -
+        (c("eLo") && c("k") > 0).cast("long") +
+        (c("eHi") && c("k") === c("ktot")).cast("long")
+      else rawId
+    finish(rows1, carries)(when(firstIsStart && lastIsEnd, ids).otherwise(0L))
   }
 }

@@ -119,25 +119,41 @@ final class Pipeline(val stages: Seq[Stage]) {
     results(indexOf(ident))
   }
 
-  /** Execute one forced action per stage, recording wall time, shape,
-    * cache flag and whole-stage-codegen stage count
-    * (reference: pipeline.py:622-891 PipelineProfiler). The reference
-    * forces with `count()` (pipeline.py:884-891), under which Catalyst
-    * prunes map-side stages to zero-column scans and the per-stage
-    * seconds are fiction; the API shape is kept but the timed action is
-    * a full-plan noop write ([[graft.benchmark.Force]]), and the row
-    * count is observed on that same execution.
+  /** Run every stage once, over the previous stage's materialized
+    * result, recording wall time, shape, cache flag and whole-stage-
+    * codegen stage count (reference: pipeline.py:622-891
+    * PipelineProfiler). The reference forces with `count()`
+    * (pipeline.py:884-891), under which Catalyst prunes map-side stages
+    * to zero-column scans and the per-stage seconds are fiction; here
+    * each stage's full output is persisted by one forced action
+    * ([[graft.benchmark.Force]]), its row count is observed on that same
+    * execution, and the next stage reads the persisted rows. So
+    * `seconds` is the stage's own cost, not its upstream's too, and the
+    * input is read once. Each persisted result is released once the next
+    * stage has consumed it; the recorded intermediates stay as plans.
     */
   def profile(df: DataFrame): Seq[StageProfile] = {
-    transform(df)
-    results.zipWithIndex.map { case (r, i) =>
+    val acc = Vector.newBuilder[DataFrame]
+    var in = df
+    val prof = stages.zipWithIndex.map { case (s, i) =>
+      val out = s.transform(in)
       val rows = Observation()
       val t0 = System.nanoTime()
-      graft.benchmark.Force(r.observe(rows, count(lit(1)).as("rows")))
+      val cut = out.observe(rows, count(lit(1)).as("rows")).persist()
+      graft.benchmark.Force(cut)
       val secs = (System.nanoTime() - t0) / 1e9
-      StageProfile(i, stages(i).label, secs, rows.get("rows").asInstanceOf[Long],
-        r.columns.length, cacheEnabled(i), Pipeline.codegenStageCount(r))
+      // planned while its input is still persisted: the stage's own plan
+      val p = StageProfile(i, s.label, secs,
+        rows.get("rows").asInstanceOf[Long], out.columns.length,
+        cacheEnabled(i), Pipeline.codegenStageCount(out))
+      if (in ne df) in.unpersist()
+      in = cut
+      acc += out
+      p
     }
+    in.unpersist()
+    results = acc.result()
+    prof
   }
 
   /** Human-readable stage summary (reference: pipeline.py:940-975). */

@@ -68,8 +68,7 @@ object AudioGen {
     * behavior: generation is embarrassingly parallel and must not
     * serialize behind the input's partitioning).
     */
-  final case class AttachPayload(idColumn: String = "doc_id",
-                                 spreadPartitions: Boolean = true)
+  final case class AttachPayload(idColumn: String = "doc_id")
       extends Wrangler {
     override def preservesSampleSize: Boolean = true
 
@@ -81,7 +80,7 @@ object AudioGen {
       val ids = df.select(col(idColumn).cast("long"))
       val par = spark.sparkContext.defaultParallelism
       val spread =
-        if (spreadPartitions && ids.rdd.getNumPartitions < par)
+        if (ids.rdd.getNumPartitions < par)
           ids.repartition(par)
         else ids
       spread.as[Long]

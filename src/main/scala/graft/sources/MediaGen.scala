@@ -136,16 +136,15 @@ object MediaGen {
     * downstream multimodal operators key on the id, so the projection
     * is deliberately minimal.
     *
-    * `spreadPartitions = true` (default) round-robins the ids across
-    * `defaultParallelism` tasks first when the input has fewer
-    * partitions: the codec work is CPU-bound, and a small id table
-    * (one parquet row group) would otherwise encode on a single core —
-    * measured 10x on the 5000-doc bench corpus. The exchanged rows are
-    * bare longs, so the repartition is noise next to the encode. Real
-    * media corpora arrive over many files and don't need it.
+    * The ids are round-robined across `defaultParallelism` tasks first
+    * when the input has fewer partitions: the codec work is CPU-bound,
+    * and a small id table (one parquet row group) would otherwise encode
+    * on a single core — measured 10x on the 5000-doc bench corpus. The
+    * exchanged rows are bare longs, so the repartition is noise next to
+    * the encode. Real media corpora arrive over many files and don't
+    * need it.
     */
-  final case class AttachPayload(idColumn: String = "doc_id",
-                                 spreadPartitions: Boolean = true)
+  final case class AttachPayload(idColumn: String = "doc_id")
       extends Wrangler {
     override def preservesSampleSize: Boolean = true
 
@@ -157,7 +156,7 @@ object MediaGen {
       val ids = df.select(col(idColumn).cast("long"))
       val par = spark.sparkContext.defaultParallelism
       val spread =
-        if (spreadPartitions && ids.rdd.getNumPartitions < par)
+        if (ids.rdd.getNumPartitions < par)
           ids.repartition(par)
         else ids
       spread.as[Long]

@@ -232,8 +232,7 @@ object VideoGen {
     * video sibling of [[MediaGen.AttachPayload]] (same spread-partitions
     * rationale: the per-id JPEG encodes are CPU-bound).
     */
-  final case class AttachPayload(idColumn: String = "doc_id",
-                                 spreadPartitions: Boolean = true)
+  final case class AttachPayload(idColumn: String = "doc_id")
       extends Wrangler {
     override def preservesSampleSize: Boolean = true
 
@@ -245,7 +244,7 @@ object VideoGen {
       val ids = df.select(col(idColumn).cast("long"))
       val par = spark.sparkContext.defaultParallelism
       val spread =
-        if (spreadPartitions && ids.rdd.getNumPartitions < par)
+        if (ids.rdd.getNumPartitions < par)
           ids.repartition(par)
         else ids
       spread.as[Long]

@@ -66,10 +66,15 @@ class FrameworkSpec extends AnyFunSuite {
     val p = Pipeline(
       Stage.of("double")(_.withColumn("x", col("id") * 2)),
       Stage.of("third")(_.filter(col("id") % 3 === 0)))
-    val (prof, m) =
-      RunMetrics.measure(spark)(p.profile(spark.range(0, 300, 1, 4).toDF()))
+    val reads = spark.sparkContext.longAccumulator("profile input reads")
+    val input = spark.range(0, 300, 1, 4)
+      .map { id => reads.add(1); id.longValue }.toDF("id")
+    val (prof, m) = RunMetrics.measure(spark)(p.profile(input))
     assert(prof.map(_.rows) == Seq(300L, 100L))
     assert(m.jobs.size == 2, m.jobs)
+    // the second stage runs over the first stage's persisted rows, not
+    // over a recomputation of the first stage from the input
+    assert(reads.value == 300L, s"input read ${reads.value / 300.0} times")
   }
 
   test("Pipeline: wranglers coerce to stages") {

@@ -169,6 +169,32 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(windowNodes.exists(_.contains("__iis_b")), plan)
   }
 
+  test("salted interval enumerated: ONE broadcast join of the chunk " +
+    "carries, every window partitioned by (group, chunk), no checkpoint " +
+    "scan — under all four span selections") {
+    // the carries come back in one broadcast join and every output is a
+    // row-local expression over them: a window partitioned by anything
+    // else (the raw id of a segment layer) or a scan of a checkpointed
+    // RDD would be the cross-chunk machinery growing back
+    val partitionKeys = """\[([^\[\]]*)\], \[[^\[\]]*\]$""".r
+    for (su <- Seq(false, true); eu <- Seq(false, true)) {
+      val plan = new IntervalIdentifierSalted("marker", "s", Some("e"), su,
+        eu, Seq("event_id"), Seq("user_id"), saltBuckets = 4,
+        maxChunkRows = 1L).transform(events).queryExecution.executedPlan
+        .toString
+      val label = s"su=$su eu=$eu\n$plan"
+      assert("BroadcastHashJoin".r.findAllIn(plan).size == 1, label)
+      assert(!plan.contains("ExistingRDD"), label)
+      val windows = plan.linesIterator.filter(_.contains("Window [")).toSeq
+      assert(windows.nonEmpty, label)
+      windows.foreach { w =>
+        val keys = partitionKeys.findFirstMatchIn(w)
+          .map(_.group(1).split(", ").map(_.replaceAll("#.*", "")).toSeq)
+        assert(keys.contains(Seq("user_id", "__iis_b")), s"$w\n$label")
+      }
+    }
+  }
+
   test("text repetition and PII scrub: pure map-side, zero shuffles") {
     val df = Seq((1L, "a b a b")).toDF("doc_id", "text")
     assert(shuffles(TextAnalysis.RepetitionScore().transform(df)) == 0)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -83,33 +83,55 @@ class IntervalSaltedPropertySpec extends AnyFunSuite {
     StructField("g", IntegerType), StructField("o", IntegerType),
     StructField("marker", StringType)))
 
-  private def runSalted(groups: List[List[String]], buckets: Int,
-                        su: Boolean, eu: Boolean, asc: Boolean,
-                        identical: Boolean): Map[(Int, Int), Long] = {
+  private def frame(groups: List[List[String]]): DataFrame = {
     val rows = for ((ms, g) <- groups.zipWithIndex; (m, o) <- ms.zipWithIndex)
       yield Row(g, o, m)
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 3), schema)
-    val w = new IntervalIdentifierSalted("marker", Start,
-      if (identical) None else Some(End), su, eu,
-      orderbyColumns = Seq("o"), groupbyColumns = Seq("g"),
-      ascending = Seq(asc), saltBuckets = buckets, maxChunkRows = 1L)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+  }
+
+  private def ids(w: IntervalIdentifier,
+                  df: DataFrame): Map[(Int, Int), Long] =
     w.transform(df).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getAs[Number]("iids").longValue)
       .toMap
-  }
 
-  private def check(su: Boolean, eu: Boolean, n: Int): Unit =
+  private def salted(buckets: Int, su: Boolean, eu: Boolean, asc: Boolean,
+                     identical: Boolean,
+                     rt: ResultType = ResultType.Enumerated) =
+    new IntervalIdentifierSalted("marker", Start,
+      if (identical) None else Some(End), su, eu,
+      orderbyColumns = Seq("o"), groupbyColumns = Seq("g"),
+      ascending = Seq(asc), resultType = rt, saltBuckets = buckets,
+      maxChunkRows = 1L)
+
+  /** Enumerated ids against the sequential oracle (a descending scan is
+    * the oracle over the reversed sequence); raw and valid ids, which
+    * the oracle does not produce, against the plain operator on the same
+    * rows.
+    */
+  private def check(su: Boolean, eu: Boolean, n: Int,
+                    asc: Boolean = true): Unit =
     forAllSeeded(caseGen, n) { case (buckets, groups) =>
-      val got = runSalted(groups, buckets, su, eu, asc = true,
-        identical = false)
+      val df = frame(groups)
+      val got = ids(salted(buckets, su, eu, asc, identical = false), df)
       groups.zipWithIndex.foreach { case (ms, g) =>
-        val want = oracle(ms, su, eu)
+        val want =
+          if (asc) oracle(ms, su, eu) else oracle(ms.reverse, su, eu).reverse
         ms.indices.foreach { o =>
           assert(got((g, o)) == want(o),
             s"salted buckets=$buckets group $g markers=$ms su=$su eu=$eu " +
-              s"pos $o: got ${got((g, o))}, want ${want(o)}")
+              s"asc=$asc pos $o: got ${got((g, o))}, want ${want(o)}")
         }
+      }
+      for (rt <- Seq(ResultType.Raw, ResultType.Valid)) {
+        val plain = ids(new IntervalIdentifier("marker", Start, Some(End),
+          su, eu, Seq("o"), Seq("g"), Seq(asc), rt), df)
+        val got = ids(salted(buckets, su, eu, asc, identical = false, rt), df)
+        assert(got == plain, s"salted $rt buckets=$buckets groups=$groups " +
+          s"su=$su eu=$eu asc=$asc: " +
+          got.filter { case (k, v) => plain(k) != v }.toSeq.sorted
+            .map { case (k, v) => s"$k got $v want ${plain(k)}" }
+            .mkString(", "))
       }
     }
 
@@ -121,25 +143,13 @@ class IntervalSaltedPropertySpec extends AnyFunSuite {
   }
 
   test("salted property: descending order matches oracle on reversed rows") {
-    forAllSeeded(caseGen, 10) { case (buckets, groups) =>
-      val got = runSalted(groups, buckets, su = false, eu = true,
-        asc = false, identical = false)
-      groups.zipWithIndex.foreach { case (ms, g) =>
-        // descending scan = the oracle over the reversed sequence
-        val want = oracle(ms.reverse, su = false, eu = true).reverse
-        ms.indices.foreach { o =>
-          assert(got((g, o)) == want(o),
-            s"salted desc buckets=$buckets group $g markers=$ms pos $o: " +
-              s"got ${got((g, o))}, want ${want(o)}")
-        }
-      }
-    }
+    check(su = false, eu = true, n = 10, asc = false)
   }
 
   test("salted property: identical-marker path matches running count") {
     forAllSeeded(caseGen, 10) { case (buckets, groups) =>
-      val got = runSalted(groups, buckets, su = false, eu = true,
-        asc = true, identical = true)
+      val got = ids(salted(buckets, su = false, eu = true, asc = true,
+        identical = true), frame(groups))
       groups.zipWithIndex.foreach { case (ms, g) =>
         val want =
           ms.scanLeft(0L)((acc, m) => if (m == Start) acc + 1 else acc).tail
