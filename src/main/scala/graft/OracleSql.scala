@@ -1610,12 +1610,7 @@ object OracleSql {
     */
   def clusterBalancedSample(dim: Int, nlist: Int, quota: Long,
                             salt: String): String = {
-    def dotE(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${dim + 1}), " +
-        s"i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def cosE(a: String, b: String, na: String, nb: String) =
-      s"CAST(${dotE(a, b)} AS DOUBLE) / " +
-        s"sqrt(CAST($na AS DOUBLE) * CAST($nb AS DOUBLE))"
+    val vec = new VecSql(dim); import vec._
     s"""$QuantizedVecs,
        |hh AS (SELECT id,
        |  CAST('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 8) AS BIGINT)
@@ -2166,6 +2161,18 @@ object OracleSql {
       |  list_reduce(list_transform(q, x -> x * x), (a, b) -> a + b) AS nrm
       |  FROM q0)""".stripMargin
 
+  /** The ANN oracles' vector expressions over `dim`-long integer lists:
+    * the dot product, and the cosine over two squared norms.
+    */
+  private final class VecSql(dim: Int) {
+    def dotE(a: String, b: String): String =
+      s"list_reduce(list_transform(range(1, ${dim + 1}), " +
+        s"i -> $a[i] * $b[i]), (x, y) -> x + y)"
+    def cosE(a: String, b: String, na: String, nb: String): String =
+      s"CAST(${dotE(a, b)} AS DOUBLE) / " +
+        s"sqrt(CAST($na AS DOUBLE) * CAST($nb AS DOUBLE))"
+  }
+
   private def hyperplaneLit(j: Int, dim: Int): String =
     (0 until dim).map(i => Portable.hyperplane(j, i)).mkString("[", ", ", "]")
 
@@ -2276,12 +2283,7 @@ object OracleSql {
     */
   def annIvf(dim: Int, nlist: Int, nprobe: Int, k: Int,
              maxQueryId: Long): String = {
-    def dotE(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${dim + 1}), " +
-        s"i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def cosE(a: String, b: String, na: String, nb: String) =
-      s"CAST(${dotE(a, b)} AS DOUBLE) / " +
-        s"sqrt(CAST($na AS DOUBLE) * CAST($nb AS DOUBLE))"
+    val vec = new VecSql(dim); import vec._
     s"""$QuantizedVecs,
        |hh AS (SELECT id,
        |  CAST('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 8) AS BIGINT)
@@ -2319,12 +2321,7 @@ object OracleSql {
     */
   def annIvfIncr(dim: Int, nlist: Int, nprobe: Int, k: Int,
                  splitId: Long): String = {
-    def dotE(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${dim + 1}), " +
-        s"i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def cosE(a: String, b: String, na: String, nb: String) =
-      s"CAST(${dotE(a, b)} AS DOUBLE) / " +
-        s"sqrt(CAST($na AS DOUBLE) * CAST($nb AS DOUBLE))"
+    val vec = new VecSql(dim); import vec._
     s"""$QuantizedVecs,
        |nc AS (SELECT * FROM n WHERE id >= $splitId),
        |nq AS (SELECT * FROM n WHERE id < $splitId),
@@ -2373,12 +2370,7 @@ object OracleSql {
                k: Int, refine: Int, maxQueryId: Long): String = {
     require(dim % m == 0, s"annIvfPq: dim=$dim not divisible by m=$m")
     val dsub = dim / m
-    def dotE(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${dim + 1}), " +
-        s"i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def cosE(a: String, b: String, na: String, nb: String) =
-      s"CAST(${dotE(a, b)} AS DOUBLE) / " +
-        s"sqrt(CAST($na AS DOUBLE) * CAST($nb AS DOUBLE))"
+    val vec = new VecSql(dim); import vec._
     s"""$QuantizedVecs,
        |hh AS (SELECT id,
        |  CAST('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 8) AS BIGINT)
@@ -2458,12 +2450,7 @@ object OracleSql {
     require(dim % m == 0, s"annIvfPqRes: dim=$dim not divisible by m=$m")
     val dsub = dim / m
     val S = 10000L
-    def dotE(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${dim + 1}), " +
-        s"i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def cosE(a: String, b: String, na: String, nb: String) =
-      s"CAST(${dotE(a, b)} AS DOUBLE) / " +
-        s"sqrt(CAST($na AS DOUBLE) * CAST($nb AS DOUBLE))"
+    val vec = new VecSql(dim); import vec._
     s"""$QuantizedVecs,
        |hh AS (SELECT id,
        |  CAST('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 8) AS BIGINT)
@@ -2561,12 +2548,7 @@ object OracleSql {
     require(dim % m == 0, s"annIvfPqTrained: dim=$dim not divisible by m=$m")
     require(iters >= 1, "annIvfPqTrained: iters must be >= 1")
     val dsub = dim / m
-    def dotE(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${dim + 1}), " +
-        s"i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def cosE(a: String, b: String, na: String, nb: String) =
-      s"CAST(${dotE(a, b)} AS DOUBLE) / " +
-        s"sqrt(CAST($na AS DOUBLE) * CAST($nb AS DOUBLE))"
+    val vec = new VecSql(dim); import vec._
     // assignment of every corpus sub-vector to its argmin-L2 entry of
     // codebook relation `cbN(s, j, e)`
     def asgCte(name: String, cbN: String): String =
@@ -2665,12 +2647,7 @@ object OracleSql {
                    k: Int, refine: Int, splitId: Long): String = {
     require(dim % m == 0, s"annIvfPqIncr: dim=$dim not divisible by m=$m")
     val dsub = dim / m
-    def dotE(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${dim + 1}), " +
-        s"i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def cosE(a: String, b: String, na: String, nb: String) =
-      s"CAST(${dotE(a, b)} AS DOUBLE) / " +
-        s"sqrt(CAST($na AS DOUBLE) * CAST($nb AS DOUBLE))"
+    val vec = new VecSql(dim); import vec._
     s"""$QuantizedVecs,
        |nc AS (SELECT * FROM n WHERE id >= $splitId),
        |nq AS (SELECT * FROM n WHERE id < $splitId),
@@ -2755,12 +2732,7 @@ object OracleSql {
     require(iters >= 1, "annIvfPqResTrained: iters must be >= 1")
     val dsub = dim / m
     val S = 10000L
-    def dotE(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${dim + 1}), " +
-        s"i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def cosE(a: String, b: String, na: String, nb: String) =
-      s"CAST(${dotE(a, b)} AS DOUBLE) / " +
-        s"sqrt(CAST($na AS DOUBLE) * CAST($nb AS DOUBLE))"
+    val vec = new VecSql(dim); import vec._
     // assignment of every corpus RESIDUAL sub-vector to its argmin-L2
     // entry of codebook relation `cbN(s, j, e)`
     def asgCte(name: String, cbN: String): String =
@@ -2884,12 +2856,7 @@ object OracleSql {
       s"annIvfPqIncrRes: dim=$dim not divisible by m=$m")
     val dsub = dim / m
     val S = 10000L
-    def dotE(a: String, b: String) =
-      s"list_reduce(list_transform(range(1, ${dim + 1}), " +
-        s"i -> $a[i] * $b[i]), (x, y) -> x + y)"
-    def cosE(a: String, b: String, na: String, nb: String) =
-      s"CAST(${dotE(a, b)} AS DOUBLE) / " +
-        s"sqrt(CAST($na AS DOUBLE) * CAST($nb AS DOUBLE))"
+    val vec = new VecSql(dim); import vec._
     s"""$QuantizedVecs,
        |nc AS (SELECT * FROM n WHERE id >= $splitId),
        |nq AS (SELECT * FROM n WHERE id < $splitId),

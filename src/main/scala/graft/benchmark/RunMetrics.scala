@@ -5,8 +5,11 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable
 
 import org.apache.spark.executor.TaskMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graftshim.ListenerBusDrain
 
 /** Totals of the Spark jobs one block of driver code launched, collected
@@ -15,20 +18,32 @@ import org.apache.spark.sql.graftshim.ListenerBusDrain
   * completes) and those stages' tasks, summed task CPU and run time,
   * shuffle bytes read and written, scan input bytes, bytes spilled from
   * memory, and the sum over the stages of each stage's aggregated task
-  * peak execution memory (aggregation, sort and join buffers).
+  * peak execution memory (aggregation, sort and join buffers), and the
+  * SQL executions that launched the jobs, in id order.
   */
 final case class RunMetrics(jobs: Vector[RunMetrics.Job], stages: Int,
     tasks: Int, executorCpuNs: Long, executorRunMs: Long,
     shuffleReadBytes: Long, shuffleWriteBytes: Long, inputBytes: Long,
-    spilledBytes: Long, peakExecutionMemory: Long)
+    spilledBytes: Long, peakExecutionMemory: Long,
+    executions: Vector[RunMetrics.Execution])
 
 object RunMetrics {
 
-  /** One job: its `spark.job.description` (empty when unset) and its wall
+  /** One job: its `spark.job.description` (empty when unset), its wall
     * time from the job events' own timestamps (`None` if it had not ended
-    * when the block returned).
+    * when the block returned), the SQL execution that launched it (-1 for
+    * none) and the process-wide count of generated classes compiled, read
+    * when its end event was delivered.
     */
-  final case class Job(id: Int, description: String, wallMs: Option[Long])
+  final case class Job(id: Int, description: String, wallMs: Option[Long],
+                       execution: Long, compilesAtEnd: Option[Long])
+
+  /** One SQL execution: its description (Spark's call site, such as
+    * `localCheckpoint at Curation.scala:<line>`, unless a job
+    * description is set) and its wall time (`None` if it had not ended).
+    */
+  final case class Execution(id: Long, description: String,
+                             wallMs: Option[Long])
 
   /** The job local property naming the measurement a job belongs to.
     * Spark copies local properties into the threads it runs a query's
@@ -59,22 +74,35 @@ object RunMetrics {
   }
 
   private final class Collector(val tag: String) extends SparkListener {
-    private val jobs = mutable.TreeMap.empty[Int, (String, Long)]
-    private val ends = mutable.Map.empty[Int, Long]
+    private val jobs = mutable.TreeMap.empty[Int, (String, Long, Long)]
+    private val ends = mutable.Map.empty[Int, (Long, Long)]
+    private val execs = mutable.Map.empty[Long, (String, Long)]
+    private val execEnds = mutable.Map.empty[Long, Long]
     private val mine = mutable.Set.empty[Int]
     private val done = mutable.ArrayBuffer.empty[StageInfo]
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       val p = Option(e.properties)
       if (p.exists(_.getProperty(TagProperty) == tag)) {
-        jobs(e.jobId) = (p.flatMap(p => Option(p.getProperty(
-          "spark.job.description"))).getOrElse(""), e.time)
+        def prop(k: String) = p.flatMap(p => Option(p.getProperty(k)))
+        jobs(e.jobId) = (prop("spark.job.description").getOrElse(""), e.time,
+          prop(SQLExecution.EXECUTION_ID_KEY).fold(-1L)(_.toLong))
         mine ++= e.stageIds
       }
     }
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
-      if (jobs.contains(e.jobId)) ends(e.jobId) = e.time
+      if (jobs.contains(e.jobId)) ends(e.jobId) =
+        (e.time, CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized {
+      e match {
+        case s: SparkListenerSQLExecutionStart =>
+          execs(s.executionId) = (s.description, s.time)
+        case s: SparkListenerSQLExecutionEnd => execEnds(s.executionId) = s.time
+        case _ =>
+      }
     }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
@@ -83,14 +111,17 @@ object RunMetrics {
     def totals: RunMetrics = synchronized {
       val m = done.flatMap(s => Option(s.taskMetrics))
       def sum(f: TaskMetrics => Long): Long = m.map(f).sum
-      RunMetrics(jobs.iterator.map { case (id, (desc, t0)) =>
-          Job(id, desc, ends.get(id).map(_ - t0))
+      RunMetrics(jobs.iterator.map { case (id, (desc, t0, x)) =>
+          Job(id, desc, ends.get(id).map(_._1 - t0), x, ends.get(id).map(_._2))
         }.toVector, done.size, done.map(_.numTasks).sum,
         sum(_.executorCpuTime), sum(_.executorRunTime),
         sum(_.shuffleReadMetrics.totalBytesRead),
         sum(_.shuffleWriteMetrics.bytesWritten),
         sum(_.inputMetrics.bytesRead), sum(_.memoryBytesSpilled),
-        sum(_.peakExecutionMemory))
+        sum(_.peakExecutionMemory),
+        jobs.values.map(_._3).toVector.distinct.sorted.flatMap(x =>
+          execs.get(x).map { case (d, t0) =>
+            Execution(x, d, execEnds.get(x).map(_ - t0)) }))
     }
   }
 }

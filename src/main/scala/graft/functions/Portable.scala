@@ -286,11 +286,4 @@ object Portable {
 
   /** Random-hyperplane component r(plane j, dim i) in [-1000, 1000]. */
   def hyperplane(j: Int, i: Int): Long = tokenHashLocal(s"hp:$j:$i") % 2001L - 1000L
-
-  /** Sign-bit of <q, hyperplane j> for a quantized vector of `dim` dims. */
-  def hyperplaneBit(q: Column, j: Int, dim: Int): Column = {
-    val r = array((0 until dim).map(i => lit(hyperplane(j, i))): _*)
-    (aggregate(zip_with(q, r, (x, y) => x * y), lit(0L),
-      (acc, x) => acc + x) >= 0L).cast("int")
-  }
 }

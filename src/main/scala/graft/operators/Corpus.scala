@@ -23,6 +23,64 @@ import graft.util.SparkUtil
   */
 object Corpus {
 
+  /** The one per-document shingle-overlap count, behind
+    * [[BoilerplateScore]], both [[Decontaminate]] paths and
+    * [[ContaminationReport]]: per doc of `docs`, `n_shingles` (its `sz`
+    * in `postings`, the `(doc_id, sz, shingle)` rows of
+    * [[graft.functions.Portable.shingleRows]], distinct per doc), `n_hits`
+    * (its shingles in the distinct `shingles` set) and `ratio =
+    * round(n_hits / n_shingles, 6)`; a doc with no postings (short,
+    * empty or NULL text) gets zeros. One shingle equi-join (AQE
+    * broadcasts a small set) and one aggregation keyed by doc id; text
+    * never shuffles. `prefilter` prunes the `(doc_id, shingle)` stream
+    * before an inner hit join (the Bloom path), so `n_shingles` then
+    * comes from the unpruned postings.
+    */
+  private[operators] def shingleOverlap(docs: DataFrame,
+      postings: DataFrame, shingles: DataFrame,
+      prefilter: Option[DataFrame => DataFrame] = None): DataFrame = {
+    val counted = prefilter match {
+      case None =>
+        postings
+          .join(shingles.withColumn("hit", lit(1L)), Seq("shingle"), "left")
+          .groupBy("doc_id")
+          .agg(max(col("sz")).as("n_shingles"),
+            sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+      case Some(prune) =>
+        val hits = prune(postings.select("doc_id", "shingle"))
+          .join(shingles, Seq("shingle"))
+          .groupBy("doc_id").agg(count(lit(1)).as("n_hits"))
+        postings.groupBy("doc_id").agg(max(col("sz")).as("n_shingles"))
+          .join(hits, Seq("doc_id"), "left")
+    }
+    docs.select("doc_id")
+      .join(counted, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
+        coalesce(col("n_hits"), lit(0L)).as("n_hits"))
+      .withColumn("ratio",
+        when(col("n_shingles") > 0,
+          round(col("n_hits").cast("double") /
+            col("n_shingles").cast("double"), 6)).otherwise(0.0))
+  }
+
+  /** The one train/eval split of the decontamination operators: `(train,
+    * eval)` as `(doc_id: long, text)` frames. Eval is the rows
+    * `evalDocs` selects from `df`; train is every other row (a left-anti
+    * join on the doc id).
+    */
+  private def trainEvalSplit(df: DataFrame,
+                             evalDocs: DataFrame => DataFrame,
+                             idColumn: String, textColumn: String)
+      : (DataFrame, DataFrame) = {
+    SparkUtil.validateColumns(df, Seq(idColumn, textColumn))
+    def narrow(side: DataFrame): DataFrame =
+      side.select(col(idColumn).cast("long").as("doc_id"),
+        col(textColumn).as("text"))
+    val eval = narrow(evalDocs(df))
+    (narrow(df).join(eval.select("doc_id"), Seq("doc_id"), "left_anti"), eval)
+  }
+
   /** Benchmark decontamination: flag training documents that share word
     * n-gram shingles with a held-out evaluation set (the standard
     * train/test-overlap guard for LLM corpora — e.g. the GPT-3 paper's
@@ -34,26 +92,19 @@ object Corpus {
     * occur anywhere in the eval set, the overlap ratio, and the
     * `contaminated` flag (`n_overlap >= minOverlap`).
     *
-    * Scale shape: eval shingles are deduplicated to a narrow single
-    * column; the contamination join is a shingle equi-join of the
-    * training posting stream against that (typically tiny) side — AQE
-    * broadcasts it at runtime when it fits, and degrades to a shuffled
-    * equi-join (never a cartesian) when an unusually large eval set does
-    * not. One aggregation keyed by doc id follows; document text never
-    * shuffles.
+    * Scale shape: the split is [[trainEvalSplit]]; the counts are
+    * [[shingleOverlap]] of the training postings against the distinct
+    * (typically tiny) eval shingle set.
     *
-    * `bloomPrefilter = true` switches to the 100 TB shape for LARGE eval
-    * sets (many benchmarks, tens of millions of distinct shingles —
-    * too big for a broadcast hash join, so the equi-join must shuffle
-    * the full training posting stream, the dominant cost of the
-    * operator). A Bloom filter over the eval shingles (bit array — MBs
-    * where the string set is GBs) is built once and broadcast; the
-    * posting stream is filtered map-side BEFORE the join, so only the
-    * ~hit-rate + `bloomFpp` fraction of postings ever shuffles. Results
-    * are IDENTICAL to the exact path: Bloom filters have no false
-    * negatives, and false positives are resolved by the exact join that
-    * follows — per-doc shingle counts come from a separate narrow
-    * aggregation that never passes through the filter.
+    * `bloomPrefilter = true` is the 100 TB shape for LARGE eval sets
+    * (tens of millions of distinct shingles — too big to broadcast, so
+    * the join would shuffle the whole training posting stream): a Bloom
+    * filter over the eval shingles (MBs where the strings are GBs) is
+    * built once, broadcast, and prunes the postings map-side BEFORE the
+    * join (the kernel's `prefilter`), so only the ~hit-rate + `bloomFpp`
+    * fraction shuffles. Results are IDENTICAL to the exact path: Bloom
+    * filters have no false negatives, the exact join resolves false
+    * positives, and shingle counts never pass through the filter.
     */
   final case class Decontaminate(evalDocs: DataFrame => DataFrame,
                                  idColumn: String = "doc_id",
@@ -70,67 +121,33 @@ object Corpus {
     def transform(df: DataFrame): DataFrame = {
       val spark = df.sparkSession
       import spark.implicits._
-      SparkUtil.validateColumns(df, Seq(idColumn, textColumn))
-      val evalSet = evalDocs(df)
-      val evalIds = evalSet.select(col(idColumn).cast("long").as("doc_id"))
-      val train = df.select(col(idColumn).cast("long").as("doc_id"),
-          col(textColumn).as("text"))
-        .join(evalIds, Seq("doc_id"), "left_anti")
-      // (doc_id, sz, shingle) with shingles already distinct per doc, so
-      // the per-doc overlap count below needs no distinct aggregate
-      val trainSh = shingleRows(train, "doc_id", "text", n)
-      val evalSh = shingleRows(
-          evalSet.select(col(idColumn).cast("long").as("doc_id"),
-            col(textColumn).as("text")), "doc_id", "text", n)
+      val (train, eval) = trainEvalSplit(df, evalDocs, idColumn, textColumn)
+      val evalSh = shingleRows(eval, "doc_id", "text", n)
         .select("shingle").distinct()
-      val counted =
-        if (!bloomPrefilter)
-          trainSh
-            .join(evalSh.withColumn("hit", lit(1L)), Seq("shingle"), "left")
-            .groupBy("doc_id")
-            .agg(max(col("sz")).as("n_shingles"),
-              sum(coalesce(col("hit"), lit(0L))).as("n_overlap"))
+      val prefilter =
+        if (!bloomPrefilter) None
         else {
-          // per-doc totals from the UNfiltered narrow stream — the
-          // prefilter below may drop every posting of a clean doc, and
-          // restoring it with sz=0 would misreport n_shingles
-          val docSz = trainSh.groupBy("doc_id")
-            .agg(max(col("sz")).as("n_shingles"))
           // two jobs over the (small by definition) eval side: an exact
           // count to size the filter honestly, then the sketch agg
           val nEval = evalSh.count()
-          val bf = evalSh.stat.bloomFilter("shingle",
-            math.max(nEval, 1L), bloomFpp)
-          val bcBf = spark.sparkContext.broadcast(bf)
+          val bcBf = spark.sparkContext.broadcast(evalSh.stat.bloomFilter(
+            "shingle", math.max(nEval, 1L), bloomFpp))
           // map-side membership prune; typed mapPartitions because the
           // sketch's mightContainString is a JVM call with no Column
           // counterpart (Catalyst's BloomFilterMightContain is internal
           // to its runtime-filter rule)
-          val pre = trainSh.select(col("doc_id"), col("shingle"))
-            .as[(Long, String)]
+          Some((postings: DataFrame) => postings.as[(Long, String)]
             .mapPartitions { it =>
               val f = bcBf.value
               it.filter { case (_, sh) => f.mightContainString(sh) }
             }
-            .toDF("doc_id", "shingle")
-          val overlap = pre.join(evalSh, Seq("shingle"))
-            .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))
-          docSz.join(overlap, Seq("doc_id"), "left")
-            .select(col("doc_id"), col("n_shingles"),
-              coalesce(col("n_overlap"), lit(0L)).as("n_overlap"))
+            .toDF("doc_id", "shingle"))
         }
-      // short documents produce zero shingles (no trainSh rows): restore
-      // them with explicit zero counts so the operator is row-complete
-      // over the training set
-      train.select("doc_id")
-        .join(counted, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
-          coalesce(col("n_overlap"), lit(0L)).as("n_overlap"))
-        .withColumn("contamination_ratio",
-          when(col("n_shingles") > 0,
-            round(col("n_overlap").cast("double") /
-              col("n_shingles").cast("double"), 6)).otherwise(0.0))
+      shingleOverlap(train, shingleRows(train, "doc_id", "text", n),
+          evalSh, prefilter)
+        .select(col("doc_id"), col("n_shingles"),
+          col("n_hits").as("n_overlap"),
+          col("ratio").as("contamination_ratio"))
         .withColumn("contaminated", col("n_overlap") >= minOverlap)
     }
   }
@@ -152,12 +169,12 @@ object Corpus {
     * structural cap as `NGramJaccard`; `n_contaminated` still counts
     * capped shingles, via the pair-free path).
     *
-    * Scale shape: `n_contaminated` is the [[Decontaminate]] join
-    * transposed (eval shingles against the DISTINCT train shingle set —
-    * no train-doc identity, no pair blowup); the `n_train_docs` pair
-    * join is df-capped so a shingle contributes at most `maxDocFreq`
-    * pairs per eval doc; both rollups are two-phase distinct
-    * aggregations (no count-distinct Expand). Text never shuffles.
+    * Scale shape: the split is [[trainEvalSplit]]; `n_contaminated` is
+    * [[shingleOverlap]] transposed (eval postings against the DISTINCT
+    * train shingle set — no train-doc identity, no pair blowup); the
+    * `n_train_docs` pair join is df-capped so a shingle contributes at
+    * most `maxDocFreq` pairs per eval doc, a two-phase distinct
+    * aggregation (no count-distinct Expand). Text never shuffles.
     */
   final case class ContaminationReport(evalDocs: DataFrame => DataFrame,
                                        idColumn: String = "doc_id",
@@ -169,25 +186,12 @@ object Corpus {
     require(maxDocFreq >= 1, "`maxDocFreq` must be >= 1")
 
     def transform(df: DataFrame): DataFrame = {
-      SparkUtil.validateColumns(df, Seq(idColumn, textColumn))
-      val evalSet = evalDocs(df)
-      val evalIds = evalSet.select(col(idColumn).cast("long").as("doc_id"))
-      val train = df.select(col(idColumn).cast("long").as("doc_id"),
-          col(textColumn).as("text"))
-        .join(evalIds, Seq("doc_id"), "left_anti")
+      val (train, eval) = trainEvalSplit(df, evalDocs, idColumn, textColumn)
       // shingles are distinct per doc on both sides (shingleRows), so
       // every aggregate below is duplicate-free without extra distincts
-      val evalSh = shingleRows(
-        evalSet.select(col(idColumn).cast("long").as("doc_id"),
-          col(textColumn).as("text")), "doc_id", "text", n)
+      val evalSh = shingleRows(eval, "doc_id", "text", n)
       val trainSh = shingleRows(train, "doc_id", "text", n)
         .select(col("doc_id").as("__tid"), col("shingle"))
-      val cont = evalSh
-        .join(trainSh.select("shingle").distinct()
-          .withColumn("hit", lit(1L)), Seq("shingle"), "left")
-        .groupBy("doc_id")
-        .agg(max(col("sz")).as("n_shingles"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_contaminated"))
       val pairable = trainSh.groupBy("shingle")
         .agg(count(lit(1)).as("__df"))
         .filter(col("__df") <= maxDocFreq)
@@ -197,17 +201,12 @@ object Corpus {
         .join(trainSh, Seq("shingle"))
         .select("doc_id", "__tid").distinct()
         .groupBy("doc_id").agg(count(lit(1)).as("n_train_docs"))
-      evalIds
-        .join(cont, Seq("doc_id"), "left")
+      shingleOverlap(eval, evalSh, trainSh.select("shingle").distinct())
         .join(np, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
-          coalesce(col("n_contaminated"), lit(0L)).as("n_contaminated"),
-          coalesce(col("n_train_docs"), lit(0L)).as("n_train_docs"))
-        .withColumn("contamination_ratio",
-          when(col("n_shingles") > 0,
-            round(col("n_contaminated").cast("double") /
-              col("n_shingles").cast("double"), 6)).otherwise(0.0))
+        .select(col("doc_id"), col("n_shingles"),
+          col("n_hits").as("n_contaminated"),
+          coalesce(col("n_train_docs"), lit(0L)).as("n_train_docs"),
+          col("ratio").as("contamination_ratio"))
     }
   }
 
@@ -221,7 +220,8 @@ object Corpus {
     * Output is one row per TRAINING document: how many eval documents it
     * near-matches, the best similarity estimate, and the boolean flag.
     *
-    * Scale shape — the banded-LSH discipline of [[Dedup.MinHashLSHDedup]]
+    * The train/eval split is [[trainEvalSplit]]. Scale shape — the
+    * banded-LSH discipline of [[Dedup.MinHashLSHDedup]]
     * but with a train-vs-eval join instead of a self-join (no quadratic
     * candidate risk in the corpus itself): signatures aggregate map-side
     * (k longs per doc per partition), the band join carries ids and band
@@ -247,20 +247,12 @@ object Corpus {
       "threshold must be in (0, 1]")
 
     def transform(df: DataFrame): DataFrame = {
-      SparkUtil.validateColumns(df, Seq(idColumn, textColumn))
-      val evalSet = evalDocs(df)
-        .select(col(idColumn).cast("long").as("doc_id"),
-          col(textColumn).as("text"))
-      val train = df.select(col(idColumn).cast("long").as("doc_id"),
-          col(textColumn).as("text"))
-        .join(evalSet.select("doc_id"), Seq("doc_id"), "left_anti")
-      def sigsOf(side: DataFrame): DataFrame = {
-        val ex = shingleHashRows(side, "doc_id", "text", n)
-        val aggs = Dedup.minHashAggs(col("hv"), k)
-        ex.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-          .withColumn("sig", array((0 until k).map(i => col(s"s$i")): _*))
-          .select("doc_id", "sig")
-      }
+      val (train, evalSet) =
+        trainEvalSplit(df, evalDocs, idColumn, textColumn)
+      def sigsOf(side: DataFrame): DataFrame =
+        Dedup.IncrementalMinHashLSH.signatures(side.select(
+          col("doc_id").as("id"), col("text")), "text", n, k)
+          .select(col("id").as("doc_id"), col("sig"))
       val trainSigs = sigsOf(train)
       val evalSigs = sigsOf(evalSet)
       def banded(sigs: DataFrame): DataFrame = sigs
@@ -339,11 +331,7 @@ object Corpus {
 
     def transform(df: DataFrame): DataFrame = {
       SparkUtil.validateColumns(df, Seq(idColumn, textColumn))
-      val base = df.select(col(idColumn).cast("long").as("doc_id"),
-        col(textColumn).cast("string").as("__text"))
-      val lines = base
-        .select(col("doc_id"),
-          posexplode(split(col("__text"), "\n")).as(Seq("pos", "line")))
+      val lines = IncrementalHotLines.explodeLines(df, idColumn, textColumn)
       // doc frequency without count-distinct: (line, doc) partial
       // counts collapse map-side, then df is a plain count
       val hot = lines.groupBy("line", "doc_id")
@@ -351,22 +339,34 @@ object Corpus {
         .groupBy("line").agg(count(lit(1)).as("__df"))
         .filter(col("__df") > maxDocFreq)
         .select(col("line"))
-      val kept = lines.join(hot, Seq("line"), "left_anti")
-      val rebuilt = kept.groupBy("doc_id")
-        .agg(count(lit(1)).as("n_kept_lines"),
-          expr("array_join(transform(array_sort(" +
-            "collect_list(struct(pos, line))), s -> s.line), '\\n')")
-            .as("clean_text"))
-      base
-        .select(col("doc_id"),
-          when(col("__text").isNull, lit(0L))
-            .otherwise(size(split(col("__text"), "\n")).cast("long"))
-            .as("n_lines"))
-        .join(rebuilt, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_lines"),
-          coalesce(col("n_kept_lines"), lit(0L)).as("n_kept_lines"),
-          coalesce(col("clean_text"), lit("")).as("clean_text"))
+      stripLines(df, idColumn, textColumn, lines, hot)
     }
+  }
+
+  /** The strip-and-rebuild tail of [[HotLineStrip]] and
+    * [[IncrementalHotLineStrip]]: drop the `hot` lines from the exploded
+    * `lines`, rebuild each doc from its kept lines in order, and give a
+    * doc with none kept (all hot, NULL text) an empty row.
+    */
+  private def stripLines(df: DataFrame, idColumn: String,
+                         textColumn: String, lines: DataFrame,
+                         hot: DataFrame): DataFrame = {
+    val rebuilt = lines.join(hot, Seq("line"), "left_anti")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_kept_lines"),
+        expr("array_join(transform(array_sort(" +
+          "collect_list(struct(pos, line))), s -> s.line), '\\n')")
+          .as("clean_text"))
+    df.select(col(idColumn).cast("long").as("doc_id"),
+        col(textColumn).cast("string").as("__text"))
+      .select(col("doc_id"),
+        when(col("__text").isNull, lit(0L))
+          .otherwise(size(split(col("__text"), "\n")).cast("long"))
+          .as("n_lines"))
+      .join(rebuilt, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_lines"),
+        coalesce(col("n_kept_lines"), lit(0L)).as("n_kept_lines"),
+        coalesce(col("clean_text"), lit("")).as("clean_text"))
   }
 
   /** The line-dedup member of the incremental ingest family
@@ -459,8 +459,6 @@ object Corpus {
     def transform(df: DataFrame): DataFrame = {
       SparkUtil.validateColumns(df, Seq(idColumn, textColumn))
       SparkUtil.validateColumns(lineIndex, Seq("line", "doc_freq"))
-      val base = df.select(col(idColumn).cast("long").as("doc_id"),
-        col(textColumn).cast("string").as("__text"))
       val lines = IncrementalHotLines.explodeLines(df, idColumn,
         textColumn)
       val idx = lineIndex.select(col("line"),
@@ -475,21 +473,7 @@ object Corpus {
               > maxDocFreq)
             .select(col("line"))
         else idx.filter(col("__cdf") > maxDocFreq).select(col("line"))
-      val kept = lines.join(hot, Seq("line"), "left_anti")
-      val rebuilt = kept.groupBy("doc_id")
-        .agg(count(lit(1)).as("n_kept_lines"),
-          expr("array_join(transform(array_sort(" +
-            "collect_list(struct(pos, line))), s -> s.line), '\\n')")
-            .as("clean_text"))
-      base
-        .select(col("doc_id"),
-          when(col("__text").isNull, lit(0L))
-            .otherwise(size(split(col("__text"), "\n")).cast("long"))
-            .as("n_lines"))
-        .join(rebuilt, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_lines"),
-          coalesce(col("n_kept_lines"), lit(0L)).as("n_kept_lines"),
-          coalesce(col("clean_text"), lit("")).as("clean_text"))
+      stripLines(df, idColumn, textColumn, lines, hot)
     }
   }
 
@@ -500,11 +484,10 @@ object Corpus {
     * the boilerplate ratio — the standard drop/keep quality signal next
     * to [[TextAnalysis.QualityScore]].
     *
-    * Scale shape: identical to [[Decontaminate]] with the hot set in
-    * place of the eval set — a doc-frequency aggregation over the narrow
-    * (shingle) projection, then a shingle equi-join of the posting
-    * stream against the (small, by definition: df > cap) hot set and one
-    * per-doc aggregation. Document text never shuffles.
+    * Scale shape: a doc-frequency aggregation over the narrow (shingle)
+    * projection builds the hot set (small, by definition: df > cap);
+    * the counts are [[shingleOverlap]] of the postings against it.
+    * Document text never shuffles.
     */
   final case class BoilerplateScore(idColumn: String = "doc_id",
                                     textColumn: String = "text",
@@ -521,20 +504,10 @@ object Corpus {
       val sh = shingleRows(ids, "doc_id", "text", n)
       val hot = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
         .filter(col("df") > maxDocFreq)
-        .select("shingle").withColumn("hit", lit(1L))
-      val counted = sh.join(hot, Seq("shingle"), "left")
-        .groupBy("doc_id")
-        .agg(max(col("sz")).as("n_shingles"),
-          sum(coalesce(col("hit"), lit(0L))).as("n_boiler"))
-      ids.select("doc_id")
-        .join(counted, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
-          coalesce(col("n_boiler"), lit(0L)).as("n_boiler"))
-        .withColumn("boiler_ratio",
-          when(col("n_shingles") > 0,
-            round(col("n_boiler").cast("double") /
-              col("n_shingles").cast("double"), 6)).otherwise(0.0))
+        .select("shingle")
+      shingleOverlap(ids, sh, hot)
+        .select(col("doc_id"), col("n_shingles"),
+          col("n_hits").as("n_boiler"), col("ratio").as("boiler_ratio"))
     }
   }
 

@@ -525,12 +525,8 @@ object Dedup {
 
     def transform(df: DataFrame): DataFrame = {
       SparkUtil.validateColumns(df, Seq(idColumn, textColumn))
-      val ex = shingleHashRows(df.select(col(idColumn).as("id"),
-        col(textColumn)), "id", textColumn, n)
-      val aggs = minHashAggs(col("hv"), k)
-      val sigs = ex.groupBy("id").agg(aggs.head, aggs.tail: _*)
-        .withColumn("sig", array((0 until k).map(i => col(s"s$i")): _*))
-        .select("id", "sig")
+      val sigs = IncrementalMinHashLSH.signatures(df.select(
+        col(idColumn).as("id"), col(textColumn)), textColumn, n, k)
       val bandCols = minHashBandCols(k, bands)
       // the band join and the candidate-pair distinct carry ONLY ids and
       // band keys — never the k-long signature arrays (those would widen

@@ -6,14 +6,19 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Corpus, Dedup, Sampling, TextAnalysis}
 
 /** The end-to-end training-data curation chain as a reusable
-  * [[Pipeline]]: normalize -> quality -> boilerplate -> decontaminate
-  * (drops the eval split) -> gates -> near-dup canonical (NGramJaccard
-  * pairs -> connected components -> best quality per cluster) ->
-  * stratified sample -> byte-balanced shard pack.
+  * [[Pipeline]]: normalize -> quality -> boilerplate (both per-doc
+  * signals) -> decontaminate (drops the eval split) -> gates -> near-dup
+  * canonical (NGramJaccard pairs -> connected components -> best
+  * quality per cluster) -> stratified sample -> byte-balanced shard pack.
   *
-  * Shuffle budget at scale: boilerplate + decontaminate + the pair join
-  * are narrow shingle equi-joins and per-doc aggs; CC cuts its edge
-  * list once, then runs two keyed shuffles and three jobs per round
+  * The scored cut (a leaf) feeds both signal frames, boiler ratio and
+  * contamination, each computed once and joined back to it once, so
+  * neither re-derives the other's joins; `evalDocs` sees the scored
+  * frame. `doc_id` must be unique: a repeated id multiplies rows.
+  *
+  * Shuffle budget at scale: the two signals + the pair join are narrow
+  * shingle equi-joins and per-doc aggs; CC cuts its edge list once,
+  * then runs two keyed shuffles and three jobs per round
   * (the edge label lookup by label, the messages by node; the first
   * round is one job, no shuffle), joining co-partitioned cuts in place
   * with no broadcast; the sample is map-side; the pack is ONE bucket
@@ -22,12 +27,12 @@ import graft.operators.{Corpus, Dedup, Sampling, TextAnalysis}
   * machinery.
   *
   * `checkpointDir`: the chain cuts its lineage at three phase
-  * boundaries (the scored frame feeding the boilerplate and
-  * decontaminate self-joins, the gated frame feeding both the pair join
-  * and canonical selection, and the deduped frame feeding ShardPack's
-  * two driver jobs plus the final pass) so upstream stages run once,
-  * not per consumer. With `None` the cuts are `localCheckpoint` —
-  * executor-local blocks, fast, the single-machine/bench default, but a
+  * boundaries (the scored frame feeding both signal frames, the gated
+  * frame feeding both the pair join and canonical selection, and the
+  * deduped frame feeding ShardPack's two driver jobs plus the final
+  * pass) so upstream stages run once, not per consumer. With `None`
+  * the cuts are `localCheckpoint` — executor-local blocks, fast, the
+  * single-machine/bench default, but a
   * lost executor kills the 8-stage lineage. On a real cluster pass a
   * reliable directory (HDFS/S3) and the cuts — and the CC rounds
   * inside — use fault-tolerant `checkpoint()` instead (same convention
@@ -64,32 +69,28 @@ object Curation {
         col("norm_text").as("text"), col("norm_len").as("n_chars"))),
       Stage(TextAnalysis.QualityScore()),
       Stage.of("boilerplate")(scored => {
-        // phase boundary: the scored frame is read by every branch of the
-        // boilerplate and decontaminate joins (each side of each join,
-        // the eval split twice) — without the cut the gated frame's plan
-        // read and normalized the corpus once per branch (14 JSON scans
-        // in the perfbench chain)
+        // phase boundary: both signal frames read the scored cut; eval
+        // docs have no contamination row (dropped by the next stage)
         val df = cut(scored, checkpointDir)
-        df.join(Corpus.BoilerplateScore(maxDocFreq = shingleDocFreqCap)
-            .transform(df).select("doc_id", "boiler_ratio"), Seq("doc_id"))
-      }),
-      // `bloomDecontaminate` switches to the large-eval-set scale path
-      // (broadcast Bloom posting prefilter) — results are bit-identical
-      // by construction, CurationSpec pins the equivalence end to end
-      Stage.of("decontaminate")(df => df.join(
-        Corpus.Decontaminate(evalDocs,
+        val boiler = Corpus.BoilerplateScore(maxDocFreq = shingleDocFreqCap)
+          .transform(df).select("doc_id", "boiler_ratio")
+        // `bloomDecontaminate` switches to the large-eval-set scale path
+        // (broadcast Bloom posting prefilter) — results are bit-identical
+        // by construction, CurationSpec pins the equivalence end to end
+        val contam = Corpus.Decontaminate(evalDocs,
             bloomPrefilter = bloomDecontaminate)
-          .transform(df).select("doc_id", "contaminated"),
-        Seq("doc_id"))), // inner join: eval docs leave the frame here
+          .transform(df).select("doc_id", "contaminated")
+        df.join(boiler.join(contam, Seq("doc_id"), "left"), Seq("doc_id"))
+      }),
+      Stage.of("decontaminate")(_.filter(col("contaminated").isNotNull)),
       Stage.of("gates")(_.filter(col("n_tokens") >= minTokens &&
         col("boiler_ratio") <= maxBoilerRatio && !col("contaminated"))),
       Stage.of("near_dup_canonical")(df => {
         // phase boundary: the gated frame feeds BOTH the pair join and
         // the canonical-selection join, and the CC loop is iterative —
-        // cut once so the boilerplate/decontaminate joins over the scored
-        // cut are computed exactly once, not re-derived by every
-        // consumer (at 100 TB you persist between curation phases for
-        // the same reason)
+        // cut once so the signal joins over the scored cut are computed
+        // exactly once, not re-derived by every consumer (at 100 TB you
+        // persist between curation phases for the same reason)
         val gated = cut(df, checkpointDir)
         val pairs = Dedup.NGramJaccard(threshold = jaccardThreshold,
             maxDocFreq = shingleDocFreqCap)

@@ -25,10 +25,16 @@ import graft.benchmark.{Force, RunMetrics}
   * classes outgrow it recompiles on every execution: a non-zero warm
   * count is that thrash.
   *
-  * With `-v` it also lists every job of the forced run and the query's
-  * generated classes: one line per distinct source, with its codegen
-  * stage id (`-` for expression-level classes), its class kind, a hash
-  * of the source as Spark generated it (comments included) and how many
+  * With `-v` it also lists every job of the forced run, its SQL
+  * executions and the query's generated classes. Each execution line
+  * gives its jobs, the classes compiled between the previous
+  * execution's last job end and its own (the compile counter is read at
+  * every job end; the executions run in sequence), its wall time and
+  * the call site that ran it (`localCheckpoint at
+  * Curation.scala:<line>`; id -1 groups the jobs outside any execution).
+  * Each class line is one distinct source, with its codegen stage id
+  * (`-` for expression-level classes), its class kind, a hash of the
+  * source as Spark generated it (comments included) and how many
   * times the warm-up and the forced run compiled it. A count of 2 per
   * run is the driver and the executor class loader each compiling the
   * same source; a forced-run count is cache thrash. The header also
@@ -157,6 +163,19 @@ object JobProfile {
       if (verbose) {
         m.jobs.foreach(j => println(f"    job ${j.id}%3d " +
           f"${j.wallMs.fold("?")(_.toString)}%7s ms  ${j.description}"))
+        // one line per execution; they run in sequence on this thread,
+        // so an execution's compiles are the counter's growth since the
+        // previous one's last job end
+        var last = c0
+        for ((x, js) <- m.jobs.groupBy(_.execution).toSeq.sortBy(_._2.head.id)) {
+          val end = js.flatMap(_.compilesAtEnd).maxOption.getOrElse(last)
+          val e = m.executions.find(_.id == x)
+          println(f"    execution $x%4d jobs ${js.size}%3d " +
+            f"compiles ${end - last}%4d wall " +
+            f"${e.flatMap(_.wallMs).fold("?")(_.toString)}%6s ms  " +
+            s"${e.fold("-")(_.description)}  [${js.map(_.id).mkString(",")}]")
+          last = end
+        }
         val all = coldClasses ++ warmClasses
         val coldN = coldClasses.groupBy(identity).view.mapValues(_.size)
         val warmN = warmClasses.groupBy(identity).view.mapValues(_.size)

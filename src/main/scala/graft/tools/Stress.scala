@@ -9,12 +9,15 @@ import graft.operators._
   * per-entity windowing — a single partition processes everything) plus
   * the same N spread over many groups, through both interval
   * formulations. Prints wall times; used to document the skew envelope.
+  * Runs on `SPARK_GRAFT_CPUS` cores (default: all) and shuffle partitions.
   */
 object Stress {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(2000000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

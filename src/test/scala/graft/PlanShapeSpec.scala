@@ -530,6 +530,61 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
+  test("curation chain: the gated cut builds the boilerplate hot set " +
+    "once, joins the signals to the scored cut once and plans no " +
+    "sort-merge join") {
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.graftshim.ListenerBusDrain
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.pipeline.{Curation, CurationSpec}
+    val cuts = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        if (action == "localCheckpoint") cuts.add(qe)
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Curation.pipeline().transform(CurationSpec.docs).collect()
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // the gated cut is the first cut whose rows carry both signals
+    import scala.jdk.CollectionConverters._
+    val gated = cuts.asScala.find(qe =>
+      qe.analyzed.output.map(_.name).contains("contaminated"))
+    assert(gated.isDefined, cuts.asScala.map(_.analyzed.output).mkString)
+    // counted in the plan as planned: AQE drops an aggregate whose input
+    // turns out empty, as the fixture's hot set is at the default cap
+    val planned = gated.get.sparkPlan
+    // the hot set is the only aggregate with a `df` result
+    val hot = planned.collect {
+      case a: BaseAggregateExec
+          if a.resultExpressions.exists(_.name == "df") => a
+    }
+    assert(hot.size == 1, planned)
+    // the two inner joins are the signals' join to each other (the
+    // eval-drop filter makes it inner) and their one join to the cut;
+    // every other join is a kernel's zero-fill or hit join or the
+    // train/eval split. A signal branch over the boilerplate-joined
+    // frame would add an inner self-join of the cut per read
+    val inner =
+      planned.collect { case j: BaseJoinExec if j.joinType == Inner => j }
+    assert(inner.size == 2, planned)
+    // reads of the scored cut: boilerplate 3 (postings, hot set, docs),
+    // decontamination 5 (train postings and docs, each with the eval ids
+    // of the split; eval postings), the join back 1
+    val reads = planned.collect { case s: RDDScanExec => s }
+    assert(reads.size == 9, planned)
+    val plan = gated.get.executedPlan // the final adaptive plan
+    object walk extends AdaptiveSparkPlanHelper
+    val smj = walk.collect(plan) { case j: SortMergeJoinExec => j }
+    assert(smj.isEmpty, plan)
+  }
+
   test("broadcast join: nation side broadcasts, no shuffle for the dim") {
     val l = Seq((1L, 10.0, 0.1)).toDF("l_orderkey", "l_extendedprice",
       "l_discount")

@@ -76,6 +76,52 @@ class CorpusSpec extends AnyFunSuite {
       (4L, 2L, 0L, 0.0), (5L, 0L, 0L, 0.0)))
   }
 
+  // ------------------------------------------------ shingle-overlap kernel
+
+  test("shingle overlap kernel property: random docs (short, empty, NULL " +
+    "text, repeated shingles) and random shingle sets match a driver " +
+    "reference, with and without a prefilter") {
+    import graft.functions.Portable.{shingleRows, shinglesLocal}
+    val vocab = Array("a", "b", "c", "dd", "e")
+    for (seed <- 1 to 12) {
+      val rnd = new scala.util.Random(seed)
+      val n = 1 + rnd.nextInt(3)
+      // a 5-word vocabulary repeats shingles inside a doc; lengths 0..11
+      // give docs below the width; "", "  " and NULL are the edge texts
+      val texts: Seq[(Long, String)] = (0L until 30L).map { id =>
+        val t = rnd.nextInt(10) match {
+          case 0 => null
+          case 1 => ""
+          case 2 => "  "
+          case _ => Seq.fill(rnd.nextInt(12))(vocab(rnd.nextInt(vocab.length)))
+            .mkString(" ")
+        }
+        (id, t)
+      }
+      val all = texts.flatMap(d => shinglesLocal(d._2, n)).distinct
+      val set = (all.filter(_ => rnd.nextBoolean()) :+ "zz absent").distinct
+      val docs = texts.toDF("doc_id", "text").repartition(1 + rnd.nextInt(4))
+      val postings = shingleRows(docs, "doc_id", "text", n)
+      val shingles = set.toDF("shingle")
+      val expected = texts.map { case (id, t) =>
+        val sh = shinglesLocal(t, n)
+        val hits = sh.count(set.contains).toLong
+        val ratio = if (sh.isEmpty) 0.0 else BigDecimal(hits.toDouble /
+          sh.length).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        (id, sh.length.toLong, hits, ratio)
+      }.sortBy(_._1)
+      // a superset prune, as a Bloom filter's: keeps every set member
+      // and an arbitrary part of the rest
+      val prune = (p: org.apache.spark.sql.DataFrame) =>
+        p.filter(col("shingle").isin(set: _*) || col("doc_id") % 2 === 0)
+      for (pre <- Seq(None, Some(prune))) {
+        val got = Corpus.shingleOverlap(docs, postings, shingles, pre)
+          .orderBy("doc_id").as[(Long, Long, Long, Double)].collect().toSeq
+        assert(got == expected, s"seed=$seed n=$n prefilter=${pre.isDefined}")
+      }
+    }
+  }
+
   // ----------------------------------------------------------- VocabTopK
 
   test("vocab_topk: tf/df counts and deterministic tie order") {

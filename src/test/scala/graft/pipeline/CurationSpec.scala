@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -13,13 +14,8 @@ import graft.TestSpark
   */
 class CurationSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
-  import spark.implicits._
 
-  private def docs = (0L until 60L).map { id =>
-    val cluster = id / 3 // 3-doc near-dup clusters for the CC stage
-    val text = (1 to 24).map(i => s"t${cluster}x$i").mkString(" ")
-    (id, if (id % 2 == 0) "en" else "de", text)
-  }.toDF("doc_id", "lang", "text")
+  private def docs = CurationSpec.docs
 
   test("curation chain: reliable-checkpoint cuts produce exactly the " +
       "localCheckpoint result") {
@@ -48,5 +44,21 @@ class CurationSpec extends AnyFunSuite {
     val bloom = Curation.pipeline(bloomDecontaminate = true)
       .transform(docs).orderBy("doc_id").collect()
     assert(bloom.toSeq == exact.toSeq)
+  }
+}
+
+object CurationSpec {
+
+  /** The chain's fixture: 60 docs in 3-doc near-dup clusters (for the CC
+    * stage), alternating `en` / `de`.
+    */
+  def docs: DataFrame = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    (0L until 60L).map { id =>
+      val cluster = id / 3
+      val text = (1 to 24).map(i => s"t${cluster}x$i").mkString(" ")
+      (id, if (id % 2 == 0) "en" else "de", text)
+    }.toDF("doc_id", "lang", "text")
   }
 }
