@@ -761,7 +761,8 @@ object SparkEntry {
         .orderBy("doc_id"),
       _ => OracleSql.dedupExact, Some("Join")),
     // maxDocFreq = 10: capped-set semantics — the doc-frequency guard the
-    // operator exists for (bounded posting lists => no self-join)
+    // operator exists for (a capped self-join: a kept shingle pairs at
+    // most C(10, 2) docs)
     QuerySpec("dedup_ngram_jaccard", (s, dir) =>
       Dedup.NGramJaccard(maxDocFreq = 10L).transform(docs(s, dir))
         .orderBy("id_a", "id_b"),

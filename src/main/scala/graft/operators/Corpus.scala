@@ -255,19 +255,10 @@ object Corpus {
           .select(col("id").as("doc_id"), col("sig"))
       val trainSigs = sigsOf(train)
       val evalSigs = sigsOf(evalSet)
-      def banded(sigs: DataFrame): DataFrame = sigs
-        .select(col("doc_id"),
-          explode(array(Dedup.minHashBandCols(k, bands): _*)).as("bk"))
-        .select(col("doc_id"), col("bk.band").as("band"),
-          col("bk.key").as("key"))
-      val trainBands = banded(trainSigs)
-      val keptTrain =
-        if (maxBucket <= 0) trainBands
-        else trainBands.join(
-          trainBands.groupBy("band", "key").agg(count(lit(1)).as("__bn"))
-            .filter(col("__bn") > maxBucket).select("band", "key"),
-          Seq("band", "key"), "left_anti")
-      val cand = keptTrain.as("t")
+      def banded(sigs: DataFrame): DataFrame =
+        Dedup.minHashBands(sigs, "doc_id", k, bands)
+      val cand = Dedup.capKeys(banded(trainSigs), Dedup.BandKey, maxBucket)
+        .as("t")
         .join(banded(evalSigs).as("e"),
           col("t.band") === col("e.band") && col("t.key") === col("e.key"))
         .select(col("t.doc_id").as("doc_id"),
@@ -277,10 +268,8 @@ object Corpus {
           Seq("doc_id"))
         .join(evalSigs.select(col("doc_id").as("eval_id"),
           col("sig").as("sig_e")), Seq("eval_id"))
-        .withColumn("est_jaccard", round(
-          size(filter(zip_with(col("sig_t"), col("sig_e"),
-            (x, y) => (x === y).cast("int")), v => v === 1)).cast("double")
-            / lit(k.toDouble), 6))
+        .withColumn("est_jaccard",
+          Dedup.minHashAgreement(col("sig_t"), col("sig_e"), k))
         .filter(col("est_jaccard") >= threshold)
       val perDoc = agree.groupBy("doc_id")
         .agg(count(lit(1)).as("n_eval_near"),
@@ -502,8 +491,7 @@ object Corpus {
       val ids = df.select(col(idColumn).cast("long").as("doc_id"),
         col(textColumn).as("text"))
       val sh = shingleRows(ids, "doc_id", "text", n)
-      val hot = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-        .filter(col("df") > maxDocFreq)
+      val hot = Dedup.hotKeys(sh, Seq("shingle"), maxDocFreq)
         .select("shingle")
       shingleOverlap(ids, sh, hot)
         .select(col("doc_id"), col("n_shingles"),

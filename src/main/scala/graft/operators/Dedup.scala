@@ -236,22 +236,11 @@ object Dedup {
       val sigs = IncrementalMinHashLSH.signatures(
         df.select(col(idColumn).as("id"), col(textColumn)),
         textColumn, n, k)
-      val bandCols = minHashBandCols(k, bands)
-      val banded = sigs.select(col("id"),
-          explode(array(bandCols: _*)).as("bk"))
-        .select(col("id"), col("bk.band").as("band"),
-          col("bk.key").as("key"))
-      val kept =
-        if (maxBucket <= 0) banded
-        else banded.join(
-          banded.groupBy("band", "key").agg(count(lit(1)).as("__bn"))
-            .filter(col("__bn") > maxBucket).select("band", "key"),
-          Seq("band", "key"), "left_anti")
-      // batch-internal candidates: MinHashLSHDedup's self-join shape
-      val candBatch = kept.as("a").join(kept.as("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key")
-            && col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
+      val banded = minHashBands(sigs, "id", k, bands)
+      // batch-internal candidates: MinHashLSHDedup's capped self-join
+      val candBatch = sharedKeyPairs(
+          capKeys(banded, BandKey, maxBucket), BandKey)
+        .select("id_a", "id_b")
       // corpus candidates: the batch probe against the persisted band
       // index — (band, key) equi-join, index-side shuffle-free when the
       // index is bucketed by (band, key). The probe uses the UNCAPPED
@@ -274,10 +263,8 @@ object Dedup {
       def score(cand: DataFrame, aSide: DataFrame,
                 known: Boolean): DataFrame =
         cand.join(aSide, "id_a").join(sigBatchB, "id_b")
-          .withColumn("est_jaccard", round(
-            size(filter(zip_with(col("sig_a"), col("sig_b"),
-              (x, y) => (x === y).cast("int")), v => v === 1))
-              .cast("double") / lit(k.toDouble), 6))
+          .withColumn("est_jaccard",
+            minHashAgreement(col("sig_a"), col("sig_b"), k))
           .filter(col("est_jaccard") >= threshold)
           .select(col("id_a"), col("id_b"), col("est_jaccard"),
             lit(known).as("known"))
@@ -317,16 +304,9 @@ object Dedup {
                   maxBucket: Long = 10000L): DataFrame = {
       require(k % bands == 0, "k must be divisible by bands")
       SparkUtil.validateColumns(signatureIndex, Seq("doc_id", "sig"))
-      val banded = signatureIndex
-        .select(col("doc_id"), col("sig"),
-          explode(array(minHashBandCols(k, bands): _*)).as("bk"))
-        .select(col("bk.band").as("band"), col("bk.key").as("key"),
-          col("doc_id"))
-      if (maxBucket <= 0) banded
-      else banded.join(
-        banded.groupBy("band", "key").agg(count(lit(1)).as("__bn"))
-          .filter(col("__bn") > maxBucket).select("band", "key"),
-        Seq("band", "key"), "left_anti")
+      capKeys(minHashBands(signatureIndex, "doc_id", k, bands), BandKey,
+          maxBucket)
+        .select("band", "key", "doc_id")
     }
 
     /** Fold an ADMITTED batch into both indexes, returning the updated
@@ -369,22 +349,29 @@ object Dedup {
   /** N-gram (shingle) Jaccard similarity join via an inverted shingle
     * index, `jaccard = common / (|A| + |B| - common)`.
     *
-    * `maxDocFreq > 0` switches to *capped-set* semantics: shingles whose
-    * corpus document frequency exceeds the cap are removed from every
-    * document's shingle set before similarity is computed (sizes included)
-    * — the standard boilerplate guard from the set-similarity-join
-    * literature. The cap is also what makes the plan scale: posting lists
-    * are bounded by `maxDocFreq`, so candidate pairs are generated
-    * map-side from grouped posting lists (at most C(cap, 2) pairs per
-    * shingle) with NO self-join — the quadratic hot-key blowup of the
-    * uncapped inverted-index join is structurally impossible.
+    * `maxDocFreq > 0` (the default) gives *capped-set* semantics:
+    * shingles whose corpus document frequency exceeds the cap are removed
+    * from every document's shingle set before similarity is computed
+    * (sizes included) — the standard boilerplate guard from the
+    * set-similarity-join literature. `maxDocFreq <= 0` keeps every
+    * shingle (exact full-set semantics).
     *
-    * `maxDocFreq <= 0` opts into exact full-set semantics via the shingle
-    * self-join; fine for small/mid corpora, quadratic in doc frequency on
-    * hot shingles at corpus scale (prefer the default cap or
-    * [[MinHashLSHDedup]] there). The capped path is the DEFAULT: an
-    * unsuspecting `NGramJaccard()` at corpus scale must not get the
-    * quadratic plan.
+    * One path serves both: the postings (`id`, `shingle`) pass
+    * through [[capKeys]] on the shingle, and the capped postings feed
+    * both the per-doc sizes and the candidate pairs, a capped self-join
+    * on the shingle ([[sharedKeyPairs]]). The cap is what makes the plan
+    * scale: a kept shingle joins at most C(cap, 2) pairs, so the
+    * quadratic hot-key blowup of an uncapped inverted-index join cannot
+    * happen. Uncapped, the join is quadratic in doc frequency on hot
+    * shingles — fine for small and mid corpora; prefer the default cap
+    * or [[MinHashLSHDedup]] at corpus scale.
+    *
+    * The id column must be unique. A text's postings are distinct
+    * shingles, so an id whose postings repeat a shingle has several rows:
+    * the size aggregate raises for it in-plan (a row given twice always
+    * raises once it keeps a shingle). Rows of one id that share no kept
+    * shingle merge into one set unnoticed. Under a cap the check runs on
+    * the posting exchange the cap already made; uncapped it adds one.
     */
   final case class NGramJaccard(idColumn: String = "doc_id",
                                 textColumn: String = "text",
@@ -394,79 +381,73 @@ object Dedup {
       extends Wrangler {
     def transform(df: DataFrame): DataFrame = {
       SparkUtil.validateColumns(df, Seq(idColumn, textColumn))
-      if (maxDocFreq > 0) transformCapped(df) else transformExact(df)
-    }
-
-    /** Exact inverted-index formulation: identical plans on both sides of
-      * the self-join => Spark reuses one scan + shuffle exchange instead
-      * of processing the corpus twice.
-      */
-    private def transformExact(df: DataFrame): DataFrame = {
-      val sh = shingleRows(df.select(col(idColumn).as("id"),
-        col(textColumn)), "id", textColumn, n)
-      sh.as("a").join(sh.as("b"),
-          col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
-        .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          col("a.sz").as("sz_a"), col("b.sz").as("sz_b"))
-        .agg(count(lit(1)).as("common"))
+      // the self-join infers `shingle IS NOT NULL` on its postings;
+      // stating it here gives the size branch the same posting plan, so
+      // both read one posting exchange
+      val postings = capKeys(shingleRows(df.select(col(idColumn).as("id"),
+          col(textColumn)), "id", textColumn, n)
+        .filter(col("shingle").isNotNull), Seq("shingle"), maxDocFreq)
+      // (shingle, id) groups: under a cap, the anti-join's posting
+      // exchange already partitions them
+      val sizes = postings.groupBy("shingle", "id")
+        .agg(count(lit(1)).as("__c"))
+        .groupBy("id").agg(count(lit(1)).as("__n"), max("__c").as("__c"))
+        .select(col("id"), when(col("__c") > 1, raise_error(concat(
+            lit(s"NGramJaccard: id column `$idColumn` must be unique — " +
+              "id "), col("id").cast("string"),
+            lit(" has several rows, which would merge their shingle sets " +
+              "and miscount its size"))).cast("long"))
+          .otherwise(col("__n")).as("sz"))
+      sharedKeyPairs(postings, Seq("shingle"))
+        .join(sizes.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
+        .join(sizes.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
         .withColumn("uni", col("sz_a") + col("sz_b") - col("common"))
         .withColumn("jaccard",
           round(col("common").cast("double") / col("uni").cast("double"), 6))
         .filter(col("jaccard") >= threshold)
         .select("id_a", "id_b", "common", "uni", "jaccard")
     }
+  }
 
-    /** Capped-set formulation. Shuffle budget: one tiny doc-frequency agg
-      * (hot set broadcast back as a left-anti build side), one posting-list
-      * agg by shingle, one pair agg by (id_a, id_b), one per-doc size agg;
-      * the size joins are AQE-broadcast at small scale and plain shuffled
-      * equi-joins at corpus scale. Pair generation never shuffles: posting
-      * lists are <= maxDocFreq ids long, so each list expands map-side.
-      * (At 100 TB, persist the shingle index upstream if the double text
-      * scan — df agg + posting agg — matters; both scans are map-side.)
-      */
-    private def transformCapped(df: DataFrame): DataFrame = {
-      val spark = df.sparkSession
-      import spark.implicits._
-      val sh = shingleRows(df.select(col(idColumn).as("id"),
-        col(textColumn)), "id", textColumn, n).select("id", "shingle")
-      val hot = sh.groupBy("shingle").count()
-        .filter(col("count") > maxDocFreq).select("shingle")
-      // No broadcast hint: the hot-shingle set is corpus-dependent and
-      // unbounded (web boilerplate), so a forced broadcast risks driver
-      // OOM at 100 TB. AQE sees the post-agg size and picks broadcast
-      // left-anti when it fits, shuffled left-anti when it doesn't.
-      val kept = sh.join(hot, Seq("shingle"), "left_anti")
-      val szT = kept.groupBy("id").agg(count(lit(1)).as("sz"))
-      val lists = kept.groupBy("shingle")
-        .agg(collect_list(col("id")).as("ids"))
-      val pairCounts = lists.select(col("ids")).as[Seq[Long]]
-        .flatMap { ids =>
-          val m = ids.length
-          val out = Seq.newBuilder[(Long, Long)]
-          var i = 0
-          while (i < m) {
-            var j = i + 1
-            while (j < m) {
-              val a = ids(i); val b = ids(j)
-              out += (if (a < b) (a, b) else (b, a))
-              j += 1
-            }
-            i += 1
-          }
-          out.result()
-        }
-        .toDF("id_a", "id_b")
-        .groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
-      pairCounts
-        .join(szT.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
-        .join(szT.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
-        .withColumn("uni", col("sz_a") + col("sz_b") - col("common"))
-        .withColumn("jaccard",
-          round(col("common").cast("double") / col("uni").cast("double"), 6))
-        .filter(col("jaccard") >= threshold)
-        .select("id_a", "id_b", "common", "uni", "jaccard")
-    }
+  /** The keys of `rows` whose group holds more than `maxPerKey` rows, as
+    * one row per hot key with its row count `df` (the document frequency
+    * when `rows` are postings). One narrow count, partially aggregated
+    * map-side, so a hot key reaches the shuffle as one row per partition.
+    */
+  private[operators] def hotKeys(rows: DataFrame, keys: Seq[String],
+                                 maxPerKey: Long): DataFrame =
+    rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("df"))
+      .filter(col("df") > maxPerKey)
+
+  /** `rows` without the rows of [[hotKeys]]: the candidate-join guard of
+    * the near-duplicate family (a kept key joins at most C(maxPerKey, 2)
+    * pairs). The anti-join carries no broadcast hint: the hot set is
+    * corpus-dependent and unbounded (web boilerplate), so AQE broadcasts
+    * it when it fits and shuffles it when it does not. A row with a NULL
+    * key is kept (it equals no key). `maxPerKey <= 0` keeps every row.
+    */
+  private[operators] def capKeys(rows: DataFrame, keys: Seq[String],
+                                 maxPerKey: Long): DataFrame =
+    if (maxPerKey <= 0) rows
+    else rows.join(hotKeys(rows, keys, maxPerKey).select(keys.map(col): _*),
+      keys, "left_anti")
+
+  /** Candidate pairs of ids that share a key: `(id_a, id_b, common)` with
+    * `id_a < id_b` (ids from `rows`' `id` column) and `common` the number
+    * of key groups the two share (`rows` hold one row per id and key).
+    * The self-join is an equi-join on the keys, so both sides
+    * hash-partition identically and the rows carry ids and keys only;
+    * NULL keys pair with nothing. A caller that needs the pairs alone
+    * selects `id_a, id_b`, and the count drops out of the plan: the
+    * grouping is then a distinct over the ids.
+    */
+  private[operators] def sharedKeyPairs(rows: DataFrame,
+                                        keys: Seq[String]): DataFrame = {
+    val r = rows.select((col("id") +: keys.map(col)): _*)
+    r.as("a").join(r.as("b"), keys.map(k => col(s"a.$k") === col(s"b.$k"))
+        .reduce(_ && _) && col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("common"))
   }
 
   /** MinHash signature aggregates s0..s{k-1} over an exploded shingle-hash
@@ -481,20 +462,36 @@ object Dedup {
       min((lit(ai) * hv + lit(bi)) % MinHashP).as(s"s$i")
     }
 
-  /** LSH band keys of a k-wide `sig` array column: one (band, key)
-    * struct per band, the key a '-'-joined slice of `k / bands`
-    * signature components. Shared by [[MinHashLSHDedup]] and
-    * [[Corpus.NearDupDecontaminate]].
+  /** The key of a MinHash band row. */
+  private[operators] val BandKey = Seq("band", "key")
+
+  /** LSH band rows (`id`, `band`, `key`) of a frame with a k-wide `sig`
+    * array column: one row per band, the key a '-'-joined slice of
+    * `k / bands` signature components. The one banding of
+    * [[MinHashLSHDedup]], [[IncrementalMinHashLSH]] (batch and band
+    * index) and [[Corpus.NearDupDecontaminate]].
     */
-  private[operators] def minHashBandCols(k: Int, bands: Int): Seq[Column] = {
+  private[operators] def minHashBands(sigs: DataFrame, id: String, k: Int,
+                                      bands: Int): DataFrame = {
     val rowsPerBand = k / bands
-    (0 until bands).map { bnd =>
+    val bandCols = (0 until bands).map { bnd =>
       struct(lit(bnd).as("band"),
         concat_ws("-", (0 until rowsPerBand)
           .map(r => element_at(col("sig"), bnd * rowsPerBand + r + 1)): _*)
           .as("key"))
     }
+    sigs.select(col(id), explode(array(bandCols: _*)).as("bk"))
+      .select(col(id), col("bk.band").as("band"), col("bk.key").as("key"))
   }
+
+  /** MinHash agreement of two k-wide signature columns: the share of
+    * matching components, `est_jaccard` rounded to 6 places (batch and
+    * streaming MinHash scoring).
+    */
+  private[graft] def minHashAgreement(a: Column, b: Column,
+                                      k: Int): Column =
+    round(size(filter(zip_with(a, b, (x, y) => (x === y).cast("int")),
+      v => v === 1)).cast("double") / lit(k.toDouble), 6)
 
   /** MinHash + LSH candidate-pair dedup: k-wide signatures banded into
     * `bands` groups of `rowsPerBand`; documents sharing any band key are
@@ -521,40 +518,23 @@ object Dedup {
                                    maxBucket: Long = 10000L)
       extends Wrangler {
     require(k % bands == 0, "k must be divisible by bands")
-    private val rowsPerBand = k / bands
 
     def transform(df: DataFrame): DataFrame = {
       SparkUtil.validateColumns(df, Seq(idColumn, textColumn))
       val sigs = IncrementalMinHashLSH.signatures(df.select(
         col(idColumn).as("id"), col(textColumn)), textColumn, n, k)
-      val bandCols = minHashBandCols(k, bands)
-      // the band join and the candidate-pair distinct carry ONLY ids and
+      // the band join and the candidate-pair grouping carry ONLY ids and
       // band keys — never the k-long signature arrays (those would widen
       // every shuffle row by 2k longs); signatures re-attach per side
-      // AFTER the distinct via id equi-joins, whose agg subtree shuffle
+      // AFTER the grouping via id equi-joins, whose agg subtree shuffle
       // is served once by ReuseExchange
-      val banded = sigs.select(col("id"),
-          explode(array(bandCols: _*)).as("bk"))
-        .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      // hot-bucket cap: one narrow (band, key) agg — map-side partial,
-      // hot set is tiny by definition so AQE broadcasts the anti-join
-      val kept =
-        if (maxBucket <= 0) banded
-        else banded.join(
-          banded.groupBy("band", "key").agg(count(lit(1)).as("__bn"))
-            .filter(col("__bn") > maxBucket).select("band", "key"),
-          Seq("band", "key"), "left_anti")
-      val pairs = kept.as("a").join(kept.as("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-      pairs
+      sharedKeyPairs(capKeys(minHashBands(sigs, "id", k, bands), BandKey,
+          maxBucket), BandKey)
+        .select("id_a", "id_b")
         .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
         .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-        .withColumn("est_jaccard", round(
-          size(filter(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => (x === y).cast("int")), v => v === 1)).cast("double")
-            / lit(k.toDouble), 6))
+        .withColumn("est_jaccard",
+          minHashAgreement(col("sig_a"), col("sig_b"), k))
         .filter(col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     }
@@ -605,23 +585,13 @@ object Dedup {
           shiftright(col("simhash"), c * chunkBits)
             .bitwiseAND((1L << chunkBits) - 1).as("v"))
       }
-      // ids-only band join + distinct; simhashes re-attach after (see the
-      // MinHash variant for the shuffle-width rationale)
+      // ids-only band join + pair grouping; simhashes re-attach after
+      // (see the MinHash variant for the shuffle-width rationale)
       val banded = sim.select(col("id"),
           explode(array(chunkCols: _*)).as("ck"))
         .select(col("id"), col("ck.c").as("c"), col("ck.v").as("v"))
-      // hot-bucket cap (see scaladoc; same shape as the MinHash variant)
-      val kept =
-        if (maxBucket <= 0) banded
-        else banded.join(
-          banded.groupBy("c", "v").agg(count(lit(1)).as("__bn"))
-            .filter(col("__bn") > maxBucket).select("c", "v"),
-          Seq("c", "v"), "left_anti")
-      val pairs = kept.as("a").join(kept.as("b"),
-          col("a.c") === col("b.c") && col("a.v") === col("b.v") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-      pairs
+      sharedKeyPairs(capKeys(banded, Seq("c", "v"), maxBucket), Seq("c", "v"))
+        .select("id_a", "id_b")
         .join(sim.select(col("id").as("id_a"), col("simhash").as("sim_a")), "id_a")
         .join(sim.select(col("id").as("id_b"), col("simhash").as("sim_b")), "id_b")
         .withColumn("hamming",
@@ -878,16 +848,12 @@ object Dedup {
       val rows = quantizedRows(df.select(col(idColumn).as("id"),
           col(vecColumn)), "id", vecColumn,
         hyperplaneMatrix(0, tables * planesPerTable, dim), planesPerTable)
-      // ids-only bucket join + distinct: the dim-long quantized vectors
-      // never ride the bucket-join or distinct shuffles; they re-attach
-      // per side after (see the MinHash variant)
-      val banded = rows.select(col("id"),
-          posexplode(col("buckets")).as(Seq("t", "v")))
-      val pairs = banded.as("a").join(banded.as("b"),
-          col("a.t") === col("b.t") && col("a.v") === col("b.v") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-      pairs
+      // ids-only bucket join + pair grouping: the dim-long quantized
+      // vectors never ride those shuffles; they re-attach per side after
+      // (see the MinHash variant)
+      sharedKeyPairs(rows.select(col("id"),
+          posexplode(col("buckets")).as(Seq("t", "v"))), Seq("t", "v"))
+        .select("id_a", "id_b")
         .join(rows.select(col("id").as("id_a"), col("q").as("q_a"),
           col("nrm").as("nrm_a")), "id_a")
         .join(rows.select(col("id").as("id_b"), col("q").as("q_b"),

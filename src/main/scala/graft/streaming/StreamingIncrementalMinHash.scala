@@ -90,10 +90,8 @@ final class StreamingIncrementalMinHash(bandIndex: DataFrame,
         col("doc_id").as("id_a")), Seq("band", "key"))
       .join(signatureIndex.select(col("doc_id").as("id_a"),
         col("sig").as("sig_a")), Seq("id_a"))
-      .withColumn("est_jaccard", round(
-        size(filter(zip_with(col("sig_a"), col("sig_b"),
-          (x, y) => (x === y).cast("int")), v => v === 1))
-          .cast("double") / lit(k.toDouble), 6))
+      .withColumn("est_jaccard", graft.operators.Dedup.minHashAgreement(
+        col("sig_a"), col("sig_b"), k))
       .filter(col("est_jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("est_jaccard"), col(tsColumn))
       .dropDuplicatesWithinWatermark("id_a", "id_b")

@@ -40,7 +40,17 @@ import graft.benchmark.{Force, RunMetrics}
   * same source; a forced-run count is cache thrash. The header also
   * counts the distinct sources once stage ids are normalized: sources
   * that differ only by their stage id are the same class under a new
-  * name.
+  * name. Its `working set` line counts those classes in codegen cache
+  * entries — a whole-stage class twice (the driver's and the executor
+  * threads' class loaders key it apart), an expression class once —
+  * beside the session's `spark.sql.codegen.cache.maxEntries` and its
+  * per-segment share: the cache is four LRU segments of maxEntries / 4,
+  * and a pass that touches more entries than a segment holds misses on
+  * every access to it. Only compiles are seen, so a query after the
+  * first misses the classes an earlier query compiled and still holds.
+  *
+  * Runs on `SPARK_GRAFT_CPUS` cores (default: all) and as many shuffle
+  * partitions.
   *
   * Usage: runMain graft.tools.JobProfile q1,q2 /root/testdata/sf0.1 [-v]
   */
@@ -115,8 +125,10 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val specs = SparkEntry.lookup(args(0))
     val sfDir = args(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -183,6 +195,14 @@ object JobProfile {
           s"${all.map(_.normalized).distinct.size} with stage ids " +
           s"normalized (compiles: warm-up ${coldClasses.size}, " +
           s"forced run ${warmClasses.size})")
+        val pass = all.groupBy(_.normalized).values.map(_.head).toSeq
+        val stages = pass.count(_.stage.isDefined)
+        val maxEntries =
+          spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt
+        println(s"    working set: ${pass.size + stages} " +
+          s"cache entries ($stages whole-stage x2, ${pass.size - stages} " +
+          s"expression x1) of maxEntries $maxEntries, ${maxEntries / 4} " +
+          "per segment")
         all.distinct.sortBy(g => (g.stage.getOrElse(-1), g.kind, g.hash))
           .foreach { g =>
             println(f"      stage ${g.stage.fold("-")(_.toString)}%4s " +

@@ -131,6 +131,72 @@ class TextDedupSpec extends AnyFunSuite {
     assert(Dedup.NGramJaccard().maxDocFreq > 0)
   }
 
+  test("NGramJaccard: a repeated id raises in-plan on the capped and " +
+    "the uncapped path instead of emitting a self-pair or a Jaccard " +
+    "above 1") {
+    val df = docsDF(1L -> "a b c d e", 1L -> "a b c d e", 2L -> "a b c d x")
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x =>
+        Option(x.getMessage).toSeq ++ messages(x.getCause))
+    for (cap <- Seq(100L, 0L)) {
+      val e = intercept[Exception] {
+        Dedup.NGramJaccard(threshold = 0.0, maxDocFreq = cap)
+          .transform(df).collect()
+      }
+      assert(messages(e).exists(_.contains("must be unique")), s"cap=$cap $e")
+    }
+  }
+
+  test("candidate-pair primitives property: hotKeys, capKeys and " +
+    "sharedKeyPairs against a driver reference (one- and two-column " +
+    "keys, hot keys above and at the cap, caps 0/1/3/large, NULL keys, " +
+    "empty input)") {
+    type R = (Long, Option[Int], Option[String])
+    // two fixed groups: 3 rows (at cap 3, kept) and 4 rows (above it)
+    val fixed: Seq[R] = (20L to 22L).map(i => (i, Some(7), Some("z"))) ++
+      (20L to 23L).map(i => (i, Some(8), Some("z")))
+    val inputs: Seq[Seq[R]] = Seq.empty[R] +: (1L to 4L).map { seed =>
+      val r = new scala.util.Random(seed)
+      val random = Seq.fill(30)((r.nextInt(12).toLong,
+        Option.when(r.nextInt(6) > 0)(r.nextInt(4)),
+        Option.when(r.nextInt(6) > 0)(Seq("x", "y")(r.nextInt(2)))))
+      random ++ fixed
+    }
+    for ((rows, i) <- inputs.zipWithIndex;
+         keys <- Seq(Seq("k1"), Seq("k1", "k2"))) {
+      // one row per (id, key), the primitives' precondition
+      val distinct = rows.map { case (id, k1, k2) =>
+        (id, k1, if (keys.size == 1) None else k2) }.distinct
+      val df = distinct.toDF("id", "k1", "k2").select(
+        (col("id") +: keys.map(col)): _*)
+      def key(t: R): Seq[Option[Any]] =
+        if (keys.size == 1) Seq(t._2) else Seq(t._2, t._3)
+      val groups = distinct.groupBy(key).view.mapValues(_.size).toMap
+      for (cap <- Seq(0L, 1L, 3L, 1000L)) {
+        val label = s"input $i keys $keys cap $cap"
+        val hot = groups.filter(_._2 > cap).keySet
+        val hotGot = if (cap <= 0) Set.empty[Seq[Option[Any]]]
+          else Dedup.hotKeys(df, keys, cap).collect().map(r =>
+            keys.indices.map(j => Option(r.get(j))).toSeq).toSet
+        assert(cap <= 0 || hotGot == hot, label)
+        // NULL-keyed rows equal no hot key, so the cap keeps them
+        val kept = distinct.filter(t => cap <= 0 ||
+          key(t).exists(_.isEmpty) || !hot.contains(key(t)))
+        val capped = Dedup.capKeys(df, keys, cap)
+        assert(capped.select("id").as[Long].collect().sorted.toSeq ==
+          kept.map(_._1).sorted, label)
+        val expected = (for (a <- kept; b <- kept
+            if a._1 < b._1 && key(a).forall(_.isDefined) && key(a) == key(b))
+          yield (a._1, b._1)).groupBy(identity).view
+          .mapValues(_.size.toLong).toMap
+        val got = Dedup.sharedKeyPairs(capped, keys)
+          .as[(Long, Long, Long)].collect()
+        assert(got.length == expected.size, label)
+        assert(got.map(p => (p._1, p._2) -> p._3).toMap == expected, label)
+      }
+    }
+  }
+
   test("MinHashLSH finds identical docs with est_jaccard 1.0") {
     val df = docsDF(
       1L -> "w1 w2 w3 w4 w5 w6",
